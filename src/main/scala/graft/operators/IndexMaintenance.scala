@@ -312,12 +312,10 @@ object IndexMaintenance {
       .foldLeft(base)(_ unionByName _)
   }
 
-  /** Compact `indexPath/vectors` (+ any epoch dirs; IVF/PQ layouts:
-    * `cluster_id`; LSH: `bucket` — auto-detected). Returns the parquet
-    * file count after.
-    */
-  /** The corpus data-file fingerprint the cached layouts key on: any
-    * part-file refresh of the source table invalidates automatically.
+  /** The corpus data-file signature (sorted path:length:mtime of every
+    * `table` part file) that the cached layouts and the IVF count/seed
+    * caches key on: any part-file refresh of the source table
+    * invalidates automatically. A metadata-only listing.
     */
   def corpusSig(spark: SparkSession, dir: String,
       table: String = "documents"): String = {
@@ -364,6 +362,10 @@ object IndexMaintenance {
     base
   }
 
+  /** Compact `indexPath/vectors` (+ any epoch dirs; IVF/PQ layouts:
+    * `cluster_id`; LSH: `bucket` — auto-detected). Returns the parquet
+    * file count after.
+    */
   def compactIndex(spark: SparkSession, indexPath: String,
       rowsPerFile: Long = 1L << 20): Long = {
     val vecDir = s"$indexPath/vectors"

@@ -52,20 +52,8 @@ object IvfIndex {
   // listing, ~free next to any query.
   private val countCache = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
 
-  private[graft] def corpusSignature(spark: SparkSession, dir: String): String = {
-    val path = new org.apache.hadoop.fs.Path(s"$dir/embeddings.parquet")
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val entries = scala.collection.mutable.ArrayBuffer.empty[String]
-    val it = fs.listFiles(path, true)
-    while (it.hasNext) {
-      val st = it.next()
-      entries += s"${st.getPath}:${st.getLen}:${st.getModificationTime}"
-    }
-    entries.sorted.mkString(";")
-  }
-
   private def corpusSize(spark: SparkSession, dir: String): Long =
-    countCache.computeIfAbsent(corpusSignature(spark, dir),
+    countCache.computeIfAbsent(IndexMaintenance.corpusSig(spark, dir, "embeddings"),
       _ => Long.box(Tables.embeddings(spark, dir).count())).longValue()
 
   /** Deterministic centroid seeds (stand-in for k-means init): the
@@ -86,7 +74,8 @@ object IvfIndex {
     String, (org.apache.spark.sql.types.StructType, Array[org.apache.spark.sql.Row])]()
 
   def centroids(spark: SparkSession, dir: String): DataFrame = {
-    val (schema, rows) = seedCache.computeIfAbsent(corpusSignature(spark, dir), _ => {
+    val (schema, rows) = seedCache.computeIfAbsent(
+        IndexMaintenance.corpusSig(spark, dir, "embeddings"), _ => {
       val nl = nlistOf(corpusSize(spark, dir))
       val df = Tables.embeddings(spark, dir)
         .select(col("vec_id"), col("embedding"))
@@ -411,7 +400,8 @@ object IvfIndex {
     * (query_id, cluster_id) probe table, so each corpus row is scored
     * only against the queries probing its cluster
     * (corpus×queries×nprobe/k rows, never corpus×queries); the
-    * partition-local PartialTopK bounds what reaches the rank shuffle.
+    * [[graft.plans.TopK]] partial limit bounds what reaches the rank
+    * shuffle.
     */
   def searchBatch(spark: SparkSession, dir: String, nprobe: Int = 3,
       k: Int = 5, queries: DataFrame = null): DataFrame = {
@@ -433,10 +423,7 @@ object IvfIndex {
       .join(broadcast(probed), Seq("cluster_id"))
       .withColumn("score", dot(col("embedding"), col("qvec")))
       .select(col("query_id"), col("vec_id"), col("score"))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("score").desc, col("vec_id").asc)
-    graft.plans.PartialTopK(scoredRows, "query_id", "score", "vec_id", k)
-      .withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= k)
+    graft.plans.TopK(scoredRows, "query_id", "score", "vec_id", k, "rnk")
       .select(col("query_id"), col("vec_id"), col("rnk"), r6(col("score")).as("score"))
   }
 
@@ -449,29 +436,12 @@ object IvfIndex {
     */
   def recallReport(spark: SparkSession, dir: String, nprobe: Int = 3,
       k: Int = 5): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     // bounded deterministic query sample (r15, r14 verdict #1): the
     // brute truth is |queries| × corpus by construction — see
     // KnnSearch.evalQueries for the sampling/unbiasedness contract
     val qs = KnnSearch.evalQueries(spark, dir)
     val ivf = searchBatch(spark, dir, nprobe, k, queries = qs)
-      .select("query_id", "vec_id")
-    val w = Window.partitionBy(col("query_id")).orderBy(col("score").desc, col("vec_id").asc)
-    // r16: PartialTopK bounds the corpus×queries brute scored set
-    // BEFORE the rank Exchange (same contract as searchBatch's serving
-    // arm) — without it the ground-truth pass shuffles every scored row
-    val brute = graft.plans.PartialTopK(KnnSearch.scored(
-        Tables.embeddings(spark, dir).select("vec_id", "embedding"), qs)
-      .select(col("query_id"), col("vec_id"), col("score")),
-        "query_id", "score", "vec_id", k)
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select("query_id", "vec_id")
-    brute.join(ivf.withColumn("hit", lit(1L)), Seq("query_id", "vec_id"), "left")
-      .groupBy(col("query_id"))
-      .agg(sum(coalesce(col("hit"), lit(0L))).as("n_hit"))
-      .select(col("query_id"), col("n_hit"),
-        r6(col("n_hit") / lit(k.toDouble)).as("recall"))
+    RankMetrics.recall(ivf, RankMetrics.groundTruth(spark, dir, qs, k), k)
   }
 
   /** nDCG@k of the nprobe-pruned search — [[recallReport]]'s
@@ -490,21 +460,11 @@ object IvfIndex {
     */
   def ndcgReport(spark: SparkSession, dir: String, nprobe: Int = 3,
       k: Int = 10): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     // bounded deterministic query sample — see recallReport (r15)
     val qs = KnnSearch.evalQueries(spark, dir)
     val ivf = searchBatch(spark, dir, nprobe, k, queries = qs)
       .select(col("query_id"), col("vec_id"), col("rnk").as("pos"))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("score").desc, col("vec_id").asc)
-    // r16: PartialTopK bound before the rank Exchange — see recallReport
-    val brute = graft.plans.PartialTopK(KnnSearch.scored(
-        Tables.embeddings(spark, dir).select("vec_id", "embedding"), qs)
-      .select(col("query_id"), col("vec_id"), col("score")),
-        "query_id", "score", "vec_id", k)
-      .withColumn("brnk", row_number().over(w).cast("long"))
-      .filter(col("brnk") <= k)
-      .select("query_id", "vec_id", "brnk")
-    RankMetrics.ndcg(spark, ivf, brute, k)
+    RankMetrics.ndcg(spark, ivf, RankMetrics.groundTruth(spark, dir, qs, k), k)
   }
 
   /** IVF search: rank centroids by distance to the query, scan only the

@@ -264,31 +264,16 @@ object KnnSearch {
 
   /** Batch k-NN: top-k corpus neighbors for every query in the query
     * set (vec_id % 100 == 0). The scan-side plan is the 100 TB shape:
-    * embeddings are dropped and a partition-local partial top-k
-    * ([[graft.plans.PartialTopK]]) runs BEFORE the shuffle, so only
-    * partitions×queries×k candidate rows reach the exact rank window
-    * instead of the full corpus×queries scored set.
+    * embeddings are dropped before the rank, and [[graft.plans.TopK]]'s
+    * literal bound plans a partial `WindowGroupLimit` BEFORE the
+    * shuffle, so only partitions×queries×k candidate rows reach the
+    * exact rank window instead of the full corpus×queries scored set.
     */
   def knnJoin(spark: SparkSession, dir: String, k: Int = 5): DataFrame = {
-    val w = Window.partitionBy(col("query_id")).orderBy(col("score").desc, col("vec_id").asc)
     val pruned = scored(Tables.embeddings(spark, dir).select("vec_id", "embedding"),
       queriesOf(spark, dir, col("vec_id") % 100 === 0))
       .select(col("query_id"), col("vec_id"), col("score"))
-    graft.plans.PartialTopK(pruned, "query_id", "score", "vec_id", k)
-      .withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= k)
-      .select(col("query_id"), col("vec_id"), col("rnk"), r6(col("score")).as("score"))
-  }
-
-  /** Plain-window formulation of knnJoin (the reference semantics the
-    * oracle mirrors; PartialTopKSpec asserts equality).
-    */
-  def knnJoinPlain(spark: SparkSession, dir: String, k: Int = 5): DataFrame = {
-    val w = Window.partitionBy(col("query_id")).orderBy(col("score").desc, col("vec_id").asc)
-    scored(Tables.embeddings(spark, dir).select("vec_id", "embedding"),
-      queriesOf(spark, dir, col("vec_id") % 100 === 0))
-      .withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= k)
+    graft.plans.TopK(pruned, "query_id", "score", "vec_id", k, "rnk")
       .select(col("query_id"), col("vec_id"), col("rnk"), r6(col("score")).as("score"))
   }
 
@@ -376,23 +361,20 @@ object KnnSearch {
     * labeled by the modal label of its 5 nearest neighbors (itself
     * excluded) — embeddings-as-features, the classic k-NN classifier
     * as a relational pipeline. Same scan shape as [[knnJoin]]
-    * (broadcast queries, PartialTopK before the rank shuffle); the
-    * vote count and argmax run on k×|queries| rows.
+    * (broadcast queries, [[graft.plans.TopK]] before the rank shuffle);
+    * the vote count and argmax run on k×|queries| rows.
     */
   def knnClassify(spark: SparkSession, dir: String, k: Int = 5): DataFrame = {
     val qs = Tables.embeddings(spark, dir).filter(col("vec_id") % 100 === 0)
       .select(col("vec_id").as("query_id"), col("embedding").as("qvec"),
         col("label").cast("long").as("true_label"))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("score").desc, col("vec_id").asc)
     val nn = Tables.fanOut(Tables.embeddings(spark, dir)
         .select(col("vec_id"), col("embedding"), col("label").cast("long").as("lbl")))
       .crossJoin(broadcast(qs))
       .filter(col("vec_id") =!= col("query_id"))
       .withColumn("score", dot(col("embedding"), col("qvec")))
       .select(col("query_id"), col("true_label"), col("vec_id"), col("lbl"), col("score"))
-    val top = graft.plans.PartialTopK(nn, "query_id", "score", "vec_id", k)
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
+    val top = graft.plans.TopK(nn, "query_id", "score", "vec_id", k, "rnk")
     val wv = Window.partitionBy(col("query_id"))
       .orderBy(col("n_votes").desc, col("lbl").asc)
     top.groupBy(col("query_id"), col("true_label"), col("lbl"))

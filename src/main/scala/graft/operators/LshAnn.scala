@@ -98,41 +98,11 @@ object LshAnn {
     */
   def recallReport(spark: SparkSession, dir: String, k: Int = 5,
       probes: Int = 2): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     // bounded deterministic query sample (r15, r14 verdict #1) — see
     // KnnSearch.evalQueries for the sampling/unbiasedness contract
-    val queries = KnnSearch.evalQueries(spark, dir)
-      .withColumn("qb", bucketOf(col("qvec")))
-    val probeBuckets = array((col("qb") +: (0 until NumPlanes).map(p =>
-      col("qb").bitwiseXOR(lit(1L << p)))).take(math.max(1, probes)): _*)
-    val probed = queries.select(col("query_id"), col("qvec"),
-      explode(probeBuckets).as("bucket"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("vec_id").asc)
-    // r16: PartialTopK bounds both scored sets BEFORE their rank
-    // Exchange (a hot bucket otherwise pushes a corpus-scale set
-    // through the shuffle; the brute side is corpus×queries always)
-    val approx = graft.plans.PartialTopK(bucketed(spark, dir)
-      .join(broadcast(probed), "bucket")
-      .withColumn("score", dot(col("embedding"), col("qvec")))
-      .select(col("query_id"), col("vec_id"), col("score")),
-        "query_id", "score", "vec_id", k)
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("query_id"), col("vec_id"))
-    val brute = graft.plans.PartialTopK(KnnSearch.scored(
-        Tables.embeddings(spark, dir).select("vec_id", "embedding"),
-        queries.select(col("query_id"), col("qvec")))
-      .select(col("query_id"), col("vec_id"), col("score")),
-        "query_id", "score", "vec_id", k)
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select("query_id", "vec_id")
-    brute.join(approx.withColumn("hit", lit(1L)), Seq("query_id", "vec_id"), "left")
-      .groupBy(col("query_id"))
-      .agg(sum(coalesce(col("hit"), lit(0L))).as("n_hit"))
-      .select(col("query_id"), col("n_hit"),
-        r6(col("n_hit") / lit(k.toDouble)).as("recall"))
+    val qs = KnnSearch.evalQueries(spark, dir)
+    RankMetrics.recall(probedTopK(spark, dir, qs, k, probes),
+      RankMetrics.groundTruth(spark, dir, qs, k), k)
   }
 
   /** nDCG@k of the multi-probe LSH path — [[recallReport]]'s
@@ -143,34 +113,28 @@ object LshAnn {
     */
   def ndcgReport(spark: SparkSession, dir: String, k: Int = 5,
       probes: Int = 2): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     // bounded deterministic query sample — see recallReport (r15)
-    val queries = KnnSearch.evalQueries(spark, dir)
-      .withColumn("qb", bucketOf(col("qvec")))
-    val probeBuckets = array((col("qb") +: (0 until NumPlanes).map(p =>
-      col("qb").bitwiseXOR(lit(1L << p)))).take(math.max(1, probes)): _*)
-    val probed = queries.select(col("query_id"), col("qvec"),
-      explode(probeBuckets).as("bucket"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("vec_id").asc)
-    // r16: PartialTopK bounds before the rank Exchange — see recallReport
-    val approx = graft.plans.PartialTopK(bucketed(spark, dir)
+    val qs = KnnSearch.evalQueries(spark, dir)
+    RankMetrics.ndcg(spark, probedTopK(spark, dir, qs, k, probes),
+      RankMetrics.groundTruth(spark, dir, qs, k), k)
+  }
+
+  /** The approximate arm both eval harnesses share: per-query top-k
+    * (query_id, vec_id, pos) over each query's `probes` probe buckets
+    * (scale shape: see [[recallReport]]).
+    */
+  private def probedTopK(spark: SparkSession, dir: String, qs: DataFrame, k: Int,
+      probes: Int): DataFrame = {
+    val qb = bucketOf(col("qvec"))
+    val probeBuckets = array((qb +: (0 until NumPlanes).map(p =>
+      qb.bitwiseXOR(lit(1L << p)))).take(math.max(1, probes)): _*)
+    val probed = qs.select(col("query_id"), col("qvec"), explode(probeBuckets).as("bucket"))
+    graft.plans.TopK(bucketed(spark, dir)
       .join(broadcast(probed), "bucket")
       .withColumn("score", dot(col("embedding"), col("qvec")))
       .select(col("query_id"), col("vec_id"), col("score")),
-        "query_id", "score", "vec_id", k)
-      .withColumn("pos", row_number().over(w).cast("long"))
-      .filter(col("pos") <= k)
+      "query_id", "score", "vec_id", k, "pos")
       .select(col("query_id"), col("vec_id"), col("pos"))
-    val brute = graft.plans.PartialTopK(KnnSearch.scored(
-        Tables.embeddings(spark, dir).select("vec_id", "embedding"),
-        queries.select(col("query_id"), col("qvec")))
-      .select(col("query_id"), col("vec_id"), col("score")),
-        "query_id", "score", "vec_id", k)
-      .withColumn("brnk", row_number().over(w).cast("long"))
-      .filter(col("brnk") <= k)
-      .select("query_id", "vec_id", "brnk")
-    RankMetrics.ndcg(spark, approx, brute, k)
   }
 
   /** ANN search: hash the query, scan only its bucket, top-k by dot. */

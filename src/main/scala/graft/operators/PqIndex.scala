@@ -513,7 +513,7 @@ object PqIndex {
     */
   private def corpusFingerprint(spark: SparkSession, dir: String): String = {
     val key = s"v1:$NumSub:$NumCodes:${IvfIndex.MaxCentroids}:" +
-      IvfIndex.corpusSignature(spark, dir)
+      IndexMaintenance.corpusSig(spark, dir, "embeddings")
     java.security.MessageDigest.getInstance("MD5")
       .digest(key.getBytes("UTF-8")).map("%02x".format(_)).mkString
   }
@@ -653,9 +653,13 @@ object PqIndex {
   def pqRecallReport(spark: SparkSession, dir: String, k: Int = 10): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import spark.implicits._
-    val configs = broadcast(Seq((1, 50), (2, 50), (3, 50), (3, 20))
-      .toDF("nprobe", "candidates"))
-    val maxNprobe = 3
+    val configRows = Seq((1, 50), (2, 50), (3, 50), (3, 20))
+    val configs = broadcast(configRows.toDF("nprobe", "candidates"))
+    val maxNprobe = configRows.map(_._1).max
+    // the literal bound Spark's InsertWindowGroupLimit needs to plan a
+    // partial limit before the candidate-rank Exchange — the per-row
+    // `arn <= candidates` alone ships the whole ADC-scored set
+    val maxCandidates = configRows.map(_._2).max
     // bounded deterministic query sample (r15, r14 verdict #1) — see
     // KnnSearch.evalQueries for the sampling/unbiasedness contract
     val qs = KnnSearch.evalQueries(spark, dir)
@@ -682,7 +686,7 @@ object PqIndex {
       .withColumn("arn", row_number().over(
         Window.partitionBy(col("query_id"), col("nprobe"), col("candidates"))
           .orderBy(col("approx_e9").desc, col("vec_id").asc)))
-      .filter(col("arn") <= col("candidates"))
+      .filter(col("arn") <= maxCandidates && col("arn") <= col("candidates"))
       .join(Tables.embeddings(spark, dir).select("vec_id", "embedding"), "vec_id")
       .join(broadcast(qs), "query_id")
       .withColumn("exact", dot(col("embedding"), col("qvec")))
@@ -693,16 +697,7 @@ object PqIndex {
       .select(col("query_id"), col("nprobe"), col("candidates"), col("vec_id"),
         lit(1L).as("hit"))
     // exact brute-force truth, same tiebreaks
-    // r16: PartialTopK bounds the corpus×queries brute truth BEFORE
-    // the rank Exchange (see IvfIndex.recallReport)
-    val brute = graft.plans.PartialTopK(KnnSearch.scored(
-        Tables.embeddings(spark, dir).select("vec_id", "embedding"), qs)
-      .select(col("query_id"), col("vec_id"), col("score")),
-        "query_id", "score", "vec_id", k)
-      .withColumn("brn", row_number().over(Window.partitionBy(col("query_id"))
-        .orderBy(col("score").desc, col("vec_id").asc)))
-      .filter(col("brn") <= k)
-      .select("query_id", "vec_id")
+    val brute = RankMetrics.groundTruth(spark, dir, qs, k).select("query_id", "vec_id")
     brute.crossJoin(configs)
       .join(topPq, Seq("query_id", "nprobe", "candidates", "vec_id"), "left")
       .groupBy(col("nprobe"), col("candidates"))

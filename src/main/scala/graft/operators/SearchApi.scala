@@ -133,8 +133,8 @@ object SearchApi {
     * clusters; ONE partition-pruned scan of the union of probed
     * clusters equi-joins the broadcast (query_id, cluster_id, qvec)
     * probe table so each index row is scored only against the queries
-    * probing its cluster; [[graft.plans.PartialTopK]] bounds what
-    * reaches the per-query rank shuffle; the bounded Q×k top table
+    * probing its cluster; [[graft.plans.TopK]]'s partial limit bounds
+    * what reaches the per-query rank shuffle; the bounded Q×k top table
     * broadcasts onto the documents scan for the rerank. Per query the
     * output is row-identical to the [[searchIndexed]] loop under
     * either encoder/scorer seam (SearchManySpec), and the plan scans
@@ -165,9 +165,8 @@ object SearchApi {
     // fixed cost per facade call (guide §5 lineage truncation). One
     // tiny job materializes the same rows the persist would have; all
     // downstream plans now reference a compact LogicalRDD.
-    val qs = encoder.encode(
-        queries.select(col("query_id"), col("query_text")), "query_text", "qvec")
-      .localCheckpoint()
+    val qs = graft.Checkpointing.cut(encoder.encode(
+        queries.select(col("query_id"), col("query_text")), "query_text", "qvec"))
     val nq = if (numQueries >= 0) numQueries else qs.count()
     val centroidsDf = spark.read.parquet(s"$indexPath/centroids")
     // full coverage (nprobe = Int.MaxValue, the graded regime): every
@@ -204,11 +203,7 @@ object SearchApi {
       .join(gated(probe, probeRows), Seq("cluster_id"))
       .withColumn("score", dot(col("embedding"), col("qvec")))
       .select(col("query_id"), col("vec_id"), col("score"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("vec_id").asc)
-    val top = graft.plans.PartialTopK(hits, "query_id", "score", "vec_id", retrieveK)
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= retrieveK)
+    val top = graft.plans.TopK(hits, "query_id", "score", "vec_id", retrieveK, "rn")
       .select(col("query_id"), col("vec_id"), col("score"))
     val docs = Tables.documents(spark, dir)
       .select(col("doc_id"), col("lang"), col("n_chars"), col("text"))
@@ -453,10 +448,10 @@ object SearchApi {
     * (query_id, term) frame never leaves the cluster (no isin literals
     * over terms; SearchManySpec plan-pins their absence), the only
     * driver read is the ≤[[LexIndex.NumBuckets]] bucket prune list,
-    * and a [[graft.plans.PartialTopK]] bounds the per-query scored set
-    * before the rank Exchange exactly as the vector arm does, so a
-    * stop-word term cannot push a corpus-scale set through the
-    * shuffle.
+    * and [[graft.plans.TopK]]'s partial limit bounds the per-query
+    * scored set before the rank Exchange exactly as the vector arm
+    * does, so a stop-word term cannot push a corpus-scale set through
+    * the shuffle.
     */
   def searchManyHybridIndexed(spark: SparkSession, dir: String,
       vecIndexPath: String, lexIndexPath: String, queries: DataFrame,
@@ -476,9 +471,8 @@ object SearchApi {
     // see the searchManyIndexed note; one tiny job in place of the
     // lazy persist removes the encoder tree from every downstream
     // plan copy of BOTH arms.
-    val qs = encoder.encode(
-        queries.select(col("query_id"), col("query_text")), "query_text", "qvec")
-      .localCheckpoint()
+    val qs = graft.Checkpointing.cut(encoder.encode(
+        queries.select(col("query_id"), col("query_text")), "query_text", "qvec"))
     val nq = if (numQueries >= 0) numQueries else qs.count()
     val centroidsDf = spark.read.parquet(s"$vecIndexPath/centroids")
     // full coverage (nprobe = Int.MaxValue, the graded regime): the
@@ -526,11 +520,7 @@ object SearchApi {
         math.min(nprobe.toLong, probedClusters.length.toLong))), Seq("cluster_id"))
       .withColumn("score", dot(col("embedding"), col("qvec")))
       .select(col("query_id"), col("vec_id"), col("score"))
-    val wv = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("vec_id").asc)
-    val vecTop = graft.plans.PartialTopK(vecHits, "query_id", "score", "vec_id", perList)
-      .withColumn("rank_vec", row_number().over(wv).cast("long"))
-      .filter(col("rank_vec") <= perList)
+    val vecTop = graft.plans.TopK(vecHits, "query_id", "score", "vec_id", perList, "rank_vec")
       .select(col("query_id"), col("vec_id").as("doc_id"), col("rank_vec"))
     // ---- lexical arm: one pruned posting scan for every query ----
     // (query_id, term) stays DISTRIBUTED (r13, r12 verdict #2 — the
@@ -563,21 +553,11 @@ object SearchApi {
         col("dl"), col("n_docs"), col("sum_dl")))
       .groupBy(col("query_id"), col("doc_id"))
       .agg(sum(col("c_e6")).as("score_e6"))
-    val wl = Window.partitionBy(col("query_id"))
-      .orderBy(col("score_e6").desc, col("doc_id").asc)
     // bound the per-query scored set BEFORE the rank shuffle, exactly
     // as the vector arm does (r13 — a stop-word query term otherwise
-    // makes the rank Exchange carry a corpus-scale scored set): the
-    // integer score rides as an exact double (|score_e6| ≪ 2⁵³, so the
-    // cast is order-preserving) under the same (desc, doc_id asc)
-    // total order the window uses.
-    val lexTop = graft.plans.PartialTopK(
-        lexScores.filter(col("score_e6") > 0)
-          .withColumn("s", col("score_e6").cast("double")),
-        "query_id", "s", "doc_id", perList)
-      .drop("s")
-      .withColumn("rank_lex", row_number().over(wl).cast("long"))
-      .filter(col("rank_lex") <= perList)
+    // makes the rank Exchange carry a corpus-scale scored set)
+    val lexTop = graft.plans.TopK(lexScores.filter(col("score_e6") > 0),
+        "query_id", "score_e6", "doc_id", perList, "rank_lex")
       .select(col("query_id"), col("doc_id"), col("rank_lex"))
     // ---- fusion (per query, the searchHybridIndexed tail) ----
     val wr = Window.partitionBy(col("query_id"))

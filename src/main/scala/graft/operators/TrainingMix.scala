@@ -215,21 +215,19 @@ object TrainingMix {
     * reaches the hash-compared result.
     *
     * Scale: per-row math + ONE shuffle on source for the top-k window.
-    * With few huge sources the window key skews; the fix at 100 TB is
-    * the standard two-stage top-k (per-partition partial top-k, then
-    * the same window over ≤ k·partitions survivors — see
-    * plans/PartialTopK for the physical-operator version).
+    * With few huge sources the window key skews; [[graft.plans.TopK]]'s
+    * literal bound lets Spark run the standard two-stage top-k (a
+    * partial `WindowGroupLimit` per map partition, then the same window
+    * over ≤ k·partitions survivors per source).
     */
   def weightedSample(spark: SparkSession, dir: String, perSource: Int = 50): DataFrame = {
     val h1 = (col("doc_id") * lit(2654435761L) + lit(40503L)) % lit(4294967296L)
     val h2 = (h1 * lit(1103515245L) + lit(11L)) % lit(4294967296L)
     val u = (h2 + lit(0.5)) / lit(4294967296.0)
-    val w = Window.partitionBy(col("source")).orderBy(col("pri").desc, col("doc_id").asc)
-    Tables.fanOut(Tables.documents(spark, dir))
+    graft.plans.TopK(Tables.fanOut(Tables.documents(spark, dir))
       .select(col("doc_id"), col("source"), col("n_chars"),
-        (log(u) / greatest(col("n_chars"), lit(1L))).as("pri"))
-      .withColumn("rk", row_number().over(w).cast("long"))
-      .filter(col("rk") <= perSource)
+        (log(u) / greatest(col("n_chars"), lit(1L))).as("pri")),
+      "source", "pri", "doc_id", perSource, "rk")
       .select(col("doc_id"), col("source"), col("n_chars"), col("rk"))
   }
 

@@ -329,11 +329,7 @@ object Scratch {
           .join(broadcast(probe), Seq("cluster_id"))
           .withColumn("score", dot(col("embedding"), col("qvec")))
           .select(col("query_id"), col("vec_id"), col("score"))
-        val wv = Window.partitionBy(col("query_id"))
-          .orderBy(col("score").desc, col("vec_id").asc)
-        val vecTop = graft.plans.PartialTopK(vecHits, "query_id", "score", "vec_id", 20)
-          .withColumn("rank_vec", row_number().over(wv).cast("long"))
-          .filter(col("rank_vec") <= 20)
+        val vecTop = graft.plans.TopK(vecHits, "query_id", "score", "vec_id", 20, "rank_vec")
           .select(col("query_id"), col("vec_id").as("doc_id"), col("rank_vec"))
         vecTop.write.format("noop").mode("overwrite").save()
         val t3 = System.nanoTime()
@@ -360,15 +356,8 @@ object Scratch {
             col("dl"), col("n_docs"), col("sum_dl")))
           .groupBy(col("query_id"), col("doc_id"))
           .agg(sum(col("c_e6")).as("score_e6"))
-        val wl = Window.partitionBy(col("query_id"))
-          .orderBy(col("score_e6").desc, col("doc_id").asc)
-        val lexTop = graft.plans.PartialTopK(
-            lexScores.filter(col("score_e6") > 0)
-              .withColumn("s", col("score_e6").cast("double")),
-            "query_id", "s", "doc_id", 20)
-          .drop("s")
-          .withColumn("rank_lex", row_number().over(wl).cast("long"))
-          .filter(col("rank_lex") <= 20)
+        val lexTop = graft.plans.TopK(lexScores.filter(col("score_e6") > 0),
+            "query_id", "score_e6", "doc_id", 20, "rank_lex")
           .select(col("query_id"), col("doc_id"), col("rank_lex"))
         lexTop.write.format("noop").mode("overwrite").save()
         val t5 = System.nanoTime()

@@ -29,9 +29,30 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(p.contains("TakeOrderedAndProject"), p)
   }
 
-  test("vs_knn_join plans the custom partial top-k before the rank shuffle") {
-    val p = planOf("vs_knn_join")
-    assert(p.contains("PartialTopK "), p)
+  // Per-query top-k (graft.plans.TopK and the harnesses' own rank
+  // windows): every rank shuffle must carry at most k rows per group per
+  // map partition, i.e. have a Partial WindowGroupLimit below it —
+  // counted off executedPlan nodes (RankExchanges), keyed by each rank's
+  // first order column. The hybrid facade's twin check lives in
+  // SearchManySpec.
+  Seq(
+    "vs_knn_join" -> Set("score"),
+    "vs_knn_classify" -> Set("score"),
+    "vs_ivf_batch" -> Set("score", "cd2"),
+    "vs_ivf_recall" -> Set("score"),
+    "vs_ndcg" -> Set("score"),
+    "vs_lsh_recall" -> Set("score"),
+    "vs_lsh_ndcg" -> Set("score"),
+    "vs_pq_recall" -> Set("score", "approx_e9"),
+    "vs_search_many" -> Set("score"),
+  ).foreach { case (q, keys) =>
+    test(s"$q bounds every per-query rank Exchange with a partial WindowGroupLimit") {
+      val df = SparkEntry.queries(q)(spark, Sf)
+      df.collect() // finalize the adaptive plan
+      val ranks = RankExchanges(df.queryExecution.executedPlan)
+      assert(ranks.map(_._1).toSet === keys, s"$q: rank Exchanges $ranks")
+      assert(ranks.forall(_._2), s"$q: unbounded rank Exchange(s) in $ranks")
+    }
   }
 
   test("column pruning reaches the scans (no full-width reads in q1)") {

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.{Dedup, GraphOps}
+import graft.operators.{Dedup, GraphOps, IvfIndex, SearchApi}
 
 /** The reliable-checkpoint switch (r8 verdict): every iterative
   * operator's lineage cut goes through [[Checkpointing.cut]], whose
@@ -40,6 +40,37 @@ class ReliabilitySpec extends AnyFunSuite {
           spark.sparkContext.getCheckpointDir.get.stripPrefix("file:")))
         .filter(Files.isRegularFile(_)).count()
       assert(written > 0, "reliable mode wrote nothing to the checkpoint dir")
+    } finally {
+      spark.conf.unset("spark.graft.reliableCheckpoint")
+      spark.conf.unset("spark.graft.checkpointDir")
+    }
+  }
+
+  test("reliable mode routes the batch facade's query-frame cut to the checkpoint dir") {
+    import spark.implicits._
+    val idx = Files.createTempDirectory("graft-reliable-idx").toString
+    IvfIndex.writeIndex(spark, Sf, idx)
+    val queries = Seq((0L, "vector search data pipelines"), (1L, "distributed joins"))
+      .toDF("query_id", "query_text")
+    def rows() = SearchApi.searchManyIndexed(spark, Sf, idx, queries, nprobe = 2)
+      .collect().map(_.toString).sorted.toSeq
+    val want = rows()
+    assert(want.nonEmpty)
+    // the checkpoint dir is SparkContext-wide and set at most once:
+    // reliable cuts land in whichever dir is live after the call
+    def checkpointFiles(): Set[String] =
+      spark.sparkContext.getCheckpointDir.toSeq.flatMap { d =>
+        val it = Files.walk(java.nio.file.Paths.get(d.stripPrefix("file:")))
+        try it.filter(Files.isRegularFile(_)).toArray.map(_.toString).toSeq finally it.close()
+      }.toSet
+    try {
+      spark.conf.set("spark.graft.reliableCheckpoint", "true")
+      spark.conf.set("spark.graft.checkpointDir",
+        Files.createTempDirectory("graft-reliable-ckpt").toString)
+      val before = checkpointFiles()
+      assert(rows() === want)
+      assert((checkpointFiles() -- before).nonEmpty,
+        "searchManyIndexed wrote nothing to the checkpoint dir in reliable mode")
     } finally {
       spark.conf.unset("spark.graft.reliableCheckpoint")
       spark.conf.unset("spark.graft.checkpointDir")

@@ -132,7 +132,7 @@ class SearchManySpec extends AnyFunSuite {
   }
 
   test("r13: the lexical arm is distributed — no term literals in the plan, " +
-      "PartialTopK under BOTH rank shuffles") {
+      "a partial WindowGroupLimit under BOTH rank shuffles") {
     import spark.implicits._
     graft.plans.ScanShare.drain()
     // a term that exists nowhere else: if it shows up in the executed
@@ -155,13 +155,14 @@ class SearchManySpec extends AnyFunSuite {
     assert(!all.contains(marker),
       "a query term reached the plan as a literal — the lexical arm is driver-mediated again")
     // the per-query scored set is bounded before BOTH rank Exchanges:
-    // the vector arm's PartialTopK (r12) and the lexical arm's (r13) —
-    // counted structurally off the logical plan (string counting
-    // double-counts adaptive Final/Initial sections)
-    val nTopK = qe.optimizedPlan.collect {
-      case p: graft.plans.PartialTopKNode => p
-    }.size
-    assert(nTopK === 2, s"expected 2 PartialTopK bounds (vector + lexical), got $nTopK in:\n$all")
+    // the vector arm's (ordered by score) and the lexical arm's (by
+    // score_e6) — counted structurally off the executed plan's nodes
+    // (string counting double-counts adaptive Final/Initial sections)
+    df.collect()
+    val ranks = RankExchanges(qe.executedPlan)
+    assert(ranks.forall(_._2), s"unbounded rank Exchange(s) in $ranks:\n$all")
+    assert(Seq("score", "score_e6").forall(key => ranks.exists(_._1 == key)),
+      s"expected the vector and lexical arms' partial limits, got $ranks")
   }
 
   test("r13: stop-word-heavy query set stays row-identical to the per-query loop") {
