@@ -386,11 +386,11 @@ object KnnSearch {
   }
 
   /** Embedding drift monitor: per-dimension mean shift between a
-    * reference corpus half and a "current" half (vec_id parity as the
-    * deterministic split) — the distribution check a production vector
-    * store runs when the upstream encoder changes. Per-row integerized
-    * sums make the distributed means exact; one posexplode + one
-    * partial-agg shuffle of (dim, sum, count) rows.
+    * reference half and a "current" half (vec_id parity split; `% 2 === 0`
+    * splits negative ids like `pmod(vec_id, 2)`, CorpusHygieneSpec) — the
+    * check a production vector store runs when the encoder changes.
+    * Per-row integerized sums make the distributed means exact; one
+    * posexplode + one partial-agg shuffle of (dim, sum, count) rows.
     */
   def driftReport(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.VectorFunctions.cents

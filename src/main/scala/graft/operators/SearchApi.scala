@@ -23,24 +23,12 @@ object SearchApi {
   /** Deterministic text→vector encoder stub: token md5s hashed into
     * `dim` buckets (signed), then L2-normalized — the bag-of-words
     * hashing trick, matching the reference's encode contract
-    * (L2-normalized fixed-dim output, encode_assets.py:28-34).
+    * (L2-normalized fixed-dim output, encode_assets.py:28-34). One
+    * native expression ([[graft.functions.EncoderExprs.EmbedTextExpr]]):
+    * each token is hashed once per row, inside whole-stage codegen.
     */
-  def embedText(text: Column, dim: Int = Dim): Column = {
-    val toks = tokens(text)
-    // bucket = first 4 md5 nibbles mod dim; sign from nibble 5
-    val contrib = transform(toks, t => {
-      val h = conv(substring(md5(t), 1, 4), 16, 10).cast("int")
-      val sgn = when(conv(substring(md5(t), 5, 1), 16, 10).cast("int") % 2 === 0, 1.0)
-        .otherwise(-1.0)
-      struct((h % dim).as("b"), sgn.as("v"))
-    })
-    val raw = transform(sequence(lit(0), lit(dim - 1)), i =>
-      aggregate(contrib, lit(0.0),
-        (acc, c) => acc + when(c.getField("b") === i, c.getField("v")).otherwise(0.0)))
-    val nrm = sqrt(aggregate(raw, lit(0.0), (acc, x) => acc + x * x))
-    when(nrm > 0, transform(raw, x => (x / nrm).cast("float")))
-      .otherwise(transform(raw, x => x.cast("float")))
-  }
+  def embedText(text: Column, dim: Int = Dim): Column =
+    graft.functions.EncoderExprs.embedText(text, dim)
 
   /** The session's query-time encoder. Default: the hashing stub; a
     * deployment with a real model swaps in a [[BatchedEncoder]] whose
@@ -157,14 +145,13 @@ object SearchApi {
     // over the caller's query frame.
     def gated(df: DataFrame, rows: Long): DataFrame =
       graft.plans.Hints.broadcastIfUnder(df, rows, maxBroadcastRows)
-    // r16: EAGER lineage cut on the encoded query frame — the former
-    // lazy ScanShare persist left the full encoder expression tree in
-    // every downstream logical-plan copy (probe window, both collects,
-    // the corpus join, the rerank tail), and driver-side
-    // analysis/optimization of those trees was measured as a large
-    // fixed cost per facade call (guide §5 lineage truncation). One
-    // tiny job materializes the same rows the persist would have; all
-    // downstream plans now reference a compact LogicalRDD.
+    // r16: EAGER lineage cut on the encoded query frame — one tiny job
+    // materializes the encoded rows, so every downstream plan (probe
+    // window, both collects, the corpus join, the rerank tail)
+    // references a compact LogicalRDD. The per-call driver cost r16
+    // blamed on those plan copies was the encoder's own interpreted
+    // evaluation under ConvertToLocalRelation (an HOF tree, ≈2·64² md5
+    // calls per token); the encoder is now one native expression.
     val qs = graft.Checkpointing.cut(encoder.encode(
         queries.select(col("query_id"), col("query_text")), "query_text", "qvec"))
     val nq = if (numQueries >= 0) numQueries else qs.count()
@@ -469,8 +456,9 @@ object SearchApi {
     // the hashing encoder, so a real-model TextEncoder could serve the
     // vector facade but not the hybrid one). r16: EAGER lineage cut —
     // see the searchManyIndexed note; one tiny job in place of the
-    // lazy persist removes the encoder tree from every downstream
-    // plan copy of BOTH arms.
+    // lazy persist keeps the encode out of every downstream plan of
+    // BOTH arms (its driver cost was the encoder's own interpreted
+    // evaluation under ConvertToLocalRelation, now a native expression).
     val qs = graft.Checkpointing.cut(encoder.encode(
         queries.select(col("query_id"), col("query_text")), "query_text", "qvec"))
     val nq = if (numQueries >= 0) numQueries else qs.count()

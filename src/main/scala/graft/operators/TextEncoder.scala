@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, FloatType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** The text→vector encoder seam (reference encode_assets.py:28-34
   * `SentenceTransformer.encode(..., normalize_embeddings=True)`).
@@ -12,7 +13,9 @@ import org.apache.spark.sql.types.{ArrayType, FloatType}
   * implementations ship:
   *
   *  - [[HashingEncoder]] — the deterministic column-expression stub
-  *    (codegen'd, zero-JVM-boundary) used by the graded surface.
+  *    used by the graded surface: one native expression
+  *    ([[graft.functions.EncoderExprs.EmbedTextExpr]]) that stays inside
+  *    whole-stage codegen, so encoding never leaves Spark's row format.
   *  - [[BatchedEncoder]] — the REAL-MODEL integration slot: a
   *    partition-wise batched `mapPartitions` (the Multimodal.decodeBatch
   *    shape) whose `model: Seq[String] => Seq[Array[Float]]` is where a
@@ -22,6 +25,11 @@ import org.apache.spark.sql.types.{ArrayType, FloatType}
   *    what makes the seam testable: EncoderSeamSpec proves
   *    SearchApi.search is UNCHANGED under either encoder, so swapping
   *    in a real model is a constructor argument, not a rewrite.
+  *
+  * NULL text is the one input where the two differ: [[HashingEncoder]]
+  * yields `dim` null elements (the HOF formulation's NULL folds), while
+  * [[BatchedEncoder]] hands the model `""` and so yields the encoding
+  * of the empty string. EncoderSeamSpec pins both.
   *
   * Scale shape: encoding is embarrassingly parallel; the batched path
   * amortizes model-call overhead over `batchSize` rows per call and
@@ -69,37 +77,11 @@ final class BatchedEncoder(
 }
 
 object BatchedEncoder {
-  /** Default "model": the JVM twin of [[SearchApi.embedText]], term for
-    * term — same md5 bucketing, same left-to-right float folds, same
-    * trailing-empty split semantics — so the batched path is
-    * bit-identical to the column expression and the seam is provable.
+  /** Default "model": the hashing kernel [[SearchApi.embedText]]
+    * evaluates ([[graft.functions.EncoderExprs.embed]]), so the batched
+    * path is bit-identical to the column expression on non-NULL text
+    * and the seam is provable.
     */
   def hashingModel(texts: Seq[String], dim: Int): Seq[Array[Float]] =
-    texts.map { text =>
-      // Spark `trim` strips 0x20 only; `split` keeps trailing empties
-      val trimmed = {
-        var a = 0; var b = text.length
-        while (a < b && text.charAt(a) == ' ') a += 1
-        while (b > a && text.charAt(b - 1) == ' ') b -= 1
-        text.substring(a, b)
-      }
-      val toks = trimmed.split("\\s+", -1)
-      val md = java.security.MessageDigest.getInstance("MD5")
-      val buckets = toks.map { t =>
-        val hex = md.digest(t.getBytes("UTF-8")).map("%02x".format(_)).mkString
-        md.reset()
-        val b = Integer.parseInt(hex.substring(0, 4), 16) % dim
-        val sgn = if (Integer.parseInt(hex.substring(4, 5), 16) % 2 == 0) 1.0 else -1.0
-        (b, sgn)
-      }
-      val raw = Array.tabulate(dim) { i =>
-        var acc = 0.0
-        buckets.foreach { case (b, v) => if (b == i) acc += v }
-        acc
-      }
-      var nrm2 = 0.0
-      raw.foreach(x => nrm2 += x * x)
-      val nrm = math.sqrt(nrm2)
-      if (nrm > 0) raw.map(x => (x / nrm).toFloat) else raw.map(_.toFloat)
-    }
+    texts.map(t => graft.functions.EncoderExprs.embed(UTF8String.fromString(t), dim))
 }

@@ -135,6 +135,21 @@ class CorpusHygieneSpec extends AnyFunSuite {
     assert(rows.forall(_.getDouble(3) < 0.1), "parity halves drifted implausibly")
   }
 
+  test("drift report splits negative vec_ids by parity like pmod(vec_id, 2)") {
+    import spark.implicits._
+    // even ids (negative included) carry 1.0s, odd ids 0.0s: every
+    // even id must land in ref and every odd id in cur
+    val dir = java.nio.file.Files.createTempDirectory("graft-drift-neg").toString
+    val ids = Seq(-6L, -5L, -4L, -3L, -2L, -1L, 0L, 1L, 2L, 3L)
+    ids.map(id => (id, Seq.fill(4)(if (Math.floorMod(id, 2L) == 0L) 1.0f else 0.0f)))
+      .toDF("vec_id", "embedding")
+      .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+    val rows = graft.operators.KnnSearch.driftReport(spark, dir).collect()
+    assert(rows.map(_.getLong(0)).sorted.toSeq === (1L to 4L))
+    assert(rows.forall(r => r.getDouble(1) == 1.0 && r.getDouble(2) == 0.0),
+      rows.mkString(", "))
+  }
+
   test("event paths: session counts conserve against sessionize") {
     val totalSessions = EventOps.sessionize(spark, Sf).count()
     val paths = EventOps.eventPaths(spark, Sf, topK = 1000000).collect()
