@@ -146,13 +146,7 @@ object DedupGroups {
     // a zero-pair corpus writes no part files (partitionBy emits
     // nothing for 0 rows) and a later read cannot infer a schema:
     // leave one empty footer-bearing file so the state stays readable
-    val anyPart = {
-      val it = fs.listFiles(new Path(staged), true)
-      var found = false
-      while (!found && it.hasNext) found = it.next().getPath.getName.endsWith(".parquet")
-      found
-    }
-    if (!anyPart)
+    if (IndexMaintenance.parquetFileCount(spark, staged) == 0)
       rows.limit(0).coalesce(1).write.mode("append").parquet(staged)
     IndexMaintenance.atomicSwap(fs, new Path(staged), new Path(s"$indexPath/groups"))
     // the swap replaced files UNDER an already-read path: drop the

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -202,9 +202,7 @@ object IndexMaintenance {
     val fs = fsOf(spark, dir)
     val acc = scala.collection.mutable.Map.empty[Long, (Long, Long)]
     val extra = scala.collection.mutable.Map.empty[String, Long]
-    val it = fs.listFiles(new Path(dir), true)
-    while (it.hasNext) {
-      val p = it.next().getPath
+    filesUnder(fs, new Path(dir)).map(_.getPath).foreach { p =>
       if (p.getName.endsWith(".parquet")) {
         val dirName = p.getParent.getName
         val eq = dirName.indexOf('=')
@@ -300,34 +298,102 @@ object IndexMaintenance {
     * epochs, each read as its OWN root so a streaming sink's
     * `_spark_metadata` log keeps filtering uncommitted files per
     * epoch, and partition pruning applies to every branch of the
-    * union.
+    * union. Every root is resolved through [[layoutDf]], so a serving
+    * call on an unchanged layout pays a driver-side listing walk and no
+    * Spark job; which epochs serve is re-decided on every call (marker
+    * and epoch dirs are re-read), so an appended, folded or rewritten
+    * epoch is seen by the next call.
     */
   def vectorsDf(spark: SparkSession, indexPath: String): DataFrame = {
-    val base = spark.read.parquet(s"$indexPath/vectors")
+    val base = layoutDf(spark, s"$indexPath/vectors")
     val cols = base.columns.toIndexedSeq.map(col)
     // epochs carry an extra batch=<id> partition level (the idempotent
     // foreachBatch layout) — project it away to the base schema
     epochDirs(spark, indexPath)
-      .map(d => spark.read.parquet(d).select(cols: _*))
+      .map(d => layoutDf(spark, d).select(cols: _*))
       .foldLeft(base)(_ unionByName _)
   }
 
-  /** The corpus data-file signature (sorted path:length:mtime of every
-    * `table` part file) that the cached layouts and the IVF count/seed
-    * caches key on: any part-file refresh of the source table
-    * invalidates automatically. A metadata-only listing.
+  /** Every file under `root`, recursively, as Hadoop's recursive
+    * `listFiles` returns them — hidden and `_`-prefixed names (`_SUCCESS`,
+    * `_spark_metadata/…`, markers) included — but through plain
+    * `listStatus` calls: the walk launches no Spark job and builds no
+    * `LocatedFileStatus`, whose constructor loads each file's
+    * permissions (on a local file system without native Hadoop that
+    * forks one `ls -ld` per file). A plain-file root lists itself; a
+    * missing root throws FileNotFoundException.
+    */
+  private[graft] def filesUnder(fs: FileSystem, root: Path): Seq[FileStatus] = {
+    val out = scala.collection.mutable.ArrayBuffer.empty[FileStatus]
+    def walk(p: Path): Unit = fs.listStatus(p).foreach { st =>
+      if (st.isDirectory) walk(st.getPath) else out += st
+    }
+    walk(root)
+    out.toSeq
+  }
+
+  /** Sorted `path:length:mtime` of every file under `path` — the
+    * data-file signature the install-once caches key on and
+    * [[layoutDf]] validates against. A metadata-only listing.
+    */
+  private[graft] def filesSig(spark: SparkSession, path: String): String = {
+    val p = new Path(path)
+    filesUnder(p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
+      .map(st => s"${st.getPath}:${st.getLen}:${st.getModificationTime}")
+      .sorted.mkString(";")
+  }
+
+  /** The corpus data-file signature ([[filesSig]] of the `table` part
+    * files) that the cached layouts and the IVF count/seed caches key
+    * on: any part-file refresh of the source table invalidates
+    * automatically.
     */
   def corpusSig(spark: SparkSession, dir: String,
-      table: String = "documents"): String = {
-    val p = new Path(s"$dir/$table.parquet")
+      table: String = "documents"): String =
+    filesSig(spark, s"$dir/$table.parquet")
+
+  /** Resolved layout relations per (session, path), each with the
+    * [[filesSig]] it was resolved under.
+    */
+  private val layouts =
+    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), (String, DataFrame)]()
+
+  /** `spark.read.parquet(path)` for an INSTALLED layout directory,
+    * resolved once per session while its files are unchanged. A fresh
+    * read lists the directory (a partition-discovery Spark job once it
+    * holds more than a few dozen partition dirs) and opens a footer to
+    * infer the schema (a second job); a serving batch answers many
+    * requests from one unchanged layout, so that metadata work used to
+    * repeat per call. Here the resolved DataFrame — its file index and
+    * schema — is held, and every call re-validates it with a
+    * driver-side [[filesSig]] walk (no Spark job): any added, removed,
+    * resized or re-stamped file, a streaming sink's new
+    * `_spark_metadata` commit included, resolves the layout afresh.
+    * A missing path or a plain file falls through to
+    * `spark.read.parquet`, so errors stay those of a plain read.
+    *
+    * For serving reads of layouts that are rewritten only by swaps and
+    * appends (new part-file names); build and maintenance reads of
+    * staging dirs stay plain reads. The memo keeps one resolved
+    * relation per (session, layout path) served for the JVM's
+    * lifetime; a changed layout replaces its entry.
+    */
+  def layoutDf(spark: SparkSession, path: String): DataFrame = {
+    val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val entries = scala.collection.mutable.ArrayBuffer.empty[String]
-    val it = fs.listFiles(p, true)
-    while (it.hasNext) {
-      val st = it.next()
-      entries += s"${st.getPath}:${st.getLen}:${st.getModificationTime}"
+    val sig =
+      try { if (fs.getFileStatus(p).isDirectory) Some(filesSig(spark, path)) else None }
+      catch { case _: java.io.FileNotFoundException => None }
+    sig match {
+      case None => spark.read.parquet(path)
+      case Some(s) =>
+        val key = (spark, path)
+        Option(layouts.get(key)).collect { case (`s`, df) => df }.getOrElse {
+          val df = spark.read.parquet(path)
+          layouts.put(key, (s, df))
+          df
+        }
     }
-    entries.sorted.mkString(";")
   }
 
   /** Install-once fingerprint-cached layout (r12 — the shared core of
@@ -807,9 +873,7 @@ object IndexMaintenance {
     }
     val scanDirs = if (manifest.isDefined) epochs else vecDir +: epochs
     scanDirs.foreach { d =>
-      val it = fs.listFiles(new Path(d), true)
-      while (it.hasNext) {
-        val p = it.next().getPath
+      filesUnder(fs, new Path(d)).map(_.getPath).foreach { p =>
         if (p.getName.endsWith(".parquet")) {
           filesBefore += 1
           val dirName = p.getParent.getName
@@ -860,16 +924,9 @@ object IndexMaintenance {
   }
 
   /** Total data-file bytes under a directory (file-status metadata). */
-  private def bytesUnder(fs: FileSystem, p: Path): Long = {
-    if (!fs.exists(p)) return 0L
-    var n = 0L
-    val it = fs.listFiles(p, true)
-    while (it.hasNext) {
-      val st = it.next()
-      if (st.getPath.getName.endsWith(".parquet")) n += st.getLen
-    }
-    n
-  }
+  private def bytesUnder(fs: FileSystem, p: Path): Long =
+    if (!fs.exists(p)) 0L
+    else filesUnder(fs, p).filter(_.getPath.getName.endsWith(".parquet")).map(_.getLen).sum
 
   /** Aside-first atomic swap of a fully-staged directory into place —
     * the ONE rename discipline every layout/table rewrite here uses
@@ -1078,10 +1135,7 @@ object IndexMaintenance {
   def parquetFileCount(spark: SparkSession, dir: String): Long = {
     val fs = fsOf(spark, dir)
     val p = new Path(dir)
-    if (!fs.exists(p)) return 0L
-    val it = fs.listFiles(p, true)
-    var n = 0L
-    while (it.hasNext) { if (it.next().getPath.getName.endsWith(".parquet")) n += 1 }
-    n
+    if (!fs.exists(p)) 0L
+    else filesUnder(fs, p).count(_.getPath.getName.endsWith(".parquet")).toLong
   }
 }

@@ -372,7 +372,8 @@ object IvfIndex {
     */
   def searchIndex(spark: SparkSession, indexPath: String, query: DataFrame,
       nprobe: Int = 3, k: Int = 10, roundScore: Boolean = true): DataFrame = {
-    val probed = spark.read.parquet(s"$indexPath/centroids").crossJoin(broadcast(query))
+    val probed = IndexMaintenance.layoutDf(spark, s"$indexPath/centroids")
+      .crossJoin(broadcast(query))
       .withColumn("cd2", dist2(col("cvec"), col("qvec")))
       .orderBy(col("cd2").asc, col("cluster_id").asc)
       .limit(nprobe)

@@ -328,7 +328,8 @@ object LexIndex {
     val dfAggs = qterms.zipWithIndex.map { case (t, i) =>
       sum(when(col("term") === t, 1L).otherwise(0L)).as(s"df_$i") }
     val dfs = p.agg(dfAggs.head, dfAggs.tail: _*)
-    val stats = spark.read.parquet(s"$indexPath/stats").crossJoin(broadcast(dfs))
+    val stats = IndexMaintenance.layoutDf(spark, s"$indexPath/stats")
+      .crossJoin(broadcast(dfs))
     val pivotAggs = first(col("dl")).as("dl") +:
       qterms.zipWithIndex.map { case (t, i) =>
         sum(when(col("term") === t, col("tf")).otherwise(0L)).as(s"tf_$i") }

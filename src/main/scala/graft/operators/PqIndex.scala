@@ -466,7 +466,7 @@ object PqIndex {
     */
   def searchResidualIndex(spark: SparkSession, indexPath: String, query: DataFrame,
       nprobe: Int = 3, candidates: Int = 50, k: Int = 10): DataFrame = {
-    val cents0 = spark.read.parquet(s"$indexPath/centroids")
+    val cents0 = IndexMaintenance.layoutDf(spark, s"$indexPath/centroids")
     val probed = cents0.crossJoin(broadcast(query))
       .withColumn("cd2", dist2(col("cvec"), col("qvec")))
       .orderBy(col("cd2").asc, col("cluster_id").asc)
@@ -475,7 +475,8 @@ object PqIndex {
     val constDf = cents0.crossJoin(broadcast(query))
       .filter(col("cluster_id").isin(probed.toIndexedSeq: _*))
       .select(col("cluster_id"), cents(dot(col("cvec"), col("qvec")), 1e9).as("const_e9"))
-    val rlutRows = spark.read.parquet(s"$indexPath/codebooks").crossJoin(broadcast(query))
+    val rlutRows = IndexMaintenance.layoutDf(spark, s"$indexPath/codebooks")
+      .crossJoin(broadcast(query))
       .select(col("s"), col("code").cast("long"),
         cents(dot(expr(s"slice(qvec, s * $SubDim + 1, $SubDim)"), col("rcvec")), 1e9).as("e9"))
       .collect()
@@ -579,13 +580,15 @@ object PqIndex {
   def searchIndex(spark: SparkSession, indexPath: String, query: DataFrame,
       nprobe: Int = 3, candidates: Int = 50, k: Int = 10,
       roundScore: Boolean = true): DataFrame = {
-    val probed = spark.read.parquet(s"$indexPath/centroids").crossJoin(broadcast(query))
+    val probed = IndexMaintenance.layoutDf(spark, s"$indexPath/centroids")
+      .crossJoin(broadcast(query))
       .withColumn("cd2", dist2(col("cvec"), col("qvec")))
       .orderBy(col("cd2").asc, col("cluster_id").asc)
       .limit(nprobe)
       .select("cluster_id")
       .collect().map(_.getLong(0)) // index metadata, O(nprobe)
-    val lutRows = spark.read.parquet(s"$indexPath/codebooks").crossJoin(broadcast(query))
+    val lutRows = IndexMaintenance.layoutDf(spark, s"$indexPath/codebooks")
+      .crossJoin(broadcast(query))
       .select(col("s"), col("code").cast("long"),
         cents(dot(expr(s"slice(qvec, s * $SubDim + 1, $SubDim)"), col("cvec")), 1e9).as("e9"))
       .collect()

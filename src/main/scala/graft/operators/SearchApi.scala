@@ -44,6 +44,14 @@ object SearchApi {
     */
   val defaultScorer: CrossScorer = new ColumnScorer
 
+  /** The documents table the serving facades rerank against —
+    * `Tables.documents`' file, resolved through
+    * [[IndexMaintenance.layoutDf]] so a session serving one corpus
+    * lists it and infers its schema once while its files are unchanged.
+    */
+  private def servedDocuments(spark: SparkSession, dir: String): DataFrame =
+    IndexMaintenance.layoutDf(spark, s"$dir/documents.parquet")
+
   /** The shared tail of every serving pipeline: broadcast the bounded
     * top-k retrieval onto the documents scan (the hint removes the one
     * AQE replan that could shuffle documents at 100 TB), rerank via the
@@ -53,7 +61,7 @@ object SearchApi {
   private def rerankTail(spark: SparkSession, dir: String, top: DataFrame,
       queryText: String, minLogit: Option[Double], lang: Option[String],
       scorer: CrossScorer): DataFrame = {
-    val docs = Tables.documents(spark, dir)
+    val docs = servedDocuments(spark, dir)
       .select(col("doc_id"), col("lang"), col("n_chars"), col("text"))
     val reranked = scorer.score(
         broadcast(top).join(docs, top("vec_id") === docs("doc_id")), queryText, "logit")
@@ -127,6 +135,13 @@ object SearchApi {
     * output is row-identical to the [[searchIndexed]] loop under
     * either encoder/scorer seam (SearchManySpec), and the plan scans
     * the vectors layout exactly once (plan-pinned).
+    *
+    * Every read of the installed files — centroids, vectors (base and
+    * epochs) and documents — resolves through
+    * [[IndexMaintenance.layoutDf]]: a batch on an unchanged layout
+    * lists it with a driver-side walk and launches no listing or
+    * footer job, and any append, compaction or rebalance in between is
+    * seen by the next call (LayoutMemoSpec).
     */
   def searchManyIndexed(spark: SparkSession, dir: String, indexPath: String,
       queries: DataFrame, nprobe: Int = 3, retrieveK: Int = 20,
@@ -155,7 +170,7 @@ object SearchApi {
     val qs = graft.Checkpointing.cut(encoder.encode(
         queries.select(col("query_id"), col("query_text")), "query_text", "qvec"))
     val nq = if (numQueries >= 0) numQueries else qs.count()
-    val centroidsDf = spark.read.parquet(s"$indexPath/centroids")
+    val centroidsDf = IndexMaintenance.layoutDf(spark, s"$indexPath/centroids")
     // full coverage (nprobe = Int.MaxValue, the graded regime): every
     // query probes every cluster, so the per-query rank over the
     // centroid table is provably a no-op (rank ≤ nlist < 2³¹) — skip
@@ -192,7 +207,7 @@ object SearchApi {
       .select(col("query_id"), col("vec_id"), col("score"))
     val top = graft.plans.TopK(hits, "query_id", "score", "vec_id", retrieveK, "rn")
       .select(col("query_id"), col("vec_id"), col("score"))
-    val docs = Tables.documents(spark, dir)
+    val docs = servedDocuments(spark, dir)
       .select(col("doc_id"), col("lang"), col("n_chars"), col("text"))
     val reranked = scorer.scoreMany(
         // top is bounded (≤ Q × retrieveK rows): broadcast it onto the
@@ -429,7 +444,9 @@ object SearchApi {
     * properties, computed once off the same pruned scan), then the
     * same per-query RRF fusion. Per query this is row-identical to the
     * [[searchHybridIndexed]] loop (SearchManySpec); the plan scans
-    * each layout once for the whole set.
+    * each layout once for the whole set. Both layouts, the centroids
+    * and the lexical `stats` row resolve through
+    * [[IndexMaintenance.layoutDf]], as in [[searchManyIndexed]].
     *
     * r13 (r12 verdict #2): the lexical arm is fully distributed — the
     * (query_id, term) frame never leaves the cluster (no isin literals
@@ -462,7 +479,7 @@ object SearchApi {
     val qs = graft.Checkpointing.cut(encoder.encode(
         queries.select(col("query_id"), col("query_text")), "query_text", "qvec"))
     val nq = if (numQueries >= 0) numQueries else qs.count()
-    val centroidsDf = spark.read.parquet(s"$vecIndexPath/centroids")
+    val centroidsDf = IndexMaintenance.layoutDf(spark, s"$vecIndexPath/centroids")
     // full coverage (nprobe = Int.MaxValue, the graded regime): the
     // per-query centroid rank is provably a no-op — skip the window
     // (r16; see searchManyIndexed)
@@ -532,7 +549,7 @@ object SearchApi {
     // off the shared pruned scan serves every query carrying the term
     // (the semi-join above bounds its distinct terms by the query set)
     val termDf = p.groupBy(col("term")).agg(count(lit(1)).as("df"))
-    val stats = spark.read.parquet(s"$lexIndexPath/stats")
+    val stats = IndexMaintenance.layoutDf(spark, s"$lexIndexPath/stats")
     val lexScores = p
       .join(gated(qterms, qtermRows), Seq("term"))
       .join(gated(termDf, qtermRows), Seq("term"))

@@ -383,17 +383,7 @@ object TextAnalysis {
   def dsirLutArtifact(spark: SparkSession, docsPath: String,
       targetLang: String = "en", bucketChars: Int = 2): String = synchronized {
     import org.apache.hadoop.fs.Path
-    val sig = {
-      val p = new Path(docsPath)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val entries = scala.collection.mutable.ArrayBuffer.empty[String]
-      val it = fs.listFiles(p, true)
-      while (it.hasNext) {
-        val st = it.next()
-        entries += s"${st.getPath}:${st.getLen}:${st.getModificationTime}"
-      }
-      entries.sorted.mkString(";")
-    }
+    val sig = IndexMaintenance.filesSig(spark, docsPath)
     // the tokenizer/LUT-math identity rides in the fingerprint (r11,
     // ADVICE): nBuckets is derived from bucketChars and the Laplace
     // +1 / e6 scaling are named so a math change here must change this

@@ -178,9 +178,6 @@ object Ingest {
     if (!fs.rename(new org.apache.hadoop.fs.Path(tmp), dst))
       throw new java.io.IOException(s"could not move $tmp into place")
     fs.delete(aside, true)
-    val it = fs.listFiles(dst, true)
-    var n = 0L
-    while (it.hasNext) { if (it.next().getPath.getName.endsWith(".parquet")) n += 1 }
-    n
+    graft.operators.IndexMaintenance.parquetFileCount(spark, corpusPath)
   }
 }
