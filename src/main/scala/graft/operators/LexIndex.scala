@@ -402,31 +402,21 @@ object LexIndex {
     */
   def hybridIndexedQuery(spark: SparkSession, dir: String,
       perList: Int = 20, k: Int = 10): DataFrame = {
-    import graft.functions.VectorFunctions.{boundedWindow, cents, dot}
-    val rrfK = 60
+    import graft.functions.VectorFunctions.{cents, dot}
+    import LexicalSearch.{fuseRrf, rankList}
     val q = Tables.embeddings(spark, dir).filter(col("vec_id") === 0)
       .select(col("embedding").as("qvec"))
-    val vecTop = IndexMaintenance
-      .vectorsDf(spark, IvfIndex.ivfIndexFor(spark, dir))
-      .select(col("vec_id"), col("embedding"))
-      .crossJoin(broadcast(q))
-      .withColumn("score", dot(col("embedding"), col("qvec")))
-      .orderBy(col("score").desc, col("vec_id").asc).limit(perList)
-      .select(col("vec_id").as("doc_id"), col("score"))
-      .withColumn("rank_vec", row_number()
-        .over(boundedWindow(col("score").desc, col("doc_id").asc)).cast("long"))
-    val lexTop = scoredDocsE6(spark, lexIndexFor(spark, dir),
-        LexicalSearch.QueryTerms)
-      .filter(col("score_e6") > 0)
-      .orderBy(col("score_e6").desc, col("doc_id").asc).limit(perList)
-      .select(col("doc_id"), col("score_e6"))
-      .withColumn("rank_lex", row_number()
-        .over(boundedWindow(col("score_e6").desc, col("doc_id").asc)).cast("long"))
-    vecTop.select("doc_id", "rank_vec")
-      .join(lexTop.select("doc_id", "rank_lex"), Seq("doc_id"), "full_outer")
-      .withColumn("rrf_e9",
-        cents(coalesce(lit(1.0) / (lit(rrfK) + col("rank_vec")), lit(0.0)) +
-          coalesce(lit(1.0) / (lit(rrfK) + col("rank_lex")), lit(0.0)), 1e9))
+    val vecTop = rankList(IndexMaintenance
+        .vectorsDf(spark, IvfIndex.ivfIndexFor(spark, dir))
+        .select(col("vec_id"), col("embedding"))
+        .crossJoin(broadcast(q))
+        .withColumn("score", dot(col("embedding"), col("qvec"))),
+      "score", "vec_id", perList, "rank_vec")
+    val lexTop = rankList(scoredDocsE6(spark, lexIndexFor(spark, dir),
+        LexicalSearch.QueryTerms).filter(col("score_e6") > 0),
+      "score_e6", "doc_id", perList, "rank_lex")
+    fuseRrf(vecTop, lexTop, Seq("doc_id"))
+      .withColumn("rrf_e9", cents(col("rrf"), 1e9))
       .orderBy(col("rrf_e9").desc, col("doc_id").asc)
       .limit(k)
       .select(col("doc_id"), col("rank_vec"), col("rank_lex"),

@@ -99,29 +99,45 @@ object LexicalSearch {
     */
   def hybridRrf(spark: SparkSession, dir: String, perList: Int = 20,
       k: Int = 10): DataFrame = {
-    val rrfK = 60
     val q = Tables.embeddings(spark, dir).filter(col("vec_id") === 0)
       .select(col("embedding").as("qvec"))
-    val vecTop = KnnSearch.scored(
-        Tables.embeddings(spark, dir).select("vec_id", "embedding"), q)
-      .orderBy(col("score").desc, col("vec_id").asc).limit(perList)
-      .select(col("vec_id").as("doc_id"), col("score"))
-      .withColumn("rank_vec",
-        row_number().over(graft.functions.VectorFunctions.boundedWindow(col("score").desc, col("doc_id").asc)).cast("long"))
-    val lexTop = scoredDocs(spark, dir)
-      .filter(col("score_e6") > 0)
-      .orderBy(col("score_e6").desc, col("doc_id").asc).limit(perList)
-      .select(col("doc_id"), col("score_e6"))
-      .withColumn("rank_lex",
-        row_number().over(graft.functions.VectorFunctions.boundedWindow(col("score_e6").desc, col("doc_id").asc)).cast("long"))
-    vecTop.select("doc_id", "rank_vec")
-      .join(lexTop.select("doc_id", "rank_lex"), Seq("doc_id"), "full_outer")
-      .withColumn("rrf_e9",
-        cents(coalesce(lit(1.0) / (lit(rrfK) + col("rank_vec")), lit(0.0)) +
-          coalesce(lit(1.0) / (lit(rrfK) + col("rank_lex")), lit(0.0)), 1e9))
+    val vecTop = rankList(KnnSearch.scored(
+        Tables.embeddings(spark, dir).select("vec_id", "embedding"), q),
+      "score", "vec_id", perList, "rank_vec")
+    val lexTop = rankList(scoredDocs(spark, dir).filter(col("score_e6") > 0),
+      "score_e6", "doc_id", perList, "rank_lex")
+    fuseRrf(vecTop, lexTop, Seq("doc_id"))
+      .withColumn("rrf_e9", cents(col("rrf"), 1e9))
       .orderBy(col("rrf_e9").desc, col("doc_id").asc)
       .limit(k)
       .select(col("doc_id"), col("rank_vec"), col("rank_lex"),
         (col("rrf_e9") / 1000000000.0).as("rrf"))
   }
+
+  /** The rank constant of reciprocal-rank fusion (the standard k = 60). */
+  private[graft] val RrfK = 60
+
+  /** One modality's rank list for fusion: the top `n` rows of `scored`
+    * by (`score` desc, `id` asc), keyed as `doc_id` and numbered 1..n in
+    * that order into `rank` — (doc_id, rank). The list is ≤ n rows, so
+    * its unpartitioned window is bounded.
+    */
+  private[graft] def rankList(scored: DataFrame, score: String, id: String, n: Int,
+      rank: String): DataFrame =
+    scored.orderBy(col(score).desc, col(id).asc).limit(n)
+      .select(col(id).as("doc_id"), col(score))
+      .withColumn(rank,
+        row_number().over(boundedWindow(col(score).desc, col("doc_id").asc)).cast("long"))
+      .select(col("doc_id"), col(rank))
+
+  /** Reciprocal-rank fusion of a `rank_vec` list and a `rank_lex` list:
+    * full outer join on `keys`, `rrf` = Σ 1/([[RrfK]] + rank) over the
+    * lists that returned the row. Callers order and cut the fused rows.
+    */
+  private[graft] def fuseRrf(vecTop: DataFrame, lexTop: DataFrame,
+      keys: Seq[String]): DataFrame =
+    vecTop.join(lexTop, keys, "full_outer")
+      .withColumn("rrf",
+        coalesce(lit(1.0) / (lit(RrfK) + col("rank_vec")), lit(0.0)) +
+          coalesce(lit(1.0) / (lit(RrfK) + col("rank_lex")), lit(0.0)))
 }

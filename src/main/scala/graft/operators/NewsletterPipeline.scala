@@ -77,19 +77,8 @@ object NewsletterPipeline {
       category: Option[String] = None,
       fromDate: Option[String] = None, toDate: Option[String] = None,
       minLogit: Option[Double] = None): DataFrame = {
-    val q = spark.range(1).select(SearchApi.embedText(lit(queryText)).as("qvec"))
-    val probed = spark.read.parquet(s"$indexPath/centroids")
-      .crossJoin(broadcast(q))
-      .withColumn("cd2", dist2(col("cvec"), col("qvec")))
-      .orderBy(col("cd2").asc, col("cluster_id").asc)
-      .limit(nprobe)
-      .select("cluster_id")
-      .collect().map(_.getLong(0)) // index metadata, O(nprobe) — not data
-    val scored = spark.read.parquet(s"$indexPath/vectors")
-      .withColumn("cluster_id", col("cluster_id").cast("long"))
-      .filter(col("cluster_id").isin(probed.toIndexedSeq: _*))
-      .crossJoin(broadcast(q))
-      .withColumn("score", dot(col("embedding"), col("qvec")))
+    val q = SearchApi.defaultEncoder.encodeQuery(spark, queryText)
+    val scored = IvfIndex.probedScores(spark, indexPath, q, nprobe)
       .orderBy(col("score").desc, col("chunk_id").asc)
       .limit(retrieveK)
       .withColumn("logit", KnnSearch.rerankLogit(col("score"), length(col("text")).cast("long")))

@@ -226,11 +226,7 @@ object PqIndex {
   def searchIvfPq(spark: SparkSession, dir: String, nprobe: Int = 3,
       candidates: Int = 50, k: Int = 10): DataFrame = {
     val q = queryVec(spark, dir)
-    val probed = IvfIndex.centroids(spark, dir).crossJoin(broadcast(q))
-      .withColumn("cd2", dist2(col("cvec"), col("qvec")))
-      .orderBy(col("cd2").asc, col("cluster_id").asc)
-      .limit(nprobe)
-      .select("cluster_id")
+    val probed = IvfIndex.nearestClusters(IvfIndex.centroids(spark, dir), q, nprobe)
     val cand = adcScored(spark, dir, q)
       .withColumn("cluster_id",
         IvfIndex.nearest(col("embedding"), IvfIndex.centroids(spark, dir))
@@ -375,10 +371,7 @@ object PqIndex {
       candidates: Int = 50, k: Int = 10): DataFrame = {
     val q = queryVec(spark, dir)
     val cents0 = IvfIndex.centroids(spark, dir)
-    val probed = cents0.crossJoin(broadcast(q))
-      .withColumn("cd2", dist2(col("cvec"), col("qvec")))
-      .orderBy(col("cd2").asc, col("cluster_id").asc)
-      .limit(nprobe).select("cluster_id")
+    val probed = IvfIndex.nearestClusters(cents0, q, nprobe)
     val constDf = cents0.crossJoin(broadcast(q))
       .select(col("cluster_id"), cents(dot(col("cvec"), col("qvec")), 1e9).as("const_e9"))
     val cand = residualScored(spark, dir, q)
@@ -467,10 +460,7 @@ object PqIndex {
   def searchResidualIndex(spark: SparkSession, indexPath: String, query: DataFrame,
       nprobe: Int = 3, candidates: Int = 50, k: Int = 10): DataFrame = {
     val cents0 = IndexMaintenance.layoutDf(spark, s"$indexPath/centroids")
-    val probed = cents0.crossJoin(broadcast(query))
-      .withColumn("cd2", dist2(col("cvec"), col("qvec")))
-      .orderBy(col("cd2").asc, col("cluster_id").asc)
-      .limit(nprobe).select("cluster_id")
+    val probed = IvfIndex.nearestClusters(cents0, query, nprobe)
       .collect().map(_.getLong(0)) // index metadata, O(nprobe)
     val constDf = cents0.crossJoin(broadcast(query))
       .filter(col("cluster_id").isin(probed.toIndexedSeq: _*))
@@ -580,12 +570,8 @@ object PqIndex {
   def searchIndex(spark: SparkSession, indexPath: String, query: DataFrame,
       nprobe: Int = 3, candidates: Int = 50, k: Int = 10,
       roundScore: Boolean = true): DataFrame = {
-    val probed = IndexMaintenance.layoutDf(spark, s"$indexPath/centroids")
-      .crossJoin(broadcast(query))
-      .withColumn("cd2", dist2(col("cvec"), col("qvec")))
-      .orderBy(col("cd2").asc, col("cluster_id").asc)
-      .limit(nprobe)
-      .select("cluster_id")
+    val probed = IvfIndex.nearestClusters(
+        IndexMaintenance.layoutDf(spark, s"$indexPath/centroids"), query, nprobe)
       .collect().map(_.getLong(0)) // index metadata, O(nprobe)
     val lutRows = IndexMaintenance.layoutDf(spark, s"$indexPath/codebooks")
       .crossJoin(broadcast(query))

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.TextFunctions.tokens
@@ -52,19 +53,20 @@ object SearchApi {
   private def servedDocuments(spark: SparkSession, dir: String): DataFrame =
     IndexMaintenance.layoutDf(spark, s"$dir/documents.parquet")
 
-  /** The shared tail of every serving pipeline: broadcast the bounded
-    * top-k retrieval onto the documents scan (the hint removes the one
-    * AQE replan that could shuffle documents at 100 TB), rerank via the
+  /** The shared tail of every serving pipeline: join the bounded,
+    * broadcast-hinted top-k retrieval `top` (vec_id, score, ...) onto
+    * the documents scan (the hint removes the one AQE replan that could
+    * shuffle documents at 100 TB), `rerank` it into a `logit` via the
     * scorer seam, sigmoid → prob, thresholds → label, optional payload
-    * filters, rank by logit.
+    * filters, rank by logit within each `keys` group (one group when
+    * `keys` is empty).
     */
   private def rerankTail(spark: SparkSession, dir: String, top: DataFrame,
-      queryText: String, minLogit: Option[Double], lang: Option[String],
-      scorer: CrossScorer): DataFrame = {
+      rerank: DataFrame => DataFrame, minLogit: Option[Double],
+      lang: Option[String], keys: Seq[String]): DataFrame = {
     val docs = servedDocuments(spark, dir)
       .select(col("doc_id"), col("lang"), col("n_chars"), col("text"))
-    val reranked = scorer.score(
-        broadcast(top).join(docs, top("vec_id") === docs("doc_id")), queryText, "logit")
+    val reranked = rerank(top.join(docs, col("vec_id") === docs("doc_id")))
       .withColumn("prob", lit(1.0) / (lit(1.0) + exp(-col("logit"))))
       .withColumn("label", KnnSearch.relevanceLabel(col("logit")))
     val filtered = Seq(
@@ -72,9 +74,11 @@ object SearchApi {
       lang.map(l => col("lang") === l),
     ).flatten.foldLeft(reranked)((df, p) => df.filter(p))
     filtered
-      .withColumn("rerank_rank",
-        row_number().over(graft.functions.VectorFunctions.boundedWindow(col("logit").desc, col("doc_id").asc)).cast("long"))
-      .select("doc_id", "score", "logit", "prob", "label", "rerank_rank", "lang", "text")
+      .withColumn("rerank_rank", row_number().over(
+        Window.partitionBy(keys.map(col): _*)
+          .orderBy(col("logit").desc, col("doc_id").asc)).cast("long"))
+      .select((keys ++ Seq("doc_id", "score", "logit", "prob", "label",
+        "rerank_rank", "lang", "text")).map(col): _*)
   }
 
   /** Full search pipeline over the corpus embeddings + documents:
@@ -90,7 +94,8 @@ object SearchApi {
       .orderBy(col("score").desc, col("vec_id").asc)
       .limit(retrieveK)
       .select(col("vec_id"), col("score"))
-    rerankTail(spark, dir, top, queryText, minLogit, lang, scorer)
+    rerankTail(spark, dir, broadcast(top), scorer.score(_, queryText, "logit"),
+      minLogit, lang, Nil)
   }
 
   /** The serving-scale variant of [[search]]: same surface (encode →
@@ -113,7 +118,8 @@ object SearchApi {
     val top = IvfIndex.searchIndex(spark, indexPath, q, nprobe, retrieveK,
         roundScore = false)
       .select(col("vec_id"), col("score"))
-    rerankTail(spark, dir, top, queryText, minLogit, lang, scorer)
+    rerankTail(spark, dir, broadcast(top), scorer.score(_, queryText, "logit"),
+      minLogit, lang, Nil)
   }
 
   /** The query-SET serving facade (r12, r11 verdict #8): runs the full
@@ -150,51 +156,81 @@ object SearchApi {
       scorer: CrossScorer = defaultScorer,
       numQueries: Long = -1L,
       maxBroadcastRows: Long = MaxBroadcastQueryRows): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // r15 (r14 verdict #2): every query-frame-derived broadcast is
-    // SIZE-GATED off a caller-known query count (the q_pagerank
-    // precedent) — at a 1M-query batch the old unconditional hints
-    // forced multi-GB driver builds; past the gate each join degrades
-    // to its shuffle shape with bit-identical rows (SearchManySpec
-    // pins both shapes). numQueries < 0 falls back to one count job
-    // over the caller's query frame.
-    def gated(df: DataFrame, rows: Long): DataFrame =
-      graft.plans.Hints.broadcastIfUnder(df, rows, maxBroadcastRows)
-    // r16: EAGER lineage cut on the encoded query frame — one tiny job
-    // materializes the encoded rows, so every downstream plan (probe
-    // window, both collects, the corpus join, the rerank tail)
-    // references a compact LogicalRDD. The per-call driver cost r16
-    // blamed on those plan copies was the encoder's own interpreted
-    // evaluation under ConvertToLocalRelation (an HOF tree, ≈2·64² md5
-    // calls per token); the encoder is now one native expression.
+    val (qs, nq) = encodedQueries(queries, encoder, numQueries)
+    val (hits, _) = batchVectorArm(spark, indexPath, qs, nq, nprobe,
+      maxBroadcastRows, None)
+    val top = graft.plans.TopK(hits, "query_id", "score", "vec_id", retrieveK, "rn")
+      .select(col("query_id"), col("vec_id"), col("score"))
+    // top is bounded (≤ Q × retrieveK rows): broadcast it onto the
+    // documents scan when under the gate, with each row's own query
+    // text riding along
+    rerankTail(spark, dir,
+      graft.plans.Hints.broadcastIfUnder(
+        top.join(qs.select(col("query_id"), col("query_text")), Seq("query_id")),
+        nq * retrieveK.toLong, maxBroadcastRows),
+      scorer.scoreMany(_, "query_text", "logit"), minLogit, lang, Seq("query_id"))
+  }
+
+  /** The batch facades' encoded query frame: (query_id, query_text,
+    * qvec) behind an EAGER lineage cut (r16) — one tiny job materializes
+    * the encoded rows, so every downstream plan (probe window, the
+    * metadata collect, the corpus join, the rerank tail) references a
+    * compact LogicalRDD — and its row count: the caller-known
+    * `numQueries`, or one count job when it is negative.
+    */
+  private def encodedQueries(queries: DataFrame, encoder: TextEncoder,
+      numQueries: Long): (DataFrame, Long) = {
     val qs = graft.Checkpointing.cut(encoder.encode(
         queries.select(col("query_id"), col("query_text")), "query_text", "qvec"))
-    val nq = if (numQueries >= 0) numQueries else qs.count()
+    (qs, if (numQueries >= 0) numQueries else qs.count())
+  }
+
+  /** The batch facades' vector arm: every query of `qs` probes its
+    * `nprobe` nearest clusters of the installed centroid table
+    * ([[IvfIndex.probeClusters]]); ONE partition-pruned scan of the
+    * union of probed clusters equi-joins the (query_id, cluster_id,
+    * qvec) probe table, so each index row is scored only against the
+    * queries probing its cluster. Returns the (query_id, vec_id, score)
+    * hits and the ids of `moreIds` (one long column), which ride the
+    * probed-cluster metadata collect as a second leg of the same job
+    * (r16: the hybrid facade's term buckets — two independent stages
+    * the scheduler runs concurrently, in place of two serial collects).
+    *
+    * Query-frame broadcasts are SIZE-GATED off the query count (r15,
+    * r14 verdict #2, the q_pagerank precedent): at a 1M-query batch an
+    * unconditional hint forces a multi-GB driver build; past the gate
+    * each join degrades to its shuffle shape with bit-identical rows
+    * (SearchManySpec pins both shapes).
+    */
+  private def batchVectorArm(spark: SparkSession, indexPath: String,
+      qs: DataFrame, nq: Long, nprobe: Int, maxBroadcastRows: Long,
+      moreIds: Option[DataFrame]): (DataFrame, Array[Long]) = {
+    def gated(df: DataFrame, rows: Long): DataFrame =
+      graft.plans.Hints.broadcastIfUnder(df, rows, maxBroadcastRows)
     val centroidsDf = IndexMaintenance.layoutDf(spark, s"$indexPath/centroids")
+    val pairs = centroidsDf.crossJoin(gated(qs.select(col("query_id"), col("qvec")), nq))
     // full coverage (nprobe = Int.MaxValue, the graded regime): every
     // query probes every cluster, so the per-query rank over the
     // centroid table is provably a no-op (rank ≤ nlist < 2³¹) — skip
     // the window and read the probed-cluster ids off the centroid
     // table alone (r16; production nprobe keeps the ranked path)
     val fullCoverage = nprobe == Int.MaxValue
-    // each query's nprobe nearest clusters off the tiny centroid table
-    val probe = (if (fullCoverage)
-        centroidsDf.crossJoin(gated(qs.select(col("query_id"), col("qvec")), nq))
-          .select(col("query_id"), col("cluster_id"), col("qvec"))
-      else centroidsDf
-        .crossJoin(gated(qs.select(col("query_id"), col("qvec")), nq))
-        .withColumn("cd2", dist2(col("cvec"), col("qvec")))
-        .withColumn("rn", row_number().over(
-          Window.partitionBy(col("query_id"))
-            .orderBy(col("cd2").asc, col("cluster_id").asc)))
-        .filter(col("rn") <= nprobe)
-        .select(col("query_id"), col("cluster_id"), col("qvec")))
+    val probe = (if (fullCoverage) pairs.select(col("query_id"), col("cluster_id"), col("qvec"))
+      else IvfIndex.probeClusters(pairs, nprobe))
       .transform(graft.plans.ScanShare.shared)
     // union of probed clusters: index metadata (≤ nlist ids) — this is
     // what prunes the vectors scan to the probed partition dirs only
-    val probedClusters = (if (fullCoverage) centroidsDf.select(col("cluster_id"))
-        else probe.select(col("cluster_id")).distinct())
-      .collect().map(_.getLong(0)).sorted
+    val clusterIds = if (fullCoverage) centroidsDf.select(col("cluster_id"))
+      else probe.select(col("cluster_id")).distinct()
+    val (probedClusters, more) = moreIds match {
+      case None => (clusterIds.collect().map(_.getLong(0)).sorted, Array.empty[Long])
+      case Some(ids) =>
+        val meta = clusterIds.select(lit(0L).as("t"), col("cluster_id").as("id"))
+          .unionByName(ids.select(lit(1L).as("t"), col(ids.columns.head).as("id")))
+          .collect()
+        (meta.filter(_.getLong(0) == 0L).map(_.getLong(1)).sorted,
+          meta.filter(_.getLong(0) == 1L).map(_.getLong(1)).sorted)
+    }
     // probe rows ≤ nq × min(nprobe, |probed clusters|) — metadata
     // already in hand, so the gate costs zero extra jobs
     val probeRows = nq * math.max(1L,
@@ -205,30 +241,7 @@ object SearchApi {
       .join(gated(probe, probeRows), Seq("cluster_id"))
       .withColumn("score", dot(col("embedding"), col("qvec")))
       .select(col("query_id"), col("vec_id"), col("score"))
-    val top = graft.plans.TopK(hits, "query_id", "score", "vec_id", retrieveK, "rn")
-      .select(col("query_id"), col("vec_id"), col("score"))
-    val docs = servedDocuments(spark, dir)
-      .select(col("doc_id"), col("lang"), col("n_chars"), col("text"))
-    val reranked = scorer.scoreMany(
-        // top is bounded (≤ Q × retrieveK rows): broadcast it onto the
-        // documents scan when under the gate, with each row's own
-        // query text riding along
-        gated(top.join(qs.select(col("query_id"), col("query_text")), Seq("query_id")),
-            nq * retrieveK.toLong)
-          .join(docs, col("vec_id") === docs("doc_id")),
-        "query_text", "logit")
-      .withColumn("prob", lit(1.0) / (lit(1.0) + exp(-col("logit"))))
-      .withColumn("label", KnnSearch.relevanceLabel(col("logit")))
-    val filtered = Seq(
-      minLogit.map(m => col("logit") >= m),
-      lang.map(l => col("lang") === l),
-    ).flatten.foldLeft(reranked)((df, p) => df.filter(p))
-    filtered
-      .withColumn("rerank_rank", row_number().over(
-        Window.partitionBy(col("query_id"))
-          .orderBy(col("logit").desc, col("doc_id").asc)).cast("long"))
-      .select("query_id", "doc_id", "score", "logit", "prob", "label",
-        "rerank_rank", "lang", "text")
+    (hits, more)
   }
 
   /** Broadcast gate for the batch facades' query-derived tables (r15,
@@ -348,7 +361,8 @@ object SearchApi {
     val top = PqIndex.searchIndex(spark, indexPath, q, nprobe, candidates,
         k = retrieveK, roundScore = false)
       .select(col("vec_id"), col("score"))
-    rerankTail(spark, dir, top, queryText, minLogit, lang, scorer)
+    rerankTail(spark, dir, broadcast(top), scorer.score(_, queryText, "logit"),
+      minLogit, lang, Nil)
   }
 
   /** Diversified search: encode the query text, retrieve a candidate
@@ -361,7 +375,7 @@ object SearchApi {
   def searchDiverse(spark: SparkSession, dir: String, queryText: String,
       poolK: Int = 20, k: Int = 5, lambda: Double = 0.7, mu: Double = 0.3): DataFrame = {
     import spark.implicits._
-    val q = spark.range(1).select(embedText(lit(queryText)).as("qvec"))
+    val q = defaultEncoder.encodeQuery(spark, queryText)
     val pool = KnnSearch.scored(Tables.embeddings(spark, dir).select("vec_id", "embedding"), q)
       .orderBy(col("score").desc, col("vec_id").asc)
       .limit(poolK)
@@ -383,15 +397,10 @@ object SearchApi {
     */
   def searchHybrid(spark: SparkSession, dir: String, queryText: String,
       perList: Int = 20, k: Int = 10): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val q = spark.range(1).select(embedText(lit(queryText)).as("qvec"))
-    val vecTop = KnnSearch.scored(
-        Tables.embeddings(spark, dir).select("vec_id", "embedding"), q)
-      .orderBy(col("score").desc, col("vec_id").asc).limit(perList)
-      .select(col("vec_id").as("doc_id"), col("score"))
-      .withColumn("rank_vec",
-        row_number().over(graft.functions.VectorFunctions.boundedWindow(col("score").desc, col("doc_id").asc)).cast("long"))
-      .drop("score")
+    val q = defaultEncoder.encodeQuery(spark, queryText)
+    val vecTop = LexicalSearch.rankList(KnnSearch.scored(
+        Tables.embeddings(spark, dir).select("vec_id", "embedding"), q),
+      "score", "vec_id", perList, "rank_vec")
     // lexical pass: per-query terms → tf/df stats → BM25, same shape as
     // LexicalSearch.bm25 but parameterized by the query text
     val terms = queryText.trim.split("\\s+").toSeq.distinct.take(8)
@@ -407,32 +416,15 @@ object SearchApi {
     val contribs = terms.indices.map(i =>
       LexicalSearch.contributionE6(col(s"tf_$i"), col(s"df_$i"), col("dl"),
         col("n_docs"), col("sum_dl")))
-    val lexTop = withTf.drop("toks").crossJoin(broadcast(stats))
-      .withColumn("score_e6", contribs.reduce(_ + _))
-      .filter(col("score_e6") > 0)
-      .orderBy(col("score_e6").desc, col("doc_id").asc).limit(perList)
-      .select(col("doc_id"), col("score_e6"))
-      .withColumn("rank_lex",
-        row_number().over(graft.functions.VectorFunctions.boundedWindow(col("score_e6").desc, col("doc_id").asc)).cast("long"))
-    vecTop.join(lexTop.select("doc_id", "rank_lex"), Seq("doc_id"), "full_outer")
-      .withColumn("rrf",
-        coalesce(lit(1.0) / (lit(60) + col("rank_vec")), lit(0.0)) +
-          coalesce(lit(1.0) / (lit(60) + col("rank_lex")), lit(0.0)))
+    val lexTop = LexicalSearch.rankList(withTf.drop("toks").crossJoin(broadcast(stats))
+        .withColumn("score_e6", contribs.reduce(_ + _))
+        .filter(col("score_e6") > 0),
+      "score_e6", "doc_id", perList, "rank_lex")
+    LexicalSearch.fuseRrf(vecTop, lexTop, Seq("doc_id"))
       .orderBy(col("rrf").desc, col("doc_id").asc)
       .limit(k)
   }
 
-  /** The serving-scale variant of [[searchHybrid]] (r11): BOTH
-    * retrieval arms run over persisted, partition-pruned indexes — the
-    * vector arm over the cluster-partitioned IVF layout
-    * ([[IvfIndex.searchIndex]], nprobe nearest clusters), the lexical
-    * arm over the token-bucket posting index
-    * ([[LexIndex.scoredDocsE6]], only the query terms' buckets) — then
-    * the same reciprocal-rank fusion. With every cluster probed this
-    * is row-identical to the brute [[searchHybrid]] (LexIndexSpec);
-    * production tightens nprobe and trades recall for the pruned scan,
-    * exactly the searchIndexed trajectory.
-    */
   /** The query-SET twin of [[searchHybridIndexed]] (r12): both arms of
     * a whole (query_id, query_text) frame served in ONE plan each —
     * the vector arm is the [[searchManyIndexed]] retrieval (one
@@ -463,87 +455,39 @@ object SearchApi {
       encoder: TextEncoder = defaultEncoder,
       numQueries: Long = -1L,
       maxBroadcastRows: Long = MaxBroadcastQueryRows): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // query-derived broadcasts are size-gated exactly as in
-    // searchManyIndexed (r15, r14 verdict #2) — see the gate note there
-    def gated(df: DataFrame, rows: Long): DataFrame =
-      graft.plans.Hints.broadcastIfUnder(df, rows, maxBroadcastRows)
     // the vector arm rides the same pluggable encoder seam as
     // searchManyIndexed (r14 — the hybrid facade previously hard-coded
     // the hashing encoder, so a real-model TextEncoder could serve the
-    // vector facade but not the hybrid one). r16: EAGER lineage cut —
-    // see the searchManyIndexed note; one tiny job in place of the
-    // lazy persist keeps the encode out of every downstream plan of
-    // BOTH arms (its driver cost was the encoder's own interpreted
-    // evaluation under ConvertToLocalRelation, now a native expression).
-    val qs = graft.Checkpointing.cut(encoder.encode(
-        queries.select(col("query_id"), col("query_text")), "query_text", "qvec"))
-    val nq = if (numQueries >= 0) numQueries else qs.count()
-    val centroidsDf = IndexMaintenance.layoutDf(spark, s"$vecIndexPath/centroids")
-    // full coverage (nprobe = Int.MaxValue, the graded regime): the
-    // per-query centroid rank is provably a no-op — skip the window
-    // (r16; see searchManyIndexed)
-    val fullCoverage = nprobe == Int.MaxValue
-    // ---- vector arm: the searchManyIndexed retrieval shape ----
-    val probe = (if (fullCoverage)
-        centroidsDf.crossJoin(gated(qs.select(col("query_id"), col("qvec")), nq))
-          .select(col("query_id"), col("cluster_id"), col("qvec"))
-      else centroidsDf
-        .crossJoin(gated(qs.select(col("query_id"), col("qvec")), nq))
-        .withColumn("cd2", dist2(col("cvec"), col("qvec")))
-        .withColumn("rn", row_number().over(
-          Window.partitionBy(col("query_id"))
-            .orderBy(col("cd2").asc, col("cluster_id").asc)))
-        .filter(col("rn") <= nprobe)
-        .select(col("query_id"), col("cluster_id"), col("qvec")))
-      .transform(graft.plans.ScanShare.shared)
-    // ---- the two metadata reads (probed cluster ids for the vector
-    // arm's partition prune, term-bucket ids for the lexical arm's) are
-    // independent given qs, but ran as two SERIAL driver collects (r15
-    // verdict #4 — the arms were latency-serialized behind them). ONE
-    // tagged union job now returns both lists: its two legs are
-    // independent stages the scheduler runs concurrently. qterms is
-    // declared before the collect so its plan (and the bucket leg)
-    // exists; it stays fully distributed exactly as before.
-    val qterms = qs
-      .select(col("query_id"),
-        explode(slice(array_distinct(split(trim(col("query_text")), "\\s+")), 1, 8)).as("term"))
-      .filter(col("term") =!= "")
-      .transform(graft.plans.ScanShare.shared)
-    val meta = (if (fullCoverage) centroidsDf.select(col("cluster_id"))
-        else probe.select(col("cluster_id")).distinct())
-      .select(lit(0L).as("t"), col("cluster_id").as("id"))
-      .unionByName(qterms.select(LexIndex.bucketOf(col("term")).as("b"))
-        .distinct().select(lit(1L).as("t"), col("b").as("id")))
-      .collect()
-    val probedClusters = meta.filter(_.getLong(0) == 0L).map(_.getLong(1)).sorted
-    val buckets = meta.filter(_.getLong(0) == 1L).map(_.getLong(1)).sorted
-    val vecHits = IndexMaintenance.vectorsDf(spark, vecIndexPath)
-      .withColumn("cluster_id", col("cluster_id").cast("long"))
-      .filter(col("cluster_id").isin(probedClusters.toIndexedSeq: _*))
-      .join(gated(probe, nq * math.max(1L,
-        math.min(nprobe.toLong, probedClusters.length.toLong))), Seq("cluster_id"))
-      .withColumn("score", dot(col("embedding"), col("qvec")))
-      .select(col("query_id"), col("vec_id"), col("score"))
-    val vecTop = graft.plans.TopK(vecHits, "query_id", "score", "vec_id", perList, "rank_vec")
-      .select(col("query_id"), col("vec_id").as("doc_id"), col("rank_vec"))
-    // ---- lexical arm: one pruned posting scan for every query ----
+    // vector facade but not the hybrid one)
+    val (qs, nq) = encodedQueries(queries, encoder, numQueries)
     // (query_id, term) stays DISTRIBUTED (r13, r12 verdict #2 — the
     // r12 arm collected every query's terms and pushed them back as
     // isin literals, which at a 1M-query batch is a million-literal
     // filter expression stalling the planner): terms explode from the
     // query frame; the ONLY driver read is the ≤NumBuckets bucket
-    // prune list (index metadata, the probedClusters analogue);
-    // postings prune to query terms via a broadcast semi-join on term.
-    // (qterms and the ≤NumBuckets bucket prune list are built above,
-    // fused with the vector arm's metadata collect — r16.)
+    // prune list (index metadata, the probed-cluster analogue), fused
+    // into the vector arm's metadata job (r16); postings prune to query
+    // terms via a broadcast semi-join on term.
+    val qterms = qs
+      .select(col("query_id"),
+        explode(slice(array_distinct(split(trim(col("query_text")), "\\s+")), 1, 8)).as("term"))
+      .filter(col("term") =!= "")
+      .transform(graft.plans.ScanShare.shared)
+    // ---- vector arm: the searchManyIndexed retrieval shape ----
+    val (vecHits, buckets) = batchVectorArm(spark, vecIndexPath, qs, nq, nprobe,
+      maxBroadcastRows,
+      Some(qterms.select(LexIndex.bucketOf(col("term")).as("b")).distinct()))
+    val vecTop = graft.plans.TopK(vecHits, "query_id", "score", "vec_id", perList, "rank_vec")
+      .select(col("query_id"), col("vec_id").as("doc_id"), col("rank_vec"))
+    // ---- lexical arm: one pruned posting scan for every query ----
+    // query-derived broadcasts are size-gated as in the vector arm;
     // qterms and its derivatives are ≤ 8 rows per query (the term cap)
-    val qtermRows = nq * 8L
+    def gated(df: DataFrame): DataFrame =
+      graft.plans.Hints.broadcastIfUnder(df, nq * 8L, maxBroadcastRows)
     val p = IndexMaintenance.vectorsDf(spark, lexIndexPath)
       .withColumn("bucket", col("bucket").cast("long"))
       .filter(col("bucket").isin(buckets.toIndexedSeq: _*))
-      .join(gated(qterms.select(col("term")).distinct(), qtermRows),
-        Seq("term"), "left_semi")
+      .join(gated(qterms.select(col("term")).distinct()), Seq("term"), "left_semi")
       .transform(graft.plans.ScanShare.shared)
     // df is a global property of a term's posting list — one aggregate
     // off the shared pruned scan serves every query carrying the term
@@ -551,8 +495,8 @@ object SearchApi {
     val termDf = p.groupBy(col("term")).agg(count(lit(1)).as("df"))
     val stats = IndexMaintenance.layoutDf(spark, s"$lexIndexPath/stats")
     val lexScores = p
-      .join(gated(qterms, qtermRows), Seq("term"))
-      .join(gated(termDf, qtermRows), Seq("term"))
+      .join(gated(qterms), Seq("term"))
+      .join(gated(termDf), Seq("term"))
       .crossJoin(broadcast(stats)) // one metadata row — always broadcast
       .withColumn("c_e6", LexicalSearch.contributionE6(col("tf"), col("df"),
         col("dl"), col("n_docs"), col("sum_dl")))
@@ -565,38 +509,37 @@ object SearchApi {
         "query_id", "score_e6", "doc_id", perList, "rank_lex")
       .select(col("query_id"), col("doc_id"), col("rank_lex"))
     // ---- fusion (per query, the searchHybridIndexed tail) ----
-    val wr = Window.partitionBy(col("query_id"))
-      .orderBy(col("rrf").desc, col("doc_id").asc)
-    vecTop.join(lexTop, Seq("query_id", "doc_id"), "full_outer")
-      .withColumn("rrf",
-        coalesce(lit(1.0) / (lit(60) + col("rank_vec")), lit(0.0)) +
-          coalesce(lit(1.0) / (lit(60) + col("rank_lex")), lit(0.0)))
-      .withColumn("rk", row_number().over(wr))
+    LexicalSearch.fuseRrf(vecTop, lexTop, Seq("query_id", "doc_id"))
+      .withColumn("rk", row_number().over(
+        Window.partitionBy(col("query_id"))
+          .orderBy(col("rrf").desc, col("doc_id").asc)))
       .filter(col("rk") <= k)
       .drop("rk")
   }
 
+  /** The serving-scale variant of [[searchHybrid]] (r11): BOTH
+    * retrieval arms run over persisted, partition-pruned indexes — the
+    * vector arm over the cluster-partitioned IVF layout
+    * ([[IvfIndex.probedScores]], nprobe nearest clusters), the lexical
+    * arm over the token-bucket posting index
+    * ([[LexIndex.scoredDocsE6]], only the query terms' buckets) — then
+    * the same reciprocal-rank fusion. With every cluster probed this
+    * is row-identical to the brute [[searchHybrid]] (LexIndexSpec);
+    * production tightens nprobe and trades recall for the pruned scan,
+    * exactly the searchIndexed trajectory.
+    */
   def searchHybridIndexed(spark: SparkSession, dir: String,
       vecIndexPath: String, lexIndexPath: String, queryText: String,
       nprobe: Int = 3, perList: Int = 20, k: Int = 10): DataFrame = {
-    val q = spark.range(1).select(embedText(lit(queryText)).as("qvec"))
-    val vecTop = IvfIndex.searchIndex(spark, vecIndexPath, q, nprobe, perList,
-        roundScore = false)
-      .select(col("vec_id").as("doc_id"), col("score"))
-      .withColumn("rank_vec",
-        row_number().over(graft.functions.VectorFunctions.boundedWindow(col("score").desc, col("doc_id").asc)).cast("long"))
-      .drop("score")
+    val q = defaultEncoder.encodeQuery(spark, queryText)
+    val vecTop = LexicalSearch.rankList(
+      IvfIndex.probedScores(spark, vecIndexPath, q, nprobe),
+      "score", "vec_id", perList, "rank_vec")
     val terms = queryText.trim.split("\\s+").toSeq.distinct.take(8)
-    val lexTop = LexIndex.scoredDocsE6(spark, lexIndexPath, terms)
-      .filter(col("score_e6") > 0)
-      .orderBy(col("score_e6").desc, col("doc_id").asc).limit(perList)
-      .select(col("doc_id"), col("score_e6"))
-      .withColumn("rank_lex",
-        row_number().over(graft.functions.VectorFunctions.boundedWindow(col("score_e6").desc, col("doc_id").asc)).cast("long"))
-    vecTop.join(lexTop.select("doc_id", "rank_lex"), Seq("doc_id"), "full_outer")
-      .withColumn("rrf",
-        coalesce(lit(1.0) / (lit(60) + col("rank_vec")), lit(0.0)) +
-          coalesce(lit(1.0) / (lit(60) + col("rank_lex")), lit(0.0)))
+    val lexTop = LexicalSearch.rankList(
+      LexIndex.scoredDocsE6(spark, lexIndexPath, terms).filter(col("score_e6") > 0),
+      "score_e6", "doc_id", perList, "rank_lex")
+    LexicalSearch.fuseRrf(vecTop, lexTop, Seq("doc_id"))
       .orderBy(col("rrf").desc, col("doc_id").asc)
       .limit(k)
   }

@@ -20,8 +20,10 @@ import graft.operators.{IndexMaintenance, IvfIndex, PqIndex}
   * Scale notes: each micro-batch is an embarrassingly-parallel scan →
   * project → partitioned append; no aggregation state accumulates, so
   * the stream runs indefinitely at constant memory. Searches see new
-  * vectors as soon as their files commit (parquet readers list the
-  * partition directory per query).
+  * vectors as soon as their files commit: serving resolves every layout
+  * through `IndexMaintenance.layoutDf`, which re-validates the layout's
+  * file signature on each call, so a sink commit is read by the next
+  * search.
   */
 object IndexStream {
 
@@ -218,7 +220,8 @@ object IndexStream {
   /** LSH twin: the hyperplanes are derived deterministically (no
     * persisted metadata to read), so streamed vectors bucket exactly
     * like batch-built ones by construction — completing streaming
-    * append across all three persisted index families (IVF, PQ, LSH).
+    * append across all four persisted vector index families (IVF, PQ,
+    * residual PQ, LSH).
     */
   def appendToLshIndex(spark: SparkSession, indexPath: String,
       newVecs: DataFrame, checkpoint: String,

@@ -271,4 +271,48 @@ class SearchManySpec extends AnyFunSuite {
     assert(vecScans === 1, s"expected 1 vectors scan, got $vecScans in:\n$plan")
     assert(plan.contains("PartitionFilters"), s"no partition pruning in:\n$plan")
   }
+
+  test("building a warm batch facade runs the encode cut and one metadata query") {
+    // Construction-time Spark jobs of each batch facade, pinned at the
+    // counts the r16 shape produces on this corpus (numQueries is
+    // passed, so no count job; the layouts are warm, so no listing job):
+    //  - vector: 1 eager encode cut + 5 jobs of ONE metadata query (the
+    //    probed-cluster collect — AQE runs its broadcast and shuffle
+    //    stages as jobs of their own) + 1 schema read of the
+    //    single-file documents table for the rerank tail;
+    //  - hybrid: 1 encode cut + 7 jobs of ONE metadata query (the
+    //    cluster ids fused with the lexical term buckets, r16).
+    // A second metadata collect, or an unfused hybrid, adds jobs.
+    val sc = spark.sparkContext
+    val n = queryTexts.length.toLong
+    def vector() = SearchApi.searchManyIndexed(spark, Sf, indexPath, queriesDf,
+      nprobe = 2, numQueries = n)
+    def hybrid() = SearchApi.searchManyHybridIndexed(spark, Sf, indexPath,
+      lexIndexPath, queriesDf, nprobe = 2, numQueries = n)
+    // every job of `group` has reached the status store once a later
+    // job's end has: its listener handles events in posting order
+    def jobsOf(group: String): Int = {
+      val marker = s"$group-marker"
+      sc.setJobGroup(marker, "listener barrier")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val tracker = sc.statusTracker
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!tracker.getJobIdsForGroup(marker).exists(id =>
+          tracker.getJobInfo(id).exists(
+            _.status == org.apache.spark.JobExecutionStatus.SUCCEEDED))) {
+        assert(System.nanoTime() < deadline, "listener barrier timed out")
+        Thread.sleep(20)
+      }
+      tracker.getJobIdsForGroup(group).length
+    }
+    def constructionJobs(build: () => org.apache.spark.sql.DataFrame): Int = {
+      build() // warm: layouts resolved
+      val group = s"construct-${java.util.UUID.randomUUID()}"
+      sc.setJobGroup(group, "batch facade construction")
+      try build() finally sc.clearJobGroup()
+      jobsOf(group)
+    }
+    assert(constructionJobs(() => vector()) === 7)
+    assert(constructionJobs(() => hybrid()) === 8)
+  }
 }
