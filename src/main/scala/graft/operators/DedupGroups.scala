@@ -220,7 +220,7 @@ object DedupGroups {
     folded.write.mode("overwrite").partitionBy("gb").parquet(staged)
     val untouchedDirs = (0L until NumBuckets.toLong)
       .filterNot(touched.contains).map(b => s"gb=$b")
-    IndexMaintenance.swapKeepingDirs(fs, new Path(staged),
+    IndexMaintenance.atomicSwap(fs, new Path(staged),
       new Path(s"$indexPath/groups"), untouchedDirs)
     // invalidate the session's cached file listing (see initGroups)
     spark.catalog.refreshByPath(s"$indexPath/groups")

@@ -25,6 +25,18 @@ import org.apache.spark.sql.functions._
   * after (IndexMaintenanceSpec pins results and the surviving
   * PartitionFilters pruning).
   *
+  * `compactIndex`, `rebalanceIndex` and the `maintain` decider run one
+  * fold path: [[openFold]] reconciles a swap a crashed fold left
+  * half-done ([[reconcileSwap]]: `vectors` or `centroids` missing is
+  * rolled forward from its staged dir or back from its aside copy),
+  * reads the marker once, deletes folded leftovers and resolves the
+  * serving epochs; [[installFold]] stages the rows, writes the marker
+  * into the staged dir, swaps ([[atomicSwap]]) and deletes the folded
+  * epochs. One [[census]] counts per-partition (rows, files) for the
+  * installed manifest and for maintain's footer fallback, and one
+  * [[sizeAction]] is the split/merge rule both the decider and the
+  * rebalance apply.
+  *
   * Streaming-sink interaction (the log-rotation contract): a parquet
   * streaming sink keeps a `_spark_metadata` log under its sink dir,
   * and batch readers honor it (files not in the log are invisible).
@@ -56,7 +68,7 @@ object IndexMaintenance {
   /** Parsed `_graft_compacted` marker: the next epoch number a stream
     * resume may use, plus the epoch numbers the LAST compaction folded
     * into the base dir (so a crash between the base swap and the
-    * epoch-dir deletions never double-serves those rows — [[epochDirs]]
+    * epoch-dir deletions never double-serves those rows — [[servingEpochs]]
     * skips them and the next compaction deletes the leftovers), plus
     * (r14, verdict #4) the per-partition-value SIZE MANIFEST of the
     * base layout the marker certifies: `(partCol, value → (rows,
@@ -83,8 +95,7 @@ object IndexMaintenance {
       foldedBatches: Seq[(Long, Long)] = Seq.empty,
       extraFiles: Map[String, Long] = Map.empty)
 
-  private def readMarker(spark: SparkSession, indexPath: String): Option[MarkerInfo] = {
-    val fs = fsOf(spark, indexPath)
+  private def readMarker(fs: FileSystem, indexPath: String): Option[MarkerInfo] = {
     val m = markerPath(indexPath)
     if (!fs.exists(m)) None
     else {
@@ -159,7 +170,7 @@ object IndexMaintenance {
     */
   private[graft] def isBatchFolded(spark: SparkSession, indexPath: String,
       batchId: Long): Boolean =
-    readMarker(spark, indexPath).exists(_.foldedBatches.exists {
+    readMarker(fsOf(spark, indexPath), indexPath).exists(_.foldedBatches.exists {
       case (lo, hi) => batchId >= lo && batchId <= hi
     })
 
@@ -186,44 +197,57 @@ object IndexMaintenance {
     sb.toString.getBytes("UTF-8")
   }
 
-  /** Per-partition-value (rows, files) of a freshly-staged layout —
-    * the manifest the installing rename carries. Rows come from the
-    * staged files' parquet footers (metadata the compaction already
-    * paid to write), files from the listing. Values that do not parse
-    * as integers (a string-partitioned layout, a null-key
-    * `__HIVE_DEFAULT_PARTITION__`) get a FILE count only (second
-    * member of the returned pair) — they are not size-managed, but
-    * [[maintain]] must still report them in filesBefore exactly like
-    * its footer-fallback path does (r15, ADVICE r14).
+  /** Footer census of parquet data files — behind both the size
+    * manifest a fold installs and [[maintain]]'s footer fallback. Per
+    * integer partition value (the parent dir's `col=value`): footer
+    * rows and files. Other values (a string layout, a null key's
+    * `__HIVE_DEFAULT_PARTITION__`) get a file count only, in `extra`:
+    * never size-managed, but reported in filesBefore (r15, ADVICE
+    * r14). `files` counts every data file; `partCol` is the first
+    * partition column seen.
     */
-  private def manifestOf(spark: SparkSession, dir: String)
-      : (Map[Long, (Long, Long)], Map[String, Long]) = {
+  private case class Census(sizes: Map[Long, (Long, Long)],
+      extra: Map[String, Long], files: Long, partCol: Option[String])
+
+  private def census(spark: SparkSession, listing: Seq[FileStatus]): Census = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val fs = fsOf(spark, dir)
-    val acc = scala.collection.mutable.Map.empty[Long, (Long, Long)]
-    val extra = scala.collection.mutable.Map.empty[String, Long]
-    filesUnder(fs, new Path(dir)).map(_.getPath).foreach { p =>
-      if (p.getName.endsWith(".parquet")) {
-        val dirName = p.getParent.getName
-        val eq = dirName.indexOf('=')
-        val v = if (eq > 0)
-          scala.util.Try(dirName.substring(eq + 1).toLong).toOption else None
-        v match {
-          case Some(value) =>
-            val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
-              org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf))
-            val rows = try rd.getRecordCount finally rd.close()
-            val (r0, f0) = acc.getOrElse(value, (0L, 0L))
-            acc.update(value, (r0 + rows, f0 + 1))
-          case None if eq > 0 =>
-            val value = dirName.substring(eq + 1)
-            extra.update(value, extra.getOrElse(value, 0L) + 1)
-          case None => // a non-partition data file: not manifested
-        }
-      }
+    val data = listing.map(_.getPath).filter(_.getName.endsWith(".parquet"))
+    // (column, value, file) of every data file under a `col=value` dir
+    val keyed = data.flatMap { p =>
+      val dir = p.getParent.getName
+      val eq = dir.indexOf('=')
+      if (eq > 0) Some((dir.substring(0, eq), dir.substring(eq + 1), p)) else None
     }
-    (acc.toMap, extra.toMap)
+    val (numeric, other) = keyed.partition(_._2.toLongOption.isDefined)
+    def footerRows(p: Path): Long = {
+      val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf))
+      try rd.getRecordCount finally rd.close()
+    }
+    Census(
+      numeric.groupBy(_._2.toLong).map { case (v, files) =>
+        v -> (files.map(k => footerRows(k._3)).sum, files.size.toLong) },
+      other.groupBy(_._2).map { case (v, files) => v -> files.size.toLong },
+      data.size.toLong, keyed.headOption.map(_._1))
   }
+
+  /** Per-value (rows, files) sums of two size maps. */
+  private def plus(a: Map[Long, (Long, Long)], b: Map[Long, (Long, Long)])
+      : Map[Long, (Long, Long)] =
+    b.foldLeft(a) { case (m, (v, (r, f))) =>
+      val (r0, f0) = m.getOrElse(v, (0L, 0L))
+      m.updated(v, (r0 + r, f0 + f))
+    }
+
+  /** The integer-exact split/merge size rule: a partition of `n` rows,
+    * one of `k` holding `total`, splits when n·k > 2·total (and n ≥ 2)
+    * and merges when n·k·2 < total. [[rebalanceIndex]] executes it and
+    * [[maintain]] decides by it, so maintain no-ops exactly when
+    * rebalanceIndex would.
+    */
+  private def sizeAction(n: Long, k: Long, total: Long): String =
+    if (n * k > total * 2 && n >= 2) "split"
+    else if (n * k * 2 < total) "merge" else "keep"
 
   /** True once the index has been compacted at least once — the point
     * after which streaming appends must use a fresh epoch dir.
@@ -237,16 +261,17 @@ object IndexMaintenance {
     * Folded-but-not-yet-deleted leftovers count toward the max, so a
     * crash mid-cleanup cannot cause a number reuse either.
     */
-  private def nextEpoch(spark: SparkSession, indexPath: String): Int = {
-    val fromMarker = readMarker(spark, indexPath).map(_.nextEpoch).getOrElse(1)
-    math.max(fromMarker, allEpochDirs(spark, indexPath).map(epochOf).maxOption.getOrElse(0) + 1)
-  }
+  private def nextEpoch(marker: Option[MarkerInfo], allEpochs: Seq[String]): Int =
+    math.max(marker.map(_.nextEpoch).getOrElse(1),
+      allEpochs.map(epochOf).maxOption.getOrElse(0) + 1)
 
   /** The sink directory a post-compaction stream resume should write
     * to: `indexPath/vectors_e<k>` for the smallest never-used k.
     */
-  def nextEpochDir(spark: SparkSession, indexPath: String): String =
-    s"$indexPath/vectors_e${nextEpoch(spark, indexPath)}"
+  def nextEpochDir(spark: SparkSession, indexPath: String): String = {
+    val fs = fsOf(spark, indexPath)
+    s"$indexPath/vectors_e${nextEpoch(readMarker(fs, indexPath), allEpochDirs(fs, indexPath))}"
+  }
 
   private def epochOf(dir: String): Int =
     dir.substring(dir.lastIndexOf("_e") + 2).toInt
@@ -254,8 +279,7 @@ object IndexMaintenance {
   /** Every on-disk `vectors_e<k>` dir, live or folded-leftover — the
     * set that bounds [[nextEpoch]]'s monotonicity.
     */
-  private def allEpochDirs(spark: SparkSession, indexPath: String): Seq[String] = {
-    val fs = fsOf(spark, indexPath)
+  private def allEpochDirs(fs: FileSystem, indexPath: String): Seq[String] = {
     val base = new Path(indexPath)
     if (!fs.exists(base)) Seq.empty
     else fs.listStatus(base).toSeq
@@ -278,20 +302,33 @@ object IndexMaintenance {
   private[graft] def epochDirHoldingBatch(spark: SparkSession,
       indexPath: String, batchId: Long): Option[String] = {
     val fs = fsOf(spark, indexPath)
-    allEpochDirs(spark, indexPath)
+    allEpochDirs(fs, indexPath)
       .find(d => fs.exists(new Path(s"$d/batch=$batchId")))
   }
 
-  /** Epoch dirs that SERVE: contain data files and are not declared
-    * folded by the marker (a folded dir still on disk is a crash
-    * leftover whose rows already live in the compacted base — reading
-    * it would serve those rows twice).
+  /** Epoch dirs that SERVE, each with its file listing: they contain
+    * data files and are not declared folded by the marker (a folded
+    * dir still on disk is a crash leftover whose rows already live in
+    * the compacted base — reading it would serve those rows twice).
     */
-  private def epochDirs(spark: SparkSession, indexPath: String): Seq[String] = {
-    val folded = readMarker(spark, indexPath).map(_.folded).getOrElse(Set.empty[Int])
-    allEpochDirs(spark, indexPath)
-      .filterNot(d => folded.contains(epochOf(d)))
-      .filter(d => parquetFileCount(spark, d) > 0)
+  private def servingEpochs(fs: FileSystem, marker: Option[MarkerInfo],
+      allEpochs: Seq[String]): Seq[(String, Seq[FileStatus])] = {
+    val folded = marker.map(_.folded).getOrElse(Set.empty[Int])
+    allEpochs.filterNot(d => folded.contains(epochOf(d)))
+      .map(d => d -> filesUnder(fs, new Path(d)))
+      .filter(_._2.exists(_.getPath.getName.endsWith(".parquet")))
+  }
+
+  /** The base layout and each serving epoch, the epochs projected to
+    * the base schema (they carry an extra batch=<id> partition level,
+    * the idempotent foreachBatch layout). Every root resolves through
+    * the layout memo, the epochs from the listings already in hand.
+    */
+  private def layers(spark: SparkSession, indexPath: String,
+      epochs: Seq[(String, Seq[FileStatus])]): (DataFrame, Seq[DataFrame]) = {
+    val base = layoutDf(spark, s"$indexPath/vectors")
+    val cols = base.columns.toIndexedSeq.map(col)
+    (base, epochs.map { case (d, listing) => layoutOf(spark, d, listing).select(cols: _*) })
   }
 
   /** All live vector rows of an index: the base layout plus any resume
@@ -305,13 +342,10 @@ object IndexMaintenance {
     * epoch is seen by the next call.
     */
   def vectorsDf(spark: SparkSession, indexPath: String): DataFrame = {
-    val base = layoutDf(spark, s"$indexPath/vectors")
-    val cols = base.columns.toIndexedSeq.map(col)
-    // epochs carry an extra batch=<id> partition level (the idempotent
-    // foreachBatch layout) — project it away to the base schema
-    epochDirs(spark, indexPath)
-      .map(d => layoutDf(spark, d).select(cols: _*))
-      .foldLeft(base)(_ unionByName _)
+    val fs = fsOf(spark, indexPath)
+    val (base, epochs) = layers(spark, indexPath,
+      servingEpochs(fs, readMarker(fs, indexPath), allEpochDirs(fs, indexPath)))
+    epochs.foldLeft(base)(_ unionByName _)
   }
 
   /** Every file under `root`, recursively, as Hadoop's recursive
@@ -338,10 +372,12 @@ object IndexMaintenance {
     */
   private[graft] def filesSig(spark: SparkSession, path: String): String = {
     val p = new Path(path)
-    filesUnder(p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
-      .map(st => s"${st.getPath}:${st.getLen}:${st.getModificationTime}")
-      .sorted.mkString(";")
+    sigOf(filesUnder(p.getFileSystem(spark.sparkContext.hadoopConfiguration), p))
   }
+
+  private def sigOf(listing: Seq[FileStatus]): String =
+    listing.map(st => s"${st.getPath}:${st.getLen}:${st.getModificationTime}")
+      .sorted.mkString(";")
 
   /** The corpus data-file signature ([[filesSig]] of the `table` part
     * files) that the cached layouts and the IVF count/seed caches key
@@ -358,19 +394,20 @@ object IndexMaintenance {
   private val layouts =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), (String, DataFrame)]()
 
-  /** `spark.read.parquet(path)` for an INSTALLED layout directory,
-    * resolved once per session while its files are unchanged. A fresh
-    * read lists the directory (a partition-discovery Spark job once it
-    * holds more than a few dozen partition dirs) and opens a footer to
-    * infer the schema (a second job); a serving batch answers many
-    * requests from one unchanged layout, so that metadata work used to
-    * repeat per call. Here the resolved DataFrame — its file index and
-    * schema — is held, and every call re-validates it with a
-    * driver-side [[filesSig]] walk (no Spark job): any added, removed,
+  /** `spark.read.parquet(path)` for an INSTALLED layout — a directory
+    * or a single parquet file — resolved once per session while its
+    * files are unchanged. A fresh read lists the path (a
+    * partition-discovery Spark job once it holds more than a few dozen
+    * partition dirs) and opens a footer to infer the schema (a second
+    * job); a serving batch answers many requests from one unchanged
+    * layout, so that metadata work used to repeat per call. Here the
+    * resolved DataFrame — its file index and schema — is held, and
+    * every call re-validates it with a driver-side [[filesSig]] walk
+    * (no Spark job; a plain file lists itself): any added, removed,
     * resized or re-stamped file, a streaming sink's new
     * `_spark_metadata` commit included, resolves the layout afresh.
-    * A missing path or a plain file falls through to
-    * `spark.read.parquet`, so errors stay those of a plain read.
+    * A missing path falls through to `spark.read.parquet`, and a read
+    * that fails is not memoized, so errors stay those of a plain read.
     *
     * For serving reads of layouts that are rewritten only by swaps and
     * appends (new part-file names); build and maintenance reads of
@@ -381,18 +418,20 @@ object IndexMaintenance {
   def layoutDf(spark: SparkSession, path: String): DataFrame = {
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val sig =
-      try { if (fs.getFileStatus(p).isDirectory) Some(filesSig(spark, path)) else None }
-      catch { case _: java.io.FileNotFoundException => None }
-    sig match {
-      case None => spark.read.parquet(path)
-      case Some(s) =>
-        val key = (spark, path)
-        Option(layouts.get(key)).collect { case (`s`, df) => df }.getOrElse {
-          val df = spark.read.parquet(path)
-          layouts.put(key, (s, df))
-          df
-        }
+    val listing =
+      try Some(filesUnder(fs, p)) catch { case _: java.io.FileNotFoundException => None }
+    listing.fold(spark.read.parquet(path))(layoutOf(spark, path, _))
+  }
+
+  /** [[layoutDf]] of a path whose listing is already in hand. */
+  private def layoutOf(spark: SparkSession, path: String,
+      listing: Seq[FileStatus]): DataFrame = {
+    val sig = sigOf(listing)
+    val key = (spark, path)
+    Option(layouts.get(key)).collect { case (`sig`, df) => df }.getOrElse {
+      val df = spark.read.parquet(path)
+      layouts.put(key, (sig, df))
+      df
     }
   }
 
@@ -428,83 +467,122 @@ object IndexMaintenance {
     base
   }
 
+  /** Staged dir → destination of every swap a maintenance fold makes:
+    * the vector layout (compaction and rebalance stage it alike) and
+    * rebalance's centroids table. `vectors_staging` belongs to
+    * [[LexIndex]]'s build, not to a fold.
+    */
+  private val FoldSwaps =
+    Seq("vectors_compacting" -> "vectors", "centroids_rebalancing" -> "centroids")
+
+  /** One maintenance fold over an index, as [[openFold]] found it: the
+    * `_graft_compacted` marker (read once, after the reconcile), the
+    * serving epoch dirs with their listings, and the epoch number the
+    * fold's marker hands to the next stream resume.
+    */
+  private case class Fold(fs: FileSystem, indexPath: String,
+      marker: Option[MarkerInfo], epochs: Seq[(String, Seq[FileStatus])],
+      nextEpoch: Int) {
+    def vecDir: String = s"$indexPath/vectors"
+  }
+
+  /** Open a fold: first reconcile every swap a crashed fold left
+    * half-done ([[reconcileSwap]] over [[FoldSwaps]] — without it a
+    * crash between the aside and install renames leaves `vectors` or
+    * `centroids` missing, and every later pass and serving call
+    * throws), then read the marker, delete the epoch dirs it declares
+    * folded (a fold died between its swap and those deletes; their
+    * rows already live in the base), and resolve the serving epochs.
+    */
+  private def openFold(spark: SparkSession, indexPath: String): Fold = {
+    val fs = fsOf(spark, indexPath)
+    FoldSwaps.foreach { case (staged, dst) =>
+      if (reconcileSwap(fs, new Path(s"$indexPath/$staged"), new Path(s"$indexPath/$dst")))
+        spark.catalog.refreshByPath(s"$indexPath/$dst")
+    }
+    val marker = readMarker(fs, indexPath)
+    val all = allEpochDirs(fs, indexPath)
+    val folded = marker.map(_.folded).getOrElse(Set.empty[Int])
+    all.filter(d => folded.contains(epochOf(d))).foreach(d => fs.delete(new Path(d), true))
+    Fold(fs, indexPath, marker, servingEpochs(fs, marker, all), nextEpoch(marker, all))
+  }
+
+  /** Rewrite `rows` into `dir` with one shuffle task per `partCol`
+    * value (hash-sharing tasks is fine: partitionBy still writes
+    * per-value files) and the writer rolling to a new part-file every
+    * `rowsPerFile` records — so each value ends up with
+    * ⌈rows/rowsPerFile⌉ files regardless of input file count. The
+    * staged rewrite of the index folds and of
+    * [[graft.sources.Ingest.compactCorpus]].
+    */
+  private[graft] def writeStaged(rows: DataFrame, partCol: String,
+      rowsPerFile: Long, dir: String): Unit =
+    rows.repartition(col(partCol))
+      .write.mode("overwrite")
+      .option("maxRecordsPerFile", rowsPerFile)
+      .partitionBy(partCol).parquet(dir)
+
+  /** The fold step every vector-layout rewrite shares (compaction and
+    * rebalance): stage `rows` by `partCol` ([[writeStaged]]), write the
+    * new marker INSIDE the staged dir, swap it in ([[atomicSwap]]),
+    * delete the folded epoch dirs and drop the session's cached listing
+    * of the layout. `keep` names the partition values whose base dirs
+    * cross into the new layout by rename, with their base (rows,
+    * files). Returns the installed size manifest and the staged
+    * data-file bytes.
+    *
+    * The marker lands atomically with the swap (ADVICE r8: a post-swap
+    * write left a window where a compacted, sink-log-free base read
+    * isCompacted == false and a stream resume's fresh sink log shadowed
+    * every row). Its folded epochs and batch ids ACCUMULATE over the
+    * previous marker's, so a leftover whose delete failed silently
+    * stays skip-listed and a replay of a deleted epoch's batch is
+    * dropped ([[MarkerInfo]]); its size manifest is the staged files'
+    * [[census]] plus `keep`.
+    */
+  private def installFold(spark: SparkSession, f: Fold, rows: DataFrame,
+      partCol: String, rowsPerFile: Long, keep: Map[Long, (Long, Long)] = Map.empty)
+      : (Map[Long, (Long, Long)], Long) = {
+    val staged = new Path(s"${f.vecDir}_compacting")
+    writeStaged(rows, partCol, rowsPerFile, staged.toString)
+    val written = parquetFilesUnder(f.fs, staged)
+    val stagedCensus = census(spark, written)
+    val manifest = plus(stagedCensus.sizes, keep)
+    val epochs = f.epochs.map(_._1)
+    val out = f.fs.create(new Path(staged, "_graft_compacted"), true)
+    try out.write(markerBytes(f.nextEpoch,
+      (f.marker.map(_.folded).getOrElse(Set.empty[Int]) ++ epochs.map(epochOf)).toSeq,
+      Some(partCol -> manifest),
+      f.marker.map(_.foldedBatches).getOrElse(Seq.empty) ++
+        batchIdsUnder(f.fs, epochs).map(b => (b, b)),
+      stagedCensus.extra))
+    finally out.close()
+    atomicSwap(f.fs, staged, new Path(f.vecDir),
+      keep.keys.toSeq.sorted.map(v => s"$partCol=$v"))
+    epochs.foreach(e => f.fs.delete(new Path(e), true))
+    spark.catalog.refreshByPath(f.vecDir)
+    (manifest, written.map(_.getLen).sum)
+  }
+
   /** Compact `indexPath/vectors` (+ any epoch dirs; IVF/PQ layouts:
-    * `cluster_id`; LSH: `bucket` — auto-detected). Returns the parquet
+    * `cluster_id`; LSH: `bucket` — auto-detected): one fold
+    * ([[openFold]] → [[installFold]]) of base + epochs into
+    * ⌈rows/rowsPerFile⌉ files per partition value. Returns the parquet
     * file count after.
     */
   def compactIndex(spark: SparkSession, indexPath: String,
-      rowsPerFile: Long = 1L << 20): Long = {
-    val vecDir = s"$indexPath/vectors"
-    val fs = fsOf(spark, indexPath)
-    // reconcile a prior crash: epoch dirs the current marker declares
-    // folded hold rows that already live in the compacted base (the
-    // previous run died between its base swap and these deletes)
-    val prevFolded = readMarker(spark, indexPath).map(_.folded).getOrElse(Set.empty[Int])
-    allEpochDirs(spark, indexPath)
-      .filter(d => prevFolded.contains(epochOf(d)))
-      .foreach(d => fs.delete(new Path(d), true))
-    val epochs = epochDirs(spark, indexPath)
-    val df = vectorsDf(spark, indexPath)
+      rowsPerFile: Long = 1L << 20): Long =
+    compact(spark, openFold(spark, indexPath), rowsPerFile)
+
+  private def compact(spark: SparkSession, f: Fold, rowsPerFile: Long): Long = {
+    val (base, epochs) = layers(spark, f.indexPath, f.epochs)
+    val df = epochs.foldLeft(base)(_ unionByName _)
     val partCol = df.schema.fieldNames
       .find(n => n == "cluster_id" || n == "bucket" || n == "band")
       .getOrElse(throw new IllegalArgumentException(
-        s"$vecDir is not a recognized index layout (no cluster_id/bucket/band column)"))
-    val epoch = nextEpoch(spark, indexPath)
-    val tmp = vecDir + "_compacting"
-    // one shuffle task per partition value (hash-sharing tasks is fine:
-    // partitionBy still writes per-value files), with the writer rolling
-    // to a new part-file every rowsPerFile records — so each value ends
-    // up with ⌈rows/rowsPerFile⌉ files regardless of input file count
-    df.repartition(col(partCol))
-      .write.mode("overwrite")
-      .option("maxRecordsPerFile", rowsPerFile)
-      .partitionBy(partCol).parquet(tmp)
-    // the marker travels INSIDE tmp, so it lands atomically with the
-    // tmp→vectors rename (ADVICE r8: a post-swap write left a window
-    // where a compacted, sink-log-free base dir read isCompacted==false
-    // and a stream resume's fresh sink log shadowed every row). It also
-    // records which epochs this compaction folded, so vectorsDf skips
-    // their leftovers if the deletes below never run.
-    // the folded set ACCUMULATES the previous marker's entries: if the
-    // reconcile delete above failed silently (fs.delete returns false on
-    // e.g. a transient object-store error), the leftover must stay
-    // skip-listed — epoch numbers are never reused, so stale entries for
-    // long-deleted dirs are harmless
-    // the size manifest rides the same marker (r14, verdict #4): rows
-    // from the staged footers the rewrite just produced, files from
-    // the listing — maintain() then decides with one read.
-    // folded BATCH ids accumulate alongside the folded epoch set (r15,
-    // ADVICE r14): once the epoch dirs below are deleted, a replayed
-    // batch can no longer find its own `batch=<id>` subdir — this
-    // record is what lets the append helpers drop the replay instead
-    // of duplicating rows that now live in the base
-    val prevMarker = readMarker(spark, indexPath)
-    val foldedBatches = prevMarker.map(_.foldedBatches).getOrElse(Seq.empty) ++
-      batchIdsUnder(fs, epochs).map(b => (b, b))
-    val (manifest, extraFiles) = manifestOf(spark, tmp)
-    val preMarker = fs.create(new Path(tmp, "_graft_compacted"), true)
-    try preMarker.write(markerBytes(epoch, (prevFolded ++ epochs.map(epochOf)).toSeq,
-      Some(partCol -> manifest), foldedBatches, extraFiles))
-    finally preMarker.close()
-    val dst = new Path(vecDir)
-    val aside = new Path(vecDir + "_old")
-    // swap with the old data renamed aside FIRST: a crash between any
-    // two steps leaves every row on disk (vectors_old + epochs), never
-    // a half-deleted serving dir (ADVICE r7). The aside dir carries the
-    // PREVIOUS marker away with it, so from rename to rename the base
-    // marker is always the one matching the base's contents.
-    fs.delete(aside, true)
-    if (fs.exists(dst) && !fs.rename(dst, aside))
-      throw new java.io.IOException(s"could not move $dst aside")
-    if (!fs.rename(new Path(tmp), dst))
-      throw new java.io.IOException(s"could not move $tmp into place")
-    fs.delete(aside, true)
-    epochs.foreach(e => fs.delete(new Path(e), true))
-    // the swap replaced files under an already-read path: drop the
-    // session's cached file listing so later reads don't reference
-    // renamed-away part-files
-    spark.catalog.refreshByPath(vecDir)
-    parquetFileCount(spark, vecDir)
+        s"${f.vecDir} is not a recognized index layout (no cluster_id/bucket/band column)"))
+    installFold(spark, f, df, partCol, rowsPerFile)
+    parquetFileCount(spark, f.vecDir)
   }
 
   /** Outcome of [[rebalanceIndex]] — index metadata counters, for
@@ -550,9 +628,11 @@ object IndexMaintenance {
     *    written ∝ touched partitions (split sources + rehomed rows +
     *    merged-in arrivals + epoch folds), never the corpus.
     *
-    * The rewrite preserves the whole maintenance contract: epoch dirs
-    * fold in (vectorsDf is the input; keep clusters' epoch rows land
-    * as extra part-files next to the renamed base files), the
+    * The rewrite is one fold, the same step [[compactIndex]] takes
+    * ([[openFold]] → [[installFold]]), so it keeps the whole
+    * maintenance contract: a crashed swap is reconciled first, epoch
+    * dirs fold in (base + epochs are the input; keep clusters' epoch
+    * rows land as extra part-files next to the renamed base files), the
     * `_graft_compacted` marker — with accumulated folded set and
     * monotone next-epoch — travels INSIDE the staged dir so it lands
     * atomically with the swap, and the old dir goes aside-first
@@ -581,19 +661,18 @@ object IndexMaintenance {
     * output's data pages are never re-read.
     */
   def rebalanceIndex(spark: SparkSession, indexPath: String,
-      rowsPerFile: Long = 1L << 20): RebalanceReport = {
+      rowsPerFile: Long = 1L << 20): RebalanceReport =
+    rebalance(spark, openFold(spark, indexPath), rowsPerFile)
+
+  private def rebalance(spark: SparkSession, f: Fold, rowsPerFile: Long): RebalanceReport = {
     import graft.functions.VectorFunctions.dist2
     import org.apache.spark.sql.expressions.Window
-    val fs = fsOf(spark, indexPath)
-    val vecDir = s"$indexPath/vectors"
-    // crash reconcile, as compactIndex: folded leftovers' rows already
-    // live in the base — delete before reading
-    val prevFolded = readMarker(spark, indexPath).map(_.folded).getOrElse(Set.empty[Int])
-    allEpochDirs(spark, indexPath)
-      .filter(d => prevFolded.contains(epochOf(d)))
-      .foreach(d => fs.delete(new Path(d), true))
-    val epochs = epochDirs(spark, indexPath)
-    val df = vectorsDf(spark, indexPath)
+    val fs = f.fs
+    val indexPath = f.indexPath
+    val vecDir = f.vecDir
+    val (base, epochFrames) = layers(spark, indexPath, f.epochs)
+    val epochRows = epochFrames.reduceOption(_ unionByName _)
+    val df = epochFrames.foldLeft(base)(_ unionByName _)
       .select(col("vec_id"), col("embedding"), col("cluster_id").cast("long").as("cluster_id"))
     // per-cluster sizes: ≤ nlist rows — index metadata. Split into the
     // base contribution (whose keep partitions move by rename) and the
@@ -603,20 +682,16 @@ object IndexMaintenance {
       frame.groupBy(col("cluster_id").cast("long").as("cluster_id"))
         .agg(count(lit(1)).as("n"))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val baseSizes = sizesOf(spark.read.parquet(vecDir).select("cluster_id"))
+    val baseSizes = sizesOf(base.select("cluster_id"))
     val epochSizes =
-      if (epochs.isEmpty) Map.empty[Long, Long]
-      else sizesOf(epochs.map(d => spark.read.parquet(d).select("cluster_id"))
-        .reduce(_ unionByName _))
+      epochRows.fold(Map.empty[Long, Long])(e => sizesOf(e.select("cluster_id")))
     val sizes = (baseSizes.keySet ++ epochSizes.keySet).iterator
       .map(c => c -> (baseSizes.getOrElse(c, 0L) + epochSizes.getOrElse(c, 0L))).toMap
     val total = sizes.values.sum
     val k = sizes.size.toLong
-    def act(n: Long): String =
-      if (n * k > total * 2 && n >= 2) "split"
-      else if (n * k * 2 < total) "merge" else "keep"
-    val splitIds = sizes.filter { case (_, n) => act(n) == "split" }.keys.toSeq.sorted
-    val mergeIds = sizes.filter { case (_, n) => act(n) == "merge" }.keys.toSet
+    val action = sizes.map { case (c, n) => c -> sizeAction(n, k, total) }
+    val splitIds = action.collect { case (c, "split") => c }.toSeq.sorted
+    val mergeIds = action.collect { case (c, "merge") => c }.toSet
     val keepIds = sizes.keySet -- splitIds -- mergeIds
     val maxBefore = if (sizes.isEmpty) 0L else sizes.values.max
     val storedCents = spark.read.parquet(s"$indexPath/centroids")
@@ -738,60 +813,28 @@ object IndexMaintenance {
     // keep clusters' EPOCH rows fold into the staged layout (their base
     // files cross by rename below); split/merge clusters' epoch rows
     // already ride splitRows/mergedRows via df
-    val epochKeepRows =
-      if (epochs.isEmpty || keepIds.isEmpty)
-        df.limit(0).select("vec_id", "embedding", "cluster_id")
-      else {
-        val base = spark.read.parquet(vecDir)
-        val cols = base.columns.toIndexedSeq.map(col)
-        epochs.map(d => spark.read.parquet(d).select(cols: _*))
-          .reduce(_ unionByName _)
-          .select(col("vec_id"), col("embedding"),
+    val epochKeepRows = epochRows match {
+      case Some(e) if keepIds.nonEmpty =>
+        e.select(col("vec_id"), col("embedding"),
             col("cluster_id").cast("long").as("cluster_id"))
           .filter(col("cluster_id").isin(keepIds.toSeq: _*))
-      }
+      case _ => df.limit(0).select("vec_id", "embedding", "cluster_id")
+    }
     val stagedRows = splitRows.unionByName(mergedRows).unionByName(epochKeepRows)
 
     // ---- stage TOUCHED partitions only + keep-dirs cross by rename ----
-    val epoch = nextEpoch(spark, indexPath)
-    val tmp = vecDir + "_rebalancing"
-    fs.delete(new Path(tmp), true)
-    stagedRows.repartition(col("cluster_id"))
-      .write.mode("overwrite")
-      .option("maxRecordsPerFile", rowsPerFile)
-      .partitionBy("cluster_id").parquet(tmp)
+    // keep partitions cross by rename unchanged, so their post-swap
+    // size = base contribution + staged epoch arrivals, and their file
+    // count = base files + staged files for that value; the after-sizes
+    // are that manifest — no data pages are re-read (ADVICE r11)
+    val keepFiles = keepIds.toSeq.sorted.map(c =>
+      c -> parquetFilesUnder(fs, new Path(vecDir, s"cluster_id=$c")))
+    val movedBytes = keepFiles.map(_._2.map(_.getLen).sum).sum
+    val (manifest, stagedBytes) = installFold(spark, f, stagedRows, "cluster_id",
+      rowsPerFile, keepFiles.map { case (c, files) =>
+        c -> (baseSizes.getOrElse(c, 0L), files.size.toLong) }.toMap)
     splitSrc.unpersist(false)
-    // after-sizes from the staged files' parquet FOOTERS + the size
-    // metadata above — no data pages are re-read (ADVICE r11). The
-    // same numbers become the marker's size manifest (r14, verdict
-    // #4): keep partitions cross by rename unchanged, so their
-    // post-swap size = base contribution + staged epoch arrivals, and
-    // their file count = base files + staged files for that value.
-    val (stagedManifest, stagedExtra) = manifestOf(spark, tmp)
-    val manifest: Map[Long, (Long, Long)] =
-      (keepIds ++ stagedManifest.keySet).iterator.map { c =>
-        val (sr, sf) = stagedManifest.getOrElse(c, (0L, 0L))
-        if (keepIds.contains(c))
-          c -> (baseSizes.getOrElse(c, 0L) + sr,
-            parquetFileCount(spark, s"$vecDir/cluster_id=$c") + sf)
-        else c -> (sr, sf)
-      }.toMap
-    // folded batch ids accumulate exactly as in compactIndex (r15)
-    val foldedBatches = readMarker(spark, indexPath)
-      .map(_.foldedBatches).getOrElse(Seq.empty) ++
-      batchIdsUnder(fs, epochs).map(b => (b, b))
-    val preMarker = fs.create(new Path(tmp, "_graft_compacted"), true)
-    try preMarker.write(markerBytes(epoch, (prevFolded ++ epochs.map(epochOf)).toSeq,
-      Some("cluster_id" -> manifest), foldedBatches, stagedExtra))
-    finally preMarker.close()
-    val stagedBytes = bytesUnder(fs, new Path(tmp))
-    val movedBytes = keepIds.toSeq.map(c =>
-      bytesUnder(fs, new Path(vecDir, s"cluster_id=$c"))).sum
     val afterSizes: Map[Long, Long] = manifest.map { case (v, (r, _)) => v -> r }
-    swapKeepingDirs(fs, new Path(tmp), new Path(vecDir),
-      keepIds.toSeq.sorted.map(c => s"cluster_id=$c"))
-    epochs.foreach(e => fs.delete(new Path(e), true))
-    spark.catalog.refreshByPath(vecDir)
     // centroids swap second (rerun heals the window — scaladoc)
     swapCentroids(surviving)
     RebalanceReport(splitIds.size, mergeIds.size, k, afterSizes.size.toLong,
@@ -813,16 +856,18 @@ object IndexMaintenance {
   /** The maintenance DECIDER (r13, r12 verdict #6): the cron entry
     * point an operator actually deploys. [[rebalanceIndex]] and
     * [[compactIndex]] execute; nothing decided WHEN to run them. This
-    * reads per-partition row counts from the parquet FOOTERS and file
-    * counts from the listing — metadata only, no Spark job, no data
-    * pages — and then runs exactly the needed pass:
+    * opens the fold those passes share ([[openFold]]: a crashed swap
+    * is reconciled and the marker read once), reads per-partition row
+    * counts from the parquet FOOTERS and file counts from the listing
+    * ([[census]]) — metadata only, no Spark job, no data pages — and
+    * then runs exactly the needed pass on the same open fold:
     *
-    *  - **rebalance** when the size rule trips for any cluster — the
-    *    SAME integer rule [[rebalanceIndex]] executes (n·k > 2·total →
-    *    split; n·k·2 < total → merge), so maintain() no-ops exactly
-    *    when rebalanceIndex would. Applies to `cluster_id` layouts
-    *    only (IVF/PQ/residual); bucket/band layouts are hash-bucketed
-    *    by construction and only fragment.
+    *  - **rebalance** when the size rule ([[sizeAction]]) trips for
+    *    any cluster — the SAME integer rule [[rebalanceIndex]]
+    *    executes, so maintain() no-ops exactly when rebalanceIndex
+    *    would. Applies to `cluster_id` layouts only (IVF/PQ/residual);
+    *    bucket/band layouts are hash-bucketed by construction and only
+    *    fragment.
     *  - **compact** when any partition value holds more than
     *    `maxFilesPerValue` part-files, or resume epochs exist to fold
     *    back into the base.
@@ -847,58 +892,24 @@ object IndexMaintenance {
   def maintain(spark: SparkSession, indexPath: String,
       rowsPerFile: Long = 1L << 20,
       maxFilesPerValue: Long = MaxFilesPerValue): MaintainReport = {
-    val fs = fsOf(spark, indexPath)
-    val vecDir = s"$indexPath/vectors"
-    val epochs = epochDirs(spark, indexPath)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val rows = scala.collection.mutable.Map.empty[Long, Long]
-    val files = scala.collection.mutable.Map.empty[Long, Long]
-    var partCol: String = null
-    var filesBefore = 0L
-    var footerReads = 0L
-    val marker = readMarker(spark, indexPath)
-    val manifest = marker.flatMap(_.manifest)
-    manifest.foreach { case (pc, m) =>
-      partCol = pc
-      m.foreach { case (v, (r, f)) =>
-        rows.update(v, r)
-        files.update(v, f)
-        filesBefore += f
-      }
-      // non-numeric partition values (r15, ADVICE r14): counted as
-      // files — matching the footer-fallback path's filesBefore — but
-      // never size-managed (they enter neither `rows` nor the
-      // per-value fragmentation map, same as the fallback)
-      marker.foreach(_.extraFiles.values.foreach(filesBefore += _))
-    }
-    val scanDirs = if (manifest.isDefined) epochs else vecDir +: epochs
-    scanDirs.foreach { d =>
-      filesUnder(fs, new Path(d)).map(_.getPath).foreach { p =>
-        if (p.getName.endsWith(".parquet")) {
-          filesBefore += 1
-          val dirName = p.getParent.getName
-          val eq = dirName.indexOf('=')
-          val v = if (eq > 0)
-            scala.util.Try(dirName.substring(eq + 1).toLong).toOption else None
-          if (eq > 0 && partCol == null) partCol = dirName.substring(0, eq)
-          v.foreach { value =>
-            files.update(value, files.getOrElse(value, 0L) + 1)
-            val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
-              org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf))
-            footerReads += 1
-            try rows.update(value, rows.getOrElse(value, 0L) + rd.getRecordCount)
-            finally rd.close()
-          }
-        }
-      }
-    }
-    val total = rows.values.sum
-    val k = rows.size.toLong
-    val maxRows = if (rows.isEmpty) 0L else rows.values.max
+    val f = openFold(spark, indexPath)
+    val manifest = f.marker.flatMap(_.manifest)
+    val scan = census(spark, (if (manifest.isDefined) Seq.empty
+      else filesUnder(f.fs, new Path(f.vecDir))) ++ f.epochs.flatMap(_._2))
+    val partCol = manifest.map(_._1).orElse(scan.partCol)
+    val sizes = plus(manifest.map(_._2).getOrElse(Map.empty), scan.sizes)
+    // the manifest's non-numeric values count as files, like the
+    // footer census's (r15, ADVICE r14)
+    val filesBefore = scan.files + manifest.fold(0L)(m =>
+      m._2.values.map(_._2).sum + f.marker.fold(0L)(_.extraFiles.values.sum))
+    val rows = sizes.values.map(_._1)
+    val total = rows.sum
+    val k = sizes.size.toLong
+    val maxRows = if (rows.isEmpty) 0L else rows.max
     val mean = if (k == 0) 0.0 else total.toDouble / k
-    val needsRebalance = partCol == "cluster_id" && rows.values.exists(n =>
-      (n * k > total * 2 && n >= 2) || n * k * 2 < total)
-    val fragmented = epochs.nonEmpty || files.values.exists(_ > maxFilesPerValue)
+    val needsRebalance = partCol.contains("cluster_id") &&
+      rows.exists(n => sizeAction(n, k, total) != "keep")
+    val fragmented = f.epochs.nonEmpty || sizes.values.exists(_._2 > maxFilesPerValue)
     // lexical layouts: df drift may have pushed a NEW term over the
     // stop tier since the last build (r15, verdict #3 — streamed
     // appends drop ALREADY-tiered terms map-side, but a fresh
@@ -908,57 +919,41 @@ object IndexMaintenance {
     // the operator's cron runs LexIndex.writeIndex, which subsumes
     // any pending compaction. Non-lexical `bucket` layouts (LSH,
     // band) carry no tier metadata and never trip it.
-    val retier = partCol == "bucket" && LexIndex.needsRetier(spark, indexPath)
+    val retier = partCol.contains("bucket") && LexIndex.needsRetier(spark, indexPath)
+    val footerReads = scan.sizes.values.map(_._2).sum // one per integer-valued file
     if (retier)
       MaintainReport("retier", filesBefore, filesBefore, maxRows, mean,
         None, footerReads)
     else if (needsRebalance) {
-      val rep = rebalanceIndex(spark, indexPath, rowsPerFile)
-      MaintainReport("rebalance", filesBefore, parquetFileCount(spark, vecDir),
+      val rep = rebalance(spark, f, rowsPerFile)
+      MaintainReport("rebalance", filesBefore, parquetFileCount(spark, f.vecDir),
         maxRows, mean, Some(rep), footerReads)
     } else if (fragmented) {
-      val after = compactIndex(spark, indexPath, rowsPerFile)
+      val after = compact(spark, f, rowsPerFile)
       MaintainReport("compact", filesBefore, after, maxRows, mean, None, footerReads)
     } else
       MaintainReport("none", filesBefore, filesBefore, maxRows, mean, None, footerReads)
   }
 
-  /** Total data-file bytes under a directory (file-status metadata). */
-  private def bytesUnder(fs: FileSystem, p: Path): Long =
-    if (!fs.exists(p)) 0L
-    else filesUnder(fs, p).filter(_.getPath.getName.endsWith(".parquet")).map(_.getLen).sum
-
   /** Aside-first atomic swap of a fully-staged directory into place —
-    * the ONE rename discipline every layout/table rewrite here uses
-    * (compactIndex, rebalanceIndex, LexIndex stats, DedupGroups): the
+    * the ONE rename discipline every layout/table rewrite uses (the
+    * index folds, LexIndex, DedupGroups, Ingest.compactCorpus): the
     * old dir moves aside before the staged dir moves in, so a crash at
     * any step leaves every row on disk and the destination is never a
-    * half-deleted serving dir. On an object store the two renames
-    * collapse into one manifest pointer update.
-    */
-  private[graft] def atomicSwap(fs: FileSystem, staged: Path, dst: Path): Unit = {
-    val aside = new Path(dst.toString + "_old")
-    fs.delete(aside, true)
-    if (fs.exists(dst) && !fs.rename(dst, aside))
-      throw new java.io.IOException(s"could not move $dst aside")
-    if (!fs.rename(staged, dst))
-      throw new java.io.IOException(s"could not move $staged into place")
-    fs.delete(aside, true)
-  }
-
-  /** PARTITION-SELECTIVE variant of [[atomicSwap]]: the staged dir
-    * holds only the TOUCHED partition dirs; each `keepDirs` entry
-    * crosses from the old layout into the staged one by metadata
+    * half-deleted serving dir. On an object store the renames collapse
+    * into one manifest pointer update.
+    *
+    * PARTITION-SELECTIVE when `keepDirs` is non-empty: the staged dir
+    * then holds only the TOUCHED partition dirs, and each `keepDirs`
+    * entry crosses from the old layout into the staged one by metadata
     * rename — dir-level when the staged side has no such partition
     * (the common case), per-file moves when staged arrivals created
     * one (part-file names carry a per-job UUID, so they cannot
     * collide). The serving gap widens from 2 renames to O(keepDirs)
-    * metadata renames; on an object store the whole sequence is one
-    * manifest pointer update. A crash at any step leaves every row on
-    * disk (aside + staged).
+    * metadata renames.
     */
-  private[graft] def swapKeepingDirs(fs: FileSystem, staged: Path, dst: Path,
-      keepDirs: Seq[String]): Unit = {
+  private[graft] def atomicSwap(fs: FileSystem, staged: Path, dst: Path,
+      keepDirs: Seq[String] = Seq.empty): Unit = {
     // the keep list is persisted INSIDE the staged dir before anything
     // destructive happens (r13, ADVICE r12): a crash mid-swap otherwise
     // leaves dst missing with no way to tell keep dirs (which must
@@ -966,26 +961,29 @@ object IndexMaintenance {
     // rows live in staged) — [[reconcileSwap]] reads it to roll the
     // swap forward. The underscore name keeps it invisible to parquet
     // readers if it ever rides along.
-    val mf = fs.create(new Path(staged, KeepManifest), true)
-    try mf.write(keepDirs.mkString("\n").getBytes("UTF-8")) finally mf.close()
+    if (keepDirs.nonEmpty) {
+      val mf = fs.create(new Path(staged, KeepManifest), true)
+      try mf.write(keepDirs.mkString("\n").getBytes("UTF-8")) finally mf.close()
+    }
     val aside = new Path(dst.toString + "_old")
     fs.delete(aside, true)
     if (fs.exists(dst) && !fs.rename(dst, aside))
       throw new java.io.IOException(s"could not move $dst aside")
-    moveKeepDirs(fs, aside, staged, keepDirs)
-    if (!fs.rename(staged, dst))
-      throw new java.io.IOException(s"could not move $staged into place")
-    fs.delete(aside, true)
-    // completed: the manifest (now under dst) is no longer a
-    // roll-forward signal
-    fs.delete(new Path(dst, KeepManifest), false)
+    installStaged(fs, staged, dst, keepDirs)
   }
 
-  /** Keep-dir manifest name ([[swapKeepingDirs]]/[[reconcileSwap]]). */
+  /** Keep-dir manifest name ([[atomicSwap]]/[[reconcileSwap]]). */
   private val KeepManifest = "_graft_keep_dirs"
 
-  private def moveKeepDirs(fs: FileSystem, aside: Path, staged: Path,
-      keepDirs: Seq[String]): Unit =
+  /** The second half of [[atomicSwap]], which [[reconcileSwap]] also
+    * runs to roll a broken swap forward: move the keep dirs from the
+    * aside copy into the staged dir (skipping any already moved),
+    * rename the staged dir into place, then drop the aside copy and the
+    * keep manifest, which is no longer a roll-forward signal.
+    */
+  private def installStaged(fs: FileSystem, staged: Path, dst: Path,
+      keepDirs: Seq[String]): Unit = {
+    val aside = new Path(dst.toString + "_old")
     keepDirs.foreach { name =>
       val from = new Path(aside, name)
       if (fs.exists(from)) {
@@ -999,21 +997,26 @@ object IndexMaintenance {
         }
       }
     }
+    if (!fs.rename(staged, dst))
+      throw new java.io.IOException(s"could not move $staged into place")
+    fs.delete(aside, true)
+    fs.delete(new Path(dst, KeepManifest), false)
+  }
 
-  /** Crash-reconcile for the swap disciplines (r13, ADVICE r12 — the
-    * groups fold could die inside [[swapKeepingDirs]] after `dst` was
-    * renamed aside, leaving a layout with NO serving dir that a
-    * `_complete` marker still certified). Called on the read/maintain
-    * path BEFORE `dst` is read: when `dst` is missing, the swap that
-    * broke is finished or undone deterministically —
+  /** Crash-reconcile for [[atomicSwap]] (r13, ADVICE r12 — a fold
+    * could die inside the swap after `dst` was renamed aside, leaving
+    * a layout with NO serving dir). Called before `dst` is read: by
+    * DedupGroups' read and fold paths, and by every index maintenance
+    * pass ([[openFold]]). When `dst` is missing, the swap that broke is
+    * finished or undone deterministically —
     *
     *  - staged present WITH a [[KeepManifest]]: a partition-selective
     *    swap died mid-flight. Roll FORWARD: finish moving the
     *    manifest's keep dirs from the aside copy, rename staged in,
     *    drop aside + manifest (the staged dir was fully written before
     *    the swap began — the swap contract).
-    *  - staged present, no manifest: an [[atomicSwap]] died between its
-    *    two renames. Roll forward: rename staged in, drop aside.
+    *  - staged present, no manifest: the swap died between its two
+    *    renames. Roll forward: rename staged in, drop aside.
     *  - only the aside copy present: roll BACK to the pre-swap state.
     *
     * When `dst` exists the state is already serving; nothing is
@@ -1026,17 +1029,12 @@ object IndexMaintenance {
     val aside = new Path(dst.toString + "_old")
     if (fs.exists(staged)) {
       val mf = new Path(staged, KeepManifest)
-      if (fs.exists(mf)) {
+      val keeps = if (!fs.exists(mf)) Nil else {
         val in = fs.open(mf)
-        val keeps = try scala.io.Source.fromInputStream(in, "UTF-8")
-            .getLines().filter(_.nonEmpty).toList
-          finally in.close()
-        moveKeepDirs(fs, aside, staged, keeps)
+        try scala.io.Source.fromInputStream(in, "UTF-8").getLines().filter(_.nonEmpty).toList
+        finally in.close()
       }
-      if (!fs.rename(staged, dst))
-        throw new java.io.IOException(s"reconcile: could not move $staged into place")
-      fs.delete(aside, true)
-      fs.delete(new Path(dst, KeepManifest), false)
+      installStaged(fs, staged, dst, keeps)
       true
     } else if (fs.exists(aside)) {
       if (!fs.rename(aside, dst))
@@ -1132,10 +1130,11 @@ object IndexMaintenance {
   }
 
   /** Recursive .parquet part-file count under a directory. */
-  def parquetFileCount(spark: SparkSession, dir: String): Long = {
-    val fs = fsOf(spark, dir)
-    val p = new Path(dir)
-    if (!fs.exists(p)) 0L
-    else filesUnder(fs, p).count(_.getPath.getName.endsWith(".parquet")).toLong
-  }
+  def parquetFileCount(spark: SparkSession, dir: String): Long =
+    parquetFilesUnder(fsOf(spark, dir), new Path(dir)).size.toLong
+
+  /** The .parquet part files under a directory; none if it is missing. */
+  private def parquetFilesUnder(fs: FileSystem, p: Path): Seq[FileStatus] =
+    if (!fs.exists(p)) Seq.empty
+    else filesUnder(fs, p).filter(_.getPath.getName.endsWith(".parquet"))
 }

@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.operators.Chunker
+import graft.operators.{Chunker, IndexMaintenance}
 
 /** Ingest surface (SURVEY.md §1 step 1-2, the Spark re-expression of
   * the reference's crawl→parse→markdown ingest): read raw document
@@ -146,38 +146,20 @@ object Ingest {
     * per (batch × partition), and at 100 TB the resulting
     * file-per-few-rows layout dominates scan cost with open/footer
     * overhead. Rewrite each lang partition into ceil(rows/rowsPerFile)
-    * files via a repartition on write (atomic swap through a temp path
-    * so readers never see a half-compacted corpus). Returns the file
-    * count after compaction.
+    * files through the staged rewrite the index folds use
+    * ([[IndexMaintenance.writeStaged]]), then swap it in with
+    * [[IndexMaintenance.atomicSwap]], so readers never see a
+    * half-compacted corpus and a crash at any step leaves every row on
+    * disk. Returns the file count after compaction.
     */
   def compactCorpus(spark: SparkSession, corpusPath: String,
       rowsPerFile: Long = 1L << 20): Long = {
-    // one shuffle task per lang value with the writer rolling a new
-    // part-file every rowsPerFile records (the IndexMaintenance
-    // pattern): the old round-robin repartition(nFiles) left every task
-    // holding rows of EVERY lang — up to nFiles × nLangs files, not
-    // nFiles — and paid a full count() pre-scan to size it (r9 review)
     val tmp = corpusPath + "_compacting"
-    spark.read.parquet(corpusPath)
-      .repartition(col("lang"))
-      .write.mode("overwrite")
-      .option("maxRecordsPerFile", rowsPerFile)
-      .partitionBy("lang").parquet(tmp)
-    // swap with the old data renamed ASIDE first and both renames
-    // CHECKED — a crash between any two steps leaves every row on disk,
-    // never a deleted corpus with the data stranded in the tmp dir
-    // (the IndexMaintenance.compactIndex contract; on an object store
-    // this is a manifest/metastore pointer update instead)
+    IndexMaintenance.writeStaged(spark.read.parquet(corpusPath), "lang", rowsPerFile, tmp)
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(tmp), spark.sparkContext.hadoopConfiguration)
-    val dst = new org.apache.hadoop.fs.Path(corpusPath)
-    val aside = new org.apache.hadoop.fs.Path(corpusPath + "_old")
-    fs.delete(aside, true)
-    if (fs.exists(dst) && !fs.rename(dst, aside))
-      throw new java.io.IOException(s"could not move $dst aside")
-    if (!fs.rename(new org.apache.hadoop.fs.Path(tmp), dst))
-      throw new java.io.IOException(s"could not move $tmp into place")
-    fs.delete(aside, true)
-    graft.operators.IndexMaintenance.parquetFileCount(spark, corpusPath)
+    IndexMaintenance.atomicSwap(fs,
+      new org.apache.hadoop.fs.Path(tmp), new org.apache.hadoop.fs.Path(corpusPath))
+    IndexMaintenance.parquetFileCount(spark, corpusPath)
   }
 }

@@ -15,7 +15,8 @@ import graft.streaming.IndexStream
   * path stays exact across every way a layout changes under it
   * (stream-appended epoch, compaction, rebalance); an unchanged layout
   * reuses one resolved file index and a changed listing resolves a new
-  * one; the walk lists exactly what Hadoop's recursive `listFiles`
+  * one, for a layout directory and a single-file table alike; the
+  * walk lists exactly what Hadoop's recursive `listFiles`
   * lists; and no `listFiles` call is left in `src/main`.
   */
 class LayoutMemoSpec extends AnyFunSuite {
@@ -117,6 +118,27 @@ class LayoutMemoSpec extends AnyFunSuite {
     val df1 = IndexMaintenance.layoutDf(spark, sink)
     assert(!(df1 eq df0))
     assert(df1.count() === 15)
+  }
+
+  test("a plain parquet file resolves once while unchanged; a rewrite resolves it afresh") {
+    import spark.implicits._
+    val dir = tmp("graft-memo-plain")
+    def partFile(rows: Int): java.nio.file.Path = {
+      val out = s"$dir/w$rows"
+      (0 until rows).map(_.toLong).toDF("id").coalesce(1).write.parquet(out)
+      new java.io.File(out).listFiles().find(_.getName.endsWith(".parquet")).get.toPath
+    }
+    val file = java.nio.file.Paths.get(s"$dir/table.parquet")
+    Files.move(partFile(3), file)
+    val first = IndexMaintenance.layoutDf(spark, file.toString)
+    assert(first.count() === 3)
+    assert(fileIndexes(IndexMaintenance.layoutDf(spark, file.toString)).head eq
+      fileIndexes(first).head, "an unchanged plain file reuses its file index")
+    Files.move(partFile(5), file, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    val rewritten = IndexMaintenance.layoutDf(spark, file.toString)
+    assert(!(fileIndexes(rewritten).head eq fileIndexes(first).head),
+      "a rewritten plain file resolves a new file index")
+    assert(rewritten.count() === 5)
   }
 
   test("a missing path or a plain file falls through to a plain read") {

@@ -275,11 +275,11 @@ class SearchManySpec extends AnyFunSuite {
   test("building a warm batch facade runs the encode cut and one metadata query") {
     // Construction-time Spark jobs of each batch facade, pinned at the
     // counts the r16 shape produces on this corpus (numQueries is
-    // passed, so no count job; the layouts are warm, so no listing job):
+    // passed, so no count job; the layouts, the single-file documents
+    // table included, are warm, so no listing or schema job):
     //  - vector: 1 eager encode cut + 5 jobs of ONE metadata query (the
     //    probed-cluster collect — AQE runs its broadcast and shuffle
-    //    stages as jobs of their own) + 1 schema read of the
-    //    single-file documents table for the rerank tail;
+    //    stages as jobs of their own);
     //  - hybrid: 1 encode cut + 7 jobs of ONE metadata query (the
     //    cluster ids fused with the lexical term buckets, r16).
     // A second metadata collect, or an unfused hybrid, adds jobs.
@@ -312,7 +312,7 @@ class SearchManySpec extends AnyFunSuite {
       try build() finally sc.clearJobGroup()
       jobsOf(group)
     }
-    assert(constructionJobs(() => vector()) === 7)
+    assert(constructionJobs(() => vector()) === 6)
     assert(constructionJobs(() => hybrid()) === 8)
   }
 }
