@@ -300,18 +300,25 @@ object OracleSql {
 
   // ---- A. vector search ------------------------------------------------
 
+  // a zero norm (all-zero vector) normalizes to the zero vector
+  private def overNorm(x: String) = s"CASE WHEN nv = 0 THEN $x ELSE $x / nv END"
+
   val vsNorm: String =
     s"""WITH n AS (SELECT vec_id, embedding AS a, ${nrm("embedding")} AS nv FROM embeddings)
        |SELECT vec_id, ${r6("nv")} AS l2_norm,
-       |  ${r6("list_reduce(list_transform(a, x -> x::DOUBLE / nv), (x, y) -> x + y)")} AS checksum,
-       |  ${r6("a[1]::DOUBLE / nv")} AS c0
+       |  ${r6(s"list_reduce(list_transform(a, x -> ${overNorm("x::DOUBLE")}), (x, y) -> x + y)")} AS checksum,
+       |  ${r6(overNorm("a[1]::DOUBLE"))} AS c0
        |FROM n""".stripMargin
+
+  // int8 codes of x at a per-vector scale; a zero scale gives code 0
+  private def int8Code(x: String, scale: String) =
+    s"CASE WHEN $scale > 0 THEN CAST(floor($x::DOUBLE / $scale * 127 + 0.5) AS BIGINT) ELSE 0 END"
 
   val vsQuantize: String =
     s"""WITH s AS (SELECT vec_id, embedding AS e,
        |  list_max(list_transform(embedding, x -> abs(x::DOUBLE))) AS scale FROM embeddings),
        |q AS (SELECT vec_id, scale,
-       |  list_transform(e, x -> CAST(floor(x::DOUBLE / scale * 127 + 0.5) AS BIGINT)) AS qv FROM s)
+       |  list_transform(e, x -> ${int8Code("x", "scale")}) AS qv FROM s)
        |SELECT vec_id, ${r6("scale")} AS scale,
        |  CAST(list_reduce(qv, (a, b) -> a + b) AS BIGINT) AS sum_q,
        |  CAST(len(list_filter(qv, v -> abs(v) = 127)) AS BIGINT) AS n_sat
@@ -1225,13 +1232,13 @@ object OracleSql {
        |    list_max(list_transform(embedding, x -> abs(x::DOUBLE))) AS qs
        |  FROM embeddings WHERE vec_id = 0),
        |qx AS (SELECT qv_raw,
-       |    list_transform(qv_raw, x -> CAST(floor(x::DOUBLE / qs * 127 + 0.5) AS BIGINT)) AS qq
+       |    list_transform(qv_raw, x -> ${int8Code("x", "qs")}) AS qq
        |  FROM qr),
        |cv AS (SELECT vec_id, embedding,
        |    list_max(list_transform(embedding, x -> abs(x::DOUBLE))) AS vs
        |  FROM embeddings),
        |cq AS (SELECT vec_id, embedding, vs,
-       |    list_transform(embedding, x -> CAST(floor(x::DOUBLE / vs * 127 + 0.5) AS BIGINT)) AS qv
+       |    list_transform(embedding, x -> ${int8Code("x", "vs")}) AS qv
        |  FROM cv),
        |sc AS (SELECT cq.vec_id, cq.embedding, qx.qv_raw,
        |    list_reduce(list_transform(generate_series(1, len(qv)), i -> qv[i] * qx.qq[i]), (x, y) -> x + y) AS int_dot,

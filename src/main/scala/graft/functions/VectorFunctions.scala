@@ -51,10 +51,11 @@ object VectorFunctions {
 
   /** L2-normalized copy of the vector, given its precomputed norm column
     * (pass `norm(a)` or a cached column; avoids re-deriving the fold per
-    * element).
+    * element). A zero norm — an all-zero vector — gives the zero vector
+    * back, the native encoder's rule, instead of dividing by zero.
     */
   def l2normalize(a: Column, nrm: Column): Column =
-    transform(a, x => x.cast("double") / nrm)
+    transform(a, x => when(nrm === 0, x.cast("double")).otherwise(x.cast("double") / nrm))
 
   /** Bit-exact cross-engine rounding to 6 decimals:
     * floor(x*1e6 + 0.5)/1e6 uses only IEEE-exact ops, so identical input

@@ -412,16 +412,29 @@ object IvfIndex {
     * `score` against the one-row (qvec) `query`.
     */
   private[graft] def probedScores(spark: SparkSession, indexPath: String,
-      query: DataFrame, nprobe: Int): DataFrame = {
+      query: DataFrame, nprobe: Int): DataFrame =
+    probedPartitions(spark, indexPath, query, nprobe)._1
+      .crossJoin(broadcast(query))
+      .withColumn("score", dot(col("embedding"), col("qvec")))
+
+  /** The probed-partition read of a persisted cluster-partitioned
+    * layout (IVF, PQ, residual PQ): the `nprobe` stored centroids
+    * nearest the one-row (qvec) `query`, collected as ids (index
+    * metadata, O(nprobe) — not data), and the layout's served rows
+    * (base + any epochs) restricted to those partitions. The
+    * `cluster_id IN (...)` filter prunes at the parquet-partition level.
+    * Returns the rows and the probed ids.
+    */
+  private[graft] def probedPartitions(spark: SparkSession, indexPath: String,
+      query: DataFrame, nprobe: Int): (DataFrame, Array[Long]) = {
     val probed = nearestClusters(IndexMaintenance.layoutDf(spark, s"$indexPath/centroids"),
-        query, nprobe).collect().map(_.getLong(0)) // index metadata, O(nprobe) — not data
-    IndexMaintenance.vectorsDf(spark, indexPath) // base + any resume epochs
+        query, nprobe).collect().map(_.getLong(0))
+    val rows = IndexMaintenance.vectorsDf(spark, indexPath)
       // partition-column inference reads cluster_id as int; restore the
       // long the in-memory surfaces (search/assign/centroids) use
       .withColumn("cluster_id", col("cluster_id").cast("long"))
       .filter(col("cluster_id").isin(probed.toIndexedSeq: _*))
-      .crossJoin(broadcast(query))
-      .withColumn("score", dot(col("embedding"), col("qvec")))
+    (rows, probed)
   }
 
   /** Batch IVF search: the production ANN shape for a query SET. Each

@@ -78,6 +78,21 @@ object KnnSearch {
         r6(seqSum(col("normalized"))).as("checksum"),
         r6(element_at(col("normalized"), 1)).as("c0"))
 
+  /** The int8 rule [[quantize]] and [[quantizedSearch]] share: the
+    * per-vector symmetric scale max |x|, and the codes
+    * floor(x / scale · 127 + 0.5). A zero scale means an all-zero
+    * vector; it divides by the smallest positive double instead, so its
+    * codes are 0 (like [[quantizeTrained]]'s zero-spread guard) rather
+    * than a division by zero. Any other scale, NaN included, divides
+    * as before.
+    */
+  private def int8Scale(v: Column): Column = array_max(transform(v, x => abs(x.cast("double"))))
+
+  private def int8Codes(v: Column, scale: Column): Column = {
+    val divisor = greatest(scale, lit(java.lang.Double.MIN_VALUE))
+    transform(v, x => floor(x.cast("double") / divisor * 127 + 0.5))
+  }
+
   /** Int8 scalar quantization of the embedding column (the vector-db
     * memory-reduction path: 4× smaller vectors, dot products in int
     * arithmetic). Per-vector symmetric scale = max |x|; exposed to
@@ -86,10 +101,9 @@ object KnnSearch {
     */
   def quantize(spark: SparkSession, dir: String): DataFrame = {
     val e = col("embedding")
-    val scale = array_max(transform(e, x => abs(x.cast("double"))))
     Tables.embeddings(spark, dir)
-      .withColumn("scale", scale)
-      .withColumn("qv", transform(e, x => floor(x.cast("double") / col("scale") * 127 + 0.5)))
+      .withColumn("scale", int8Scale(e))
+      .withColumn("qv", int8Codes(e, col("scale")))
       .select(col("vec_id"), r6(col("scale")).as("scale"),
         aggregate(col("qv"), lit(0L), (a, x) => a + x).as("sum_q"),
         size(filter(col("qv"), v => abs(v) === 127)).cast("long").as("n_sat"))
@@ -141,28 +155,43 @@ object KnnSearch {
           .as("recon_e9"))
   }
 
+  /** The exact rescore every two-stage search ends with — the int8,
+    * binary and Matryoshka searches here, and PqIndex's PQ, IVFPQ,
+    * residual IVFPQ and persisted-index paths: stage one cuts a
+    * candidate set on an approximate key (each site its own), stage two
+    * scores the candidates' `embedding` by the exact dot product
+    * against the `qvec` column as `exact` and keeps the top `k` in
+    * (exact desc, vec_id asc) order. With `within` group keys, the top
+    * `k` of each group instead, ranked into `ern` (the per-query form
+    * PqIndex.pqRecallReport uses).
+    */
+  private[graft] def rescore(cand: DataFrame, qvec: String, k: Int,
+      within: Seq[Column] = Nil): DataFrame = {
+    val exact = cand.withColumn("exact", dot(col("embedding"), col(qvec)))
+    val order = Seq(col("exact").desc, col("vec_id").asc)
+    if (within.isEmpty) exact.orderBy(order: _*).limit(k)
+    else exact.withColumn("ern", row_number().over(Window.partitionBy(within: _*)
+      .orderBy(order: _*))).filter(col("ern") <= k)
+  }
+
   /** Search over the int8-quantized vectors with exact rescoring — the
     * memory-reduction search mode `quantize` sets up (4× smaller
     * vectors; candidate scoring in integer arithmetic, which is exact
     * in both engines — no float drift possible). Stage one ranks by
     * the integer dot product de-scaled by the vector's own
     * quantization scale (the query's scale is a positive constant, so
-    * dropping it preserves order); stage two rescores only the
-    * candidates with the exact float dot product.
+    * dropping it preserves order); stage two is [[rescore]].
     */
   def quantizedSearch(spark: SparkSession, dir: String, candidates: Int = 50,
       k: Int = 10): DataFrame = {
     val e = col("embedding")
-    def qscale(v: Column): Column = array_max(transform(v, x => abs(x.cast("double"))))
-    def qvec(v: Column, s: Column): Column =
-      transform(v, x => floor(x.cast("double") / s * 127 + 0.5).cast("long"))
     val q = Tables.embeddings(spark, dir).filter(col("vec_id") === 0)
       .select(e.as("qv_raw"))
-      .select(col("qv_raw"), qscale(col("qv_raw")).as("qs"))
-      .select(col("qv_raw"), qvec(col("qv_raw"), col("qs")).as("qq"))
+      .select(col("qv_raw"), int8Scale(col("qv_raw")).as("qs"))
+      .select(col("qv_raw"), int8Codes(col("qv_raw"), col("qs")).as("qq"))
     val cand = Tables.fanOut(Tables.embeddings(spark, dir).select("vec_id", "embedding"))
-      .withColumn("vs", qscale(e))
-      .withColumn("qv", qvec(e, col("vs")))
+      .withColumn("vs", int8Scale(e))
+      .withColumn("qv", int8Codes(e, col("vs")))
       .crossJoin(broadcast(q))
       // exact integer dot of the two code vectors, then de-scale by
       // this vector's quantization step — the approximate rank key
@@ -175,10 +204,7 @@ object KnnSearch {
         col("int_dot"), col("approx_key"))
       .orderBy(col("approx_key").desc, col("vec_id").asc)
       .limit(candidates)
-    cand
-      .withColumn("exact", dot(col("embedding"), col("qv_raw")))
-      .orderBy(col("exact").desc, col("vec_id").asc)
-      .limit(k)
+    rescore(cand, "qv_raw", k)
       .select(col("vec_id"), col("int_dot"), r6(col("exact")).as("score"))
   }
 
@@ -198,7 +224,7 @@ object KnnSearch {
   /** Binary-quantization search (the vector-db 32×-memory-reduction
     * mode: 64 floats → 64 bits): candidates ranked by hamming distance
     * between packed sign-bit signatures (bit_count of xor — integer
-    * ops the whole way), then exact rescoring of the candidate set.
+    * ops the whole way), then [[rescore]] of the candidate set.
     * Scale shape: the corpus scan carries only two longs per vector
     * into the candidate heap; the query signature is a broadcast row;
     * the corpus never shuffles.
@@ -220,18 +246,15 @@ object KnnSearch {
       .select(col("vec_id"), col("embedding"), col("qv_raw"), col("hamming"))
       .orderBy(col("hamming").asc, col("vec_id").asc)
       .limit(candidates)
-    cand
-      .withColumn("exact", dot(col("embedding"), col("qv_raw")))
-      .orderBy(col("exact").desc, col("vec_id").asc)
-      .limit(k)
+    rescore(cand, "qv_raw", k)
       .select(col("vec_id"), col("hamming"), r6(col("exact")).as("score"))
   }
 
   /** Matryoshka (truncated-dimension) search: stage one ranks by the
     * dot product over only the first `dims` components — at scale the
     * short prefix is a separate, 4×-smaller column (or index) and the
-    * full vector is only read for the candidate set — stage two
-    * rescores candidates with the full-dimension dot product.
+    * full vector is only read for the candidate set — stage two is
+    * [[rescore]] with the full-dimension dot product.
     */
   def matryoshkaSearch(spark: SparkSession, dir: String, dims: Int = 16,
       candidates: Int = 50, k: Int = 10): DataFrame = {
@@ -244,10 +267,7 @@ object KnnSearch {
       .select(col("vec_id"), col("embedding"), col("qv_raw"), col("sub_score"))
       .orderBy(col("sub_score").desc, col("vec_id").asc)
       .limit(candidates)
-    cand
-      .withColumn("exact", dot(col("embedding"), col("qv_raw")))
-      .orderBy(col("exact").desc, col("vec_id").asc)
-      .limit(k)
+    rescore(cand, "qv_raw", k)
       .select(col("vec_id"), r6(col("sub_score")).as("sub_score"),
         r6(col("exact")).as("score"))
   }

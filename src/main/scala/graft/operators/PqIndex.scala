@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.VectorFunctions._
@@ -9,9 +9,22 @@ import graft.functions.VectorFunctions._
   * split into `NumSub` 16-dim subspaces, each with a `NumCodes`-entry
   * codebook; a vector compresses to NumSub byte codes (16× smaller than
   * float32). Search scores against the codebook reconstruction
-  * (asymmetric distance computation) — at scale the per-query
-  * code→partial-score lookup table is broadcast and the corpus scan
-  * reads only the code columns.
+  * (asymmetric distance computation, Jégou et al., TPAMI 2011) — at
+  * scale the per-query code→partial-score lookup table is broadcast and
+  * the corpus scan reads only the code columns.
+  *
+  * Every PQ and residual-IVFPQ search runs on one quantized core:
+  *  - [[subspaces]]: the split of a vector column into SubDim windows;
+  *  - [[codebookMetaOf]]: a (s, code, cvec|rcvec) codebook table
+  *    collected to [s][code][SubDim] doubles for the native expressions;
+  *  - [[adcTable]]: the per-query ADC lookup table (integerized partial
+  *    dot products), with [[adcLiteral]] its literal form and
+  *    [[codeSum]] the per-subspace lookup sum over stored code columns;
+  *  - [[IvfIndex.probedPartitions]]: the probed-partition read of a
+  *    persisted layout;
+  *  - [[KnnSearch.rescore]]: the exact rescore tail.
+  * The interpreted-HOF twins that define the native expressions'
+  * semantics (`graft.PqHof`) live with the specs.
   *
   * Codebooks here are deterministic data samples (ids c*17, the PQ
   * analogue of IvfIndex's seed centroids; k-means per subspace is the
@@ -24,45 +37,79 @@ object PqIndex {
   val SubDim = 16
   val NumCodes = 16
 
-  /** (s, code, cvec): subspace codebooks sampled from the corpus. */
-  def codebooks(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val subs = broadcast((0 until NumSub).toDF("s"))
+  /** The subspace split: `df` crossed with the NumSub subspace ids, its
+    * `vec` column cut into SubDim windows — (s, key, out) rows.
+    */
+  private[graft] def subspaces(df: DataFrame, key: String, vec: String,
+      out: String): DataFrame = {
+    import df.sparkSession.implicits._
+    df.crossJoin(broadcast((0 until NumSub).toDF("s")))
+      .select(col("s"), col(key), expr(s"slice($vec, s * $SubDim + 1, $SubDim)").as(out))
+  }
+
+  /** The NumCodes corpus rows the codebooks are sampled from. */
+  private def codebookSamples(spark: SparkSession, dir: String): DataFrame =
     Tables.embeddings(spark, dir)
       .filter(col("vec_id") % 17 === 0 && col("vec_id") < NumCodes * 17)
-      .select(expr("vec_id div 17").as("code"), col("embedding"))
-      .crossJoin(subs)
-      .select(col("s"), col("code"),
-        expr(s"slice(embedding, s * $SubDim + 1, $SubDim)").as("cvec"))
-  }
 
-  /** (vec_id, s, subvec): corpus split into subvectors. */
-  private def subvectors(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val subs = broadcast((0 until NumSub).toDF("s"))
-    Tables.fanOut(Tables.embeddings(spark, dir).select("vec_id", "embedding"))
-      .crossJoin(subs)
-      .select(col("vec_id"), col("s"),
-        expr(s"slice(embedding, s * $SubDim + 1, $SubDim)").as("subvec"))
-  }
+  /** (s, code, cvec): subspace codebooks sampled from the corpus. */
+  def codebooks(spark: SparkSession, dir: String): DataFrame =
+    subspaces(codebookSamples(spark, dir)
+      .select(expr("vec_id div 17").as("code"), col("embedding")), "code", "embedding", "cvec")
 
-  /** Codebooks collected to primitive arrays [s][code][SubDim] for the
-    * native ADC expression (floats widened to double — exact, the HOF
-    * fold casts per element). Index metadata, never data.
+  /** A (s, code, `vec`) codebook table — computed, or persisted under an
+    * index path — collected to primitive arrays [s][code][SubDim] for
+    * the native expressions. Float codewords are widened to double,
+    * which is exact (the HOF fold casts per element). Sized by NumSub: a
+    * table missing a subspace fails loudly (key miss), never mis-sizes
+    * the meta. Index metadata, never data.
     */
-  private def codebookMeta(spark: SparkSession, dir: String): Array[Array[Array[Double]]] =
-    codebookMetaOf(codebooks(spark, dir))
-
-  /** Same, from an arbitrary (s, code, cvec) codebook table — e.g. the
-    * one persisted under an index path (IndexStream.appendToPqIndex).
-    */
-  private[graft] def codebookMetaOf(cbDf: DataFrame): Array[Array[Array[Double]]] = {
-    val rows = cbDf.select(col("s"), col("code").cast("long"), col("cvec")).collect()
-    val bySub = rows.groupBy(_.getInt(0))
-    Array.tabulate(bySub.size) { s =>
-      bySub(s).sortBy(_.getLong(1)).map(_.getSeq[Float](2).map(_.toDouble).toArray)
+  private[graft] def codebookMetaOf(cbDf: DataFrame, vec: String): Array[Array[Array[Double]]] = {
+    val bySub = cbDf.select(col("s"), col("code").cast("long"), col(vec).cast("array<double>"))
+      .collect().groupBy(_.getInt(0))
+    Array.tabulate(NumSub) { s =>
+      bySub(s).sortBy(_.getLong(1)).map(_.getSeq[Double](2).toArray)
     }
   }
+
+  private def codebookMeta(spark: SparkSession, dir: String): Array[Array[Array[Double]]] =
+    codebookMetaOf(codebooks(spark, dir), "cvec")
+
+  /** The integerized partial dot product of the query's window s
+    * against a codeword: lut[s][code] before collection.
+    */
+  private def partialE9(codeword: Column): Column =
+    cents(dot(expr(s"slice(qvec, s * $SubDim + 1, $SubDim)"), codeword), 1e9)
+
+  /** The per-query ADC lookup table: lut[s][code] = the partial dot
+    * product of the one-row (qvec) `query`'s window s against codeword
+    * (s, code) of the `vec` column of `cbDf`. Computed with the same
+    * Spark fold the oracle mirrors, integerized BEFORE collection
+    * (floor(part·1e9+0.5) — the order-independent integer contract),
+    * then handed to the scan as NumSub×NumCodes longs: the table a PQ
+    * engine keeps in registers during the scan.
+    */
+  private[graft] def adcTable(cbDf: DataFrame, vec: String, query: DataFrame): Array[Array[Long]] = {
+    val rows = cbDf.crossJoin(broadcast(query))
+      .select(col("s"), col("code").cast("long"), partialE9(col(vec)).as("e9"))
+      .collect()
+    Array.tabulate(NumSub) { s =>
+      val bySub = rows.filter(_.getInt(0) == s).map(r => r.getLong(1) -> r.getLong(2)).toMap
+      Array.tabulate(NumCodes)(c => bySub(c.toLong))
+    }
+  }
+
+  /** An ADC table as literal columns, one `array<bigint>` per subspace. */
+  private[graft] def adcLiteral(lut: Array[Array[Long]]): Seq[Column] =
+    lut.toSeq.map(codes => array(codes.toSeq.map(lit): _*))
+
+  /** Σ_s lut_s[`prefix`_s]: the approximate score read off a persisted
+    * layout's code columns — a literal-array `element_at` per subspace,
+    * fully codegen'd.
+    */
+  private def codeSum(lut: Array[Array[Long]], prefix: String): Column =
+    adcLiteral(lut).zipWithIndex
+      .map { case (l, s) => element_at(l, col(s"${prefix}_$s") + 1) }.reduce(_ + _)
 
   /** The persisted-layout projection — (vec_id, embedding, cluster_id,
     * code_0..code_{NumSub-1}) — for a (vec_id, embedding) frame against
@@ -81,28 +128,11 @@ object PqIndex {
       .select(col("vec_id") +: col("embedding") +: col("cluster_id") +: codeCols: _*)
   }
 
-  /** The NumSub codebooks collected into one literal column:
-    * `array` (indexed by s+1) `of array<struct<code, cvec>>`. Codebooks
-    * are index metadata (NumSub×NumCodes×SubDim floats — the thing a PQ
-    * engine keeps in L1), never data.
-    */
-  private[graft] def codebookLiteral(spark: SparkSession, dir: String) = {
-    val bySub = codebooks(spark, dir)
-      .select(col("s"), col("code").cast("long"), col("cvec"))
-      .collect()
-      .groupBy(_.getInt(0))
-    array((0 until NumSub).map { s =>
-      array(bySub(s).sortBy(_.getLong(1)).map { r =>
-        struct(lit(r.getLong(1)).as("code"), lit(r.getSeq[Float](2).toArray).as("cvec"))
-      }.toIndexedSeq: _*)
-    }: _*)
-  }
-
   /** PQ encoding: nearest codeword per subspace (argmin d², tiebreak
     * code) → (vec_id, s, code). All NumSub codes are computed in ONE
     * native pass over the row (AnnExprs.PqCodesExpr) and unrolled with
     * `posexplode` — a map-side projection, no join, no window, no
-    * shuffle of the corpus. [[encodeHof]] is the per-subspace
+    * shuffle of the corpus. `graft.PqHof.encodeHof` is the per-subspace
     * `array_min`-over-structs formulation that defines the semantics
     * (≡ the oracle's `row_number() OVER (ORDER BY d2, code) = 1`);
     * AnnParitySpec pins row-for-row equality.
@@ -114,76 +144,20 @@ object PqIndex {
         posexplode(graft.functions.AnnExprs.pqCodes(col("embedding"), cb)).as(Seq("s", "code")))
   }
 
-  /** HOF twin of [[encode]] (the numeric spec the oracle mirrors). */
-  private[graft] def encodeHof(spark: SparkSession, dir: String): DataFrame = {
-    val cb = codebookLiteral(spark, dir)
-    subvectors(spark, dir)
-      .withColumn("best", array_min(transform(element_at(cb, col("s") + 1), c =>
-        struct(dist2(col("subvec"), c.getField("cvec")).as("d2"),
-          c.getField("code").as("code")))))
-      .select(col("vec_id"), col("s"), col("best.code").as("code"))
-  }
-
-  /** Per-query ADC lookup table as a literal: lut[s][code] = the
-    * integerized partial dot product of the query's subvector s against
-    * codeword (s, code). Computed with the same Spark fold the oracle
-    * mirrors, integerized BEFORE collection (floor(part·1e9+0.5) — the
-    * order-independent integer contract), then baked into the scan as
-    * NumSub×NumCodes longs. This is the table a PQ engine keeps in
-    * registers during the scan.
-    */
-  private def lutRows(spark: SparkSession, dir: String, q: DataFrame) =
-    codebooks(spark, dir).crossJoin(broadcast(q))
-      .select(col("s"), col("code").cast("long"),
-        cents(dot(expr(s"slice(qvec, s * $SubDim + 1, $SubDim)"), col("cvec")), 1e9).as("e9"))
-      .collect()
-
-  /** Per-query LUT as primitive longs [s][code] for the native fold. */
-  private def lutMeta(spark: SparkSession, dir: String, q: DataFrame): Array[Array[Long]] = {
-    val rows = lutRows(spark, dir, q)
-    Array.tabulate(NumSub) { s =>
-      val bySub = rows.filter(_.getInt(0) == s).map(r => r.getLong(1) -> r.getLong(2)).toMap
-      Array.tabulate(NumCodes)(c => bySub(c.toLong))
-    }
-  }
-
-  private[graft] def lutLiteral(spark: SparkSession, dir: String, q: DataFrame) = {
-    val rows = lutRows(spark, dir, q)
-    array((0 until NumSub).map { s =>
-      val bySub = rows.filter(_.getInt(0) == s).map(r => r.getLong(1) -> r.getLong(2)).toMap
-      array((0 until NumCodes).map(c => lit(bySub(c.toLong))): _*)
-    }: _*)
-  }
-
   /** (vec_id, embedding, approx_e9) in a single corpus scan: per row,
     * each subspace picks its nearest codeword and accumulates the LUT
     * entry — encode + ADC scoring fused into ONE native loop
     * (AnnExprs.PqAdcExpr; codebooks and LUT in registers). Zero joins,
     * zero shuffles; the integer partial sums are order-free, so the
     * result is bitwise the oracle's encode⋈lut⋈groupBy formulation.
-    * [[adcScoredHof]] is the interpreted-HOF twin defining the
-    * semantics; AnnParitySpec pins bitwise equality.
+    * `graft.PqHof.adcScoredHof` is the interpreted-HOF twin defining
+    * the semantics; AnnParitySpec pins bitwise equality.
     */
   private def adcScored(spark: SparkSession, dir: String, q: DataFrame): DataFrame = {
     val cb = codebookMeta(spark, dir)
-    val lut = lutMeta(spark, dir, q)
+    val lut = adcTable(codebooks(spark, dir), "cvec", q)
     Tables.fanOut(Tables.embeddings(spark, dir).select("vec_id", "embedding"))
       .withColumn("approx_e9", graft.functions.AnnExprs.pqAdc(col("embedding"), cb, lut))
-  }
-
-  /** HOF twin of [[adcScored]] (the numeric spec). */
-  private[graft] def adcScoredHof(spark: SparkSession, dir: String, q: DataFrame): DataFrame = {
-    val cb = codebookLiteral(spark, dir)
-    val lut = lutLiteral(spark, dir, q)
-    val approxE9 = aggregate(sequence(lit(0), lit(NumSub - 1)), lit(0L), (acc, s) =>
-      acc + element_at(element_at(lut, s + 1),
-        array_min(transform(element_at(cb, s + 1), c =>
-          struct(dist2(slice(col("embedding"), s * SubDim + 1, lit(SubDim)),
-            c.getField("cvec")).as("d2"),
-            c.getField("code").as("code"))))
-          .getField("code").cast("int") + 1))
-    Tables.fanOut(Tables.embeddings(spark, dir).select("vec_id", "embedding"))
-      .withColumn("approx_e9", approxE9)
   }
 
   private def queryVec(spark: SparkSession, dir: String): DataFrame =
@@ -204,11 +178,9 @@ object PqIndex {
       .select("vec_id", "approx_e9")
       .orderBy(col("approx_e9").desc, col("vec_id").asc)
       .limit(candidates)
-    broadcast(cand).join(Tables.embeddings(spark, dir).select("vec_id", "embedding"), "vec_id")
-      .crossJoin(broadcast(q))
-      .withColumn("exact", dot(col("embedding"), col("qvec")))
-      .orderBy(col("exact").desc, col("vec_id").asc)
-      .limit(k)
+    KnnSearch.rescore(
+        broadcast(cand).join(Tables.embeddings(spark, dir).select("vec_id", "embedding"), "vec_id")
+          .crossJoin(broadcast(q)), "qvec", k)
       .select(col("vec_id"), r6(col("exact")).as("exact_score"),
         r6(col("approx_e9") / 1e9).as("approx_score"))
   }
@@ -235,10 +207,7 @@ object PqIndex {
       .select(col("cluster_id"), col("vec_id"), col("embedding"), col("approx_e9"))
       .orderBy(col("approx_e9").desc, col("vec_id").asc)
       .limit(candidates)
-    cand.crossJoin(broadcast(q))
-      .withColumn("exact", dot(col("embedding"), col("qvec")))
-      .orderBy(col("exact").desc, col("vec_id").asc)
-      .limit(k)
+    KnnSearch.rescore(cand.crossJoin(broadcast(q)), "qvec", k)
       .select(col("cluster_id"), col("vec_id"),
         r6(col("approx_e9") / 1e9).as("approx_score"), r6(col("exact")).as("score"))
   }
@@ -258,11 +227,8 @@ object PqIndex {
     */
   private[graft] def residualCodebooksFrom(spark: SparkSession, dir: String,
       cents: DataFrame): DataFrame = {
-    import spark.implicits._
     val centsLit = IvfIndex.centroidLiteral(cents)
-    val subs = broadcast((0 until NumSub).toDF("s"))
-    Tables.embeddings(spark, dir)
-      .filter(col("vec_id") % 17 === 0 && col("vec_id") < NumCodes * 17)
+    subspaces(codebookSamples(spark, dir)
       // NumCodes sample rows — the HOF argmin is fine here and keeps
       // this metadata derivation in the oracle-mirrored formulation
       .withColumn("best", IvfIndex.nearestHof(col("embedding"), centsLit))
@@ -271,91 +237,25 @@ object PqIndex {
           c => c.getField("cluster_id") === col("best.cluster_id")), 1).getField("cvec"))
       .select(expr("vec_id div 17").as("code"),
         zip_with(col("embedding"), col("cvec"),
-          (a, b) => a.cast("double") - b.cast("double")).as("rvec"))
-      .crossJoin(subs)
-      .select(col("s"), col("code"),
-        expr(s"slice(rvec, s * $SubDim + 1, $SubDim)").as("rcvec"))
+          (a, b) => a.cast("double") - b.cast("double")).as("rvec")), "code", "rvec", "rcvec")
   }
-
-  /** Residual codebooks as primitive arrays [s][code][SubDim] (already
-    * double — residuals are computed in double).
-    */
-  private def residualCodebookMeta(spark: SparkSession, dir: String): Array[Array[Array[Double]]] =
-    residualCodebookMetaOf(residualCodebooks(spark, dir))
-
-  private[graft] def residualCodebookLiteral(spark: SparkSession, dir: String) = {
-    val bySub = residualCodebooks(spark, dir)
-      .select(col("s"), col("code").cast("long"), col("rcvec"))
-      .collect()
-      .groupBy(_.getInt(0))
-    array((0 until NumSub).map { s =>
-      array(bySub(s).sortBy(_.getLong(1)).map { r =>
-        struct(lit(r.getLong(1)).as("code"), lit(r.getSeq[Double](2).toArray).as("rcvec"))
-      }.toIndexedSeq: _*)
-    }: _*)
-  }
-
-  /** Per-query residual LUT rows (s, code, e9), integerized before
-    * collection — shared by the native meta and the HOF literal.
-    */
-  private def residualLutRows(spark: SparkSession, dir: String, q: DataFrame) =
-    residualCodebooks(spark, dir).crossJoin(broadcast(q))
-      .select(col("s"), col("code").cast("long"),
-        cents(dot(expr(s"slice(qvec, s * $SubDim + 1, $SubDim)"), col("rcvec")), 1e9).as("e9"))
-      .collect()
 
   /** (vec_id, embedding, cluster_id, res_e9) in ONE native corpus scan:
     * cluster assignment, residual computation and residual-codeword
     * argmin + LUT accumulation fused into a single tight loop per row
     * (AnnExprs.ResidualAdcExpr) — the residual vector is never
-    * materialized. [[residualScoredHof]] defines the semantics;
-    * AnnParitySpec pins bitwise equality.
+    * materialized. `graft.PqHof.residualScoredHof` defines the
+    * semantics; AnnParitySpec pins bitwise equality.
     */
   private def residualScored(spark: SparkSession, dir: String, q: DataFrame): DataFrame = {
     val (ids, cvecs) = IvfIndex.centroidMeta(IvfIndex.centroids(spark, dir))
-    val rcb = residualCodebookMeta(spark, dir)
-    val rows = residualLutRows(spark, dir, q)
-    val lut = Array.tabulate(NumSub) { s =>
-      val bySub = rows.filter(_.getInt(0) == s).map(r => r.getLong(1) -> r.getLong(2)).toMap
-      Array.tabulate(NumCodes)(c => bySub(c.toLong))
-    }
+    val ra = graft.functions.AnnExprs.residualAdc(col("embedding"), ids, cvecs,
+      codebookMetaOf(residualCodebooks(spark, dir), "rcvec"),
+      adcTable(residualCodebooks(spark, dir), "rcvec", q))
     Tables.fanOut(Tables.embeddings(spark, dir).select("vec_id", "embedding"))
-      .withColumn("ra",
-        graft.functions.AnnExprs.residualAdc(col("embedding"), ids, cvecs, rcb, lut))
+      .withColumn("ra", ra)
       .select(col("vec_id"), col("embedding"),
         col("ra.cluster_id").as("cluster_id"), col("ra.res_e9").as("res_e9"))
-  }
-
-  /** HOF twin of [[residualScored]] (the numeric spec the oracle
-    * mirrors): literal-array argmins, `zip_with` residual, interpreted
-    * `aggregate` fold.
-    */
-  private[graft] def residualScoredHof(spark: SparkSession, dir: String,
-      q: DataFrame): DataFrame = {
-    val centsLit = IvfIndex.centroidLiteral(IvfIndex.centroids(spark, dir))
-    val rcbLit = residualCodebookLiteral(spark, dir)
-    val lutRows = residualLutRows(spark, dir, q)
-    val lut = array((0 until NumSub).map { s =>
-      val bySub = lutRows.filter(_.getInt(0) == s).map(r => r.getLong(1) -> r.getLong(2)).toMap
-      array((0 until NumCodes).map(c => lit(bySub(c.toLong))): _*)
-    }: _*)
-    val best = IvfIndex.nearestHof(col("embedding"), centsLit)
-    val resE9 = aggregate(sequence(lit(0), lit(NumSub - 1)), lit(0L), (acc, s) =>
-      acc + element_at(element_at(lut, s + 1),
-        array_min(transform(element_at(rcbLit, s + 1), c =>
-          struct(dist2(slice(col("rvec"), s * SubDim + 1, lit(SubDim)),
-            c.getField("rcvec")).as("d2"),
-            c.getField("code").as("code"))))
-          .getField("code").cast("int") + 1))
-    Tables.fanOut(Tables.embeddings(spark, dir).select("vec_id", "embedding"))
-      .withColumn("cluster_id", best.getField("cluster_id"))
-      .withColumn("cvec",
-        element_at(filter(centsLit,
-          c => c.getField("cluster_id") === col("cluster_id")), 1).getField("cvec"))
-      .withColumn("rvec", zip_with(col("embedding"), col("cvec"),
-        (a, b) => a.cast("double") - b.cast("double")))
-      .withColumn("res_e9", resE9)
-      .select(col("vec_id"), col("embedding"), col("cluster_id"), col("res_e9"))
   }
 
   /** Residual IVF+PQ search — the faithful Faiss-IVFPQ layout: vectors
@@ -381,25 +281,11 @@ object PqIndex {
       .select(col("cluster_id"), col("vec_id"), col("embedding"), col("approx_e9"))
       .orderBy(col("approx_e9").desc, col("vec_id").asc)
       .limit(candidates)
-    cand.crossJoin(broadcast(q))
-      .withColumn("exact", dot(col("embedding"), col("qvec")))
-      .orderBy(col("exact").desc, col("vec_id").asc)
-      .limit(k)
+    KnnSearch.rescore(cand.crossJoin(broadcast(q)), "qvec", k)
       .select(col("cluster_id"), col("vec_id"),
         r6(col("approx_e9") / 1e9).as("approx_score"), r6(col("exact")).as("score"))
   }
 
-  /** Persist the RESIDUAL IVFPQ index — the layout a 100 TB deployment
-    * of [[searchIvfPqResidual]] actually serves from: one row per
-    * vector with its IVF cluster as the partition column, its NumSub
-    * RESIDUAL codes as flat int columns (`rcode_0..`), the embedding
-    * alongside for rerank fetch; centroids + residual codebooks stored
-    * as metadata. Encoding (assignment + per-window residual argmin) is
-    * the same shared native loops the fused in-memory path runs
-    * (AnnExprs.residualCodesRow ≡ residualRow's codes), so serving from
-    * the index reproduces the in-memory results exactly
-    * (PqResidualIndexedSpec).
-    */
   /** The persisted residual layout's row projection — (vec_id,
     * embedding, cluster_id, rcode_0..) — for a (vec_id, embedding)
     * frame against explicit index metadata; shared by the batch build
@@ -418,20 +304,17 @@ object PqIndex {
         col("rc.cluster_id").as("cluster_id") +: codeCols: _*)
   }
 
-  /** Residual codebook meta from an arbitrary (s, code, rcvec) table —
-    * e.g. the one persisted under a residual index path (rcvec is
-    * double: residuals are computed in double).
+  /** Persist the RESIDUAL IVFPQ index — the layout a 100 TB deployment
+    * of [[searchIvfPqResidual]] actually serves from: one row per
+    * vector with its IVF cluster as the partition column, its NumSub
+    * RESIDUAL codes as flat int columns (`rcode_0..`), the embedding
+    * alongside for rerank fetch; centroids + residual codebooks stored
+    * as metadata. Encoding (assignment + per-window residual argmin) is
+    * the same shared native loops the fused in-memory path runs
+    * (AnnExprs.residualCodesRow ≡ residualRow's codes), so serving from
+    * the index reproduces the in-memory results exactly
+    * (PqResidualIndexedSpec).
     */
-  private[graft] def residualCodebookMetaOf(cbDf: DataFrame): Array[Array[Array[Double]]] = {
-    val rows = cbDf.select(col("s"), col("code").cast("long"), col("rcvec")).collect()
-    val bySub = rows.groupBy(_.getInt(0))
-    // size by NumSub, not bySub.size: a persisted table missing a
-    // subspace must fail loudly (key miss), never mis-size the meta
-    Array.tabulate(NumSub) { s =>
-      bySub(s).sortBy(_.getLong(1)).map(_.getSeq[Double](2).toArray)
-    }
-  }
-
   def writeResidualIndex(spark: SparkSession, dir: String, indexPath: String): Unit = {
     // materialize the centroid pick once: three consumers (row
     // projection metadata, the centroids write, the codebook
@@ -439,7 +322,7 @@ object PqIndex {
     // corpus scan
     val cents = graft.Checkpointing.cut(IvfIndex.centroids(spark, dir))
     residualIndexRows(Tables.embeddings(spark, dir).select("vec_id", "embedding"),
-        cents, residualCodebookMetaOf(residualCodebooksFrom(spark, dir, cents)))
+        cents, codebookMetaOf(residualCodebooksFrom(spark, dir, cents), "rcvec"))
       .write.mode("overwrite").partitionBy("cluster_id")
       .parquet(s"$indexPath/vectors")
     cents.write.mode("overwrite").parquet(s"$indexPath/centroids")
@@ -459,42 +342,34 @@ object PqIndex {
     */
   def searchResidualIndex(spark: SparkSession, indexPath: String, query: DataFrame,
       nprobe: Int = 3, candidates: Int = 50, k: Int = 10): DataFrame = {
-    val cents0 = IndexMaintenance.layoutDf(spark, s"$indexPath/centroids")
-    val probed = IvfIndex.nearestClusters(cents0, query, nprobe)
-      .collect().map(_.getLong(0)) // index metadata, O(nprobe)
-    val constDf = cents0.crossJoin(broadcast(query))
+    val (vectors, probed) = IvfIndex.probedPartitions(spark, indexPath, query, nprobe)
+    val constDf = IndexMaintenance.layoutDf(spark, s"$indexPath/centroids")
+      .crossJoin(broadcast(query))
       .filter(col("cluster_id").isin(probed.toIndexedSeq: _*))
       .select(col("cluster_id"), cents(dot(col("cvec"), col("qvec")), 1e9).as("const_e9"))
-    val rlutRows = IndexMaintenance.layoutDf(spark, s"$indexPath/codebooks")
-      .crossJoin(broadcast(query))
-      .select(col("s"), col("code").cast("long"),
-        cents(dot(expr(s"slice(qvec, s * $SubDim + 1, $SubDim)"), col("rcvec")), 1e9).as("e9"))
-      .collect()
-    val rlutLit = (0 until NumSub).map { s =>
-      val bySub = rlutRows.filter(_.getInt(0) == s).map(r => r.getLong(1) -> r.getLong(2)).toMap
-      array((0 until NumCodes).map(c => lit(bySub(c.toLong))): _*)
-    }
-    val vectors = IndexMaintenance.vectorsDf(spark, indexPath)
-      .withColumn("cluster_id", col("cluster_id").cast("long"))
-      .filter(col("cluster_id").isin(probed.toIndexedSeq: _*))
-    val resE9 = (0 until NumSub).map(s =>
-      element_at(rlutLit(s), col(s"rcode_$s") + 1)).reduce(_ + _)
-    val cand = vectors
-      .select(col("vec_id") +: col("cluster_id") +:
-        (0 until NumSub).map(s => col(s"rcode_$s")): _*)
-      .join(broadcast(constDf), "cluster_id")
-      .withColumn("approx_e9", col("const_e9") + resE9)
+    val lut = adcTable(IndexMaintenance.layoutDf(spark, s"$indexPath/codebooks"), "rcvec", query)
+    servedFromCodes(vectors, "rcode", query, candidates, k)(
+        _.join(broadcast(constDf), "cluster_id")
+          .withColumn("approx_e9", col("const_e9") + codeSum(lut, "rcode")))
+      .select(col("cluster_id"), col("vec_id"),
+        r6(col("approx_e9") / 1e9).as("approx_score"), r6(col("exact")).as("score"))
+  }
+
+  /** The persisted layouts' serving tail: the probed `vectors`' (vec_id,
+    * cluster_id, `prefix`_0..) code columns — column pruning drops the
+    * embedding — scored into `approx_e9` by `score` and cut to the top
+    * `candidates`; only those fetch their embedding by vec_id and
+    * rescore exactly.
+    */
+  private def servedFromCodes(vectors: DataFrame, prefix: String, query: DataFrame,
+      candidates: Int, k: Int)(score: DataFrame => DataFrame): DataFrame = {
+    val cand = score(vectors.select(col("vec_id") +: col("cluster_id") +:
+        (0 until NumSub).map(s => col(s"${prefix}_$s")): _*))
       .orderBy(col("approx_e9").desc, col("vec_id").asc)
       .limit(candidates)
       .select("vec_id", "cluster_id", "approx_e9")
-    broadcast(cand)
-      .join(vectors.select("vec_id", "embedding"), "vec_id")
-      .crossJoin(broadcast(query))
-      .withColumn("exact", dot(col("embedding"), col("qvec")))
-      .orderBy(col("exact").desc, col("vec_id").asc)
-      .limit(k)
-      .select(col("cluster_id"), col("vec_id"),
-        r6(col("approx_e9") / 1e9).as("approx_score"), r6(col("exact")).as("score"))
+    KnnSearch.rescore(broadcast(cand).join(vectors.select("vec_id", "embedding"), "vec_id")
+      .crossJoin(broadcast(query)), "qvec", k)
   }
 
   /** Fingerprint of the corpus the cached index build is keyed by
@@ -570,36 +445,10 @@ object PqIndex {
   def searchIndex(spark: SparkSession, indexPath: String, query: DataFrame,
       nprobe: Int = 3, candidates: Int = 50, k: Int = 10,
       roundScore: Boolean = true): DataFrame = {
-    val probed = IvfIndex.nearestClusters(
-        IndexMaintenance.layoutDf(spark, s"$indexPath/centroids"), query, nprobe)
-      .collect().map(_.getLong(0)) // index metadata, O(nprobe)
-    val lutRows = IndexMaintenance.layoutDf(spark, s"$indexPath/codebooks")
-      .crossJoin(broadcast(query))
-      .select(col("s"), col("code").cast("long"),
-        cents(dot(expr(s"slice(qvec, s * $SubDim + 1, $SubDim)"), col("cvec")), 1e9).as("e9"))
-      .collect()
-    val lutLit = (0 until NumSub).map { s =>
-      val bySub = lutRows.filter(_.getInt(0) == s).map(r => r.getLong(1) -> r.getLong(2)).toMap
-      array((0 until NumCodes).map(c => lit(bySub(c.toLong))): _*)
-    }
-    val vectors = IndexMaintenance.vectorsDf(spark, indexPath) // base + epochs
-      .withColumn("cluster_id", col("cluster_id").cast("long"))
-      .filter(col("cluster_id").isin(probed.toIndexedSeq: _*))
-    val approxE9 = (0 until NumSub).map(s =>
-      element_at(lutLit(s), col(s"code_$s") + 1)).reduce(_ + _)
-    val cand = vectors
-      .select(col("vec_id") +: col("cluster_id") +:
-        (0 until NumSub).map(s => col(s"code_$s")): _*)
-      .withColumn("approx_e9", approxE9)
-      .orderBy(col("approx_e9").desc, col("vec_id").asc)
-      .limit(candidates)
-      .select("vec_id", "cluster_id", "approx_e9")
-    broadcast(cand)
-      .join(vectors.select("vec_id", "embedding"), "vec_id")
-      .crossJoin(broadcast(query))
-      .withColumn("exact", dot(col("embedding"), col("qvec")))
-      .orderBy(col("exact").desc, col("vec_id").asc)
-      .limit(k)
+    val (vectors, _) = IvfIndex.probedPartitions(spark, indexPath, query, nprobe)
+    val lut = adcTable(IndexMaintenance.layoutDf(spark, s"$indexPath/codebooks"), "cvec", query)
+    servedFromCodes(vectors, "code", query, candidates, k)(
+        _.withColumn("approx_e9", codeSum(lut, "code")))
       // roundScore=false keeps full precision so SearchApi.searchQuantized
       // is bit-identical to the brute-force path at nprobe=all
       .select(col("cluster_id"), col("vec_id"),
@@ -661,8 +510,7 @@ object PqIndex {
     // per-query ADC lookup table (integerized like the serving path)
     val lut = codebooks(spark, dir).crossJoin(qs)
       .select(col("query_id"), col("s"), col("code").cast("long").as("code"),
-        cents(dot(expr(s"slice(qvec, s * $SubDim + 1, $SubDim)"), col("cvec")), 1e9)
-          .as("part_e9"))
+        partialE9(col("cvec")).as("part_e9"))
     // approximate scores over probed vectors only
     val approx = IvfIndex.assignedEmbeddings(spark, dir).select("vec_id", "cluster_id")
       .join(broadcast(crank), "cluster_id")
@@ -671,18 +519,15 @@ object PqIndex {
       .groupBy(col("query_id"), col("vec_id"), col("crn"))
       .agg(sum(col("part_e9")).as("approx_e9"))
     // per-config candidate cut, then exact rerank of candidates only
-    val topPq = approx.crossJoin(configs).filter(col("crn") <= col("nprobe"))
+    val cands = approx.crossJoin(configs).filter(col("crn") <= col("nprobe"))
       .withColumn("arn", row_number().over(
         Window.partitionBy(col("query_id"), col("nprobe"), col("candidates"))
           .orderBy(col("approx_e9").desc, col("vec_id").asc)))
       .filter(col("arn") <= maxCandidates && col("arn") <= col("candidates"))
-      .join(Tables.embeddings(spark, dir).select("vec_id", "embedding"), "vec_id")
-      .join(broadcast(qs), "query_id")
-      .withColumn("exact", dot(col("embedding"), col("qvec")))
-      .withColumn("ern", row_number().over(
-        Window.partitionBy(col("query_id"), col("nprobe"), col("candidates"))
-          .orderBy(col("exact").desc, col("vec_id").asc)))
-      .filter(col("ern") <= k)
+    val topPq = KnnSearch.rescore(cands
+        .join(Tables.embeddings(spark, dir).select("vec_id", "embedding"), "vec_id")
+        .join(broadcast(qs), "query_id"), "qvec", k,
+        within = Seq(col("query_id"), col("nprobe"), col("candidates")))
       .select(col("query_id"), col("nprobe"), col("candidates"), col("vec_id"),
         lit(1L).as("hit"))
     // exact brute-force truth, same tiebreaks

@@ -164,7 +164,7 @@ object IndexStream {
       vecs: DataFrame): DataFrame =
     PqIndex.indexRows(vecs,
       spark.read.parquet(s"$indexPath/centroids"),
-      PqIndex.codebookMetaOf(spark.read.parquet(s"$indexPath/codebooks")))
+      PqIndex.codebookMetaOf(spark.read.parquet(s"$indexPath/codebooks"), "cvec"))
 
   /** Continuously append a stream of new embeddings into the persisted
     * PQ index — the quantized store stays serveable (codes-only
@@ -187,7 +187,7 @@ object IndexStream {
       vecs: DataFrame): DataFrame =
     PqIndex.residualIndexRows(vecs,
       spark.read.parquet(s"$indexPath/centroids"),
-      PqIndex.residualCodebookMetaOf(spark.read.parquet(s"$indexPath/codebooks")))
+      PqIndex.codebookMetaOf(spark.read.parquet(s"$indexPath/codebooks"), "rcvec"))
 
   /** Continuously append a stream of new embeddings into the persisted
     * RESIDUAL index — completing streaming maintenance across all four

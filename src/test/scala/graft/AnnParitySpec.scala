@@ -6,7 +6,6 @@ import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.AnnExprs
-import graft.functions.VectorFunctions._
 import graft.operators.{IvfIndex, PqIndex}
 
 /** The native ANN expressions (NearestCentroidExpr, PqCodesExpr,
@@ -65,39 +64,25 @@ class AnnParitySpec extends AnyFunSuite {
       Tables.embeddings(spark, Sf).select(col("vec_id"), col("embedding"))
         .withColumn("approx_e9", AnnExprs.pqAdc(col("embedding"), cb, lut))
         .select("vec_id", "approx_e9")
-    } else PqIndex.adcScoredHof(spark, Sf, q).select("vec_id", "approx_e9")
+    } else PqHof.adcScoredHof(spark, Sf, q).select("vec_id", "approx_e9")
 
-  private def cbMeta(): Array[Array[Array[Double]]] = {
-    val rows = PqIndex.codebooks(spark, Sf)
-      .select(col("s"), col("code").cast("long"), col("cvec")).collect()
-    val bySub = rows.groupBy(_.getInt(0))
-    Array.tabulate(PqIndex.NumSub) { s =>
-      bySub(s).sortBy(_.getLong(1)).map(_.getSeq[Float](2).map(_.toDouble).toArray)
-    }
-  }
+  // the metadata both folds run over, from the production quantized core
+  private def cbMeta(): Array[Array[Array[Double]]] =
+    PqIndex.codebookMetaOf(PqIndex.codebooks(spark, Sf), "cvec")
 
-  private def lutMeta(): Array[Array[Long]] = {
-    val rows = PqIndex.codebooks(spark, Sf).crossJoin(broadcast(q))
-      .select(col("s"), col("code").cast("long"),
-        cents(dot(expr(s"slice(qvec, s * ${PqIndex.SubDim} + 1, ${PqIndex.SubDim})"),
-          col("cvec")), 1e9).as("e9"))
-      .collect()
-    Array.tabulate(PqIndex.NumSub) { s =>
-      val bySub = rows.filter(_.getInt(0) == s).map(r => r.getLong(1) -> r.getLong(2)).toMap
-      Array.tabulate(PqIndex.NumCodes)(c => bySub(c.toLong))
-    }
-  }
+  private def lutMeta(): Array[Array[Long]] =
+    PqIndex.adcTable(PqIndex.codebooks(spark, Sf), "cvec", q)
 
   test("pq encode: native == HOF row-for-row") {
     val n = PqIndex.encode(spark, Sf).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
-    val h = PqIndex.encodeHof(spark, Sf).collect()
+    val h = PqHof.encodeHof(spark, Sf).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
     assert(n.nonEmpty && n === h)
   }
 
   test("residual ivfpq: native == HOF on the whole corpus") {
-    val n = PqIndex.residualScoredHof(spark, Sf, q)
+    val n = PqHof.residualScoredHof(spark, Sf, q)
       .select(col("vec_id"), col("cluster_id").as("h_cl"), col("res_e9").as("h_e9"))
     val cents = IvfIndex.centroids(spark, Sf)
     val (ids, cvecs) = IvfIndex.centroidMeta(cents)
@@ -114,26 +99,11 @@ class AnnParitySpec extends AnyFunSuite {
     }
   }
 
-  private def rcbMeta(): Array[Array[Array[Double]]] = {
-    val rows = PqIndex.residualCodebooks(spark, Sf)
-      .select(col("s"), col("code").cast("long"), col("rcvec")).collect()
-    val bySub = rows.groupBy(_.getInt(0))
-    Array.tabulate(PqIndex.NumSub) { s =>
-      bySub(s).sortBy(_.getLong(1)).map(_.getSeq[Double](2).toArray)
-    }
-  }
+  private def rcbMeta(): Array[Array[Array[Double]]] =
+    PqIndex.codebookMetaOf(PqIndex.residualCodebooks(spark, Sf), "rcvec")
 
-  private def rLutMeta(): Array[Array[Long]] = {
-    val rows = PqIndex.residualCodebooks(spark, Sf).crossJoin(broadcast(q))
-      .select(col("s"), col("code").cast("long"),
-        cents(dot(expr(s"slice(qvec, s * ${PqIndex.SubDim} + 1, ${PqIndex.SubDim})"),
-          col("rcvec")), 1e9).as("e9"))
-      .collect()
-    Array.tabulate(PqIndex.NumSub) { s =>
-      val bySub = rows.filter(_.getInt(0) == s).map(r => r.getLong(1) -> r.getLong(2)).toMap
-      Array.tabulate(PqIndex.NumCodes)(c => bySub(c.toLong))
-    }
-  }
+  private def rLutMeta(): Array[Array[Long]] =
+    PqIndex.adcTable(PqIndex.residualCodebooks(spark, Sf), "rcvec", q)
 
   // ---- degenerate embeddings --------------------------------------------
 
@@ -199,15 +169,8 @@ class AnnParitySpec extends AnyFunSuite {
   test("degenerate embeddings: pq adc native == HOF (code 0 windows)") {
     val cb = cbMeta()
     val lut = lutMeta()
-    val cbLit = PqIndex.codebookLiteral(spark, Sf)
-    val lutLit = PqIndex.lutLiteral(spark, Sf, q)
-    val hofE9 = aggregate(sequence(lit(0), lit(PqIndex.NumSub - 1)), lit(0L), (acc, s) =>
-      acc + element_at(element_at(lutLit, s + 1),
-        array_min(transform(element_at(cbLit, s + 1), c =>
-          struct(dist2(slice(col("embedding"), s * PqIndex.SubDim + 1,
-            lit(PqIndex.SubDim)), c.getField("cvec")).as("d2"),
-            c.getField("code").as("code"))))
-          .getField("code").cast("int") + 1))
+    val hofE9 = PqHof.adcE9(col("embedding"), PqHof.codebookLiteral(cb, "cvec"), "cvec",
+      PqHof.lutLiteral(lut))
     val got = degenerate
       .select(col("vec_id"),
         AnnExprs.pqAdc(col("embedding"), cb, lut).as("n"),
@@ -229,33 +192,9 @@ class AnnParitySpec extends AnyFunSuite {
     val centsLit = IvfIndex.centroidLiteral(cents)
     val rcb = rcbMeta()
     val lut = rLutMeta()
-    val rcbLit = PqIndex.residualCodebookLiteral(spark, Sf)
-    val lutLit = {
-      val rows = PqIndex.residualCodebooks(spark, Sf).crossJoin(broadcast(q))
-        .select(col("s"), col("code").cast("long"),
-          cents2(dot(expr(s"slice(qvec, s * ${PqIndex.SubDim} + 1, ${PqIndex.SubDim})"),
-            col("rcvec"))).as("e9"))
-        .collect()
-      array((0 until PqIndex.NumSub).map { s =>
-        val bySub = rows.filter(_.getInt(0) == s).map(r => r.getLong(1) -> r.getLong(2)).toMap
-        array((0 until PqIndex.NumCodes).map(c => lit(bySub(c.toLong))): _*)
-      }: _*)
-    }
-    val best = IvfIndex.nearestHof(col("embedding"), centsLit)
-    val resE9 = aggregate(sequence(lit(0), lit(PqIndex.NumSub - 1)), lit(0L), (acc, s) =>
-      acc + element_at(element_at(lutLit, s + 1),
-        array_min(transform(element_at(rcbLit, s + 1), c =>
-          struct(dist2(slice(col("rvec"), s * PqIndex.SubDim + 1,
-            lit(PqIndex.SubDim)), c.getField("rcvec")).as("d2"),
-            c.getField("code").as("code"))))
-          .getField("code").cast("int") + 1))
-    val hof = degenerate
-      .withColumn("cluster_id", best.getField("cluster_id"))
-      .withColumn("cvec",
-        element_at(filter(centsLit,
-          c => c.getField("cluster_id") === col("cluster_id")), 1).getField("cvec"))
-      .withColumn("rvec", zip_with(col("embedding"), col("cvec"),
-        (a, b) => a.cast("double") - b.cast("double")))
+    val resE9 = PqHof.adcE9(col("rvec"), PqHof.codebookLiteral(rcb, "rcvec"), "rcvec",
+      PqHof.lutLiteral(lut))
+    val hof = PqHof.withResidual(degenerate, centsLit)
       .select(col("vec_id"), col("cluster_id").as("h_cl"), resE9.as("h_e9"))
     val nat = degenerate
       .withColumn("ra", AnnExprs.residualAdc(col("embedding"), ids, cvecs, rcb, lut))
@@ -267,8 +206,6 @@ class AnnParitySpec extends AnyFunSuite {
       assert(r.getLong(2) === r.getLong(4), s"res_e9: $r")
     }
   }
-
-  private def cents2(c: org.apache.spark.sql.Column) = cents(c, 1e9)
 
   // ---- vector-sum aggregator (VecAggParity) -----------------------------
 
@@ -333,15 +270,8 @@ class AnnParitySpec extends AnyFunSuite {
     val centsLit = IvfIndex.centroidLiteral(cents0)
     val cb = cbMeta()
     val lut = lutMeta()
-    val cbLit = PqIndex.codebookLiteral(spark, Sf)
-    val lutLit = PqIndex.lutLiteral(spark, Sf, q)
-    val hofE9 = aggregate(sequence(lit(0), lit(PqIndex.NumSub - 1)), lit(0L), (acc, s) =>
-      acc + element_at(element_at(lutLit, s + 1),
-        array_min(transform(element_at(cbLit, s + 1), c =>
-          struct(dist2(slice(col("embedding"), s * PqIndex.SubDim + 1,
-            lit(PqIndex.SubDim)), c.getField("cvec")).as("d2"),
-            c.getField("code").as("code"))))
-          .getField("code").cast("int") + 1))
+    val hofE9 = PqHof.adcE9(col("embedding"), PqHof.codebookLiteral(cb, "cvec"), "cvec",
+      PqHof.lutLiteral(lut))
     val got = df
       .withColumn("n", IvfIndex.nearest(col("embedding"), cents0))
       .withColumn("h", IvfIndex.nearestHof(col("embedding"), centsLit))

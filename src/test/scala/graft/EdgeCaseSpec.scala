@@ -244,4 +244,29 @@ class EdgeCaseSpec extends AnyFunSuite {
     val beta = r.get(r.fieldIndex("heaps_beta"))
     assert(beta == null || beta.asInstanceOf[Double].isNaN)
   }
+
+  test("all-zero embeddings normalize and quantize to zeros instead of dividing by zero") {
+    import graft.operators.KnnSearch
+    // the query (vec_id 0) and one corpus row are all-zero; the rest are
+    // ordinary vectors
+    val dir = java.nio.file.Files.createTempDirectory("graft-edge-zero").toString
+    val zero = Set(0L, 5L)
+    (0L until 20L).map(id =>
+        (id, Seq.tabulate(64)(i => if (zero(id)) 0.0f else ((id * 7 + i * 3) % 11 - 5) / 4.0f)))
+      .toDF("vec_id", "embedding")
+      .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+    val norms = KnnSearch.normalize(spark, dir).collect()
+      .map(r => r.getLong(0) -> (r.getDouble(1), r.getDouble(2), r.getDouble(3))).toMap
+    assert(norms.size === 20)
+    zero.foreach(id => assert(norms(id) === ((0.0, 0.0, 0.0)), s"vec $id"))
+    assert(norms(1L)._1 > 0.0)
+    val quant = KnnSearch.quantize(spark, dir).collect()
+      .map(r => r.getLong(0) -> (r.getDouble(1), r.getLong(2), r.getLong(3))).toMap
+    assert(quant.size === 20)
+    zero.foreach(id => assert(quant(id) === ((0.0, 0L, 0L)), s"vec $id"))
+    // a zero query scores every candidate 0: the top k is the lowest ids
+    val hits = KnnSearch.quantizedSearch(spark, dir, k = 4).collect()
+    assert(hits.map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq ===
+      (0L until 4L).map(id => (id, 0L, 0.0)))
+  }
 }
