@@ -38,7 +38,7 @@ import org.apache.spark.sql.types._
   *
   * Semantics twins (what the DuckDB oracle mirrors, and what the parity
   * specs pin bitwise — including the degenerate inputs):
-  *  - [[NearestCentroidExpr]] ≡ IvfIndex.nearestHof: `array_min` over
+  *  - [[NearestCentroidExpr]] ≡ `graft.PqHof.nearestHof`: `array_min` over
   *    struct(dist2(emb, cvec), cluster_id). A malformed embedding
   *    (NULL, wrong length, or a null element) makes every d² NULL, and
   *    struct ordering sorts NULL d² first → (NULL, min cluster_id).

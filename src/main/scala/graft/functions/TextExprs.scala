@@ -284,7 +284,7 @@ object TextExprs {
     * struct(dup_cnt, tot_cnt, dup_mass, tot_mass), where an element
     * counts as duplicated iff its multiplicity ≥ 2 and mass weights by
     * character length. Semantics twin: the array_sort + `aggregate`
-    * HOF folds (TextAnalysis.dupCountFracHof/dupCharFracHof, which the
+    * HOF folds (graft.TextHof.dupCountFracHof/dupCharFracHof, which the
     * DuckDB oracle mirrors); this native replaces TWO sorted HOF folds
     * per row (count-frac + char-frac each re-sorted the array) with
     * one sort + one scan in plain JVM code — the text-quality scan is
@@ -360,7 +360,7 @@ object TextExprs {
     * curation pass. The double arithmetic (r6 fractions, keep
     * thresholds) deliberately stays OUTSIDE in column expressions, so
     * the consumer's values are bit-identical to the HOF twin
-    * (TextAnalysis.gopherStatsHof, which the DuckDB oracle mirrors).
+    * (graft.TextHof.gopherStatsHof, which the DuckDB oracle mirrors).
     */
   case class GopherRawExpr(child: Expression) extends UnaryExpression {
     override def dataType: DataType = StructType(Seq(
@@ -385,7 +385,7 @@ object TextExprs {
   /** Raw token-entropy statistics in ONE pass:
     * struct(n_uniq, ent_e6), where ent_e6 is Σ over distinct tokens of
     * floor((-p·ln p)·1e6 + 0.5) with p = count/n — term-for-term the
-    * integerized fold of the HOF twin (TextAnalysis.entropyScoreHof /
+    * integerized fold of the HOF twin (graft.TextHof.entropyScoreHof /
     * the DuckDB oracle), so the sum is identical regardless of
     * iteration order. Replaces an array_sort + interpreted run-length
     * `aggregate` fold per row with one hash count.
@@ -413,7 +413,7 @@ object TextExprs {
     * per-doc DISTINCT grams and (b) replacing the interpreted
     * `transform`+`concat_ws` gram construction with native JVM code —
     * the two dominant costs of the bigram-LM / PMI family. Semantics
-    * twin: `gramCountsHof` (array_distinct + per-gram filter count);
+    * twin: `graft.TextHof.gramCountsHof` (array_distinct + per-gram filter count);
     * GramCountsParity in PropertyParitySpec asserts exact equality.
     */
   case class GramCountsExpr(child: Expression, k: Int) extends UnaryExpression {
@@ -445,16 +445,6 @@ object TextExprs {
 
   def gramCounts(tokens: Column, k: Int): Column =
     ColumnBridge.column(GramCountsExpr(ColumnBridge.expression(tokens), k))
-
-  /** HOF twin of [[gramCounts]] — the semantic definition (spec-only;
-    * O(G²) interpreted, never on the hot path).
-    */
-  def gramCountsHof(tokens: Column, k: Int): Column = {
-    import org.apache.spark.sql.functions._
-    val grams = TextFunctions.gramsAll(tokens, k)
-    transform(array_distinct(grams), g =>
-      struct(g.as("g"), size(filter(grams, x => x === g)).cast("long").as("c")))
-  }
 
   def gopherRaw(tokens: Column): Column =
     ColumnBridge.column(GopherRawExpr(ColumnBridge.expression(tokens)))

@@ -24,27 +24,16 @@ object VectorFunctions {
     aggregate(arr, lit(0.0), (acc, x) => acc + x)
 
   /** Dot product of two float/double vectors, accumulated in double.
-    * Backed by the codegen'd [[VectorExprs.DotProductExpr]]; `dotHof`
+    * Backed by the codegen'd [[VectorExprs.DotProductExpr]]; `graft.VectorHof.dotHof`
     * is the HOF twin used to prove bitwise equivalence.
     */
   def dot(a: Column, b: Column): Column = VectorExprs.dot(a, b)
-
-  /** HOF formulation of `dot` (interpreted; kept as the numeric spec). */
-  def dotHof(a: Column, b: Column): Column =
-    seqSum(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")))
 
   /** L2 norm. */
   def norm(a: Column): Column = sqrt(dot(a, a))
 
   /** Squared euclidean distance (k-means / IVF assignment metric). */
   def dist2(a: Column, b: Column): Column = VectorExprs.dist2(a, b)
-
-  /** HOF formulation of `dist2` (interpreted; the numeric spec). */
-  def dist2Hof(a: Column, b: Column): Column =
-    seqSum(zip_with(a, b, (x, y) => {
-      val d = x.cast("double") - y.cast("double")
-      d * d
-    }))
 
   /** Cosine similarity. */
   def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))

@@ -87,7 +87,7 @@ object Dedup {
   /** The signature projection for an arbitrary (doc_id, text) frame —
     * ONE code path shared by the batch chain and the incremental band
     * index ([[DedupIndex]]), so appended signatures are byte-identical
-    * to batch-built ones (the IndexStream `indexRows` pattern). Pure
+    * to batch-built ones ([[Layout.Band]]). Pure
     * map-side column math: runs unchanged on streaming frames.
     */
   private[graft] def minhashSignaturesOf(docs: DataFrame): DataFrame =
@@ -97,16 +97,6 @@ object Dedup {
         NumPerms).as("mh"))
       .select(col("doc_id") +: (0 until NumPerms).map(j =>
         element_at(col("mh"), j + 1).as(s"m$j")): _*)
-
-  /** HOF twin of the native minhash (the numeric spec the oracle
-    * mirrors; MinHashSpec asserts equality).
-    */
-  def minhashSignaturesHof(spark: SparkSession, dir: String): DataFrame =
-    Tables.fanOut(Tables.documents(spark, dir))
-      .select(col("doc_id"), shingles(tokens(col("text"))).as("sh"))
-      .select(col("doc_id") +: (0 until NumPerms).map(j =>
-        array_min(transform(col("sh"), s =>
-          md5(concat(lit(j.toString), lit(":"), s)))).as(s"m$j")): _*)
 
   /** (doc_id, band, sig): LSH band signatures (2 minhashes per band). */
   def bandSignatures(spark: SparkSession, dir: String): DataFrame =
@@ -122,8 +112,8 @@ object Dedup {
   }
 
   /** Band signatures of an arbitrary (doc_id, text) frame — the
-    * incremental/streaming twin of [[bandSignatures]] (same projection,
-    * so [[DedupIndex]] appends are byte-identical to batch builds).
+    * incremental/streaming twin of [[bandSignatures]] (same projection)
+    * and the row projection of [[Layout.Band]].
     */
   private[graft] def bandSignaturesOf(docs: DataFrame): DataFrame =
     bandsFromSigs(minhashSignaturesOf(docs))

@@ -25,7 +25,7 @@ import org.apache.spark.sql.functions._
   * contract [[IndexMaintenance]] needs, so compaction, the
   * `_graft_compacted` marker, epoch rotation and the crash-reconcile
   * path apply to this layout unchanged, and
-  * [[graft.streaming.IndexStream.appendToBandIndex]] gives exactly-once
+  * [[graft.streaming.IndexStream.append]] with [[Layout.Band]] gives exactly-once
   * streaming growth (reference store_assets.py:40-77 is the in-memory
   * rebuild being replaced).
   *
@@ -37,8 +37,7 @@ object DedupIndex {
 
   /** Build/rebuild the band index from a (doc_id, text) frame. */
   def writeBandIndex(docs: DataFrame, indexPath: String): Unit =
-    Dedup.bandSignaturesOf(docs)
-      .write.mode("overwrite").partitionBy("band").parquet(s"$indexPath/vectors")
+    Layout.Band.writeVectors(indexPath, docs)
 
   /** Convenience: build from a testdata corpus dir. */
   def writeBandIndex(spark: SparkSession, dir: String, indexPath: String): Unit =

@@ -26,9 +26,10 @@ import org.apache.spark.sql.functions._
   * PartitionFilters pruning).
   *
   * `compactIndex`, `rebalanceIndex` and the `maintain` decider run one
-  * fold path: [[openFold]] reconciles a swap a crashed fold left
-  * half-done ([[reconcileSwap]]: `vectors` or `centroids` missing is
-  * rolled forward from its staged dir or back from its aside copy),
+  * fold path: [[openFold]] reconciles a swap a crashed fold or lexical
+  * rebuild left half-done ([[reconcileSwap]]: `vectors`, `centroids`,
+  * `stopterms` or `stats` missing is rolled forward from its staged
+  * dir or back from its aside copy),
   * reads the marker once, deletes folded leftovers and resolves the
   * serving epochs; [[installFold]] stages the rows, writes the marker
   * into the staged dir, swaps ([[atomicSwap]]) and deletes the folded
@@ -44,7 +45,7 @@ import org.apache.spark.sql.functions._
   * batch reads — but a stream resumed into the compacted base dir
   * would start a fresh sink log that shadows every compacted file.
   * Compaction therefore leaves a `_graft_compacted` marker (holding
-  * the next epoch number) that the IndexStream append helpers check:
+  * the next epoch number) that [[graft.streaming.IndexStream.append]] checks:
   * a resume into the base dir FAILS FAST, and the caller resumes into
   * `nextEpochDir(...)` — a fresh sibling dir written log-free via
   * foreachBatch as `batch=<id>` overwrite subdirs (idempotent under
@@ -467,13 +468,18 @@ object IndexMaintenance {
     base
   }
 
-  /** Staged dir → destination of every swap a maintenance fold makes:
-    * the vector layout (compaction and rebalance stage it alike) and
-    * rebalance's centroids table. `vectors_staging` belongs to
-    * [[LexIndex]]'s build, not to a fold.
+  /** Destination → staged dirs of every aside-first swap an index
+    * makes: a fold's (compaction and rebalance stage the vector layout
+    * alike; rebalance also swaps the centroids table) and
+    * [[LexIndex]]'s rebuild and stats fold (`*_staging`). A `vectors`
+    * dir has two: whichever staged dir is present rolls forward, the
+    * fold's first; with neither, the aside copy rolls back.
     */
-  private val FoldSwaps =
-    Seq("vectors_compacting" -> "vectors", "centroids_rebalancing" -> "centroids")
+  private val Swaps = Seq(
+    "vectors" -> Seq("vectors_compacting", "vectors_staging"),
+    "centroids" -> Seq("centroids_rebalancing"),
+    "stopterms" -> Seq("stopterms_staging"),
+    "stats" -> Seq("stats_staging"))
 
   /** One maintenance fold over an index, as [[openFold]] found it: the
     * `_graft_compacted` marker (read once, after the reconcile), the
@@ -486,18 +492,20 @@ object IndexMaintenance {
     def vecDir: String = s"$indexPath/vectors"
   }
 
-  /** Open a fold: first reconcile every swap a crashed fold left
-    * half-done ([[reconcileSwap]] over [[FoldSwaps]] — without it a
-    * crash between the aside and install renames leaves `vectors` or
-    * `centroids` missing, and every later pass and serving call
-    * throws), then read the marker, delete the epoch dirs it declares
-    * folded (a fold died between its swap and those deletes; their
-    * rows already live in the base), and resolve the serving epochs.
+  /** Open a fold: first reconcile every swap a crashed fold or lexical
+    * rebuild left half-done ([[reconcileSwap]] over [[Swaps]] — without
+    * it a crash between the aside and install renames leaves a table
+    * missing, and every later pass and serving call throws), then read
+    * the marker, delete the epoch dirs it declares folded (a fold died
+    * between its swap and those deletes; their rows already live in the
+    * base), and resolve the serving epochs.
     */
   private def openFold(spark: SparkSession, indexPath: String): Fold = {
     val fs = fsOf(spark, indexPath)
-    FoldSwaps.foreach { case (staged, dst) =>
-      if (reconcileSwap(fs, new Path(s"$indexPath/$staged"), new Path(s"$indexPath/$dst")))
+    Swaps.foreach { case (dst, staged) =>
+      val from = staged.map(s => new Path(s"$indexPath/$s"))
+      if (reconcileSwap(fs, from.find(fs.exists).getOrElse(from.head),
+          new Path(s"$indexPath/$dst")))
         spark.catalog.refreshByPath(s"$indexPath/$dst")
     }
     val marker = readMarker(fs, indexPath)
@@ -564,9 +572,9 @@ object IndexMaintenance {
     (manifest, written.map(_.getLen).sum)
   }
 
-  /** Compact `indexPath/vectors` (+ any epoch dirs; IVF/PQ layouts:
-    * `cluster_id`; LSH: `bucket` — auto-detected): one fold
-    * ([[openFold]] → [[installFold]]) of base + epochs into
+  /** Compact `indexPath/vectors` (+ any epoch dirs; the partition
+    * column is the first of [[Layout.partCols]] in the rows' schema):
+    * one fold ([[openFold]] → [[installFold]]) of base + epochs into
     * ⌈rows/rowsPerFile⌉ files per partition value. Returns the parquet
     * file count after.
     */
@@ -577,10 +585,9 @@ object IndexMaintenance {
   private def compact(spark: SparkSession, f: Fold, rowsPerFile: Long): Long = {
     val (base, epochs) = layers(spark, f.indexPath, f.epochs)
     val df = epochs.foldLeft(base)(_ unionByName _)
-    val partCol = df.schema.fieldNames
-      .find(n => n == "cluster_id" || n == "bucket" || n == "band")
-      .getOrElse(throw new IllegalArgumentException(
-        s"${f.vecDir} is not a recognized index layout (no cluster_id/bucket/band column)"))
+    val partCol = df.schema.fieldNames.find(Layout.partCols.contains)
+      .getOrElse(throw new IllegalArgumentException(s"${f.vecDir} is not a " +
+        s"recognized index layout (no ${Layout.partCols.mkString("/")} column)"))
     installFold(spark, f, df, partCol, rowsPerFile)
     parquetFileCount(spark, f.vecDir)
   }
@@ -772,7 +779,7 @@ object IndexMaintenance {
         val seedDf = spark.createDataFrame(seedRows.toIndexedSeq)
           .toDF("cluster_id", "part_ids", "part_vs")
         // nearest-of-seeds, map-side: fold the (id, vec) pairs with the
-        // same (d2, id) struct-min argmin nearestHof uses — ties go to
+        // same (d2, id) struct-min argmin IvfIndex.nearest runs — ties go to
         // the smaller part id
         splitSrc
           .join(broadcast(seedDf), Seq("cluster_id"))

@@ -104,23 +104,6 @@ object IvfIndex {
     array(entries.toIndexedSeq: _*)
   }
 
-  /** Per-row nearest centroid: struct(d2, cluster_id) minimized over the
-    * literal centroid array. Struct ordering is field-by-field, so the
-    * minimum is (smallest d², then smallest cluster_id) — exactly the
-    * `row_number() OVER (ORDER BY d2, cluster_id) = 1` the oracle
-    * computes, with bitwise-identical d² folds. No join, no window, no
-    * shuffle: the corpus never moves.
-    *
-    * This HOF formulation is the numeric spec; [[nearest]] runs the
-    * same argmin as a native one-loop expression
-    * (AnnExprs.NearestCentroidExpr — bitwise parity pinned by
-    * AnnParitySpec, including the degenerate-input corners).
-    */
-  def nearestHof(embedding: Column, centsLit: Column): Column =
-    array_min(transform(centsLit, c =>
-      struct(dist2(embedding, c.getField("cvec")).as("d2"),
-        c.getField("cluster_id").as("cluster_id"))))
-
   /** Collected centroid metadata for the native argmin: parallel
     * (ids, vectors) arrays, floats widened to double (exact — the HOF
     * fold casts per element, so the math is unchanged).
@@ -330,12 +313,13 @@ object IvfIndex {
     (cents, objectives.toSeq)
   }
 
-  /** Persist the index: vectors co-located with their assignment,
-    * `partitionBy(cluster_id)` — at 100 TB this is the layout that
-    * turns ANN search into a partition-pruned scan of nprobe clusters
-    * instead of a full corpus scan. Centroids are stored alongside
-    * (tiny — they are the index metadata a query planner keeps in RAM,
-    * like Qdrant's coarse quantizer).
+  /** Persist the index: centroids first (tiny — they are the index
+    * metadata a query planner keeps in RAM, like Qdrant's coarse
+    * quantizer), then the vectors co-located with their assignment to
+    * the persisted centroids ([[Layout.Ivf]]), partitioned by
+    * `cluster_id` — at 100 TB this is the layout that turns ANN search
+    * into a partition-pruned scan of nprobe clusters instead of a full
+    * corpus scan.
     */
   def writeIndex(spark: SparkSession, dir: String, indexPath: String,
       refineIters: Int = 0): Unit = {
@@ -345,12 +329,8 @@ object IvfIndex {
     val cents =
       if (refineIters > 0) kmeans(spark, dir, refineIters)._1
       else centroids(spark, dir)
-    val best = nearest(col("embedding"), cents)
-    Tables.embeddings(spark, dir).select("vec_id", "embedding")
-      .withColumn("cluster_id", best.getField("cluster_id"))
-      .write.mode("overwrite").partitionBy("cluster_id")
-      .parquet(s"$indexPath/vectors")
     cents.write.mode("overwrite").parquet(s"$indexPath/centroids")
+    Layout.Ivf.writeVectors(indexPath, Tables.embeddings(spark, dir))
   }
 
   /** Fingerprint-cached IVF index for a testdata corpus dir (r12 — the

@@ -20,7 +20,7 @@ import graft.functions.TextFunctions.tokens
   * the whole [[IndexMaintenance]] contract, so compaction, the
   * `_graft_compacted` marker, epoch rotation and the crash-reconcile
   * path apply unchanged, and
-  * [[graft.streaming.IndexStream.appendToLexIndex]] gives exactly-once
+  * [[graft.streaming.IndexStream.append]] with [[Layout.Lex]] gives exactly-once
   * streaming growth. Corpus-level stats (n_docs, Σdl) live as a
   * one-row metadata table under `indexPath/stats`, updated
   * incrementally per ingest batch ([[addToStats]]) the way centroids
@@ -119,7 +119,8 @@ object LexIndex {
     // never leaves a missing/partial table next to replaced postings —
     // the worst window is a complete-old next to a complete-new.
     val vecStaged = s"$indexPath/vectors_staging"
-    postingsOf(docs).write.mode("overwrite").partitionBy("bucket").parquet(vecStaged)
+    // unfiltered: a rebuild must not filter by the stop set it replaces
+    Layout.Lex.write(postingsOf(docs), vecStaged)
     // corpus stats DERIVE from the staged postings — one tokens() pass
     // total, not two: per-doc dl off its posting rows; docs that
     // tokenize to zero terms have no postings AND dl = 0, so they
@@ -294,7 +295,7 @@ object LexIndex {
     * exceeds the tier at the CURRENT corpus size — conservative
     * (rebuild-when-possible), never late. Already-tiered terms are
     * filtered from streamed appends map-side
-    * ([[graft.streaming.IndexStream.appendToLexIndex]]), so only a
+    * ([[Layout.Lex]]), so only a
     * NEW term can cross between rebuilds — exactly what this bounds.
     * Pure filesystem reads (the hidden text metadata riding the stats
     * dir): no Spark job, the maintain() decider contract.

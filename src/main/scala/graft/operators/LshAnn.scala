@@ -41,12 +41,14 @@ object LshAnn {
       when(dot(vec, planeLit(p)) > 0, lit(1 << p)).otherwise(lit(0)))
       .reduce(_ + _).cast("long")
 
-  /** Corpus with bucket assignment (the index build — at scale this is
-    * written `partitionBy("bucket")` like IvfIndex.writeIndex).
-    */
-  def bucketed(spark: SparkSession, dir: String): DataFrame =
-    Tables.fanOut(Tables.embeddings(spark, dir).select("vec_id", "embedding"))
+  /** (vec_id, embedding, bucket) rows: the projection of [[Layout.Lsh]]. */
+  private[graft] def bucketedOf(vecs: DataFrame): DataFrame =
+    vecs.select(col("vec_id"), col("embedding"))
       .withColumn("bucket", bucketOf(col("embedding")))
+
+  /** Corpus with bucket assignment (the rows the index build writes). */
+  def bucketed(spark: SparkSession, dir: String): DataFrame =
+    bucketedOf(Tables.fanOut(Tables.embeddings(spark, dir).select("vec_id", "embedding")))
 
   /** Persist the LSH index: vectors partitioned by bucket on disk — at
     * 100 TB a query reads exactly one partition directory (multi-probe:
@@ -54,9 +56,8 @@ object LshAnn {
     * IvfIndex.writeIndex.
     */
   def writeIndex(spark: SparkSession, dir: String, indexPath: String): Unit =
-    bucketed(spark, dir)
-      .write.mode("overwrite").partitionBy("bucket")
-      .parquet(s"$indexPath/vectors")
+    Layout.Lsh.writeVectors(indexPath,
+      Tables.fanOut(Tables.embeddings(spark, dir).select("vec_id", "embedding")))
 
   /** Search the persisted index: bucket the query (driver-side column
     * math on one row), scan only that bucket's partition — the

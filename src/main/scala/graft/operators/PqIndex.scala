@@ -113,8 +113,7 @@ object PqIndex {
 
   /** The persisted-layout projection — (vec_id, embedding, cluster_id,
     * code_0..code_{NumSub-1}) — for a (vec_id, embedding) frame against
-    * explicit index metadata; shared by the batch build and the
-    * streaming append so both write byte-identical rows.
+    * explicit index metadata: the row projection of [[Layout.Pq]].
     */
   private[graft] def indexRows(vecs: DataFrame, cents: DataFrame,
       cb: Array[Array[Array[Double]]]): DataFrame = {
@@ -229,9 +228,7 @@ object PqIndex {
       cents: DataFrame): DataFrame = {
     val centsLit = IvfIndex.centroidLiteral(cents)
     subspaces(codebookSamples(spark, dir)
-      // NumCodes sample rows — the HOF argmin is fine here and keeps
-      // this metadata derivation in the oracle-mirrored formulation
-      .withColumn("best", IvfIndex.nearestHof(col("embedding"), centsLit))
+      .withColumn("best", IvfIndex.nearest(col("embedding"), cents))
       .withColumn("cvec",
         element_at(filter(centsLit,
           c => c.getField("cluster_id") === col("best.cluster_id")), 1).getField("cvec"))
@@ -288,9 +285,8 @@ object PqIndex {
 
   /** The persisted residual layout's row projection — (vec_id,
     * embedding, cluster_id, rcode_0..) — for a (vec_id, embedding)
-    * frame against explicit index metadata; shared by the batch build
-    * and the streaming append so both write byte-identical rows
-    * (the PQ `indexRows` pattern).
+    * frame against explicit index metadata: the row projection of
+    * [[Layout.Residual]].
     */
   private[graft] def residualIndexRows(vecs: DataFrame, cents: DataFrame,
       rcb: Array[Array[Array[Double]]]): DataFrame = {
@@ -308,26 +304,20 @@ object PqIndex {
     * of [[searchIvfPqResidual]] actually serves from: one row per
     * vector with its IVF cluster as the partition column, its NumSub
     * RESIDUAL codes as flat int columns (`rcode_0..`), the embedding
-    * alongside for rerank fetch; centroids + residual codebooks stored
-    * as metadata. Encoding (assignment + per-window residual argmin) is
+    * alongside for rerank fetch. The centroids and the residual
+    * codebooks (derived from the persisted centroids) are written
+    * first, and the rows are [[Layout.Residual]] against them, so each
+    * is computed once. Encoding (assignment + per-window residual argmin) is
     * the same shared native loops the fused in-memory path runs
     * (AnnExprs.residualCodesRow ≡ residualRow's codes), so serving from
     * the index reproduces the in-memory results exactly
     * (PqResidualIndexedSpec).
     */
   def writeResidualIndex(spark: SparkSession, dir: String, indexPath: String): Unit = {
-    // materialize the centroid pick once: three consumers (row
-    // projection metadata, the centroids write, the codebook
-    // derivation's literal) would otherwise each re-run the md5 top-k
-    // corpus scan
-    val cents = graft.Checkpointing.cut(IvfIndex.centroids(spark, dir))
-    residualIndexRows(Tables.embeddings(spark, dir).select("vec_id", "embedding"),
-        cents, codebookMetaOf(residualCodebooksFrom(spark, dir, cents), "rcvec"))
-      .write.mode("overwrite").partitionBy("cluster_id")
-      .parquet(s"$indexPath/vectors")
-    cents.write.mode("overwrite").parquet(s"$indexPath/centroids")
-    residualCodebooksFrom(spark, dir, cents).write.mode("overwrite")
-      .parquet(s"$indexPath/codebooks")
+    IvfIndex.centroids(spark, dir).write.mode("overwrite").parquet(s"$indexPath/centroids")
+    residualCodebooksFrom(spark, dir, spark.read.parquet(s"$indexPath/centroids"))
+      .write.mode("overwrite").parquet(s"$indexPath/codebooks")
+    Layout.Residual.writeVectors(indexPath, Tables.embeddings(spark, dir))
   }
 
   /** Search the persisted residual index: probe list and per-cluster
@@ -418,18 +408,16 @@ object PqIndex {
     * candidate generation — column pruning drops the embedding, so
     * stage one reads NumSub smallints per vector instead of dim floats
     * (the 16–64× I/O cut that makes PQ an index rather than a codec) —
-    * and (c) fetches full vectors for `candidates` rows only. Codebooks
-    * and centroids are stored alongside (index metadata, read once per
-    * query). PqIndexedSpec proves result parity with the in-memory
+    * and (c) fetches full vectors for `candidates` rows only. Centroids
+    * and codebooks (index metadata, read once per query) are written
+    * first, and the rows are [[Layout.Pq]] against them, so each is
+    * computed once. PqIndexedSpec proves result parity with the in-memory
     * fused paths and pins both prunings in the plan.
     */
   def writeIndex(spark: SparkSession, dir: String, indexPath: String): Unit = {
-    indexRows(Tables.embeddings(spark, dir).select("vec_id", "embedding"),
-        IvfIndex.centroids(spark, dir), codebookMeta(spark, dir))
-      .write.mode("overwrite").partitionBy("cluster_id")
-      .parquet(s"$indexPath/vectors")
-    codebooks(spark, dir).write.mode("overwrite").parquet(s"$indexPath/codebooks")
     IvfIndex.centroids(spark, dir).write.mode("overwrite").parquet(s"$indexPath/centroids")
+    codebooks(spark, dir).write.mode("overwrite").parquet(s"$indexPath/codebooks")
+    Layout.Pq.writeVectors(indexPath, Tables.embeddings(spark, dir))
   }
 
   /** Search the persisted index: rank the stored centroids against the

@@ -376,13 +376,12 @@ object TextAnalysis {
     * (bucket, lr_e6) shape.
     *
     * `docsPath` is any documents parquet (a corpus dir or a testdata
-    * `documents.parquet`). Build goes to a unique staging dir with the
-    * `_complete` marker inside, then renames atomically — two racing
-    * JVMs can never interleave files; the loser serves the winner's.
+    * `documents.parquet`). Installed once per fingerprint by
+    * [[IndexMaintenance.cachedLayout]] — two racing JVMs can never
+    * interleave files; the loser serves the winner's.
     */
   def dsirLutArtifact(spark: SparkSession, docsPath: String,
       targetLang: String = "en", bucketChars: Int = 2): String = synchronized {
-    import org.apache.hadoop.fs.Path
     val sig = IndexMaintenance.filesSig(spark, docsPath)
     // the tokenizer/LUT-math identity rides in the fingerprint (r11,
     // ADVICE): nBuckets is derived from bucketChars and the Laplace
@@ -390,26 +389,10 @@ object TextAnalysis {
     // token (and thereby invalidate cached artifacts) to stay honest
     val mathId = s"tok=hexbucket:smooth=laplace1:scale=e6:" +
       s"nb=${math.pow(16, bucketChars).toInt}"
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"dsirlut:v1:$targetLang:$bucketChars:$mathId:$sig".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
-    val base = s"${sys.props("java.io.tmpdir")}/graft_dsirlut_$key"
-    val fs = new Path(base).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val marker = new Path(s"$base/_complete")
-    if (!fs.exists(marker)) {
-      val staging = s"${base}_staging_${java.util.UUID.randomUUID().toString.take(8)}"
+    IndexMaintenance.cachedLayout(spark, "dsirlut",
+      s"dsirlut:v1:$targetLang:$bucketChars:$mathId:$sig")(staging =>
       dsirLutOf(spark.read.parquet(docsPath), targetLang, bucketChars)
-        .write.mode("overwrite").parquet(s"$staging/lut")
-      fs.create(new Path(s"$staging/_complete"), true).close()
-      if (fs.exists(new Path(base)) && !fs.exists(marker))
-        fs.delete(new Path(base), true)
-      if (!fs.rename(new Path(staging), new Path(base))) {
-        if (!fs.exists(marker))
-          throw new java.io.IOException(s"could not install $base and no complete LUT present")
-        fs.delete(new Path(staging), true)
-      }
-    }
-    base
+        .write.mode("overwrite").parquet(s"$staging/lut"))
   }
 
   /** LUT rows of a persisted artifact, in the (bucket, lr_e6) shape
@@ -518,7 +501,7 @@ object TextAnalysis {
     * traversals (gramsAll×2, the sorted top-bigram fold,
     * array_distinct×2, the length fold). Only the raw integer counts
     * are native — every fraction and the keep decision are the same
-    * column expressions as [[gopherStatsHof]] (which the DuckDB oracle
+    * column expressions as `graft.TextHof.gopherStatsHof` (which the DuckDB oracle
     * mirrors), so values are bit-identical; GopherParitySpec asserts it.
     */
   def gopherStats(text: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
@@ -532,43 +515,6 @@ object TextAnalysis {
     val dup3Frac = when(nG3 > 0, r6(s.getField("dup3_cnt") / (lit(1.0) * nG3)))
       .otherwise(lit(0.0))
     val meanWlen = r6(s.getField("tok_mass") / (lit(1.0) * nToks))
-    val keep = (top2Frac <= 0.08 && uniqFrac >= 0.42
-      && meanWlen >= 3.0 && meanWlen <= 10.0).cast("long")
-    struct(nToks.as("n_toks"), uniqFrac.as("uniq_frac"), top2Frac.as("top2_frac"),
-      dup3Frac.as("dup3_frac"), meanWlen.as("mean_wlen"), keep.as("keep"))
-  }
-
-  /** HOF twin of [[gopherStats]] — the semantic definition the oracle
-    * mirrors (grams + sorted run-length fold); spec-only.
-    */
-  private[graft] def gopherStatsHof(text: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    import graft.functions.TextFunctions.gramsAll
-    val toks = tokens(text)
-    val g2 = gramsAll(toks, 2)
-    val g3 = gramsAll(toks, 3)
-    val nToks = size(toks).cast("long")
-    val nG2 = size(g2).cast("long")
-    val nG3 = size(g3).cast("long")
-    // max bigram multiplicity = longest equal run in the sorted array
-    // (same value as the count-equal nested scan, O(G log G) not O(G²);
-    // the oracle keeps the quadratic formulation — values identical)
-    val top2Cnt = when(size(g2) > 0,
-      aggregate(array_sort(g2),
-        struct(lit("").as("prev"), lit(0L).as("run"), lit(0L).as("best")),
-        (acc, x) => {
-          val run = when(x === acc.getField("prev"), acc.getField("run") + lit(1L))
-            .otherwise(lit(1L))
-          struct(x.as("prev"), run.as("run"),
-            greatest(acc.getField("best"), run).as("best"))
-        },
-        acc => acc.getField("best")))
-      .otherwise(lit(0L)).cast("long")
-    val uniqFrac = r6(size(array_distinct(toks)).cast("long") / (lit(1.0) * nToks))
-    val top2Frac = when(nG2 > 0, r6(top2Cnt / (lit(1.0) * nG2))).otherwise(lit(0.0))
-    val dup3Frac = when(nG3 > 0,
-      r6((nG3 - size(array_distinct(g3)).cast("long")) / (lit(1.0) * nG3)))
-      .otherwise(lit(0.0))
-    val meanWlen = r6(sumTokenLengths(toks) / (lit(1.0) * nToks))
     val keep = (top2Frac <= 0.08 && uniqFrac >= 0.42
       && meanWlen >= 3.0 && meanWlen <= 10.0).cast("long")
     struct(nToks.as("n_toks"), uniqFrac.as("uniq_frac"), top2Frac.as("top2_frac"),
@@ -597,7 +543,7 @@ object TextAnalysis {
     * Native single-pass form (TextExprs.EntropyRawExpr): one hash
     * count per row replaces the sort + interpreted run-length fold;
     * the per-term integerization is identical, so the sum matches the
-    * HOF twin [[entropyScoreHof]] exactly (GopherParitySpec).
+    * HOF twin `graft.TextHof.entropyScoreHof` exactly (GopherParitySpec).
     */
   def entropyScore(spark: SparkSession, dir: String): DataFrame = {
     val toks = tokens(col("text"))
@@ -607,50 +553,6 @@ object TextAnalysis {
         size(toks).cast("long").as("n_toks"),
         s.getField("n_uniq").as("n_uniq"),
         s.getField("ent_e6").as("ent_e6"))
-      .withColumn("entropy", r6(col("ent_e6") / lit(1e6)))
-      .withColumn("norm_entropy",
-        when(col("n_uniq") > 1, r6(col("ent_e6") / (lit(1e6) * log(col("n_uniq")))))
-          .otherwise(lit(0.0)))
-      .select("doc_id", "n_toks", "n_uniq", "entropy", "norm_entropy")
-  }
-
-  /** HOF twin of [[entropyScore]] — the sorted run-length fold the
-    * oracle mirrors; spec-only.
-    */
-  /** The sorted run-length entropy fold as a column (spec/measurement
-    * twin of TextExprs.entropyRaw's ent_e6 field).
-    */
-  private[graft] def entropyE6Hof(toks: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    import graft.functions.VectorFunctions.cents
-    val n = size(toks)
-    // cents(-p ln p) for a token occurring `run` times — identical
-    // per-distinct-token terms to the oracle's formulation; the sum is
-    // order-independent because each term is integerized first
-    def termOf(run: org.apache.spark.sql.Column) = {
-      val p = run / (lit(1.0) * n)
-      cents(-p * log(p), 1e6)
-    }
-    aggregate(array_sort(toks),
-      struct(lit("").as("prev"), lit(0L).as("run"), lit(0L).as("acc")),
-      (acc, x) => {
-        val closes = acc.getField("run") > 0 && (x =!= acc.getField("prev"))
-        struct(x.as("prev"),
-          when(x === acc.getField("prev"), acc.getField("run") + lit(1L))
-            .otherwise(lit(1L)).as("run"),
-          (acc.getField("acc") + when(closes, termOf(acc.getField("run")))
-            .otherwise(lit(0L))).as("acc"))
-      },
-      acc => acc.getField("acc") +
-        when(acc.getField("run") > 0, termOf(acc.getField("run"))).otherwise(lit(0L)))
-  }
-
-  private[graft] def entropyScoreHof(spark: SparkSession, dir: String): DataFrame = {
-    val toks = tokens(col("text"))
-    Tables.documents(spark, dir)
-      .select(col("doc_id"),
-        size(toks).cast("long").as("n_toks"),
-        size(array_distinct(toks)).cast("long").as("n_uniq"),
-        entropyE6Hof(toks).as("ent_e6"))
       .withColumn("entropy", r6(col("ent_e6") / lit(1e6)))
       .withColumn("norm_entropy",
         when(col("n_uniq") > 1, r6(col("ent_e6") / (lit(1e6) * log(col("n_uniq")))))
@@ -801,29 +703,6 @@ object TextAnalysis {
       .otherwise(lit(0.0))
   }
 
-  private[graft] def dupCharFracHof(grams: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    val runLen = (run: org.apache.spark.sql.Column, prev: org.apache.spark.sql.Column) =>
-      run * length(prev).cast("long")
-    val folded = aggregate(array_sort(grams),
-      struct(lit("").as("prev"), lit(0L).as("run"), lit(0L).as("dup"), lit(0L).as("tot")),
-      (acc, x) => {
-        val same = x === acc.getField("prev")
-        val closes = !same && acc.getField("run") >= 2L
-        struct(x.as("prev"),
-          when(same, acc.getField("run") + 1L).otherwise(lit(1L)).as("run"),
-          (acc.getField("dup") + when(closes,
-            runLen(acc.getField("run"), acc.getField("prev"))).otherwise(0L)).as("dup"),
-          (acc.getField("tot") + length(x).cast("long")).as("tot"))
-      },
-      acc => struct(
-        (acc.getField("dup") + when(acc.getField("run") >= 2L,
-          runLen(acc.getField("run"), acc.getField("prev"))).otherwise(0L)).as("dup"),
-        acc.getField("tot").as("tot")))
-    when(folded.getField("tot") > 0,
-      r6(folded.getField("dup") / (lit(1.0) * folded.getField("tot"))))
-      .otherwise(lit(0.0))
-  }
-
   /** Per-document repetition profile: char-weighted duplicate-gram
     * fractions for n = 2, 3, 4 plus the Gopher-style keep decision
     * (thresholds sit between the corpus quartiles so the gate actually
@@ -905,30 +784,6 @@ object TextAnalysis {
         r6(lit(206.835) - lit(1.015) * wps - lit(84.6) * spw))
       .withColumn("fk_grade",
         r6(lit(0.39) * wps + lit(11.8) * spw - lit(15.59)))
-  }
-
-  /** Count-weighted duplicate fraction over an array WITH multiplicity:
-    * Σ_{x: count(x)≥2} count(x) / Σ_x 1 — the element-count twin of
-    * [[dupCharFrac]] (same sort + run-length fold, O(n log n) per row).
-    */
-  private[graft] def dupCountFracHof(xs: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    val folded = aggregate(array_sort(xs),
-      struct(lit("").as("prev"), lit(0L).as("run"), lit(0L).as("dup"), lit(0L).as("tot")),
-      (acc, x) => {
-        val same = x === acc.getField("prev")
-        val closes = !same && acc.getField("run") >= 2L
-        struct(x.as("prev"),
-          when(same, acc.getField("run") + 1L).otherwise(lit(1L)).as("run"),
-          (acc.getField("dup") + when(closes, acc.getField("run")).otherwise(0L)).as("dup"),
-          (acc.getField("tot") + 1L).as("tot"))
-      },
-      acc => struct(
-        (acc.getField("dup") + when(acc.getField("run") >= 2L,
-          acc.getField("run")).otherwise(0L)).as("dup"),
-        acc.getField("tot").as("tot")))
-    when(folded.getField("tot") > 0,
-      r6(folded.getField("dup") / (lit(1.0) * folded.getField("tot"))))
-      .otherwise(lit(0.0))
   }
 
   /** Duplicate-LINE profile — the remaining Gopher §A1.1 repetition

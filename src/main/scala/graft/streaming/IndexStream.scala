@@ -3,16 +3,18 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
-import graft.operators.{IndexMaintenance, IvfIndex, PqIndex}
+import graft.operators.{IndexMaintenance, Layout}
 
-/** Streaming maintenance of the persisted IVF index: newly-ingested
-  * embeddings are assigned to their cluster map-side (the same
-  * zero-shuffle literal-centroid argmin the batch build uses — no
-  * state, no shuffle, no join) and appended into the
-  * `cluster_id`-partitioned parquet layout that `IvfIndex.searchIndex`
+/** Streaming maintenance of the six persisted index layouts (IVF, PQ,
+  * residual IVFPQ, LSH, the near-dup band index and the BM25
+  * postings): newly-ingested rows are projected map-side by their
+  * family's [[graft.operators.Layout]] — the same projection the batch
+  * build writes, against the same persisted metadata, with no state,
+  * no shuffle and no join — and appended into the layout's partitioned
+  * parquet `vectors` dir (or an epoch dir) that serving
   * partition-prunes. This is how a production ANN index absorbs new
-  * data without rebuilds: the coarse quantizer (centroids) stays
-  * fixed between periodic re-trainings while the inverted lists grow,
+  * data without rebuilds: the coarse quantizer (centroids) stays fixed
+  * between periodic re-trainings while the inverted lists grow,
   * exactly the Qdrant/Faiss operational model (reference
   * store_assets.py:40-77 rebuilds in memory instead — not an option at
   * 100 TB).
@@ -20,7 +22,7 @@ import graft.operators.{IndexMaintenance, IvfIndex, PqIndex}
   * Scale notes: each micro-batch is an embarrassingly-parallel scan →
   * project → partitioned append; no aggregation state accumulates, so
   * the stream runs indefinitely at constant memory. Searches see new
-  * vectors as soon as their files commit: serving resolves every layout
+  * rows as soon as their files commit: serving resolves every layout
   * through `IndexMaintenance.layoutDf`, which re-validates the layout's
   * file signature on each call, so a sink commit is read by the next
   * search.
@@ -87,15 +89,15 @@ object IndexStream {
     * (serving reads the epoch as plain partitioned parquet).
     */
   private def startAppend(spark: SparkSession, indexPath: String,
-      assigned: DataFrame, checkpoint: String, sinkDir: String,
-      partCol: String): StreamingQuery = {
+      layout: Layout, rows: DataFrame, checkpoint: String,
+      sinkDir: String): StreamingQuery = {
     val (resolved, isBase) = resolveSink(spark, indexPath, sinkDir)
     if (isBase)
-      assigned.writeStream
+      rows.writeStream
         .format("parquet")
         .option("path", resolved)
         .option("checkpointLocation", checkpoint)
-        .partitionBy(partCol)
+        .partitionBy(layout.partCol)
         .outputMode("append")
         .start()
     else {
@@ -106,7 +108,7 @@ object IndexStream {
       // a fresh epoch would otherwise duplicate the pre-crash append
       val isEpochOfIndex = new org.apache.hadoop.fs.Path(resolved)
         .getName.matches("vectors_e\\d+")
-      assigned.writeStream
+      rows.writeStream
         .option("checkpointLocation", checkpoint)
         .outputMode("append")
         .foreachBatch { (df: DataFrame, id: Long) =>
@@ -122,114 +124,42 @@ object IndexStream {
               .orElse(
                 if (IndexMaintenance.isBatchFolded(spark, indexPath, id)) None
                 else Some(resolved))
-          target.foreach(t => df.write.mode("overwrite").partitionBy(partCol)
-            .parquet(s"$t/batch=$id"))
+          target.foreach(writeEpochBatch(layout, df, _, id))
         }
         .start()
     }
   }
 
-  /** Attach cluster assignments to a (possibly streaming) embedding
-    * DataFrame using the index's persisted centroids. Works identically
-    * on batch inputs — one code path for backfill and the live stream.
+  /** Continuously append a stream of new input rows into the persisted
+    * index of `layout`: each micro-batch is projected by
+    * [[graft.operators.Layout.rows]] against the metadata persisted under
+    * `indexPath` — the projection the batch build writes, so streamed
+    * rows are byte-identical to batch-built ones — and appended to the
+    * base `vectors` dir or to `sinkDir` ([[startAppend]]). `input` must
+    * be a streaming DataFrame of the layout's input rows: (vec_id,
+    * embedding) for the vector families, (doc_id, text) for the band
+    * and lexical indexes. Exactly-once per source file via the
+    * checkpoint; once the base is compacted, or if it was batch-built,
+    * resume into `IndexMaintenance.nextEpochDir` ([[resolveSink]]).
     */
-  def assignWithIndexCentroids(spark: SparkSession, indexPath: String,
-      vecs: DataFrame): DataFrame = {
-    val cents = spark.read.parquet(s"$indexPath/centroids")
-    val best = IvfIndex.nearest(col("embedding"), cents)
-    vecs.select(col("vec_id"), col("embedding"))
-      .withColumn("cluster_id", best.getField("cluster_id"))
-  }
+  def append(spark: SparkSession, layout: Layout, indexPath: String,
+      input: DataFrame, checkpoint: String, sinkDir: String = null): StreamingQuery =
+    startAppend(spark, indexPath, layout, layout.rows(indexPath, input),
+      checkpoint, sinkDir)
 
-  /** Continuously append a stream of new embeddings into the persisted
-    * index. `newVecs` must be a streaming DataFrame with
-    * (vec_id, embedding); the query writes
-    * `indexPath/vectors/cluster_id=.../part-*.parquet` per micro-batch.
-    */
+  /** [[append]] into an IVF index. */
   def appendToIndex(spark: SparkSession, indexPath: String,
       newVecs: DataFrame, checkpoint: String,
       sinkDir: String = null): StreamingQuery =
-    startAppend(spark, indexPath,
-      assignWithIndexCentroids(spark, indexPath, newVecs),
-      checkpoint, sinkDir, "cluster_id")
+    append(spark, Layout.Ivf, indexPath, newVecs, checkpoint, sinkDir)
 
-  /** PQ twin of [[assignWithIndexCentroids]]: cluster assignment AND
-    * byte codes computed from the metadata persisted under the PQ
-    * index path (PqIndex.writeIndex), so streamed rows are
-    * byte-identical to batch-built ones (shared projection —
-    * PqIndex.indexRows). Centroids and codebooks are fixed between
-    * re-trainings, exactly like the IVF path.
+  /** Write one micro-batch's layout rows to its `batch=<id>` subdir of an
+    * epoch dir, overwriting it, so a replayed batch rewrites its own
+    * subdir.
     */
-  def assignWithPqIndexMeta(spark: SparkSession, indexPath: String,
-      vecs: DataFrame): DataFrame =
-    PqIndex.indexRows(vecs,
-      spark.read.parquet(s"$indexPath/centroids"),
-      PqIndex.codebookMetaOf(spark.read.parquet(s"$indexPath/codebooks"), "cvec"))
-
-  /** Continuously append a stream of new embeddings into the persisted
-    * PQ index — the quantized store stays serveable (codes-only
-    * candidate scans, partition pruning) while it grows; exactly-once
-    * per source file via the checkpoint, like [[appendToIndex]].
-    */
-  def appendToPqIndex(spark: SparkSession, indexPath: String,
-      newVecs: DataFrame, checkpoint: String,
-      sinkDir: String = null): StreamingQuery =
-    startAppend(spark, indexPath,
-      assignWithPqIndexMeta(spark, indexPath, newVecs),
-      checkpoint, sinkDir, "cluster_id")
-
-  /** Residual-PQ twin of [[assignWithPqIndexMeta]]: cluster assignment
-    * AND residual codes from the metadata persisted under the residual
-    * index path (PqIndex.writeResidualIndex) via the SAME shared row
-    * projection the batch build uses — streamed rows byte-identical.
-    */
-  def assignWithResidualIndexMeta(spark: SparkSession, indexPath: String,
-      vecs: DataFrame): DataFrame =
-    PqIndex.residualIndexRows(vecs,
-      spark.read.parquet(s"$indexPath/centroids"),
-      PqIndex.codebookMetaOf(spark.read.parquet(s"$indexPath/codebooks"), "rcvec"))
-
-  /** Continuously append a stream of new embeddings into the persisted
-    * RESIDUAL index — completing streaming maintenance across all four
-    * persisted layouts (IVF, PQ, residual PQ, LSH); exactly-once per
-    * source file via the checkpoint, like [[appendToIndex]], and the
-    * same compaction/log-rotation contract (the layout partitions by
-    * cluster_id, so IndexMaintenance applies unchanged).
-    */
-  def appendToResidualIndex(spark: SparkSession, indexPath: String,
-      newVecs: DataFrame, checkpoint: String,
-      sinkDir: String = null): StreamingQuery =
-    startAppend(spark, indexPath,
-      assignWithResidualIndexMeta(spark, indexPath, newVecs),
-      checkpoint, sinkDir, "cluster_id")
-
-  /** Band-index twin (r10): stream (doc_id, text) documents into the
-    * persisted near-dup band index ([[graft.operators.DedupIndex]]).
-    * Signing is the same map-side projection the batch build uses
-    * (Dedup.bandSignaturesOf — byte-identical rows), stateless, so the
-    * stream runs at constant memory; same compaction/log-rotation
-    * contract (partition column `band`).
-    */
-  def appendToBandIndex(spark: SparkSession, indexPath: String,
-      newDocs: DataFrame, checkpoint: String,
-      sinkDir: String = null): StreamingQuery =
-    startAppend(spark, indexPath,
-      graft.operators.Dedup.bandSignaturesOf(newDocs),
-      checkpoint, sinkDir, "band")
-
-  /** LSH twin: the hyperplanes are derived deterministically (no
-    * persisted metadata to read), so streamed vectors bucket exactly
-    * like batch-built ones by construction — completing streaming
-    * append across all four persisted vector index families (IVF, PQ,
-    * residual PQ, LSH).
-    */
-  def appendToLshIndex(spark: SparkSession, indexPath: String,
-      newVecs: DataFrame, checkpoint: String,
-      sinkDir: String = null): StreamingQuery =
-    startAppend(spark, indexPath,
-      newVecs.select(col("vec_id"), col("embedding"))
-        .withColumn("bucket", graft.operators.LshAnn.bucketOf(col("embedding"))),
-      checkpoint, sinkDir, "bucket")
+  private def writeEpochBatch(layout: Layout, rows: DataFrame, target: String,
+      id: Long): Unit =
+    layout.write(rows, s"$target/batch=$id")
 
   /** Streaming maintenance of the DROP-LEDGER groups (r13, r12 verdict
     * #5 — the last dedup stage that still required a batch
@@ -299,45 +229,12 @@ object IndexStream {
           // signatures fold in twice permanently
           val target = IndexMaintenance.epochDirHoldingBatch(spark, indexPath, id)
             .getOrElse(epochDir)
-          graft.operators.Dedup.bandSignaturesOf(b)
-            .write.mode("overwrite").partitionBy("band")
-            .parquet(s"$target/batch=$id")
+          writeEpochBatch(Layout.Band, Layout.Band.rows(indexPath, b), target, id)
           // the epoch dir grew under a possibly-read path
           spark.catalog.refreshByPath(target)
         } finally b.unpersist(false)
         }
       }
       .start()
-  }
-
-  /** Lexical posting-index twin (r11): stream (doc_id, text) documents
-    * into the persisted BM25 index ([[graft.operators.LexIndex]]). The
-    * posting projection is the same stateless map-side pass the batch
-    * build uses (byte-identical rows); corpus stats are metadata the
-    * caller folds per ingest batch via `LexIndex.addToStats` (the
-    * centroids-between-retrainings model). Same compaction/log-rotation
-    * contract (partition column `bucket`).
-    */
-  def appendToLexIndex(spark: SparkSession, indexPath: String,
-      newDocs: DataFrame, checkpoint: String,
-      sinkDir: String = null): StreamingQuery = {
-    // tier-aware appends (r15, verdict #3): postings for terms the
-    // last build tiered out are dropped MAP-SIDE against the bounded
-    // broadcast stopterms table — without this, one streamed doc
-    // carrying a stop-term re-grows that term's corpus-scale posting
-    // list in a single hash bucket until the next rebuild. The stop
-    // set is frozen at stream start (the centroids-between-retrainings
-    // lifecycle); a NEW term crossing the tier mid-stream is what
-    // LexIndex.needsRetier bounds and maintain() routes to rebuild.
-    val fs = new org.apache.hadoop.fs.Path(indexPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val postings = graft.operators.LexIndex.postingsOf(newDocs)
-    val filtered =
-      if (fs.exists(new org.apache.hadoop.fs.Path(s"$indexPath/stopterms")))
-        postings.join(
-          broadcast(spark.read.parquet(s"$indexPath/stopterms").select(col("term"))),
-          Seq("term"), "left_anti")
-      else postings
-    startAppend(spark, indexPath, filtered, checkpoint, sinkDir, "bucket")
   }
 }

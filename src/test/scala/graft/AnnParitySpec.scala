@@ -29,7 +29,7 @@ class AnnParitySpec extends AnyFunSuite {
     val centsLit = IvfIndex.centroidLiteral(cents)
     val both = Tables.embeddings(spark, Sf).select(col("vec_id"), col("embedding"))
       .withColumn("n", IvfIndex.nearest(col("embedding"), cents))
-      .withColumn("h", IvfIndex.nearestHof(col("embedding"), centsLit))
+      .withColumn("h", PqHof.nearestHof(col("embedding"), centsLit))
       .select(col("vec_id"), col("n.d2"), col("n.cluster_id"),
         col("h.d2"), col("h.cluster_id"))
       .collect()
@@ -142,7 +142,7 @@ class AnnParitySpec extends AnyFunSuite {
     val centsLit = IvfIndex.centroidLiteral(cents)
     val got = degenerate
       .withColumn("n", IvfIndex.nearest(col("embedding"), cents))
-      .withColumn("h", IvfIndex.nearestHof(col("embedding"), centsLit))
+      .withColumn("h", PqHof.nearestHof(col("embedding"), centsLit))
       .select(col("vec_id"), col("n.d2"), col("n.cluster_id"),
         col("h.d2"), col("h.cluster_id"))
       .collect()
@@ -274,7 +274,7 @@ class AnnParitySpec extends AnyFunSuite {
       PqHof.lutLiteral(lut))
     val got = df
       .withColumn("n", IvfIndex.nearest(col("embedding"), cents0))
-      .withColumn("h", IvfIndex.nearestHof(col("embedding"), centsLit))
+      .withColumn("h", PqHof.nearestHof(col("embedding"), centsLit))
       .select(col("vec_id"),
         col("n.d2"), col("n.cluster_id"), col("h.d2"), col("h.cluster_id"),
         AnnExprs.pqAdc(col("embedding"), cb, lut).as("n_e9"), hofE9.as("h_e9"))

@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Dedup, DedupIndex, IndexMaintenance}
+import graft.operators.{Dedup, DedupIndex, IndexMaintenance, Layout}
 import graft.streaming.IndexStream
 
 /** The persisted band index (r10): incremental near-dup candidates
@@ -94,11 +94,11 @@ class DedupIndexSpec extends AnyFunSuite {
     // batch row behind a fresh _spark_metadata log — the guard must
     // refuse it (r10: this spec found the pre-compaction shadowing hole)
     intercept[IllegalStateException] {
-      IndexStream.appendToBandIndex(spark, idx, mkStream(), ckpt)
+      IndexStream.append(spark, Layout.Band, idx, mkStream(), ckpt)
     }
     // the supported path: epoch sink dir, base + epoch served as a union
     val epochDir = IndexMaintenance.nextEpochDir(spark, idx)
-    val q = IndexStream.appendToBandIndex(spark, idx, mkStream(), ckpt,
+    val q = IndexStream.append(spark, Layout.Band, idx, mkStream(), ckpt,
       sinkDir = epochDir)
     try q.processAllAvailable() finally q.stop()
     val got = DedupIndex.bandsDf(spark, idx)
@@ -129,7 +129,7 @@ class DedupIndexSpec extends AnyFunSuite {
     assert(candAfter === candBefore)
     // the log-rotation guard covers this layout too
     intercept[IllegalStateException] {
-      IndexStream.appendToBandIndex(spark, idx, mkStream(), ckpt)
+      IndexStream.append(spark, Layout.Band, idx, mkStream(), ckpt)
     }
     assert(IndexMaintenance.nextEpochDir(spark, idx).endsWith("vectors_e1"))
   }

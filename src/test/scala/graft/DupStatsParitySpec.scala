@@ -26,8 +26,8 @@ class DupStatsParitySpec extends AnyFunSuite {
     val got = df.select(
       TextAnalysis.dupCountFrac(col("xs")).as("nc"),
       TextAnalysis.dupCharFrac(col("xs")).as("nm"),
-      TextAnalysis.dupCountFracHof(col("xs")).as("hc"),
-      TextAnalysis.dupCharFracHof(col("xs")).as("hm")).collect()
+      TextHof.dupCountFracHof(col("xs")).as("hc"),
+      TextHof.dupCharFracHof(col("xs")).as("hm")).collect()
     got.foreach { r =>
       assert(r.getDouble(0) === r.getDouble(2), s"count frac: $r")
       assert(r.getDouble(1) === r.getDouble(3), s"char frac: $r")
@@ -93,8 +93,8 @@ class DupStatsParitySpec extends AnyFunSuite {
         .select(
           TextAnalysis.dupCountFrac(xs).as("nc"),
           TextAnalysis.dupCharFrac(xs).as("nm"),
-          TextAnalysis.dupCountFracHof(xs).as("hc"),
-          TextAnalysis.dupCharFracHof(xs).as("hm"))
+          TextHof.dupCountFracHof(xs).as("hc"),
+          TextHof.dupCharFracHof(xs).as("hm"))
         .filter(col("nc") =!= col("hc") || col("nm") =!= col("hm"))
         .count()
       assert(bad === 0L, s"case $i diverged on $bad docs")

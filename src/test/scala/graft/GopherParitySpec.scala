@@ -29,12 +29,12 @@ class GopherParitySpec extends AnyFunSuite {
       .union(edgeTexts.toDF("text"))
     val both = corpus.select(
       TextAnalysis.gopherStats(col("text")).as("n"),
-      TextAnalysis.gopherStatsHof(col("text")).as("h"))
+      TextHof.gopherStatsHof(col("text")).as("h"))
     assert(both.filter(col("n") =!= col("h")).count() === 0L)
     // and the graded query is unchanged
     val nat = TextAnalysis.gopherRules(spark, Sf).orderBy("doc_id").collect()
     val hof = graft.Tables.documents(spark, Sf)
-      .select(col("doc_id"), TextAnalysis.gopherStatsHof(col("text")).as("g"))
+      .select(col("doc_id"), TextHof.gopherStatsHof(col("text")).as("g"))
       .select(col("doc_id"), col("g.n_toks"), col("g.uniq_frac"), col("g.top2_frac"),
         col("g.dup3_frac"), col("g.mean_wlen"), col("g.keep"))
       .orderBy("doc_id").collect()
@@ -43,7 +43,7 @@ class GopherParitySpec extends AnyFunSuite {
 
   test("entropyScore native ≡ HOF fold row-for-row") {
     val nat = TextAnalysis.entropyScore(spark, Sf).orderBy("doc_id").collect()
-    val hof = TextAnalysis.entropyScoreHof(spark, Sf).orderBy("doc_id").collect()
+    val hof = TextHof.entropyScoreHof(spark, Sf).orderBy("doc_id").collect()
     assert(nat.toSeq === hof.toSeq)
   }
 

@@ -4,7 +4,7 @@ import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-import graft.operators.{IndexMaintenance, IvfIndex, LshAnn, PqIndex}
+import graft.operators.{IndexMaintenance, IvfIndex, Layout, LshAnn, PqIndex}
 import graft.streaming.IndexStream
 
 /** Compaction of the persisted index layouts: fewer files, identical
@@ -33,7 +33,7 @@ class IndexMaintenanceSpec extends AnyFunSuite {
       vecs.filter(pmod(col("vec_id"), lit(5)) === w).write.parquet(s"$staging/wave$w"))
     val stream = spark.readStream.schema(vecs.schema)
       .option("maxFilesPerTrigger", "1").parquet(s"$staging/wave*")
-    val q = IndexStream.appendToPqIndex(spark, idx, stream, ckpt)
+    val q = IndexStream.append(spark, Layout.Pq, idx, stream, ckpt)
     try q.processAllAvailable() finally q.stop()
 
     val before = IndexMaintenance.parquetFileCount(spark, s"$idx/vectors")
@@ -102,21 +102,21 @@ class IndexMaintenanceSpec extends AnyFunSuite {
       vecs.filter(pmod(col("vec_id"), lit(3)) === w).write.parquet(s"$staging/wave$w"))
     def mkStream() = spark.readStream.schema(vecs.schema)
       .option("maxFilesPerTrigger", "1").parquet(s"$staging/wave*")
-    val q1 = IndexStream.appendToPqIndex(spark, idx, mkStream(), ckpt)
+    val q1 = IndexStream.append(spark, Layout.Pq, idx, mkStream(), ckpt)
     try q1.processAllAvailable() finally q1.stop()
     IndexMaintenance.compactIndex(spark, idx)
 
     // resuming into the compacted base dir would shadow every compacted
     // row behind a fresh sink log — it must fail fast, not lose data
     intercept[IllegalStateException] {
-      IndexStream.appendToPqIndex(spark, idx, mkStream(), ckpt)
+      IndexStream.append(spark, Layout.Pq, idx, mkStream(), ckpt)
     }
 
     // log rotation: SAME source checkpoint, fresh epoch sink dir —
     // only the unseen wave flows into the new epoch
     vecs.filter(pmod(col("vec_id"), lit(3)) === 2).write.parquet(s"$staging/wave2")
     val epochDir = IndexMaintenance.nextEpochDir(spark, idx)
-    val q2 = IndexStream.appendToPqIndex(spark, idx, mkStream(), ckpt, sinkDir = epochDir)
+    val q2 = IndexStream.append(spark, Layout.Pq, idx, mkStream(), ckpt, sinkDir = epochDir)
     try q2.processAllAvailable() finally q2.stop()
     val wave2n = vecs.filter(pmod(col("vec_id"), lit(3)) === 2).count()
     assert(spark.read.parquet(epochDir).count() === wave2n,
@@ -152,7 +152,7 @@ class IndexMaintenanceSpec extends AnyFunSuite {
       vecs.filter(pmod(col("vec_id"), lit(3)) === w).write.parquet(s"$staging/wave$w"))
     def mkStream() = spark.readStream.schema(vecs.schema)
       .option("maxFilesPerTrigger", "1").parquet(s"$staging/wave*")
-    val q1 = IndexStream.appendToResidualIndex(spark, idx, mkStream(), ckpt)
+    val q1 = IndexStream.append(spark, Layout.Residual, idx, mkStream(), ckpt)
     try q1.processAllAvailable() finally q1.stop()
 
     val before = IndexMaintenance.parquetFileCount(spark, s"$idx/vectors")
@@ -162,13 +162,13 @@ class IndexMaintenanceSpec extends AnyFunSuite {
 
     // resume into the compacted base must fail fast
     intercept[IllegalStateException] {
-      IndexStream.appendToResidualIndex(spark, idx, mkStream(), ckpt)
+      IndexStream.append(spark, Layout.Residual, idx, mkStream(), ckpt)
     }
 
     // rotate: same source checkpoint, fresh epoch dir, only the unseen wave
     vecs.filter(pmod(col("vec_id"), lit(3)) === 2).write.parquet(s"$staging/wave2")
     val epochDir = IndexMaintenance.nextEpochDir(spark, idx)
-    val q2 = IndexStream.appendToResidualIndex(spark, idx, mkStream(), ckpt,
+    val q2 = IndexStream.append(spark, Layout.Residual, idx, mkStream(), ckpt,
       sinkDir = epochDir)
     try q2.processAllAvailable() finally q2.stop()
     val wave2n = vecs.filter(pmod(col("vec_id"), lit(3)) === 2).count()

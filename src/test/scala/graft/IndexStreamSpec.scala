@@ -3,7 +3,7 @@ package graft
 import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.operators.IvfIndex
+import graft.operators.{IvfIndex, Layout}
 import graft.streaming.IndexStream
 
 /** Streaming index maintenance: vectors appended through the stream
@@ -80,7 +80,7 @@ class IndexStreamSpec extends AnyFunSuite {
       .schema(vecs.schema)
       .option("maxFilesPerTrigger", "1")
       .parquet(s"$staging/wave*")
-    val q = IndexStream.appendToPqIndex(spark, liveIdx, stream, ckpt)
+    val q = IndexStream.append(spark, Layout.Pq, liveIdx, stream, ckpt)
     try {
       q.processAllAvailable()
       vecs.filter(col("vec_id") % 2 === 1).write.parquet(s"$staging/wave2")
@@ -122,7 +122,7 @@ class IndexStreamSpec extends AnyFunSuite {
       .schema(vecs.schema)
       .option("maxFilesPerTrigger", "1")
       .parquet(s"$staging/wave*")
-    val q = IndexStream.appendToResidualIndex(spark, liveIdx, stream, ckpt)
+    val q = IndexStream.append(spark, Layout.Residual, liveIdx, stream, ckpt)
     try q.processAllAvailable() finally q.stop()
 
     // streamed rows byte-identical to batch-built ones: same residual
@@ -159,7 +159,7 @@ class IndexStreamSpec extends AnyFunSuite {
       .schema(vecs.schema)
       .option("maxFilesPerTrigger", "1")
       .parquet(s"$staging/wave*")
-    val q = IndexStream.appendToLshIndex(spark, liveIdx, stream, ckpt)
+    val q = IndexStream.append(spark, Layout.Lsh, liveIdx, stream, ckpt)
     try q.processAllAvailable() finally q.stop()
 
     val live = spark.read.parquet(s"$liveIdx/vectors")

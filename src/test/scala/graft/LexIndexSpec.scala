@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.operators.{IndexMaintenance, IvfIndex, LexIndex, LexicalSearch, SearchApi}
+import graft.operators.{IndexMaintenance, IvfIndex, Layout, LexIndex, LexicalSearch, SearchApi}
 import graft.streaming.IndexStream
 
 /** r11 (r10 verdict #3): the persisted lexical posting index — sixth
@@ -67,7 +67,7 @@ class LexIndexSpec extends AnyFunSuite {
       .option("maxFilesPerTrigger", "1").parquet(s"$staging/wave*")
     // a batch-built base dir has no sink log — the r10 shadowing guard
     // forces the stream into an epoch dir (serving unions base+epochs)
-    val q = IndexStream.appendToLexIndex(spark, idx, stream, ckpt,
+    val q = IndexStream.append(spark, Layout.Lex, idx, stream, ckpt,
       sinkDir = IndexMaintenance.nextEpochDir(spark, idx))
     try q.processAllAvailable() finally q.stop()
     LexIndex.addToStats(spark, idx, incoming)
@@ -181,7 +181,7 @@ class LexIndexSpec extends AnyFunSuite {
     grow.coalesce(1).write.parquet(s"$staging/w0")
     val stream = spark.readStream.schema(grow.schema)
       .option("maxFilesPerTrigger", "1").parquet(s"$staging/w*")
-    val q = IndexStream.appendToLexIndex(spark, idx, stream, ckpt,
+    val q = IndexStream.append(spark, Layout.Lex, idx, stream, ckpt,
       sinkDir = IndexMaintenance.nextEpochDir(spark, idx))
     try q.processAllAvailable() finally q.stop()
     LexIndex.addToStats(spark, idx, grow)

@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.hadoop.fs.{FileUtil, Path}
 import org.apache.spark.sql.functions._
 
-import graft.operators.{IndexMaintenance, IvfIndex, SearchApi}
+import graft.operators.{IndexMaintenance, IvfIndex, LexIndex, LexicalSearch, SearchApi}
 
 /** The fold path compaction, rebalance and maintain share. Pins: the
   * `_graft_compacted` marker format — a literal marker written the way
@@ -15,7 +15,8 @@ import graft.operators.{IndexMaintenance, IvfIndex, SearchApi}
   * fold runs first — a swap that crashed between its renames (staged
   * dir present, staged dir with a keep manifest, or only the aside
   * copy left) is rolled forward or back, so maintain succeeds and
-  * full-coverage serving returns the pre-crash rows.
+  * full-coverage serving returns the pre-crash rows; the same holds for
+  * the swaps of a lexical rebuild (`vectors_staging`, `stats_staging`).
   */
 class MaintenanceFoldSpec extends AnyFunSuite {
   import SparkSuite._
@@ -28,6 +29,14 @@ class MaintenanceFoldSpec extends AnyFunSuite {
 
   private def read(path: String): String =
     new String(Files.readAllBytes(Paths.get(path)), "UTF-8")
+
+  private def copy(from: String, to: String): Unit = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = new Path(from).getFileSystem(conf)
+    assert(FileUtil.copy(fs, new Path(from), fs, new Path(to), false, conf))
+  }
+
+  private def file(p: String) = new java.io.File(p)
 
   private def vecs(ids: Range, cluster: Option[Long]) =
     ids.map(i => (i.toLong, Array(i * 0.5f, 1f), cluster))
@@ -89,17 +98,11 @@ class MaintenanceFoldSpec extends AnyFunSuite {
     "stream window order")
 
   test("a fold that crashed mid-swap is reconciled: maintain succeeds, serving is unchanged") {
-    val conf = spark.sparkContext.hadoopConfiguration
     val queries = queryTexts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
       .toDF("query_id", "query_text")
     def serve(idx: String): Seq[String] =
       SearchApi.searchManyIndexed(spark, Sf, idx, queries, nprobe = Int.MaxValue)
         .collect().toSeq.sortBy(r => (r.getLong(0), r.getLong(6))).map(_.toString)
-    def copy(from: String, to: String): Unit = {
-      val fs = new Path(from).getFileSystem(conf)
-      assert(FileUtil.copy(fs, new Path(from), fs, new Path(to), false, conf))
-    }
-    def file(p: String) = new java.io.File(p)
 
     val src = s"${tmp("graft-fold-crash-src")}/idx"
     IvfIndex.writeIndex(spark, Sf, src)
@@ -153,5 +156,29 @@ class MaintenanceFoldSpec extends AnyFunSuite {
     crashed("centroids") { idx =>
       assert(file(s"$idx/centroids").renameTo(file(s"$idx/centroids_old")))
     }
+  }
+
+  test("a lexical rebuild that crashed mid-swap is reconciled: maintain succeeds, serving is unchanged") {
+    def serve(idx: String): Seq[String] =
+      LexIndex.searchTerms(spark, idx, LexicalSearch.QueryTerms).collect().toSeq.map(_.toString)
+    val src = s"${tmp("graft-lex-crash-src")}/idx"
+    LexIndex.writeIndex(spark, Sf, src)
+    val want = serve(src)
+    assert(want.nonEmpty)
+
+    def crashed(table: String): Unit = {
+      val idx = s"${tmp(s"graft-lex-crash-$table")}/idx"
+      copy(src, idx)
+      // the rebuild staged `table` and moved the serving copy aside
+      copy(s"$idx/$table", s"$idx/${table}_staging")
+      assert(file(s"$idx/$table").renameTo(file(s"$idx/${table}_old")))
+      val r = IndexMaintenance.maintain(spark, idx)
+      assert(serve(idx) === want, s"$table: $r")
+      Seq("vectors", "stopterms", "stats").flatMap(t => Seq(s"${t}_old", s"${t}_staging"))
+        .foreach(left => assert(!file(s"$idx/$left").exists(), s"$table left $left behind"))
+    }
+    crashed("vectors")
+    crashed("stopterms")
+    crashed("stats")
   }
 }

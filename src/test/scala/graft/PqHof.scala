@@ -8,14 +8,28 @@ import graft.operators.PqIndex.{NumSub, SubDim}
 
 /** The PQ expressions' semantic definitions as Spark `transform` /
   * `aggregate` / `array_min` trees over literal metadata — the parity
-  * references for the native PqCodesExpr, PqAdcExpr and ResidualAdcExpr
-  * (AnnParitySpec), and the formulations the DuckDB oracle mirrors.
+  * references for the native NearestCentroidExpr, PqCodesExpr, PqAdcExpr
+  * and ResidualAdcExpr (AnnParitySpec), and the formulations the DuckDB
+  * oracle mirrors.
   * Interpreted per element: spec-only. The metadata itself comes from
   * the production quantized core (`PqIndex.codebookMetaOf`,
   * `PqIndex.adcTable`), so a parity check compares the two folds over
   * the same metadata.
   */
 object PqHof {
+
+  /** Per-row nearest centroid: struct(d2, cluster_id) minimized over the
+    * literal centroid array (`IvfIndex.centroidLiteral`). Struct
+    * ordering is field-by-field, so the minimum is (smallest d², then
+    * smallest cluster_id) — exactly the `row_number() OVER (ORDER BY d2,
+    * cluster_id) = 1` the oracle computes. The numeric spec of
+    * `IvfIndex.nearest` (AnnExprs.NearestCentroidExpr — bitwise parity
+    * pinned by AnnParitySpec, including the degenerate-input corners).
+    */
+  def nearestHof(embedding: Column, centsLit: Column): Column =
+    array_min(transform(centsLit, c =>
+      struct(dist2(embedding, c.getField("cvec")).as("d2"),
+        c.getField("cluster_id").as("cluster_id"))))
 
   /** A codebook meta [s][code][SubDim] as one literal column: an array
     * (indexed by s+1) of `array<struct<code, vec>>`.
@@ -70,7 +84,7 @@ object PqHof {
     */
   def withResidual(df: DataFrame, centsLit: Column): DataFrame =
     df.withColumn("cluster_id",
-        IvfIndex.nearestHof(col("embedding"), centsLit).getField("cluster_id"))
+        nearestHof(col("embedding"), centsLit).getField("cluster_id"))
       .withColumn("cvec",
         element_at(filter(centsLit,
           c => c.getField("cluster_id") === col("cluster_id")), 1).getField("cvec"))

@@ -70,8 +70,8 @@ class PropertyParitySpec extends AnyFunSuite {
     val cmp = df.select(
       TextAnalysis.dupCountFrac(col("xs")).as("nc"),
       TextAnalysis.dupCharFrac(col("xs")).as("nm"),
-      TextAnalysis.dupCountFracHof(col("xs")).as("hc"),
-      TextAnalysis.dupCharFracHof(col("xs")).as("hm"))
+      TextHof.dupCountFracHof(col("xs")).as("hc"),
+      TextHof.dupCharFracHof(col("xs")).as("hm"))
     assert(cmp.filter(col("nc") =!= col("hc") || col("nm") =!= col("hm"))
       .count() === 0L)
     // permutation invariance: fold pairwise (original, permuted)
@@ -100,7 +100,7 @@ class PropertyParitySpec extends AnyFunSuite {
     Seq(1, 2, 3).foreach { k =>
       val bad = df.select(
         TextExprs.gramCounts(col("xs"), k).as("n"),
-        TextExprs.gramCountsHof(col("xs"), k).as("h"))
+        TextHof.gramCountsHof(col("xs"), k).as("h"))
         .filter(col("n") =!= col("h")).count()
       assert(bad === 0L, s"k=$k gram-count divergence")
     }
@@ -111,7 +111,7 @@ class PropertyParitySpec extends AnyFunSuite {
     val df = texts.toDF("text")
     val bad = df.select(
       TextAnalysis.gopherStats(col("text")).as("n"),
-      TextAnalysis.gopherStatsHof(col("text")).as("h"))
+      TextHof.gopherStatsHof(col("text")).as("h"))
       .filter(col("n") =!= col("h")).count()
     assert(bad === 0L)
   }
@@ -125,7 +125,7 @@ class PropertyParitySpec extends AnyFunSuite {
     val df = nonEmpty.toDF("xs")
     val rows = df.select(
       TextExprs.entropyRaw(col("xs")).as("s"),
-      TextAnalysis.entropyE6Hof(col("xs")).as("hof"))
+      TextHof.entropyE6Hof(col("xs")).as("hof"))
       .select(col("s.n_uniq"), col("s.ent_e6"), col("hof")).collect()
     rows.foreach { r =>
       assert(r.getLong(1) === r.getLong(2), s"entropy divergence: $r")

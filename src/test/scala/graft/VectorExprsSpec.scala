@@ -21,7 +21,7 @@ class VectorExprsSpec extends AnyFunSuite {
   test("native dot == HOF dot bitwise on all query-corpus pairs") {
     val bad = pairs
       .select(VectorFunctions.dot(col("embedding"), col("qvec")).as("n"),
-        VectorFunctions.dotHof(col("embedding"), col("qvec")).as("h"))
+        VectorHof.dotHof(col("embedding"), col("qvec")).as("h"))
       .filter(col("n") =!= col("h")).count()
     assert(bad === 0)
   }
@@ -29,7 +29,7 @@ class VectorExprsSpec extends AnyFunSuite {
   test("native dist2 == HOF dist2 bitwise on all query-corpus pairs") {
     val bad = pairs
       .select(VectorFunctions.dist2(col("embedding"), col("qvec")).as("n"),
-        VectorFunctions.dist2Hof(col("embedding"), col("qvec")).as("h"))
+        VectorHof.dist2Hof(col("embedding"), col("qvec")).as("h"))
       .filter(col("n") =!= col("h")).count()
     assert(bad === 0)
   }
@@ -43,9 +43,9 @@ class VectorExprsSpec extends AnyFunSuite {
     ).toDF("x", "y")
     val got = df.select(
       VectorFunctions.dot(col("x"), col("y")).as("nd"),
-      VectorFunctions.dotHof(col("x"), col("y")).as("hd"),
+      VectorHof.dotHof(col("x"), col("y")).as("hd"),
       VectorFunctions.dist2(col("x"), col("y")).as("n2"),
-      VectorFunctions.dist2Hof(col("x"), col("y")).as("h2"))
+      VectorHof.dist2Hof(col("x"), col("y")).as("h2"))
     // native == HOF including NULL propagation (null-safe compare)
     assert(got.filter(not(col("nd") <=> col("hd")) || not(col("n2") <=> col("h2")))
       .count() === 0)
