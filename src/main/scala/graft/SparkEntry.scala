@@ -165,7 +165,7 @@ object SparkEntry {
     "vs_ivfpq_residual" -> ((s, d) => PqIndex.searchIvfPqResidual(s, d)),
     // persisted-path twin: same oracle, served from the partition-pruned
     // codes-only residual index (built once per corpus fingerprint)
-    "vs_ivfpq_residual_idx" -> ((s, d) => PqIndex.searchResidualIndexed(s, d)),
+    "vs_ivfpq_residual_idx" -> ((s, d) => PqIndex.searchIvfPqResidual(s, d)),
     "q_forecast_sma" -> ((s, d) => EventOps.forecastSma(s, d)),
     "q_rolling_median" -> ((s, d) => EventOps.rollingMedian(s, d)),
     "q_outer_join" -> ((s, d) => Relational.outerCoverage(s, d)),

@@ -17,12 +17,14 @@ import org.apache.spark.sql.types._
   * dedup_embed 5.8×, vs_ivf_ann 5.5×): the per-row cost is a nest of
   * `aggregate`/`transform` HOFs — CodegenFallback, one interpreted
   * lambda dispatch per centroid/codeword, plus a `slice` allocation
-  * per subspace per codeword. These expressions run the same argmin /
-  * ADC folds as ONE tight JVM loop per row with zero allocation
-  * (DupStatsExpr precedent, TextExprs.scala).
+  * per subspace per codeword. These expressions run the same argmin
+  * folds as ONE tight JVM loop per row with zero allocation
+  * (DupStatsExpr precedent, TextExprs.scala). The two PQ encoders run
+  * where an index is built or appended to; a query scores the stored
+  * codes through its ADC table (`PqIndex.codeSum`) instead.
   *
   * The index metadata (centroids k×dim, PQ codebooks NumSub×NumCodes×
-  * SubDim, per-query LUT NumSub×NumCodes longs) is baked into the
+  * SubDim) is baked into the
   * expression as plain primitive arrays — the thing a native ANN engine
   * keeps in registers during the scan. Floats are widened to double at
   * construction; elementwise float→double is exact, so the math is
@@ -45,26 +47,25 @@ import org.apache.spark.sql.types._
   *    All comparisons use `java.lang.Double.compare` seeded from the
   *    first centroid — Spark's total ordering (NaN == NaN, NaN after
   *    +Inf) — so a NaN element yields (NaN, min id), not seed leakage.
-  *  - [[PqAdcExpr]] ≡ PqIndex fused encode+ADC: per subspace s, argmin
-  *    over codewords of dist2(slice(emb, s·SubDim+1, SubDim), cvec)
-  *    (tiebreak smaller code), accumulating lut[s][code]. A window that
-  *    runs past the embedding (or covers a null element) yields NULL
-  *    d² for every codeword → code 0 (the smallest) → lut[s][0].
-  *  - [[ResidualAdcExpr]] ≡ the residual-IVFPQ chain: nearest centroid,
-  *    rvec = emb − centroid (double), then the PQ fold over residual
-  *    codebooks. `zip_with` pads the shorter side with NULL, so a
-  *    residual window is valid iff it lies within BOTH the embedding
-  *    and the centroid dim and covers no null element.
+  *  - [[PqCodesExpr]] ≡ the PQ encode: per subspace s, argmin over
+  *    codewords of dist2(slice(emb, s·SubDim+1, SubDim), cvec)
+  *    (tiebreak smaller code). A window that runs past the embedding
+  *    (or covers a null element) yields NULL d² for every codeword →
+  *    code 0 (the smallest). Scored through the per-query ADC table
+  *    (`PqIndex.codeSum`), this is the `graft.PqHof` ADC fold.
+  *  - [[ResidualCodesExpr]] ≡ the residual-IVFPQ encode: nearest
+  *    centroid, rvec = emb − centroid (double), then the PQ argmin over
+  *    residual codebooks. `zip_with` pads the shorter side with NULL,
+  *    so a residual window is valid iff it lies within BOTH the
+  *    embedding and the centroid dim and covers no null element.
+  *    Scored through `codeSum`, this is the `graft.PqHof` residual
+  *    chain.
   */
 object AnnExprs {
 
   private val nearestType = StructType(Seq(
     StructField("d2", DoubleType, nullable = true),
     StructField("cluster_id", LongType, nullable = false)))
-
-  private val residualType = StructType(Seq(
-    StructField("cluster_id", LongType, nullable = false),
-    StructField("res_e9", LongType, nullable = false)))
 
   private val residualCodesType = StructType(Seq(
     StructField("cluster_id", LongType, nullable = false),
@@ -177,27 +178,9 @@ object AnnExprs {
     new GenericArrayData(out)
   }
 
-  /** [[PqAdcExpr]] per-row work. `emb` may be null. */
-  def pqAdcLong(emb: ArrayData, cb: Array[Array[Array[Double]]],
-      lut: Array[Array[Long]], isF: Boolean): Long = {
-    val subDim = cb(0)(0).length
-    var acc = 0L
-    var s = 0
-    while (s < cb.length) {
-      val code =
-        if (emb == null) 0
-        else argminCode(emb, isF, s * subDim, cb(s))
-      acc += lut(s)(code)
-      s += 1
-    }
-    acc
-  }
-
   /** Index of the assigned centroid: same total-ordering rule as
     * nearestRow (a NaN element makes every d² NaN → min-id centroid);
-    * `minIdx` for malformed rows. Shared by [[residualRow]] and
-    * [[residualCodesRow]] so the fused-ADC and persisted-codes paths
-    * assign identically by construction.
+    * `minIdx` for malformed rows.
     */
   private def assignIdx(emb: ArrayData, ids: Array[Long],
       cents: Array[Array[Double]], minIdx: Int, isF: Boolean): Int = {
@@ -229,7 +212,7 @@ object AnnExprs {
   /** Residual codeword of window `s` against the assigned centroid's
     * slice — window valid iff it lies inside BOTH the embedding and the
     * centroid dim (zip_with pads the shorter side with NULL) and covers
-    * no null element; 0 otherwise. Shared by ADC and codes paths.
+    * no null element; 0 otherwise.
     */
   private def residualCode(emb: ArrayData, cvec: Array[Double],
       sub: Array[Array[Double]], off: Int, subDim: Int, usable: Int,
@@ -253,32 +236,11 @@ object AnnExprs {
     best
   }
 
-  /** [[ResidualAdcExpr]] per-row work. `emb` may be null; `minIdx` is
-    * the index of the min-id centroid (the assignment for malformed
-    * and NaN-free-invalid rows).
-    */
-  def residualRow(emb: ArrayData, ids: Array[Long],
-      cents: Array[Array[Double]], rcb: Array[Array[Array[Double]]],
-      lut: Array[Array[Long]], minIdx: Int, isF: Boolean): InternalRow = {
-    val dim = cents(0).length
-    val subDim = rcb(0)(0).length
-    val bestK = assignIdx(emb, ids, cents, minIdx, isF)
-    val cvec = cents(bestK)
-    val embLen = if (emb == null) 0 else emb.numElements()
-    val usable = math.min(embLen, dim)
-    var acc = 0L
-    var s = 0
-    while (s < rcb.length) {
-      acc += lut(s)(residualCode(emb, cvec, rcb(s), s * subDim, subDim, usable, isF))
-      s += 1
-    }
-    new GenericInternalRow(Array[Any](ids(bestK), acc))
-  }
-
   /** [[ResidualCodesExpr]] per-row work: struct(cluster_id, codes) —
-    * the persisted-index projection of [[residualRow]] (identical
-    * assignment, identical per-window argmins; the codes are stored
-    * instead of folded through a query LUT).
+    * the assigned centroid and the residual codeword of every window,
+    * stored so a query-time LUT can score off the codes alone. `emb`
+    * may be null; `minIdx` is the index of the min-id centroid (the
+    * assignment for malformed rows).
     */
   def residualCodesRow(emb: ArrayData, ids: Array[Long],
       cents: Array[Array[Double]], rcb: Array[Array[Array[Double]]],
@@ -370,74 +332,7 @@ object AnnExprs {
     override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   }
 
-  /** Fused PQ encode + asymmetric-distance scoring: Σ_s lut(s)(code_s)
-    * as one loop — the per-row work of a PQ scan with the codebooks and
-    * the per-query LUT in registers.
-    */
-  case class PqAdcExpr(child: Expression, cb: Array[Array[Array[Double]]],
-      lut: Array[Array[Long]]) extends UnaryExpression {
-    require(cb.length == lut.length && cb.nonEmpty)
-    require(cb.indices.forall(s => cb(s).length == lut(s).length))
-
-    override def dataType: DataType = LongType
-    override def nullable: Boolean = false
-
-    @transient private lazy val isF = isFloatArr(child)
-
-    override def eval(input: InternalRow): Any = {
-      val v = child.eval(input)
-      java.lang.Long.valueOf(
-        pqAdcLong(if (v == null) null else v.asInstanceOf[ArrayData], cb, lut, isF))
-    }
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val cbRef = ctx.addReferenceObj("cb", cb, "double[][][]")
-      val lutRef = ctx.addReferenceObj("lut", lut, "long[][]")
-      staticCallGen(ctx, ev, child, "long",
-        arg => s"graft.functions.AnnExprs.pqAdcLong($arg, $cbRef, $lutRef, $isF)")
-    }
-
-    override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-  }
-
-  /** Residual IVFPQ per-row work fused into one expression:
-    * struct(cluster_id, res_e9) where cluster_id is the nearest
-    * centroid and res_e9 = Σ_s lut(s)(argmin codeword of the residual
-    * window s). The residual (emb − centroid, in doubles) is never
-    * materialized — each term is computed inline.
-    */
-  case class ResidualAdcExpr(child: Expression, ids: Array[Long],
-      cents: Array[Array[Double]], rcb: Array[Array[Array[Double]]],
-      lut: Array[Array[Long]]) extends UnaryExpression {
-    require(ids.length == cents.length && ids.nonEmpty)
-    require(rcb.length == lut.length && rcb.nonEmpty)
-
-    override def dataType: DataType = residualType
-    override def nullable: Boolean = false
-
-    @transient private lazy val isF = isFloatArr(child)
-    @transient private lazy val minIdx = ids.indexOf(ids.min)
-
-    override def eval(input: InternalRow): Any = {
-      val v = child.eval(input)
-      residualRow(if (v == null) null else v.asInstanceOf[ArrayData],
-        ids, cents, rcb, lut, minIdx, isF)
-    }
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val idsRef = ctx.addReferenceObj("ids", ids, "long[]")
-      val centsRef = ctx.addReferenceObj("cents", cents, "double[][]")
-      val rcbRef = ctx.addReferenceObj("rcb", rcb, "double[][][]")
-      val lutRef = ctx.addReferenceObj("lut", lut, "long[][]")
-      staticCallGen(ctx, ev, child, "org.apache.spark.sql.catalyst.InternalRow",
-        arg => s"graft.functions.AnnExprs.residualRow($arg, $idsRef, $centsRef, " +
-          s"$rcbRef, $lutRef, $minIdx, $isF)")
-    }
-
-    override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-  }
-
-  /** Persisted-index projection of [[ResidualAdcExpr]]:
+  /** Residual IVFPQ encode in one expression:
     * struct(cluster_id, codes) with the residual codeword per subspace —
     * what `PqIndex.writeResidualIndex` stores so a query-time LUT can
     * score candidates off the code columns alone.
@@ -477,13 +372,6 @@ object AnnExprs {
 
   def pqCodes(emb: Column, cb: Array[Array[Array[Double]]]): Column =
     ColumnBridge.column(PqCodesExpr(ColumnBridge.expression(emb), cb))
-
-  def pqAdc(emb: Column, cb: Array[Array[Array[Double]]], lut: Array[Array[Long]]): Column =
-    ColumnBridge.column(PqAdcExpr(ColumnBridge.expression(emb), cb, lut))
-
-  def residualAdc(emb: Column, ids: Array[Long], cents: Array[Array[Double]],
-      rcb: Array[Array[Array[Double]]], lut: Array[Array[Long]]): Column =
-    ColumnBridge.column(ResidualAdcExpr(ColumnBridge.expression(emb), ids, cents, rcb, lut))
 
   def residualCodes(emb: Column, ids: Array[Long], cents: Array[Array[Double]],
       rcb: Array[Array[Array[Double]]]): Column =

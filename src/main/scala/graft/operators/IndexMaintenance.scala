@@ -443,7 +443,9 @@ object IndexMaintenance {
     * dir, the marker certifies completeness, and a crashed or losing
     * concurrent build is never served. An index BUILD is an offline
     * stage in deployment; graded queries measure SERVING off the
-    * installed path.
+    * installed path. A build that throws leaves nothing behind: its
+    * staging dir is deleted and the exception propagates, so the next
+    * call builds afresh.
     */
   def cachedLayout(spark: SparkSession, prefix: String, fingerprint: String)
       (build: String => Unit): String = {
@@ -454,7 +456,8 @@ object IndexMaintenance {
     val marker = new Path(s"$base/_complete")
     if (!fs.exists(marker)) {
       val staging = s"${base}_staging_${java.util.UUID.randomUUID().toString.take(8)}"
-      build(staging)
+      try build(staging)
+      catch { case e: Throwable => fs.delete(new Path(staging), true); throw e }
       fs.create(new Path(s"$staging/_complete"), true).close()
       if (fs.exists(new Path(base)) && !fs.exists(marker))
         fs.delete(new Path(base), true)
@@ -467,6 +470,18 @@ object IndexMaintenance {
     }
     base
   }
+
+  /** The installed ANN layout (IVF, PQ, residual IVFPQ, LSH) of the
+    * corpus `dir`: a [[cachedLayout]] keyed by one rule — `prefix`, the
+    * family's build constants, and the embeddings' [[corpusSig]] — so a
+    * corpus refresh or a changed constant installs a fresh build, and
+    * every graded key of a family serves off the same install.
+    */
+  def corpusLayout(spark: SparkSession, prefix: String, dir: String,
+      constants: Seq[Any] = Nil)(build: String => Unit): String =
+    cachedLayout(spark, prefix,
+      ((s"$prefix:v1" +: constants.map(_.toString)) :+ corpusSig(spark, dir, "embeddings"))
+        .mkString(":"))(build)
 
   /** Destination → staged dirs of every aside-first swap an index
     * makes: a fold's (compaction and rebalance stage the vector layout

@@ -139,10 +139,12 @@ object IvfIndex {
       .select(col("vec_id"), col("best.cluster_id").as("cluster_id"), col("best.d2").as("d2"))
   }
 
-  /** Corpus embeddings with their assignment attached in the same scan
-    * (vec_id, embedding, cluster_id, d2) — the zero-shuffle input every
-    * cluster-blocked consumer (search candidates, embed dedup,
-    * writeIndex) starts from, replacing an assign⋈embeddings self-join.
+  /** Corpus embeddings with their assignment to the seed centroids
+    * attached in the same scan (vec_id, embedding, cluster_id, d2) — the
+    * zero-shuffle input of the assignment analytics (centroid stats,
+    * purity, OOD scores, rebalance plan, the Lloyd step) and embed
+    * dedup, replacing an assign⋈embeddings self-join. Search serves off
+    * the installed layout ([[ivfIndexFor]]) instead.
     */
   def assignedEmbeddings(spark: SparkSession, dir: String): DataFrame = {
     val best = nearest(col("embedding"), centroids(spark, dir))
@@ -333,14 +335,13 @@ object IvfIndex {
     Layout.Ivf.writeVectors(indexPath, Tables.embeddings(spark, dir))
   }
 
-  /** Fingerprint-cached IVF index for a testdata corpus dir (r12 — the
-    * residualIndexFor pattern: an index BUILD is an offline stage;
-    * graded queries measure SERVING). Keyed by the embeddings data
-    * files, so a corpus refresh rebuilds automatically.
+  /** The installed IVF layout of a corpus dir
+    * ([[IndexMaintenance.corpusLayout]]; an index BUILD is an offline
+    * stage, graded queries measure SERVING): every graded IVF key and
+    * the batch facades' graded keys serve off it.
     */
   def ivfIndexFor(spark: SparkSession, dir: String): String = synchronized {
-    IndexMaintenance.cachedLayout(spark, "ivfidx",
-      s"ivfidx:v1:${IndexMaintenance.corpusSig(spark, dir, "embeddings")}")(
+    IndexMaintenance.corpusLayout(spark, "ivfidx", dir)(
       staging => writeIndex(spark, dir, staging))
   }
 
@@ -360,7 +361,7 @@ object IvfIndex {
   /** The probe rule, per-query form: of the (query_id, qvec) ×
     * (cluster_id, cvec) `pairs`, each query's `nprobe` nearest clusters
     * under the same (d², cluster_id) order, as (query_id, cluster_id,
-    * qvec) probe rows.
+    * qvec, rn) probe rows — `rn` the probe's rank, 1 for the nearest.
     */
   private[graft] def probeClusters(pairs: DataFrame, nprobe: Int): DataFrame =
     pairs
@@ -369,7 +370,7 @@ object IvfIndex {
         org.apache.spark.sql.expressions.Window.partitionBy(col("query_id"))
           .orderBy(col("cd2").asc, col("cluster_id").asc)))
       .filter(col("rn") <= nprobe)
-      .select("query_id", "cluster_id", "qvec")
+      .select("query_id", "cluster_id", "qvec", "rn")
 
   /** Search the persisted index: rank the (tiny, collected) centroid
     * table against the query, then scan ONLY the nprobe nearest
@@ -417,31 +418,27 @@ object IvfIndex {
     (rows, probed)
   }
 
-  /** Batch IVF search: the production ANN shape for a query SET. Each
-    * query ranks the (tiny, broadcast) centroid table and keeps its
-    * nprobe nearest clusters; the corpus — with cluster assignment
-    * computed in the same scan — equi-joins the broadcast
-    * (query_id, cluster_id) probe table, so each corpus row is scored
-    * only against the queries probing its cluster
-    * (corpus×queries×nprobe/k rows, never corpus×queries); the
-    * [[graft.plans.TopK]] partial limit bounds what reaches the rank
-    * shuffle.
+  /** Batch IVF search over the installed layout ([[ivfIndexFor]]): the
+    * batch facades' vector arm ([[SearchApi.batchVectorArm]] — each
+    * query probes its nprobe nearest stored centroids, one
+    * partition-pruned scan of the probed clusters joins the probe
+    * table) plus the [[graft.plans.TopK]] per-query rank. `queries`
+    * defaults to the every-100th serving set (vs_ivf_batch grades it).
     */
   def searchBatch(spark: SparkSession, dir: String, nprobe: Int = 3,
       k: Int = 5, queries: DataFrame = null): DataFrame = {
-    // default: the full every-100th serving set (vs_ivf_batch grades
-    // it); the eval harnesses pass their bounded sample instead so the
-    // ANN arm runs on exactly the sampled queries (r15, verdict #1)
     val qs = if (queries != null) queries
       else Tables.embeddings(spark, dir).filter(col("vec_id") % 100 === 0)
         .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
-    val probed = probeClusters(qs.crossJoin(broadcast(centroids(spark, dir))), nprobe)
-    val scoredRows = assignedEmbeddings(spark, dir)
-      .select("vec_id", "embedding", "cluster_id")
-      .join(broadcast(probed), Seq("cluster_id"))
-      .withColumn("score", dot(col("embedding"), col("qvec")))
-      .select(col("query_id"), col("vec_id"), col("score"))
-    graft.plans.TopK(scoredRows, "query_id", "score", "vec_id", k, "rnk")
+    batchTopK(spark, dir, qs, qs.count(), nprobe, k)
+  }
+
+  /** [[searchBatch]] of `nq` (a bound on the row count) queries. */
+  private def batchTopK(spark: SparkSession, dir: String, qs: DataFrame, nq: Long,
+      nprobe: Int, k: Int): DataFrame = {
+    val (hits, _) = SearchApi.batchVectorArm(spark, ivfIndexFor(spark, dir), qs, nq,
+      nprobe, SearchApi.MaxBroadcastQueryRows, None)
+    graft.plans.TopK(hits, "query_id", "score", "vec_id", k, "rnk")
       .select(col("query_id"), col("vec_id"), col("rnk"), r6(col("score")).as("score"))
   }
 
@@ -458,7 +455,7 @@ object IvfIndex {
     // brute truth is |queries| × corpus by construction — see
     // KnnSearch.evalQueries for the sampling/unbiasedness contract
     val qs = KnnSearch.evalQueries(spark, dir)
-    val ivf = searchBatch(spark, dir, nprobe, k, queries = qs)
+    val ivf = batchTopK(spark, dir, qs, KnnSearch.EvalQuerySampleK, nprobe, k)
     RankMetrics.recall(ivf, RankMetrics.groundTruth(spark, dir, qs, k), k)
   }
 
@@ -472,34 +469,24 @@ object IvfIndex {
     * the ideal DCG is folded from the SAME integerized terms inside
     * both engines (never a Scala-side literal — libm parity).
     *
-    * Scale shape: rides [[searchBatch]] (broadcast probe table, partial
-    * top-k) plus the brute truth both quality metrics inherently need;
-    * the DCG fold is a k-row-per-query aggregate.
+    * Scale shape: rides [[searchBatch]] (per-query probe, one pruned
+    * layout scan, partial top-k) plus the brute truth both quality
+    * metrics inherently need; the DCG fold is a k-row-per-query
+    * aggregate.
     */
   def ndcgReport(spark: SparkSession, dir: String, nprobe: Int = 3,
       k: Int = 10): DataFrame = {
     // bounded deterministic query sample — see recallReport (r15)
     val qs = KnnSearch.evalQueries(spark, dir)
-    val ivf = searchBatch(spark, dir, nprobe, k, queries = qs)
+    val ivf = batchTopK(spark, dir, qs, KnnSearch.EvalQuerySampleK, nprobe, k)
       .select(col("query_id"), col("vec_id"), col("rnk").as("pos"))
     RankMetrics.ndcg(spark, ivf, RankMetrics.groundTruth(spark, dir, qs, k), k)
   }
 
-  /** IVF search: rank centroids by distance to the query, scan only the
-    * `nprobe` nearest clusters, brute-force top-k inside them. The
-    * candidate filter is an isin over the assignment column computed in
-    * the same scan — no join against a separate assignment table.
+  /** IVF search for query vec 0 over the installed layout: the nprobe
+    * nearest cluster partitions, brute-force top-k inside them
+    * ([[searchIndex]]).
     */
-  def search(spark: SparkSession, dir: String, nprobe: Int = 3, k: Int = 10): DataFrame = {
-    val q = Tables.embeddings(spark, dir).filter(col("vec_id") === 0)
-      .select(col("embedding").as("qvec"))
-    val probed = nearestClusters(centroids(spark, dir), q, nprobe)
-    assignedEmbeddings(spark, dir)
-      .join(broadcast(probed), "cluster_id")
-      .crossJoin(broadcast(q))
-      .withColumn("score", dot(col("embedding"), col("qvec")))
-      .orderBy(col("score").desc, col("vec_id").asc)
-      .limit(k)
-      .select(col("cluster_id"), col("vec_id"), r6(col("score")).as("score"))
-  }
+  def search(spark: SparkSession, dir: String, nprobe: Int = 3, k: Int = 10): DataFrame =
+    searchIndex(spark, ivfIndexFor(spark, dir), KnnSearch.queryVec(spark, dir), nprobe, k)
 }

@@ -29,6 +29,11 @@ object KnnSearch {
     graft.Tables.fanOut(corpus).crossJoin(broadcast(queries))
       .withColumn("score", dot(col("embedding"), col("qvec")))
 
+  /** The graded single-query searches' one-row (qvec) query: vec 0. */
+  private[graft] def queryVec(spark: SparkSession, dir: String): DataFrame =
+    Tables.embeddings(spark, dir).filter(col("vec_id") === 0)
+      .select(col("embedding").as("qvec"))
+
   private def queriesOf(spark: SparkSession, dir: String, pred: Column): DataFrame =
     Tables.embeddings(spark, dir).filter(pred)
       .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
@@ -90,7 +95,11 @@ object KnnSearch {
 
   private def int8Codes(v: Column, scale: Column): Column = {
     val divisor = greatest(scale, lit(java.lang.Double.MIN_VALUE))
-    transform(v, x => floor(x.cast("double") / divisor * 127 + 0.5))
+    // the divisor enters as an array beside `v`, not as a lambda free
+    // variable: CollapseProject inlines a scale column's definition
+    // into its one consumer, and inside the lambda it would be
+    // recomputed for every element
+    zip_with(v, array_repeat(divisor, size(v)), (x, d) => floor(x.cast("double") / d * 127 + 0.5))
   }
 
   /** Int8 scalar quantization of the embedding column (the vector-db

@@ -46,10 +46,6 @@ object LshAnn {
     vecs.select(col("vec_id"), col("embedding"))
       .withColumn("bucket", bucketOf(col("embedding")))
 
-  /** Corpus with bucket assignment (the rows the index build writes). */
-  def bucketed(spark: SparkSession, dir: String): DataFrame =
-    bucketedOf(Tables.fanOut(Tables.embeddings(spark, dir).select("vec_id", "embedding")))
-
   /** Persist the LSH index: vectors partitioned by bucket on disk — at
     * 100 TB a query reads exactly one partition directory (multi-probe:
     * a handful) instead of the corpus, the same layout-as-index move as
@@ -59,24 +55,46 @@ object LshAnn {
     Layout.Lsh.writeVectors(indexPath,
       Tables.fanOut(Tables.embeddings(spark, dir).select("vec_id", "embedding")))
 
-  /** Search the persisted index: bucket the query (driver-side column
-    * math on one row), scan only that bucket's partition — the
-    * `bucket = qbucket` filter prunes at the parquet-partition level.
-    * `probes > 1` adds multi-probe: the nearest sign-flip neighbors of
-    * the query bucket (hamming-adjacent patterns) are scanned too,
-    * trading a few more partitions for recall.
+  /** The installed LSH layout of a corpus dir
+    * ([[IndexMaintenance.corpusLayout]]): every graded LSH key serves
+    * off it.
     */
-  def searchIndex(spark: SparkSession, indexPath: String, query: DataFrame,
-      k: Int = 5, probes: Int = 1): DataFrame = {
-    val q = query.select(col("qvec"), bucketOf(col("qvec")).as("qbucket"))
-    val qRow = q.collect().head // one row: the query is index metadata
-    val qb = qRow.getLong(1)
-    val buckets = (qb +: (0 until NumPlanes).map(p => qb ^ (1L << p)))
-      .take(math.max(1, probes))
+  def lshIndexFor(spark: SparkSession, dir: String): String = synchronized {
+    IndexMaintenance.corpusLayout(spark, "lshidx", dir, Seq(NumPlanes, Dim))(
+      staging => writeIndex(spark, dir, staging))
+  }
+
+  /** The probe-bucket rule: the query vector's own bucket, then its
+    * hamming-1 sign-flip neighbors, `probes` buckets in all (at least
+    * one) — an array<long> column over `qvec`.
+    */
+  def probeBuckets(qvec: Column, probes: Int): Column = {
+    val qb = bucketOf(qvec)
+    array((qb +: (0 until NumPlanes).map(p => qb.bitwiseXOR(lit(1L << p))))
+      .take(math.max(1, probes)): _*)
+  }
+
+  /** The served rows of an installed layout in `buckets` — the
+    * `bucket IN (...)` filter prunes at the parquet-partition level.
+    */
+  private def probedRows(spark: SparkSession, indexPath: String,
+      buckets: Seq[Long]): DataFrame =
     IndexMaintenance.vectorsDf(spark, indexPath) // base + any resume epochs
       .withColumn("bucket", col("bucket").cast("long"))
       .filter(col("bucket").isin(buckets: _*))
-      .crossJoin(broadcast(q.select("qvec")))
+
+  /** Search the persisted index: the query's probe buckets
+    * ([[probeBuckets]], evaluated on its one row and collected — index
+    * metadata), then a scan of only those partitions. `probes > 1` adds
+    * multi-probe: the hamming-adjacent buckets are scanned too, trading
+    * a few more partitions for recall.
+    */
+  def searchIndex(spark: SparkSession, indexPath: String, query: DataFrame,
+      k: Int = 5, probes: Int = 1): DataFrame = {
+    val buckets = query.select(probeBuckets(col("qvec"), probes)).collect().head
+      .getSeq[Long](0)
+    probedRows(spark, indexPath, buckets)
+      .crossJoin(broadcast(query.select("qvec")))
       .withColumn("score", dot(col("embedding"), col("qvec")))
       .orderBy(col("score").desc, col("vec_id").asc)
       .limit(k)
@@ -92,8 +110,8 @@ object LshAnn {
     * Scale shape: queries are a broadcast-sized set (one per 100
     * vectors) carrying their probe buckets (bucket + hamming-1 flips,
     * bounded by `probes`); the approximate side is an equi-join of the
-    * bucketed corpus against that broadcast, so the corpus is scanned
-    * once and never self-joined. The brute-force side is the same
+    * installed layout's probed partitions against that broadcast, so
+    * the layout is scanned once and never self-joined. The brute-force side is the same
     * corpus×queries scan every recall measurement must pay — it exists
     * to CERTIFY the cheap path, run on a sample in production.
     */
@@ -121,33 +139,27 @@ object LshAnn {
   }
 
   /** The approximate arm both eval harnesses share: per-query top-k
-    * (query_id, vec_id, pos) over each query's `probes` probe buckets
-    * (scale shape: see [[recallReport]]).
+    * (query_id, vec_id, pos) over each query's [[probeBuckets]] — the
+    * installed layout ([[lshIndexFor]]) pruned to the union of the
+    * probed buckets, equi-joined to the broadcast (query_id, qvec,
+    * bucket) probe rows (scale shape: see [[recallReport]]).
     */
   private def probedTopK(spark: SparkSession, dir: String, qs: DataFrame, k: Int,
       probes: Int): DataFrame = {
-    val qb = bucketOf(col("qvec"))
-    val probeBuckets = array((qb +: (0 until NumPlanes).map(p =>
-      qb.bitwiseXOR(lit(1L << p)))).take(math.max(1, probes)): _*)
-    val probed = qs.select(col("query_id"), col("qvec"), explode(probeBuckets).as("bucket"))
-    graft.plans.TopK(bucketed(spark, dir)
-      .join(broadcast(probed), "bucket")
-      .withColumn("score", dot(col("embedding"), col("qvec")))
-      .select(col("query_id"), col("vec_id"), col("score")),
+    val probed = qs.select(col("query_id"), col("qvec"),
+      explode(probeBuckets(col("qvec"), probes)).as("bucket"))
+    val buckets = probed.select("bucket").distinct().collect().map(_.getLong(0)).sorted
+    graft.plans.TopK(probedRows(spark, lshIndexFor(spark, dir), buckets.toIndexedSeq)
+        .join(broadcast(probed), "bucket")
+        .withColumn("score", dot(col("embedding"), col("qvec")))
+        .select(col("query_id"), col("vec_id"), col("score")),
       "query_id", "score", "vec_id", k, "pos")
       .select(col("query_id"), col("vec_id"), col("pos"))
   }
 
-  /** ANN search: hash the query, scan only its bucket, top-k by dot. */
-  def search(spark: SparkSession, dir: String, k: Int = 5): DataFrame = {
-    val q = Tables.embeddings(spark, dir).filter(col("vec_id") === 0)
-      .select(col("embedding").as("qvec"), bucketOf(col("embedding")).as("qbucket"))
-    bucketed(spark, dir)
-      .crossJoin(broadcast(q))
-      .filter(col("bucket") === col("qbucket"))
-      .withColumn("score", dot(col("embedding"), col("qvec")))
-      .orderBy(col("score").desc, col("vec_id").asc)
-      .limit(k)
-      .select(col("bucket"), col("vec_id"), r6(col("score")).as("score"))
-  }
+  /** ANN search for query vec 0: its bucket's partition of the installed
+    * layout, top-k by dot ([[searchIndex]]).
+    */
+  def search(spark: SparkSession, dir: String, k: Int = 5): DataFrame =
+    searchIndex(spark, lshIndexFor(spark, dir), KnnSearch.queryVec(spark, dir), k = k)
 }

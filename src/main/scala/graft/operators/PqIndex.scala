@@ -17,9 +17,11 @@ import graft.functions.VectorFunctions._
   *  - [[subspaces]]: the split of a vector column into SubDim windows;
   *  - [[codebookMetaOf]]: a (s, code, cvec|rcvec) codebook table
   *    collected to [s][code][SubDim] doubles for the native expressions;
-  *  - [[adcTable]]: the per-query ADC lookup table (integerized partial
-  *    dot products), with [[adcLiteral]] its literal form and
-  *    [[codeSum]] the per-subspace lookup sum over stored code columns;
+  *  - [[adcTables]]: the per-query ADC lookup tables (integerized
+  *    partial dot products, one `array<bigint>` per subspace and query
+  *    row), with [[adcTable]] its collected one-query form,
+  *    [[adcLiteral]] that form's literal columns, and [[codeSum]] the
+  *    per-subspace lookup sum over stored code columns;
   *  - [[IvfIndex.probedPartitions]]: the probed-partition read of a
   *    persisted layout;
   *  - [[KnnSearch.rescore]]: the exact rescore tail.
@@ -72,44 +74,57 @@ object PqIndex {
     }
   }
 
-  private def codebookMeta(spark: SparkSession, dir: String): Array[Array[Array[Double]]] =
-    codebookMetaOf(codebooks(spark, dir), "cvec")
-
-  /** The integerized partial dot product of the query's window s
-    * against a codeword: lut[s][code] before collection.
+  /** The integerized partial dot product of the query's window `s`
+    * against a codeword: one ADC table entry.
     */
-  private def partialE9(codeword: Column): Column =
-    cents(dot(expr(s"slice(qvec, s * $SubDim + 1, $SubDim)"), codeword), 1e9)
+  private def partialE9(s: Int, codeword: Column): Column =
+    cents(dot(slice(col("qvec"), s * SubDim + 1, SubDim), codeword), 1e9)
 
-  /** The per-query ADC lookup table: lut[s][code] = the partial dot
-    * product of the one-row (qvec) `query`'s window s against codeword
-    * (s, code) of the `vec` column of `cbDf`. Computed with the same
-    * Spark fold the oracle mirrors, integerized BEFORE collection
-    * (floor(part·1e9+0.5) — the order-independent integer contract),
-    * then handed to the scan as NumSub×NumCodes longs: the table a PQ
-    * engine keeps in registers during the scan.
+  /** The per-query ADC lookup tables: `queries` with its `qvec` replaced
+    * by `lut_0..lut_{NumSub-1}`, where lut_s[code] is the partial dot
+    * product of the row's window s against codeword (s, code) of the
+    * collected codebook `cb` — one row per query, a map-side projection.
+    * Computed with the same Spark fold the oracle mirrors, integerized
+    * per entry (floor(part·1e9+0.5) — the order-independent integer
+    * contract): the table a PQ engine keeps in registers during the
+    * scan.
+    */
+  private[graft] def adcTables(cb: Array[Array[Array[Double]]], queries: DataFrame): DataFrame = {
+    require(cb.forall(_.length == NumCodes), "codebook must hold every code of every subspace")
+    queries.select(queries.columns.toIndexedSeq.filter(_ != "qvec").map(col) ++
+      cb.indices.map(s => transform(lit(cb(s)), cw => partialE9(s, cw)).as(s"lut_$s")): _*)
+  }
+
+  /** [[adcTables]] of the one-row (qvec) `query` against the `vec`
+    * codebook table `cbDf`, collected: NumSub×NumCodes longs.
     */
   private[graft] def adcTable(cbDf: DataFrame, vec: String, query: DataFrame): Array[Array[Long]] = {
-    val rows = cbDf.crossJoin(broadcast(query))
-      .select(col("s"), col("code").cast("long"), partialE9(col(vec)).as("e9"))
-      .collect()
-    Array.tabulate(NumSub) { s =>
-      val bySub = rows.filter(_.getInt(0) == s).map(r => r.getLong(1) -> r.getLong(2)).toMap
-      Array.tabulate(NumCodes)(c => bySub(c.toLong))
-    }
+    val row = adcTables(codebookMetaOf(cbDf, vec), query.select("qvec")).head()
+    Array.tabulate(NumSub)(s => row.getSeq[Long](s).toArray)
   }
 
   /** An ADC table as literal columns, one `array<bigint>` per subspace. */
   private[graft] def adcLiteral(lut: Array[Array[Long]]): Seq[Column] =
     lut.toSeq.map(codes => array(codes.toSeq.map(lit): _*))
 
-  /** Σ_s lut_s[`prefix`_s]: the approximate score read off a persisted
-    * layout's code columns — a literal-array `element_at` per subspace,
-    * fully codegen'd.
+  /** The literal ADC table of the one-row `query` against an installed
+    * layout's `vec` codebooks.
     */
-  private def codeSum(lut: Array[Array[Long]], prefix: String): Column =
-    adcLiteral(lut).zipWithIndex
-      .map { case (l, s) => element_at(l, col(s"${prefix}_$s") + 1) }.reduce(_ + _)
+  private def lutOf(spark: SparkSession, indexPath: String, vec: String,
+      query: DataFrame): Seq[Column] =
+    adcLiteral(adcTable(IndexMaintenance.layoutDf(spark, s"$indexPath/codebooks"), vec, query))
+
+  /** Σ_s lut_s[`prefix`_s]: the approximate score read off a persisted
+    * layout's code columns — an `element_at` per subspace, fully
+    * codegen'd. `lut` holds one `array<bigint>` per subspace: literals
+    * for one query ([[adcLiteral]]), joined [[adcTables]] columns for a
+    * batch.
+    */
+  private[graft] def codeSum(lut: Seq[Column], prefix: String): Column =
+    lut.zipWithIndex.map { case (l, s) => element_at(l, col(s"${prefix}_$s") + 1) }.reduce(_ + _)
+
+  private def codeCols(prefix: String): Seq[Column] =
+    (0 until NumSub).map(s => col(s"${prefix}_$s"))
 
   /** The persisted-layout projection — (vec_id, embedding, cluster_id,
     * code_0..code_{NumSub-1}) — for a (vec_id, embedding) frame against
@@ -127,102 +142,39 @@ object PqIndex {
       .select(col("vec_id") +: col("embedding") +: col("cluster_id") +: codeCols: _*)
   }
 
-  /** PQ encoding: nearest codeword per subspace (argmin d², tiebreak
-    * code) → (vec_id, s, code). All NumSub codes are computed in ONE
-    * native pass over the row (AnnExprs.PqCodesExpr) and unrolled with
-    * `posexplode` — a map-side projection, no join, no window, no
-    * shuffle of the corpus. `graft.PqHof.encodeHof` is the per-subspace
-    * `array_min`-over-structs formulation that defines the semantics
-    * (≡ the oracle's `row_number() OVER (ORDER BY d2, code) = 1`);
-    * AnnParitySpec pins row-for-row equality.
-    */
-  def encode(spark: SparkSession, dir: String): DataFrame = {
-    val cb = codebookMeta(spark, dir)
-    Tables.fanOut(Tables.embeddings(spark, dir).select("vec_id", "embedding"))
-      .select(col("vec_id"),
-        posexplode(graft.functions.AnnExprs.pqCodes(col("embedding"), cb)).as(Seq("s", "code")))
-  }
-
-  /** (vec_id, embedding, approx_e9) in a single corpus scan: per row,
-    * each subspace picks its nearest codeword and accumulates the LUT
-    * entry — encode + ADC scoring fused into ONE native loop
-    * (AnnExprs.PqAdcExpr; codebooks and LUT in registers). Zero joins,
-    * zero shuffles; the integer partial sums are order-free, so the
-    * result is bitwise the oracle's encode⋈lut⋈groupBy formulation.
-    * `graft.PqHof.adcScoredHof` is the interpreted-HOF twin defining
-    * the semantics; AnnParitySpec pins bitwise equality.
-    */
-  private def adcScored(spark: SparkSession, dir: String, q: DataFrame): DataFrame = {
-    val cb = codebookMeta(spark, dir)
-    val lut = adcTable(codebooks(spark, dir), "cvec", q)
-    Tables.fanOut(Tables.embeddings(spark, dir).select("vec_id", "embedding"))
-      .withColumn("approx_e9", graft.functions.AnnExprs.pqAdc(col("embedding"), cb, lut))
-  }
-
-  private def queryVec(spark: SparkSession, dir: String): DataFrame =
-    Tables.embeddings(spark, dir).filter(col("vec_id") === 0)
-      .select(col("embedding").as("qvec"))
-
-  /** Two-stage ANN: PQ approximate scores select a candidate set
-    * (ordered on the exact integer partial sums — fully deterministic),
-    * then only the candidates are re-ranked with the exact dot product.
-    * At scale stage one reads byte codes only (here: computes them in
-    * the scan); the float vectors are joined for `candidates` rows —
-    * broadcast, never shuffling the corpus.
+  /** Two-stage ANN over the installed PQ layout ([[pqIndexFor]]): PQ
+    * approximate scores read off the code columns of every partition
+    * (no probe) select a candidate set (ordered on the exact integer
+    * partial sums — fully deterministic), then only the candidates
+    * fetch their embedding and re-rank with the exact dot product.
     */
   def searchRerank(spark: SparkSession, dir: String, candidates: Int = 50,
       k: Int = 10): DataFrame = {
-    val q = queryVec(spark, dir)
-    val cand = adcScored(spark, dir, q)
-      .select("vec_id", "approx_e9")
-      .orderBy(col("approx_e9").desc, col("vec_id").asc)
-      .limit(candidates)
-    KnnSearch.rescore(
-        broadcast(cand).join(Tables.embeddings(spark, dir).select("vec_id", "embedding"), "vec_id")
-          .crossJoin(broadcast(q)), "qvec", k)
+    val q = KnnSearch.queryVec(spark, dir)
+    val idx = pqIndexFor(spark, dir)
+    val lut = lutOf(spark, idx, "cvec", q)
+    servedFromCodes(IndexMaintenance.vectorsDf(spark, idx), "code", q, candidates, k)(
+        _.withColumn("approx_e9", codeSum(lut, "code")))
       .select(col("vec_id"), r6(col("exact")).as("exact_score"),
         r6(col("approx_e9") / 1e9).as("approx_score"))
   }
 
   /** Composed IVF+PQ search — the production large-scale ANN layout
-    * (Faiss IVFPQ / Qdrant-with-quantization): the query probes the
-    * `nprobe` nearest IVF clusters, PQ/ADC approximate scores rank only
-    * the probed clusters' vectors into a candidate set, and candidates
-    * are rescored exactly. One corpus scan computes cluster assignment
-    * AND the fused encode+ADC score (both per-row literal argmins —
-    * zero shuffle); the probe table is a broadcast semi-join, so at
-    * scale (with the index written `partitionBy(cluster_id)`) the scan
-    * itself prunes to nprobe partitions and reads byte codes only.
+    * (Faiss IVFPQ / Qdrant-with-quantization) — for query vec 0 over
+    * the installed PQ layout ([[searchIndex]] on [[pqIndexFor]]).
     */
   def searchIvfPq(spark: SparkSession, dir: String, nprobe: Int = 3,
-      candidates: Int = 50, k: Int = 10): DataFrame = {
-    val q = queryVec(spark, dir)
-    val probed = IvfIndex.nearestClusters(IvfIndex.centroids(spark, dir), q, nprobe)
-    val cand = adcScored(spark, dir, q)
-      .withColumn("cluster_id",
-        IvfIndex.nearest(col("embedding"), IvfIndex.centroids(spark, dir))
-          .getField("cluster_id"))
-      .join(broadcast(probed), "cluster_id")
-      .select(col("cluster_id"), col("vec_id"), col("embedding"), col("approx_e9"))
-      .orderBy(col("approx_e9").desc, col("vec_id").asc)
-      .limit(candidates)
-    KnnSearch.rescore(cand.crossJoin(broadcast(q)), "qvec", k)
-      .select(col("cluster_id"), col("vec_id"),
-        r6(col("approx_e9") / 1e9).as("approx_score"), r6(col("exact")).as("score"))
-  }
+      candidates: Int = 50, k: Int = 10): DataFrame =
+    searchIndex(spark, pqIndexFor(spark, dir), KnnSearch.queryVec(spark, dir),
+      nprobe, candidates, k)
 
   /** Residual codebooks: the PQ sample vectors minus their assigned IVF
     * centroid (elementwise double subtraction — the same
     * `e[i]::DOUBLE − c[i]::DOUBLE` map the oracle runs), split into
-    * subspaces. Residuals are the quantity real IVFPQ encodes: they are
-    * centered near zero, so a shared codebook fits them far better than
-    * raw vectors.
-    */
-  def residualCodebooks(spark: SparkSession, dir: String): DataFrame =
-    residualCodebooksFrom(spark, dir, IvfIndex.centroids(spark, dir))
-
-  /** Same, against an explicit centroid table (so a build that already
-    * materialized the centroid pick does not re-run it).
+    * subspaces, against an explicit centroid table (the persisted one,
+    * at build time). Residuals are the quantity real IVFPQ encodes:
+    * they are centered near zero, so a shared codebook fits them far
+    * better than raw vectors.
     */
   private[graft] def residualCodebooksFrom(spark: SparkSession, dir: String,
       cents: DataFrame): DataFrame = {
@@ -237,51 +189,16 @@ object PqIndex {
           (a, b) => a.cast("double") - b.cast("double")).as("rvec")), "code", "rvec", "rcvec")
   }
 
-  /** (vec_id, embedding, cluster_id, res_e9) in ONE native corpus scan:
-    * cluster assignment, residual computation and residual-codeword
-    * argmin + LUT accumulation fused into a single tight loop per row
-    * (AnnExprs.ResidualAdcExpr) — the residual vector is never
-    * materialized. `graft.PqHof.residualScoredHof` defines the
-    * semantics; AnnParitySpec pins bitwise equality.
-    */
-  private def residualScored(spark: SparkSession, dir: String, q: DataFrame): DataFrame = {
-    val (ids, cvecs) = IvfIndex.centroidMeta(IvfIndex.centroids(spark, dir))
-    val ra = graft.functions.AnnExprs.residualAdc(col("embedding"), ids, cvecs,
-      codebookMetaOf(residualCodebooks(spark, dir), "rcvec"),
-      adcTable(residualCodebooks(spark, dir), "rcvec", q))
-    Tables.fanOut(Tables.embeddings(spark, dir).select("vec_id", "embedding"))
-      .withColumn("ra", ra)
-      .select(col("vec_id"), col("embedding"),
-        col("ra.cluster_id").as("cluster_id"), col("ra.res_e9").as("res_e9"))
-  }
-
   /** Residual IVF+PQ search — the faithful Faiss-IVFPQ layout: vectors
     * are PQ-encoded as RESIDUALS from their IVF centroid, and the
-    * inner-product score decomposes as dot(q, c) + Σ_s dot(q_s, r̂_s):
-    * a per-cluster constant (10 longs, broadcast) plus the residual-LUT
-    * sum. The corpus scan fuses cluster assignment, residual
-    * computation and residual-codeword argmin into one zero-shuffle
-    * projection; everything downstream of the scan handles `candidates`
-    * rows at most.
+    * inner-product score decomposes as dot(q, c) + Σ_s dot(q_s, r̂_s) —
+    * for query vec 0 over the installed residual layout
+    * ([[searchResidualIndex]] on [[residualIndexFor]]).
     */
   def searchIvfPqResidual(spark: SparkSession, dir: String, nprobe: Int = 3,
-      candidates: Int = 50, k: Int = 10): DataFrame = {
-    val q = queryVec(spark, dir)
-    val cents0 = IvfIndex.centroids(spark, dir)
-    val probed = IvfIndex.nearestClusters(cents0, q, nprobe)
-    val constDf = cents0.crossJoin(broadcast(q))
-      .select(col("cluster_id"), cents(dot(col("cvec"), col("qvec")), 1e9).as("const_e9"))
-    val cand = residualScored(spark, dir, q)
-      .join(broadcast(probed), "cluster_id")
-      .join(broadcast(constDf), "cluster_id")
-      .withColumn("approx_e9", col("const_e9") + col("res_e9"))
-      .select(col("cluster_id"), col("vec_id"), col("embedding"), col("approx_e9"))
-      .orderBy(col("approx_e9").desc, col("vec_id").asc)
-      .limit(candidates)
-    KnnSearch.rescore(cand.crossJoin(broadcast(q)), "qvec", k)
-      .select(col("cluster_id"), col("vec_id"),
-        r6(col("approx_e9") / 1e9).as("approx_score"), r6(col("exact")).as("score"))
-  }
+      candidates: Int = 50, k: Int = 10): DataFrame =
+    searchResidualIndex(spark, residualIndexFor(spark, dir), KnnSearch.queryVec(spark, dir),
+      nprobe, candidates, k)
 
   /** The persisted residual layout's row projection — (vec_id,
     * embedding, cluster_id, rcode_0..) — for a (vec_id, embedding)
@@ -307,11 +224,8 @@ object PqIndex {
     * alongside for rerank fetch. The centroids and the residual
     * codebooks (derived from the persisted centroids) are written
     * first, and the rows are [[Layout.Residual]] against them, so each
-    * is computed once. Encoding (assignment + per-window residual argmin) is
-    * the same shared native loops the fused in-memory path runs
-    * (AnnExprs.residualCodesRow ≡ residualRow's codes), so serving from
-    * the index reproduces the in-memory results exactly
-    * (PqResidualIndexedSpec).
+    * is computed once. Serving from the index reproduces the in-memory
+    * residual chain (`graft.PqHof`) exactly (PqResidualIndexedSpec).
     */
   def writeResidualIndex(spark: SparkSession, dir: String, indexPath: String): Unit = {
     IvfIndex.centroids(spark, dir).write.mode("overwrite").parquet(s"$indexPath/centroids")
@@ -327,8 +241,7 @@ object PqIndex {
     * RCODE COLUMNS alone over the probed partitions —
     * `approx_e9 = const_e9[cluster] + Σ_s rlut_s[rcode_s]` — and only
     * the top `candidates` rerank with exact dot products. Same output
-    * and ordering contract as [[searchIvfPqResidual]], bit-identical
-    * results at equal parameters.
+    * and ordering contract as the in-memory chain.
     */
   def searchResidualIndex(spark: SparkSession, indexPath: String, query: DataFrame,
       nprobe: Int = 3, candidates: Int = 50, k: Int = 10): DataFrame = {
@@ -337,7 +250,7 @@ object PqIndex {
       .crossJoin(broadcast(query))
       .filter(col("cluster_id").isin(probed.toIndexedSeq: _*))
       .select(col("cluster_id"), cents(dot(col("cvec"), col("qvec")), 1e9).as("const_e9"))
-    val lut = adcTable(IndexMaintenance.layoutDf(spark, s"$indexPath/codebooks"), "rcvec", query)
+    val lut = lutOf(spark, indexPath, "rcvec", query)
     servedFromCodes(vectors, "rcode", query, candidates, k)(
         _.join(broadcast(constDf), "cluster_id")
           .withColumn("approx_e9", col("const_e9") + codeSum(lut, "rcode")))
@@ -353,8 +266,7 @@ object PqIndex {
     */
   private def servedFromCodes(vectors: DataFrame, prefix: String, query: DataFrame,
       candidates: Int, k: Int)(score: DataFrame => DataFrame): DataFrame = {
-    val cand = score(vectors.select(col("vec_id") +: col("cluster_id") +:
-        (0 until NumSub).map(s => col(s"${prefix}_$s")): _*))
+    val cand = score(vectors.select(col("vec_id") +: col("cluster_id") +: codeCols(prefix): _*))
       .orderBy(col("approx_e9").desc, col("vec_id").asc)
       .limit(candidates)
       .select("vec_id", "cluster_id", "approx_e9")
@@ -362,42 +274,24 @@ object PqIndex {
       .crossJoin(broadcast(query)), "qvec", k)
   }
 
-  /** Fingerprint of the corpus the cached index build is keyed by
-    * (path + length + mtime of every embeddings data file, plus the
-    * quantizer parameters): a driver testdata refresh changes the
-    * fingerprint, so a stale cached index can never serve.
-    */
-  private def corpusFingerprint(spark: SparkSession, dir: String): String = {
-    val key = s"v1:$NumSub:$NumCodes:${IvfIndex.MaxCentroids}:" +
-      IndexMaintenance.corpusSig(spark, dir, "embeddings")
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(key.getBytes("UTF-8")).map("%02x".format(_)).mkString
-  }
-
-  /** The cached persisted residual index for a corpus dir: built once
-    * per corpus fingerprint under the system temp dir (an index BUILD
-    * is an offline stage at any deployment; queries measure SERVING),
-    * reused by every later call in any JVM on this host. The build
-    * goes to a UNIQUE staging dir with the `_complete` marker written
-    * inside, then renames atomically into place — two racing JVMs
-    * (or a crash) can never interleave files under the served path;
-    * whoever loses the rename discards its staging copy and serves the
-    * winner's (the IndexMaintenance marker-travels-with-the-swap
-    * pattern).
+  /** The installed residual IVFPQ layout of a corpus dir
+    * ([[IndexMaintenance.corpusLayout]], keyed by the quantizer
+    * constants too): every graded residual key serves off it.
     */
   def residualIndexFor(spark: SparkSession, dir: String): String = synchronized {
-    IndexMaintenance.cachedLayout(spark, "residx",
-      s"residx:v1:${corpusFingerprint(spark, dir)}")(
+    IndexMaintenance.corpusLayout(spark, "residx", dir,
+      Seq(NumSub, NumCodes, IvfIndex.MaxCentroids))(
       staging => writeResidualIndex(spark, dir, staging))
   }
 
-  /** Graded persisted-path twin of [[searchIvfPqResidual]]: identical
-    * results (same oracle), but served from the partition-pruned
-    * codes-only layout — the scan a 100 TB deployment runs, where the
-    * fused in-memory path re-encodes the corpus per query.
+  /** The installed PQ layout of a corpus dir, keyed like
+    * [[residualIndexFor]]: every graded PQ key serves off it.
     */
-  def searchResidualIndexed(spark: SparkSession, dir: String): DataFrame =
-    searchResidualIndex(spark, residualIndexFor(spark, dir), queryVec(spark, dir))
+  def pqIndexFor(spark: SparkSession, dir: String): String = synchronized {
+    IndexMaintenance.corpusLayout(spark, "pqidx", dir,
+      Seq(NumSub, NumCodes, IvfIndex.MaxCentroids))(
+      staging => writeIndex(spark, dir, staging))
+  }
 
   /** Persist the PQ index — the 100 TB serving layout (Faiss IVFPQ on
     * parquet): one row per vector with its IVF cluster as the PARTITION
@@ -412,7 +306,7 @@ object PqIndex {
     * and codebooks (index metadata, read once per query) are written
     * first, and the rows are [[Layout.Pq]] against them, so each is
     * computed once. PqIndexedSpec proves result parity with the in-memory
-    * fused paths and pins both prunings in the plan.
+    * fused chain and pins both prunings in the plan.
     */
   def writeIndex(spark: SparkSession, dir: String, indexPath: String): Unit = {
     IvfIndex.centroids(spark, dir).write.mode("overwrite").parquet(s"$indexPath/centroids")
@@ -427,14 +321,13 @@ object PqIndex {
     * alone — `approx_e9 = Σ_s lut_s[code_s]`, a literal-array
     * `element_at` per subspace, fully codegen'd — and rerank only the
     * top `candidates` with exact dot products fetched by vec_id from
-    * the probed partitions. Same output shape and ordering contract as
-    * [[searchIvfPq]].
+    * the probed partitions.
     */
   def searchIndex(spark: SparkSession, indexPath: String, query: DataFrame,
       nprobe: Int = 3, candidates: Int = 50, k: Int = 10,
       roundScore: Boolean = true): DataFrame = {
     val (vectors, _) = IvfIndex.probedPartitions(spark, indexPath, query, nprobe)
-    val lut = adcTable(IndexMaintenance.layoutDf(spark, s"$indexPath/codebooks"), "cvec", query)
+    val lut = lutOf(spark, indexPath, "cvec", query)
     servedFromCodes(vectors, "code", query, candidates, k)(
         _.withColumn("approx_e9", codeSum(lut, "code")))
       // roundScore=false keeps full precision so SearchApi.searchQuantized
@@ -444,16 +337,20 @@ object PqIndex {
         (if (roundScore) r6(col("exact")) else col("exact")).as("score"))
   }
 
-  /** Asymmetric-distance scoring against query vec 0: the approximate
-    * dot product is Σ_s dot(q_s, codeword(s, code_s)), reported next to
-    * the exact score and the absolute quantization error — both computed
-    * in the same single scan (no self-join on vec_id).
+  /** Asymmetric-distance scoring against query vec 0 over the installed
+    * PQ layout: the approximate dot product is Σ_s dot(q_s,
+    * codeword(s, code_s)) read off the stored codes ([[codeSum]]),
+    * reported next to the exact score and the absolute quantization
+    * error — both computed in the same single scan (no self-join on
+    * vec_id).
     */
   def search(spark: SparkSession, dir: String): DataFrame = {
-    val q = queryVec(spark, dir)
-    adcScored(spark, dir, q)
+    val q = KnnSearch.queryVec(spark, dir)
+    val idx = pqIndexFor(spark, dir)
+    val lut = lutOf(spark, idx, "cvec", q)
+    IndexMaintenance.vectorsDf(spark, idx)
       .crossJoin(broadcast(q))
-      .withColumn("approx_score", col("approx_e9") / 1e9)
+      .withColumn("approx_score", codeSum(lut, "code") / 1e9)
       .withColumn("exact_score", dot(col("embedding"), col("qvec")))
       .select(col("vec_id"),
         r6(col("approx_score")).as("approx_score"),
@@ -470,11 +367,14 @@ object PqIndex {
     * [[IvfIndex.recallReport]] / LshAnn.recallReport; reference
     * semantics: store_assets.py:40-77 quantization + rescore).
     *
-    * Scale shape: the probe ranks and the per-query ADC LUT are index
-    * metadata (queries × NumSub × NumCodes rows, broadcast); the
-    * corpus is touched by one codes projection restricted to the
-    * probed clusters, and every window partitions by (query, config) —
-    * bounded keys, never a corpus-wide sort.
+    * Scale shape: over the installed PQ layout ([[pqIndexFor]]). The
+    * probe ranks ([[IvfIndex.probeClusters]] at the largest nprobe) and
+    * the per-query ADC tables ([[adcTables]], one row per query) are
+    * index metadata, broadcast; the layout is touched by one codes-only
+    * scan joined to the probe rows and scored by [[codeSum]] — no
+    * (query, vector, subspace) row exists — and every window
+    * partitions by (query, config): bounded keys, never a corpus-wide
+    * sort.
     */
   def pqRecallReport(spark: SparkSession, dir: String, k: Int = 10): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -489,23 +389,20 @@ object PqIndex {
     // bounded deterministic query sample (r15, r14 verdict #1) — see
     // KnnSearch.evalQueries for the sampling/unbiasedness contract
     val qs = KnnSearch.evalQueries(spark, dir)
-    // per-query centroid ranks (index metadata)
-    val crank = qs.crossJoin(broadcast(IvfIndex.centroids(spark, dir)))
-      .withColumn("crn", row_number().over(Window.partitionBy(col("query_id"))
-        .orderBy(dist2(col("cvec"), col("qvec")).asc, col("cluster_id").asc)))
-      .filter(col("crn") <= maxNprobe)
-      .select(col("query_id"), col("cluster_id"), col("crn"))
-    // per-query ADC lookup table (integerized like the serving path)
-    val lut = codebooks(spark, dir).crossJoin(qs)
-      .select(col("query_id"), col("s"), col("code").cast("long").as("code"),
-        partialE9(col("cvec")).as("part_e9"))
+    val idx = pqIndexFor(spark, dir)
+    val vectors = IndexMaintenance.vectorsDf(spark, idx)
+      .withColumn("cluster_id", col("cluster_id").cast("long"))
+    val probe = IvfIndex.probeClusters(
+        qs.crossJoin(broadcast(IndexMaintenance.layoutDf(spark, s"$idx/centroids"))), maxNprobe)
+      .select(col("query_id"), col("cluster_id"), col("rn").as("crn"))
+    val luts = adcTables(
+      codebookMetaOf(IndexMaintenance.layoutDf(spark, s"$idx/codebooks"), "cvec"), qs)
     // approximate scores over probed vectors only
-    val approx = IvfIndex.assignedEmbeddings(spark, dir).select("vec_id", "cluster_id")
-      .join(broadcast(crank), "cluster_id")
-      .join(encode(spark, dir), "vec_id")
-      .join(broadcast(lut), Seq("query_id", "s", "code"))
-      .groupBy(col("query_id"), col("vec_id"), col("crn"))
-      .agg(sum(col("part_e9")).as("approx_e9"))
+    val approx = vectors.select(col("vec_id") +: col("cluster_id") +: codeCols("code"): _*)
+      .join(broadcast(probe), "cluster_id")
+      .join(broadcast(luts), "query_id")
+      .select(col("query_id"), col("vec_id"), col("crn"),
+        codeSum(codeCols("lut"), "code").as("approx_e9"))
     // per-config candidate cut, then exact rerank of candidates only
     val cands = approx.crossJoin(configs).filter(col("crn") <= col("nprobe"))
       .withColumn("arn", row_number().over(
@@ -513,7 +410,7 @@ object PqIndex {
           .orderBy(col("approx_e9").desc, col("vec_id").asc)))
       .filter(col("arn") <= maxCandidates && col("arn") <= col("candidates"))
     val topPq = KnnSearch.rescore(cands
-        .join(Tables.embeddings(spark, dir).select("vec_id", "embedding"), "vec_id")
+        .join(vectors.select("vec_id", "embedding"), "vec_id")
         .join(broadcast(qs), "query_id"), "qvec", k,
         within = Seq(col("query_id"), col("nprobe"), col("candidates")))
       .select(col("query_id"), col("nprobe"), col("candidates"), col("vec_id"),

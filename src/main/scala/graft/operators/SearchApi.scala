@@ -185,7 +185,8 @@ object SearchApi {
     (qs, if (numQueries >= 0) numQueries else qs.count())
   }
 
-  /** The batch facades' vector arm: every query of `qs` probes its
+  /** The batch facades' vector arm, which [[IvfIndex.searchBatch]] and
+    * the IVF eval harnesses rank too: every query of `qs` probes its
     * `nprobe` nearest clusters of the installed centroid table
     * ([[IvfIndex.probeClusters]]); ONE partition-pruned scan of the
     * union of probed clusters equi-joins the (query_id, cluster_id,
@@ -202,7 +203,7 @@ object SearchApi {
     * each join degrades to its shuffle shape with bit-identical rows
     * (SearchManySpec pins both shapes).
     */
-  private def batchVectorArm(spark: SparkSession, indexPath: String,
+  private[graft] def batchVectorArm(spark: SparkSession, indexPath: String,
       qs: DataFrame, nq: Long, nprobe: Int, maxBroadcastRows: Long,
       moreIds: Option[DataFrame]): (DataFrame, Array[Long]) = {
     def gated(df: DataFrame, rows: Long): DataFrame =

@@ -5,15 +5,18 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.AnnExprs
 import graft.operators.{IvfIndex, PqIndex}
 
-/** The native ANN expressions (NearestCentroidExpr, PqCodesExpr,
-  * PqAdcExpr, ResidualAdcExpr) must agree EXACTLY with the HOF
+/** The native ANN expressions must agree EXACTLY with the HOF
   * formulations that define their semantics (and that the DuckDB
   * oracle mirrors) — on the whole sf0.001 corpus, on degenerate
   * embeddings (NULL, empty, short, long, null elements), and on seeded
-  * random vectors.
+  * random vectors: NearestCentroidExpr directly, and the PQ and
+  * residual encoders the way a query serves them — the stored codes of
+  * the layouts' row projections (`PqIndex.indexRows`,
+  * `PqIndex.residualIndexRows`) summed through the ADC table
+  * (`PqIndex.codeSum`) — against `PqHof.adcScoredHof` /
+  * `PqHof.residualScoredHof`'s folds.
   */
 class AnnParitySpec extends AnyFunSuite {
   import SparkSuite._
@@ -55,16 +58,26 @@ class AnnParitySpec extends AnyFunSuite {
   }
 
   private def invokeAdc(native: Boolean): DataFrame =
-    if (native) {
-      // adcScored is private; search exposes approx_score = approx_e9/1e9
-      // rounded — instead drive the expression directly with the same
-      // metadata the operator collects
-      val cb = cbMeta()
-      val lut = lutMeta()
-      Tables.embeddings(spark, Sf).select(col("vec_id"), col("embedding"))
-        .withColumn("approx_e9", AnnExprs.pqAdc(col("embedding"), cb, lut))
-        .select("vec_id", "approx_e9")
-    } else PqHof.adcScoredHof(spark, Sf, q).select("vec_id", "approx_e9")
+    if (native)
+      pqServed(Tables.embeddings(spark, Sf).select(col("vec_id"), col("embedding")),
+        cbMeta(), lutMeta()).select(col("vec_id"), col("n_e9").as("approx_e9"))
+    else PqHof.adcScoredHof(spark, Sf, q).select("vec_id", "approx_e9")
+
+  /** (vec_id, n_e9, codes): `df`'s stored PQ codes and their ADC score. */
+  private def pqServed(df: DataFrame, cb: Array[Array[Array[Double]]],
+      lut: Array[Array[Long]]): DataFrame =
+    PqIndex.indexRows(df, IvfIndex.centroids(spark, Sf), cb)
+      .select(col("vec_id"), PqIndex.codeSum(PqIndex.adcLiteral(lut), "code").as("n_e9"),
+        array((0 until PqIndex.NumSub).map(s => col(s"code_$s").cast("long")): _*).as("codes"))
+
+  /** (vec_id, n_cl, n_e9): `df`'s stored residual layout row — cluster
+    * and residual codes — and the codes' residual ADC score.
+    */
+  private def residualServed(df: DataFrame, rcb: Array[Array[Array[Double]]],
+      lut: Array[Array[Long]]): DataFrame =
+    PqIndex.residualIndexRows(df, IvfIndex.centroids(spark, Sf), rcb)
+      .select(col("vec_id"), col("cluster_id").as("n_cl"),
+        PqIndex.codeSum(PqIndex.adcLiteral(lut), "rcode").as("n_e9"))
 
   // the metadata both folds run over, from the production quantized core
   private def cbMeta(): Array[Array[Array[Double]]] =
@@ -74,7 +87,7 @@ class AnnParitySpec extends AnyFunSuite {
     PqIndex.adcTable(PqIndex.codebooks(spark, Sf), "cvec", q)
 
   test("pq encode: native == HOF row-for-row") {
-    val n = PqIndex.encode(spark, Sf).collect()
+    val n = PqHof.encode(spark, Sf).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
     val h = PqHof.encodeHof(spark, Sf).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
@@ -84,13 +97,8 @@ class AnnParitySpec extends AnyFunSuite {
   test("residual ivfpq: native == HOF on the whole corpus") {
     val n = PqHof.residualScoredHof(spark, Sf, q)
       .select(col("vec_id"), col("cluster_id").as("h_cl"), col("res_e9").as("h_e9"))
-    val cents = IvfIndex.centroids(spark, Sf)
-    val (ids, cvecs) = IvfIndex.centroidMeta(cents)
-    val rcb = rcbMeta()
-    val lut = rLutMeta()
-    val nat = Tables.embeddings(spark, Sf).select(col("vec_id"), col("embedding"))
-      .withColumn("ra", AnnExprs.residualAdc(col("embedding"), ids, cvecs, rcb, lut))
-      .select(col("vec_id"), col("ra.cluster_id").as("n_cl"), col("ra.res_e9").as("n_e9"))
+    val nat = residualServed(
+      Tables.embeddings(spark, Sf).select(col("vec_id"), col("embedding")), rcbMeta(), rLutMeta())
     val both = nat.join(n, "vec_id").collect()
     assert(both.nonEmpty)
     both.foreach { r =>
@@ -100,10 +108,10 @@ class AnnParitySpec extends AnyFunSuite {
   }
 
   private def rcbMeta(): Array[Array[Array[Double]]] =
-    PqIndex.codebookMetaOf(PqIndex.residualCodebooks(spark, Sf), "rcvec")
+    PqIndex.codebookMetaOf(PqHof.residualCodebooks(spark, Sf), "rcvec")
 
   private def rLutMeta(): Array[Array[Long]] =
-    PqIndex.adcTable(PqIndex.residualCodebooks(spark, Sf), "rcvec", q)
+    PqIndex.adcTable(PqHof.residualCodebooks(spark, Sf), "rcvec", q)
 
   // ---- degenerate embeddings --------------------------------------------
 
@@ -171,11 +179,9 @@ class AnnParitySpec extends AnyFunSuite {
     val lut = lutMeta()
     val hofE9 = PqHof.adcE9(col("embedding"), PqHof.codebookLiteral(cb, "cvec"), "cvec",
       PqHof.lutLiteral(lut))
-    val got = degenerate
-      .select(col("vec_id"),
-        AnnExprs.pqAdc(col("embedding"), cb, lut).as("n"),
-        hofE9.as("h"),
-        AnnExprs.pqCodes(col("embedding"), cb).as("codes"))
+    val got = pqServed(degenerate, cb, lut)
+      .join(degenerate.select(col("vec_id"), hofE9.as("h")), "vec_id")
+      .select("vec_id", "n_e9", "h", "codes")
       .collect()
     got.foreach { r =>
       assert(r.getLong(1) === r.getLong(2), s"adc: $r")
@@ -187,18 +193,14 @@ class AnnParitySpec extends AnyFunSuite {
   }
 
   test("degenerate embeddings: residual native == HOF chain") {
-    val cents = IvfIndex.centroids(spark, Sf)
-    val (ids, cvecs) = IvfIndex.centroidMeta(cents)
-    val centsLit = IvfIndex.centroidLiteral(cents)
+    val centsLit = IvfIndex.centroidLiteral(IvfIndex.centroids(spark, Sf))
     val rcb = rcbMeta()
     val lut = rLutMeta()
     val resE9 = PqHof.adcE9(col("rvec"), PqHof.codebookLiteral(rcb, "rcvec"), "rcvec",
       PqHof.lutLiteral(lut))
     val hof = PqHof.withResidual(degenerate, centsLit)
       .select(col("vec_id"), col("cluster_id").as("h_cl"), resE9.as("h_e9"))
-    val nat = degenerate
-      .withColumn("ra", AnnExprs.residualAdc(col("embedding"), ids, cvecs, rcb, lut))
-      .select(col("vec_id"), col("ra.cluster_id").as("n_cl"), col("ra.res_e9").as("n_e9"))
+    val nat = residualServed(degenerate, rcb, lut)
     val both = nat.join(hof, "vec_id").collect()
     assert(both.length === 10)
     both.foreach { r =>
@@ -275,9 +277,10 @@ class AnnParitySpec extends AnyFunSuite {
     val got = df
       .withColumn("n", IvfIndex.nearest(col("embedding"), cents0))
       .withColumn("h", PqHof.nearestHof(col("embedding"), centsLit))
+      .join(pqServed(df, cb, lut), "vec_id")
       .select(col("vec_id"),
         col("n.d2"), col("n.cluster_id"), col("h.d2"), col("h.cluster_id"),
-        AnnExprs.pqAdc(col("embedding"), cb, lut).as("n_e9"), hofE9.as("h_e9"))
+        col("n_e9"), hofE9.as("h_e9"))
       .collect()
     assert(got.length === 201)
     got.foreach { r =>

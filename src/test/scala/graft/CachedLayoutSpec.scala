@@ -8,7 +8,8 @@ import graft.operators.IndexMaintenance
   * lexIndexFor / residualIndexFor / dropStateFor / ivfIndexFor all ride
   * it). Pins: build runs once per fingerprint; a crashed partial (base
   * present, no `_complete` marker) is cleared and rebuilt rather than
-  * served; different fingerprints get different installs.
+  * served; a build that throws leaves no staging dir; different
+  * fingerprints get different installs.
   */
 class CachedLayoutSpec extends AnyFunSuite {
   import SparkSuite._
@@ -53,6 +54,28 @@ class CachedLayoutSpec extends AnyFunSuite {
     assert(!new java.io.File(s"$p1/stale").exists(),
       "stale partial contents survived the reinstall")
     assert(new java.io.File(s"$p1/_complete").exists())
+  }
+
+  test("a build that throws leaves nothing behind; the next build installs clean rows") {
+    import spark.implicits._
+    val prefix = freshPrefix()
+    def installed = new java.io.File(sys.props("java.io.tmpdir")).listFiles()
+      .map(_.getName).filter(_.startsWith(s"graft_${prefix}_")).toSeq
+    val boom = new IllegalStateException("build failed after writing centroids")
+    val thrown = intercept[IllegalStateException] {
+      IndexMaintenance.cachedLayout(spark, prefix, "fp-fail") { staging =>
+        Seq((1L, "bad")).toDF("cluster_id", "tag").write.parquet(s"$staging/centroids")
+        throw boom
+      }
+    }
+    assert(thrown eq boom)
+    assert(installed.isEmpty, s"a failed build left ${installed.mkString(", ")} behind")
+    val p = IndexMaintenance.cachedLayout(spark, prefix, "fp-fail") { staging =>
+      Seq((2L, "good")).toDF("cluster_id", "tag").write.parquet(s"$staging/centroids")
+    }
+    assert(spark.read.parquet(s"$p/centroids").as[(Long, String)].collect().toSeq ===
+      Seq((2L, "good")))
+    assert(installed === Seq(new java.io.File(p).getName))
   }
 
   test("fingerprints key separate installs") {

@@ -141,7 +141,7 @@ class IndexStreamSpec extends AnyFunSuite {
     val b = PqIndex.searchResidualIndex(spark, fullIdx, query).collect()
     assert(a.map(_.toString).toSeq === b.map(_.toString).toSeq)
     assert(a.map(_.toString).toSeq ===
-      PqIndex.searchIvfPqResidual(spark, Sf).collect().map(_.toString).toSeq)
+      InMemoryAnn.searchIvfPqResidual(spark, Sf).collect().map(_.toString).toSeq)
   }
 
   test("stream-appended LSH index serves identically to the batch-built one") {

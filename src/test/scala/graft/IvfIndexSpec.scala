@@ -20,7 +20,7 @@ class IvfIndexSpec extends AnyFunSuite {
   test("persisted index search matches the inline IVF search") {
     val got = IvfIndex.searchIndex(spark, indexPath, query)
       .collect().map(r => (r.getLong(1), r.getDouble(2))).toSeq
-    val want = IvfIndex.search(spark, Sf)
+    val want = InMemoryAnn.ivfSearch(spark, Sf)
       .collect().map(r => (r.getLong(1), r.getDouble(2))).toSeq
     assert(got === want)
   }

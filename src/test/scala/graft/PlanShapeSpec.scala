@@ -33,14 +33,15 @@ class PlanShapeSpec extends AnyFunSuite {
   // windows): every rank shuffle must carry at most k rows per group per
   // map partition, i.e. have a Partial WindowGroupLimit below it —
   // counted off executedPlan nodes (RankExchanges), keyed by each rank's
-  // first order column. The hybrid facade's twin check lives in
-  // SearchManySpec.
+  // first order column; a cached frame's ranks count too. The IVF keys
+  // rank their probes ("cd2") in the batch vector arm. The hybrid
+  // facade's twin check lives in SearchManySpec.
   Seq(
     "vs_knn_join" -> Set("score"),
     "vs_knn_classify" -> Set("score"),
     "vs_ivf_batch" -> Set("score", "cd2"),
-    "vs_ivf_recall" -> Set("score"),
-    "vs_ndcg" -> Set("score"),
+    "vs_ivf_recall" -> Set("score", "cd2"),
+    "vs_ndcg" -> Set("score", "cd2"),
     "vs_lsh_recall" -> Set("score"),
     "vs_lsh_ndcg" -> Set("score"),
     "vs_pq_recall" -> Set("score", "approx_e9"),
@@ -85,7 +86,7 @@ class PlanShapeSpec extends AnyFunSuite {
   }
 
   test("PQ encoding never shuffles the corpus on a key") {
-    val df = graft.operators.PqIndex.encode(spark, Sf)
+    val df = PqHof.encode(spark, Sf)
     df.collect()
     assertNoKeyShuffle(df.queryExecution.executedPlan.toString)
   }
@@ -138,6 +139,20 @@ class PlanShapeSpec extends AnyFunSuite {
     val p = df.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
     assert(!p.contains("Window"), p)
     assert(!p.contains("SortMergeJoin"), p)
+  }
+
+  test("quantized search computes the query's int8 scale once per row, outside qq's lambda") {
+    import org.apache.spark.sql.catalyst.expressions.{Alias, ArrayMax, LambdaFunction}
+    val df = SparkEntry.queries("vs_quantized_search")(spark, Sf)
+    val qq = df.queryExecution.optimizedPlan.flatMap(_.expressions)
+      .flatMap(_.collect { case a: Alias if a.name == "qq" => a })
+    assert(qq.nonEmpty, df.queryExecution.optimizedPlan.toString)
+    qq.foreach { a =>
+      val lambdas = a.collect { case l: LambdaFunction => l }
+      assert(lambdas.nonEmpty, a.sql)
+      assert(!lambdas.exists(_.exists(_.isInstanceOf[ArrayMax])),
+        s"the scale is recomputed per element: ${a.sql}")
+    }
   }
 
   test("gopher rules and entropy are single-scan map-side projections") {

@@ -8,9 +8,9 @@ import graft.operators.PqIndex.{NumSub, SubDim}
 
 /** The PQ expressions' semantic definitions as Spark `transform` /
   * `aggregate` / `array_min` trees over literal metadata — the parity
-  * references for the native NearestCentroidExpr, PqCodesExpr, PqAdcExpr
-  * and ResidualAdcExpr (AnnParitySpec), and the formulations the DuckDB
-  * oracle mirrors.
+  * references for the native NearestCentroidExpr, PqCodesExpr and
+  * ResidualCodesExpr scored through `PqIndex.codeSum` (AnnParitySpec),
+  * and the formulations the DuckDB oracle mirrors.
   * Interpreted per element: spec-only. The metadata itself comes from
   * the production quantized core (`PqIndex.codebookMetaOf`,
   * `PqIndex.adcTable`), so a parity check compares the two folds over
@@ -61,7 +61,23 @@ object PqHof {
     PqIndex.subspaces(Tables.fanOut(Tables.embeddings(spark, dir).select("vec_id", "embedding")),
       "vec_id", "embedding", "subvec")
 
-  /** HOF twin of `PqIndex.encode`: (vec_id, s, code). */
+  /** The native PQ encode: (vec_id, s, code), all NumSub codes of a
+    * row in one PqCodesExpr pass, unrolled with `posexplode`.
+    */
+  def encode(spark: SparkSession, dir: String): DataFrame = {
+    val cb = PqIndex.codebookMetaOf(PqIndex.codebooks(spark, dir), "cvec")
+    Tables.fanOut(Tables.embeddings(spark, dir).select("vec_id", "embedding"))
+      .select(col("vec_id"),
+        posexplode(graft.functions.AnnExprs.pqCodes(col("embedding"), cb)).as(Seq("s", "code")))
+  }
+
+  /** Residual codebooks against the seed centroids (an index build
+    * derives them from its persisted centroids, the same table).
+    */
+  def residualCodebooks(spark: SparkSession, dir: String): DataFrame =
+    PqIndex.residualCodebooksFrom(spark, dir, IvfIndex.centroids(spark, dir))
+
+  /** HOF twin of [[encode]]: (vec_id, s, code). */
   def encodeHof(spark: SparkSession, dir: String): DataFrame = {
     val cb = cbLiteral(spark, dir)
     subvectors(spark, dir)
@@ -71,7 +87,10 @@ object PqHof {
       .select(col("vec_id"), col("s"), col("best.code").as("code"))
   }
 
-  /** HOF twin of `PqIndex.adcScored`: (vec_id, embedding, approx_e9). */
+  /** The fused in-memory PQ score: (vec_id, embedding, approx_e9) —
+    * per row, each subspace's nearest codeword looked up in the query's
+    * ADC table; what a query over the stored codes computes.
+    */
   def adcScoredHof(spark: SparkSession, dir: String, q: DataFrame): DataFrame = {
     val lut = lutLiteral(PqIndex.adcTable(PqIndex.codebooks(spark, dir), "cvec", q))
     Tables.fanOut(Tables.embeddings(spark, dir).select("vec_id", "embedding"))
@@ -91,11 +110,12 @@ object PqHof {
       .withColumn("rvec", zip_with(col("embedding"), col("cvec"),
         (a, b) => a.cast("double") - b.cast("double")))
 
-  /** HOF twin of `PqIndex.residualScored`: (vec_id, embedding,
-    * cluster_id, res_e9).
+  /** The fused in-memory residual IVFPQ score: (vec_id, embedding,
+    * cluster_id, res_e9) — nearest centroid, residual, and the residual
+    * codewords looked up in the query's residual ADC table.
     */
   def residualScoredHof(spark: SparkSession, dir: String, q: DataFrame): DataFrame = {
-    val rcb = PqIndex.residualCodebooks(spark, dir)
+    val rcb = residualCodebooks(spark, dir)
     val rcbLit = codebookLiteral(PqIndex.codebookMetaOf(rcb, "rcvec"), "rcvec")
     val lut = lutLiteral(PqIndex.adcTable(rcb, "rcvec", q))
     withResidual(Tables.fanOut(Tables.embeddings(spark, dir).select("vec_id", "embedding")),

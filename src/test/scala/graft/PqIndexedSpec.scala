@@ -28,7 +28,7 @@ class PqIndexedSpec extends AnyFunSuite {
       .select(col("embedding").as("qvec"))
 
   test("persisted search == in-memory fused searchIvfPq, row for row") {
-    val mem = PqIndex.searchIvfPq(spark, Sf, nprobe = 3).collect().toSeq
+    val mem = InMemoryAnn.searchIvfPq(spark, Sf, nprobe = 3).collect().toSeq
     val disk = PqIndex.searchIndex(spark, indexPath, query, nprobe = 3).collect().toSeq
     assert(mem.nonEmpty)
     assert(disk === mem)
@@ -111,7 +111,7 @@ class PqIndexedSpec extends AnyFunSuite {
     assert(stats.getLong(0) === Tables.embeddings(spark, Sf).count())
     assert(stats.getInt(1) < PqIndex.NumCodes && stats.getInt(2) >= 0)
     // stored codes match the live encoder exactly
-    val live = PqIndex.encode(spark, Sf)
+    val live = PqHof.encode(spark, Sf)
       .groupBy(col("vec_id")).pivot("s").agg(first(col("code")))
     val stored = codes.select(col("vec_id") +:
       (0 until PqIndex.NumSub).map(s => col(s"code_$s").cast("long").as(s"code_$s")): _*)

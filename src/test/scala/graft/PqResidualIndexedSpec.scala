@@ -14,8 +14,8 @@ class PqResidualIndexedSpec extends AnyFunSuite {
   import SparkSuite._
 
   test("persisted residual search == in-memory searchIvfPqResidual, both prunings pinned") {
-    val want = PqIndex.searchIvfPqResidual(spark, Sf).collect().map(_.toString).toSeq
-    val got = PqIndex.searchResidualIndexed(spark, Sf)
+    val want = InMemoryAnn.searchIvfPqResidual(spark, Sf).collect().map(_.toString).toSeq
+    val got = PqIndex.searchIvfPqResidual(spark, Sf)
     assert(got.collect().map(_.toString).toSeq === want)
 
     // rebuild against a throwaway path to pin the plan without the cache

@@ -5,6 +5,7 @@ import org.apache.spark.sql.execution.{FilterExec, InputAdapter, SortExec, Spark
   WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, AdaptiveSparkPlanExec,
   QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.window.{Final, Partial, WindowExec, WindowGroupLimitExec}
 
@@ -13,12 +14,14 @@ import org.apache.spark.sql.execution.window.{Final, Partial, WindowExec, Window
   * whose input arrives through a shuffle. Each comes back as (the
   * window's first order key, whether a Partial-mode `WindowGroupLimit`
   * sits directly below that shuffle — the map-side bound that ships at
-  * most k rows per group per partition).
+  * most k rows per group per partition). A cached frame's plan is
+  * searched too: its rank shuffles run when the cache is built.
   */
 object RankExchanges {
   private def children(p: SparkPlan): Seq[SparkPlan] = p match {
     case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
     case s: QueryStageExec => Seq(s.plan)
+    case m: InMemoryTableScanExec => Seq(m.relation.cachedPlan)
     case _ => p.children
   }
 

@@ -86,7 +86,7 @@ class RecallSpec extends AnyFunSuite {
     val q = Tables.embeddings(spark, Sf).filter(col("vec_id") === 0)
       .select(col("embedding").as("qvec"))
     val fromIndex = graft.operators.LshAnn.searchIndex(spark, idx, q)
-    val inMemory = graft.operators.LshAnn.search(spark, Sf)
+    val inMemory = InMemoryAnn.lshSearch(spark, Sf)
     assert(fromIndex.collect().map(_.toString).toSeq ===
       inMemory.collect().map(_.toString).toSeq)
     val plan = fromIndex.queryExecution.executedPlan.toString
