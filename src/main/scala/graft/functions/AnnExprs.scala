@@ -3,7 +3,8 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode,
+  FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -40,13 +41,10 @@ import org.apache.spark.sql.types._
   *
   * Semantics twins (what the DuckDB oracle mirrors, and what the parity
   * specs pin bitwise — including the degenerate inputs):
-  *  - [[NearestCentroidExpr]] ≡ `graft.PqHof.nearestHof`: `array_min` over
-  *    struct(dist2(emb, cvec), cluster_id). A malformed embedding
-  *    (NULL, wrong length, or a null element) makes every d² NULL, and
-  *    struct ordering sorts NULL d² first → (NULL, min cluster_id).
-  *    All comparisons use `java.lang.Double.compare` seeded from the
-  *    first centroid — Spark's total ordering (NaN == NaN, NaN after
-  *    +Inf) — so a NaN element yields (NaN, min id), not seed leakage.
+  *  - [[NearestCentroidExpr]] ≡ `graft.PqHof.nearestHof` (`array_min` over
+  *    struct(dist2(emb, cvec), cluster_id)), [[ProbeExpr]] ≡ the relational
+  *    probes of `graft.InMemoryAnn` (`ORDER BY dist2(cvec, qvec), cluster_id`):
+  *    [[nearestRow]] at n = 1 and at n = nprobe.
   *  - [[PqCodesExpr]] ≡ the PQ encode: per subspace s, argmin over
   *    codewords of dist2(slice(emb, s·SubDim+1, SubDim), cvec)
   *    (tiebreak smaller code). A window that runs past the embedding
@@ -129,38 +127,58 @@ object AnnExprs {
   // (an `object`'s public methods get Java static forwarders, so the
   // generated Java calls graft.functions.AnnExprs.<name> directly)
 
-  /** [[NearestCentroidExpr]] per-row work. `emb` may be null. */
-  def nearestRow(emb: ArrayData, ids: Array[Long],
-      cents: Array[Array[Double]], isF: Boolean): InternalRow = {
+  /** (d2, id) strictly before (d2b, idb) under the (d², cluster_id) order. */
+  @inline private def before(d2: Double, id: Long, d2b: Double, idb: Long): Boolean = {
+    val cmp = java.lang.Double.compare(d2, d2b)
+    cmp < 0 || (cmp == 0 && id < idb)
+  }
+
+  /** The one nearest-centroid rule: fills `best` with the indexes of the
+    * `best.length` centroids nearest `emb`, nearest first, and `bestD2`
+    * with their d², under (d² by `java.lang.Double.compare` — Spark's
+    * total ordering, so a NaN element makes every d² NaN — then the
+    * smaller id). A malformed `emb` (null, wrong length, a null element)
+    * has every d² NULL: it ranks by id alone and the result is false.
+    * A bounded insertion, O(nlist · best.length) per row.
+    */
+  def nearestRow(emb: ArrayData, ids: Array[Long], cents: Array[Array[Double]],
+      isF: Boolean, best: Array[Int], bestD2: Array[Double]): Boolean = {
     val dim = cents(0).length
-    if (emb == null || emb.numElements() != dim || !windowValid(emb, 0, dim)) {
-      var minId = ids(0)
-      var i = 1
-      while (i < ids.length) { if (ids(i) < minId) minId = ids(i); i += 1 }
-      return new GenericInternalRow(Array[Any](null, minId))
-    }
-    // total-ordering argmin seeded from centroid 0 (ADVICE r7): a NaN
-    // element makes every d² NaN and the result is (NaN, min id),
-    // exactly the HOF array_min under Spark's ordering
-    var bestD2 = 0.0
-    var bestId = 0L
+    val valid = emb != null && emb.numElements() == dim && windowValid(emb, 0, dim)
+    val m = best.length
+    var size = 0
     var k = 0
     while (k < cents.length) {
-      val cw = cents(k)
       var d2 = 0.0
-      var j = 0
-      while (j < dim) {
-        val d = elem(emb, j, isF) - cw(j)
-        d2 += d * d
-        j += 1
+      if (valid) {
+        val cw = cents(k)
+        var j = 0
+        while (j < dim) {
+          val d = elem(emb, j, isF) - cw(j)
+          d2 += d * d
+          j += 1
+        }
       }
-      val cmp = if (k == 0) -1 else java.lang.Double.compare(d2, bestD2)
-      if (cmp < 0 || (cmp == 0 && ids(k) < bestId)) {
-        bestD2 = d2; bestId = ids(k)
+      val id = ids(k)
+      if (size < m || (m > 0 && before(d2, id, bestD2(m - 1), ids(best(m - 1))))) {
+        var p = if (size < m) { size += 1; size - 1 } else m - 1
+        while (p > 0 && before(d2, id, bestD2(p - 1), ids(best(p - 1)))) {
+          best(p) = best(p - 1); bestD2(p) = bestD2(p - 1); p -= 1
+        }
+        best(p) = k; bestD2(p) = d2
       }
       k += 1
     }
-    new GenericInternalRow(Array[Any](bestD2, bestId))
+    valid
+  }
+
+  /** [[NearestCentroidExpr]] per-row work. `emb` may be null. */
+  def nearestStruct(emb: ArrayData, ids: Array[Long],
+      cents: Array[Array[Double]], isF: Boolean): InternalRow = {
+    val best = new Array[Int](1)
+    val d2 = new Array[Double](1)
+    val valid = nearestRow(emb, ids, cents, isF, best, d2)
+    new GenericInternalRow(Array[Any](if (valid) d2(0) else null, ids(best(0))))
   }
 
   /** [[PqCodesExpr]] per-row work. `emb` may be null. */
@@ -176,37 +194,6 @@ object AnnExprs {
       s += 1
     }
     new GenericArrayData(out)
-  }
-
-  /** Index of the assigned centroid: same total-ordering rule as
-    * nearestRow (a NaN element makes every d² NaN → min-id centroid);
-    * `minIdx` for malformed rows.
-    */
-  private def assignIdx(emb: ArrayData, ids: Array[Long],
-      cents: Array[Array[Double]], minIdx: Int, isF: Boolean): Int = {
-    val dim = cents(0).length
-    if (emb == null || emb.numElements() != dim || !windowValid(emb, 0, dim))
-      return minIdx
-    var bestD2 = 0.0
-    var bestId = 0L
-    var bestK = 0
-    var k = 0
-    while (k < cents.length) {
-      val cw = cents(k)
-      var d2 = 0.0
-      var j = 0
-      while (j < dim) {
-        val d = elem(emb, j, isF) - cw(j)
-        d2 += d * d
-        j += 1
-      }
-      val cmp = if (k == 0) -1 else java.lang.Double.compare(d2, bestD2)
-      if (cmp < 0 || (cmp == 0 && ids(k) < bestId)) {
-        bestD2 = d2; bestId = ids(k); bestK = k
-      }
-      k += 1
-    }
-    bestK
   }
 
   /** Residual codeword of window `s` against the assigned centroid's
@@ -239,15 +226,17 @@ object AnnExprs {
   /** [[ResidualCodesExpr]] per-row work: struct(cluster_id, codes) —
     * the assigned centroid and the residual codeword of every window,
     * stored so a query-time LUT can score off the codes alone. `emb`
-    * may be null; `minIdx` is the index of the min-id centroid (the
-    * assignment for malformed rows).
+    * may be null (assigned, like any malformed row, to the min-id
+    * centroid).
     */
   def residualCodesRow(emb: ArrayData, ids: Array[Long],
       cents: Array[Array[Double]], rcb: Array[Array[Array[Double]]],
-      minIdx: Int, isF: Boolean): InternalRow = {
+      isF: Boolean): InternalRow = {
     val dim = cents(0).length
     val subDim = rcb(0)(0).length
-    val bestK = assignIdx(emb, ids, cents, minIdx, isF)
+    val best = new Array[Int](1)
+    nearestRow(emb, ids, cents, isF, best, new Array[Double](1))
+    val bestK = best(0)
     val cvec = cents(bestK)
     val embLen = if (emb == null) 0 else emb.numElements()
     val usable = math.min(embLen, dim)
@@ -293,14 +282,39 @@ object AnnExprs {
 
     override def eval(input: InternalRow): Any = {
       val v = child.eval(input)
-      nearestRow(if (v == null) null else v.asInstanceOf[ArrayData], ids, cents, isF)
+      nearestStruct(if (v == null) null else v.asInstanceOf[ArrayData], ids, cents, isF)
     }
 
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
       val idsRef = ctx.addReferenceObj("ids", ids, "long[]")
       val centsRef = ctx.addReferenceObj("cents", cents, "double[][]")
       staticCallGen(ctx, ev, child, "org.apache.spark.sql.catalyst.InternalRow",
-        arg => s"graft.functions.AnnExprs.nearestRow($arg, $idsRef, $centsRef, $isF)")
+        arg => s"graft.functions.AnnExprs.nearestStruct($arg, $idsRef, $centsRef, $isF)")
+    }
+
+    override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
+  }
+
+  /** array<bigint>: the ids of the min(n, nlist) centroids nearest the
+    * child vector, nearest first — the IVF probe of a query row.
+    */
+  case class ProbeExpr(child: Expression, ids: Array[Long],
+      cents: Array[Array[Double]], n: Int) extends UnaryExpression with CodegenFallback {
+    require(ids.length == cents.length && ids.nonEmpty, "empty centroid table")
+    require(cents.forall(_.length == cents(0).length), "ragged centroid dims")
+
+    override def dataType: DataType = ArrayType(LongType, containsNull = false)
+    override def nullable: Boolean = false
+
+    @transient private lazy val isF = isFloatArr(child)
+
+    // one call per query row, never per corpus row: interpreted eval
+    override def eval(input: InternalRow): Any = {
+      val v = child.eval(input)
+      val best = new Array[Int](math.max(0, math.min(n, ids.length)))
+      nearestRow(if (v == null) null else v.asInstanceOf[ArrayData], ids, cents, isF,
+        best, new Array[Double](best.length))
+      ArrayData.toArrayData(best.map(ids(_)))
     }
 
     override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
@@ -347,12 +361,11 @@ object AnnExprs {
     override def nullable: Boolean = false
 
     @transient private lazy val isF = isFloatArr(child)
-    @transient private lazy val minIdx = ids.indexOf(ids.min)
 
     override def eval(input: InternalRow): Any = {
       val v = child.eval(input)
       residualCodesRow(if (v == null) null else v.asInstanceOf[ArrayData],
-        ids, cents, rcb, minIdx, isF)
+        ids, cents, rcb, isF)
     }
 
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
@@ -361,7 +374,7 @@ object AnnExprs {
       val rcbRef = ctx.addReferenceObj("rcb", rcb, "double[][][]")
       staticCallGen(ctx, ev, child, "org.apache.spark.sql.catalyst.InternalRow",
         arg => s"graft.functions.AnnExprs.residualCodesRow($arg, $idsRef, $centsRef, " +
-          s"$rcbRef, $minIdx, $isF)")
+          s"$rcbRef, $isF)")
     }
 
     override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
@@ -369,6 +382,9 @@ object AnnExprs {
 
   def nearestCentroid(emb: Column, ids: Array[Long], cents: Array[Array[Double]]): Column =
     ColumnBridge.column(NearestCentroidExpr(ColumnBridge.expression(emb), ids, cents))
+
+  def probe(emb: Column, ids: Array[Long], cents: Array[Array[Double]], n: Int): Column =
+    ColumnBridge.column(ProbeExpr(ColumnBridge.expression(emb), ids, cents, n))
 
   def pqCodes(emb: Column, cb: Array[Array[Array[Double]]]): Column =
     ColumnBridge.column(PqCodesExpr(ColumnBridge.expression(emb), cb))

@@ -687,7 +687,6 @@ object IndexMaintenance {
     rebalance(spark, openFold(spark, indexPath), rowsPerFile)
 
   private def rebalance(spark: SparkSession, f: Fold, rowsPerFile: Long): RebalanceReport = {
-    import graft.functions.VectorFunctions.dist2
     import org.apache.spark.sql.expressions.Window
     val fs = f.fs
     val indexPath = f.indexPath
@@ -786,22 +785,15 @@ object IndexMaintenance {
           .select(col("cluster_id"), col("rn"),
             transform(col("embedding"), _.cast("double")).as("sv"))
           .collect().groupBy(_.getLong(0))
-        val seedRows = splitIds.map { c =>
-          val byRn = seeds(c).sortBy(_.getInt(1))
-          val ids = partIdsOf(c).take(byRn.length)
-          (c, ids, byRn.toSeq.map(_.getSeq[Double](2)))
-        }
-        val seedDf = spark.createDataFrame(seedRows.toIndexedSeq)
-          .toDF("cluster_id", "part_ids", "part_vs")
-        // nearest-of-seeds, map-side: fold the (id, vec) pairs with the
-        // same (d2, id) struct-min argmin IvfIndex.nearest runs — ties go to
-        // the smaller part id
-        splitSrc
-          .join(broadcast(seedDf), Seq("cluster_id"))
-          .select(col("vec_id"), col("embedding"),
-            array_min(zip_with(col("part_vs"), col("part_ids"),
-              (v, i) => struct(dist2(col("embedding"), v).as("d2"), i.as("id"))))
-              .getField("id").as("cluster_id"))
+        // nearest-of-seeds, map-side: the one nearest-centroid rule over
+        // each split cluster's own seeds — ties go to the smaller part id
+        splitSrc.select(col("vec_id"), col("embedding"),
+          coalesce(splitIds.map { c =>
+            val byRn = seeds(c).sortBy(_.getInt(1))
+            when(col("cluster_id") === c, graft.functions.AnnExprs.nearestCentroid(
+                col("embedding"), partIdsOf(c).take(byRn.length).toArray,
+                byRn.map(_.getSeq[Double](2).toArray)).getField("cluster_id"))
+          }: _*).as("cluster_id"))
       }
     // part centroids: integerized means of the parts (Σ⌈n/mean⌉ rows);
     // a seed whose embedding duplicates another's can end up rowless —

@@ -12,15 +12,13 @@ import graft.functions.VectorFunctions._
   * Design: a small centroid table (deterministic seed pick here; k-means
   * refinement in [[kmeans]]) is collected to the driver — it is index
   * metadata, k×dim floats, the coarse quantizer Qdrant keeps in RAM —
-  * and baked into the assignment expression as a literal array of
-  * structs. Every corpus vector then finds its nearest centroid with a
-  * per-row `array_min` over (d², cluster_id) structs: a pure map-side
-  * projection, zero shuffle, zero corpus movement (the same pattern as
-  * TextAnalysis.langId). At scale the assignment is written
-  * bucketed/partitioned by `cluster_id`, so a query probing `nprobe`
-  * clusters prunes everything else at the parquet-partition level
-  * (predicate pushdown on the partition column), turning O(N) brute
-  * force into O(N·nprobe/k).
+  * and baked into one native nearest-centroid loop: every corpus vector
+  * finds its centroid ([[nearest]]) and every query its probe
+  * ([[probe]]) in a pure map-side projection, zero shuffle, zero corpus
+  * movement (the same pattern as TextAnalysis.langId). At scale the
+  * assignment is written partitioned by `cluster_id`, so a query
+  * probing `nprobe` clusters prunes everything else at the
+  * parquet-partition level, turning O(N) brute force into O(N·nprobe/k).
   */
 object IvfIndex {
 
@@ -111,10 +109,7 @@ object IvfIndex {
   def centroidMeta(cents: DataFrame): (Array[Long], Array[Array[Double]]) = {
     val rows = cents.select(col("cluster_id").cast("long"), col("cvec")).collect()
     val ids = rows.map(_.getLong(0))
-    val vecs = rows.map(_.getSeq[Any](1).map {
-      case f: java.lang.Float => f.doubleValue()
-      case d: java.lang.Double => d.doubleValue()
-    }.toArray)
+    val vecs = rows.map(_.getSeq[Number](1).map(_.doubleValue()).toArray)
     (ids, vecs)
   }
 
@@ -345,32 +340,14 @@ object IvfIndex {
       staging => writeIndex(spark, dir, staging))
   }
 
-  /** The probe rule, single-query form: the `nprobe` centroids of
-    * `cents` (cluster_id, cvec) nearest the one-row (qvec) `query`,
-    * ordered by (d², cluster_id) — a lazy (cluster_id) frame of index
-    * metadata that callers collect into a partition prune or join.
+  /** The probe rule: `array<bigint>` of the min(nprobe, nlist) ids of
+    * `cents` (cluster_id, cvec) nearest `qvec`, nearest first — [[nearest]]'s
+    * loop at n = nprobe, a projection of the query row.
     */
-  private[graft] def nearestClusters(cents: DataFrame, query: DataFrame,
-      nprobe: Int): DataFrame =
-    cents.crossJoin(broadcast(query))
-      .withColumn("cd2", dist2(col("cvec"), col("qvec")))
-      .orderBy(col("cd2").asc, col("cluster_id").asc)
-      .limit(nprobe)
-      .select("cluster_id")
-
-  /** The probe rule, per-query form: of the (query_id, qvec) ×
-    * (cluster_id, cvec) `pairs`, each query's `nprobe` nearest clusters
-    * under the same (d², cluster_id) order, as (query_id, cluster_id,
-    * qvec, rn) probe rows — `rn` the probe's rank, 1 for the nearest.
-    */
-  private[graft] def probeClusters(pairs: DataFrame, nprobe: Int): DataFrame =
-    pairs
-      .withColumn("cd2", dist2(col("cvec"), col("qvec")))
-      .withColumn("rn", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("query_id"))
-          .orderBy(col("cd2").asc, col("cluster_id").asc)))
-      .filter(col("rn") <= nprobe)
-      .select("query_id", "cluster_id", "qvec", "rn")
+  def probe(qvec: Column, cents: DataFrame, nprobe: Int): Column = {
+    val (ids, vecs) = centroidMeta(cents)
+    graft.functions.AnnExprs.probe(qvec, ids, vecs, nprobe)
+  }
 
   /** Search the persisted index: rank the (tiny, collected) centroid
     * table against the query, then scan ONLY the nprobe nearest
@@ -394,29 +371,30 @@ object IvfIndex {
     */
   private[graft] def probedScores(spark: SparkSession, indexPath: String,
       query: DataFrame, nprobe: Int): DataFrame =
-    probedPartitions(spark, indexPath, query, nprobe)._1
+    probedPartitions(spark, indexPath, query, nprobe)
       .crossJoin(broadcast(query))
       .withColumn("score", dot(col("embedding"), col("qvec")))
 
-  /** The probed-partition read of a persisted cluster-partitioned
-    * layout (IVF, PQ, residual PQ): the `nprobe` stored centroids
-    * nearest the one-row (qvec) `query`, collected as ids (index
-    * metadata, O(nprobe) — not data), and the layout's served rows
-    * (base + any epochs) restricted to those partitions. The
-    * `cluster_id IN (...)` filter prunes at the parquet-partition level.
-    * Returns the rows and the probed ids.
+  /** The probed-partition read of a cluster-partitioned layout (IVF, PQ,
+    * residual PQ) for the one-row (qvec) `query`: its [[probe]],
+    * collected (O(nprobe) ids), and those [[probedRows]].
     */
   private[graft] def probedPartitions(spark: SparkSession, indexPath: String,
-      query: DataFrame, nprobe: Int): (DataFrame, Array[Long]) = {
-    val probed = nearestClusters(IndexMaintenance.layoutDf(spark, s"$indexPath/centroids"),
-        query, nprobe).collect().map(_.getLong(0))
-    val rows = IndexMaintenance.vectorsDf(spark, indexPath)
+      query: DataFrame, nprobe: Int): DataFrame =
+    probedRows(spark, indexPath, query.select(probe(col("qvec"),
+        IndexMaintenance.layoutDf(spark, s"$indexPath/centroids"), nprobe))
+      .collect().flatMap(_.getSeq[Long](0)).toIndexedSeq)
+
+  /** A layout's served rows (base + any epochs) in the `probed`
+    * partitions — the `cluster_id IN (...)` filter prunes partition dirs.
+    */
+  private[graft] def probedRows(spark: SparkSession, indexPath: String,
+      probed: Seq[Long]): DataFrame =
+    IndexMaintenance.vectorsDf(spark, indexPath)
       // partition-column inference reads cluster_id as int; restore the
       // long the in-memory surfaces (search/assign/centroids) use
       .withColumn("cluster_id", col("cluster_id").cast("long"))
-      .filter(col("cluster_id").isin(probed.toIndexedSeq: _*))
-    (rows, probed)
-  }
+      .filter(col("cluster_id").isin(probed: _*))
 
   /** Batch IVF search over the installed layout ([[ivfIndexFor]]): the
     * batch facades' vector arm ([[SearchApi.batchVectorArm]] — each

@@ -363,16 +363,16 @@ object LexIndex {
   def bm25Indexed(spark: SparkSession, indexPath: String, k: Int = 10): DataFrame =
     searchTerms(spark, indexPath, LexicalSearch.QueryTerms, k)
 
+  /** Tiered-out stop-terms of a built index: (term, df) rows. */
+  def stopTerms(spark: SparkSession, indexPath: String): DataFrame =
+    spark.read.parquet(s"$indexPath/stopterms")
+
   /** Fingerprint-cached posting index for a testdata corpus dir (the
     * residualIndexFor pattern: an index BUILD is an offline stage;
     * graded queries measure SERVING). Keyed by the documents data
     * files plus the layout parameters, so a corpus refresh or a
     * NumBuckets change invalidates automatically.
     */
-  /** Tiered-out stop-terms of a built index: (term, df) rows. */
-  def stopTerms(spark: SparkSession, indexPath: String): DataFrame =
-    spark.read.parquet(s"$indexPath/stopterms")
-
   def lexIndexFor(spark: SparkSession, dir: String): String = synchronized {
     IndexMaintenance.cachedLayout(spark, "lexidx",
       s"lexidx:v3:nb=$NumBuckets:tier=$MaxDfFraction:${IndexMaintenance.corpusSig(spark, dir)}")(

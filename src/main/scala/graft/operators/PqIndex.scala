@@ -235,7 +235,7 @@ object PqIndex {
   }
 
   /** Search the persisted residual index: probe list and per-cluster
-    * constant dot(q, c) from the stored centroids (nprobe longs of
+    * constant dot(q, c) from the stored centroids (nlist longs of
     * metadata), residual LUT from the stored codebooks (same
     * integerized fold the build used), then candidates scored off the
     * RCODE COLUMNS alone over the probed partitions —
@@ -245,10 +245,10 @@ object PqIndex {
     */
   def searchResidualIndex(spark: SparkSession, indexPath: String, query: DataFrame,
       nprobe: Int = 3, candidates: Int = 50, k: Int = 10): DataFrame = {
-    val (vectors, probed) = IvfIndex.probedPartitions(spark, indexPath, query, nprobe)
+    val vectors = IvfIndex.probedPartitions(spark, indexPath, query, nprobe)
+    // one constant per stored centroid; the join keeps the probed ones
     val constDf = IndexMaintenance.layoutDf(spark, s"$indexPath/centroids")
       .crossJoin(broadcast(query))
-      .filter(col("cluster_id").isin(probed.toIndexedSeq: _*))
       .select(col("cluster_id"), cents(dot(col("cvec"), col("qvec")), 1e9).as("const_e9"))
     val lut = lutOf(spark, indexPath, "rcvec", query)
     servedFromCodes(vectors, "rcode", query, candidates, k)(
@@ -326,7 +326,7 @@ object PqIndex {
   def searchIndex(spark: SparkSession, indexPath: String, query: DataFrame,
       nprobe: Int = 3, candidates: Int = 50, k: Int = 10,
       roundScore: Boolean = true): DataFrame = {
-    val (vectors, _) = IvfIndex.probedPartitions(spark, indexPath, query, nprobe)
+    val vectors = IvfIndex.probedPartitions(spark, indexPath, query, nprobe)
     val lut = lutOf(spark, indexPath, "cvec", query)
     servedFromCodes(vectors, "code", query, candidates, k)(
         _.withColumn("approx_e9", codeSum(lut, "code")))
@@ -368,7 +368,8 @@ object PqIndex {
     * semantics: store_assets.py:40-77 quantization + rescore).
     *
     * Scale shape: over the installed PQ layout ([[pqIndexFor]]). The
-    * probe ranks ([[IvfIndex.probeClusters]] at the largest nprobe) and
+    * probe ranks ([[IvfIndex.probe]] at the largest nprobe, `crn` its
+    * 1-based position) and
     * the per-query ADC tables ([[adcTables]], one row per query) are
     * index metadata, broadcast; the layout is touched by one codes-only
     * scan joined to the probe rows and scored by [[codeSum]] — no
@@ -392,9 +393,10 @@ object PqIndex {
     val idx = pqIndexFor(spark, dir)
     val vectors = IndexMaintenance.vectorsDf(spark, idx)
       .withColumn("cluster_id", col("cluster_id").cast("long"))
-    val probe = IvfIndex.probeClusters(
-        qs.crossJoin(broadcast(IndexMaintenance.layoutDf(spark, s"$idx/centroids"))), maxNprobe)
-      .select(col("query_id"), col("cluster_id"), col("rn").as("crn"))
+    val probe = qs.select(col("query_id"), posexplode(IvfIndex.probe(col("qvec"),
+        IndexMaintenance.layoutDf(spark, s"$idx/centroids"), maxNprobe))
+        .as(Seq("pos", "cluster_id")))
+      .select(col("query_id"), col("cluster_id"), (col("pos") + 1).as("crn"))
     val luts = adcTables(
       codebookMetaOf(IndexMaintenance.layoutDf(spark, s"$idx/codebooks"), "cvec"), qs)
     // approximate scores over probed vectors only

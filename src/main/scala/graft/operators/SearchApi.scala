@@ -131,11 +131,11 @@ object SearchApi {
     * which at 100 TB is Q pruned scans where one suffices.
     *
     * Shape (the vs_ivf_batch pattern, IvfIndex.searchBatch): every
-    * query ranks the broadcast centroid table and keeps its nprobe
-    * clusters; ONE partition-pruned scan of the union of probed
-    * clusters equi-joins the broadcast (query_id, cluster_id, qvec)
-    * probe table so each index row is scored only against the queries
-    * probing its cluster; [[graft.plans.TopK]]'s partial limit bounds
+    * query row projects its nprobe nearest clusters ([[IvfIndex.probe]]);
+    * ONE partition-pruned scan of the union of probed clusters
+    * equi-joins the broadcast (query_id, cluster_id, qvec) probe rows so
+    * each index row is scored only against the queries probing its
+    * cluster; [[graft.plans.TopK]]'s partial limit bounds
     * what reaches the per-query rank shuffle; the bounded Q×k top table
     * broadcasts onto the documents scan for the rerank. Per query the
     * output is row-identical to the [[searchIndexed]] loop under
@@ -173,7 +173,7 @@ object SearchApi {
 
   /** The batch facades' encoded query frame: (query_id, query_text,
     * qvec) behind an EAGER lineage cut (r16) — one tiny job materializes
-    * the encoded rows, so every downstream plan (probe window, the
+    * the encoded rows, so every downstream plan (the probe projection, the
     * metadata collect, the corpus join, the rerank tail) references a
     * compact LogicalRDD — and its row count: the caller-known
     * `numQueries`, or one count job when it is negative.
@@ -186,43 +186,28 @@ object SearchApi {
   }
 
   /** The batch facades' vector arm, which [[IvfIndex.searchBatch]] and
-    * the IVF eval harnesses rank too: every query of `qs` probes its
-    * `nprobe` nearest clusters of the installed centroid table
-    * ([[IvfIndex.probeClusters]]); ONE partition-pruned scan of the
-    * union of probed clusters equi-joins the (query_id, cluster_id,
-    * qvec) probe table, so each index row is scored only against the
-    * queries probing its cluster. Returns the (query_id, vec_id, score)
-    * hits and the ids of `moreIds` (one long column), which ride the
-    * probed-cluster metadata collect as a second leg of the same job
-    * (r16: the hybrid facade's term buckets — two independent stages
-    * the scheduler runs concurrently, in place of two serial collects).
+    * the IVF eval harnesses rank too: each query row of `qs` explodes its
+    * [[IvfIndex.probe]] into (query_id, qvec, cluster_id) probe rows; ONE
+    * scan of the union of probed clusters ([[IvfIndex.probedRows]])
+    * equi-joins them. Returns the (query_id, vec_id, score) hits and the
+    * ids of `moreIds` (one long column), which ride the probed-cluster
+    * metadata collect as a second leg of the same job (r16: the hybrid
+    * facade's term buckets, in place of two serial collects).
     *
-    * Query-frame broadcasts are SIZE-GATED off the query count (r15,
+    * The probe-row broadcast is SIZE-GATED off the query count (r15,
     * r14 verdict #2, the q_pagerank precedent): at a 1M-query batch an
     * unconditional hint forces a multi-GB driver build; past the gate
-    * each join degrades to its shuffle shape with bit-identical rows
+    * the join degrades to its shuffle shape with bit-identical rows
     * (SearchManySpec pins both shapes).
     */
   private[graft] def batchVectorArm(spark: SparkSession, indexPath: String,
       qs: DataFrame, nq: Long, nprobe: Int, maxBroadcastRows: Long,
       moreIds: Option[DataFrame]): (DataFrame, Array[Long]) = {
-    def gated(df: DataFrame, rows: Long): DataFrame =
-      graft.plans.Hints.broadcastIfUnder(df, rows, maxBroadcastRows)
-    val centroidsDf = IndexMaintenance.layoutDf(spark, s"$indexPath/centroids")
-    val pairs = centroidsDf.crossJoin(gated(qs.select(col("query_id"), col("qvec")), nq))
-    // full coverage (nprobe = Int.MaxValue, the graded regime): every
-    // query probes every cluster, so the per-query rank over the
-    // centroid table is provably a no-op (rank ≤ nlist < 2³¹) — skip
-    // the window and read the probed-cluster ids off the centroid
-    // table alone (r16; production nprobe keeps the ranked path)
-    val fullCoverage = nprobe == Int.MaxValue
-    val probe = (if (fullCoverage) pairs.select(col("query_id"), col("cluster_id"), col("qvec"))
-      else IvfIndex.probeClusters(pairs, nprobe))
-      .transform(graft.plans.ScanShare.shared)
+    val probe = qs.select(col("query_id"), col("qvec"), explode(IvfIndex.probe(col("qvec"),
+      IndexMaintenance.layoutDf(spark, s"$indexPath/centroids"), nprobe)).as("cluster_id"))
     // union of probed clusters: index metadata (≤ nlist ids) — this is
     // what prunes the vectors scan to the probed partition dirs only
-    val clusterIds = if (fullCoverage) centroidsDf.select(col("cluster_id"))
-      else probe.select(col("cluster_id")).distinct()
+    val clusterIds = probe.select(col("cluster_id")).distinct()
     val (probedClusters, more) = moreIds match {
       case None => (clusterIds.collect().map(_.getLong(0)).sorted, Array.empty[Long])
       case Some(ids) =>
@@ -236,10 +221,9 @@ object SearchApi {
     // already in hand, so the gate costs zero extra jobs
     val probeRows = nq * math.max(1L,
       math.min(nprobe.toLong, probedClusters.length.toLong))
-    val hits = IndexMaintenance.vectorsDf(spark, indexPath)
-      .withColumn("cluster_id", col("cluster_id").cast("long"))
-      .filter(col("cluster_id").isin(probedClusters.toIndexedSeq: _*))
-      .join(gated(probe, probeRows), Seq("cluster_id"))
+    val hits = IvfIndex.probedRows(spark, indexPath, probedClusters.toIndexedSeq)
+      .join(graft.plans.Hints.broadcastIfUnder(probe, probeRows, maxBroadcastRows),
+        Seq("cluster_id"))
       .withColumn("score", dot(col("embedding"), col("qvec")))
       .select(col("query_id"), col("vec_id"), col("score"))
     (hits, more)

@@ -211,6 +211,93 @@ class AnnParitySpec extends AnyFunSuite {
 
   // ---- vector-sum aggregator (VecAggParity) -----------------------------
 
+  // ---- the probe ---------------------------------------------------------
+
+  private val probeQSchema = StructType(Seq(
+    StructField("query_id", LongType, nullable = false),
+    StructField("qvec", ArrayType(FloatType, containsNull = true), nullable = true)))
+
+  /** Each query's probe as (rank, cluster_id), nearest first: the native
+    * `IvfIndex.probe` and the `InMemoryAnn` Window form over `qs`.
+    */
+  private def nativeProbe(cents: DataFrame, qs: DataFrame, n: Int): Map[Long, Seq[(Int, Long)]] =
+    qs.select(col("query_id"), IvfIndex.probe(col("qvec"), cents, n)).collect()
+      .map(r => r.getLong(0) -> r.getSeq[Long](1).zipWithIndex.map { case (c, i) => (i + 1, c) })
+      .toMap
+
+  private def windowProbe(cents: DataFrame, qs: DataFrame, n: Int): Map[Long, Seq[(Int, Long)]] =
+    InMemoryAnn.probeClusters(qs.crossJoin(cents), n).collect()
+      .groupBy(_.getLong(0))
+      .map { case (q, rs) => q -> rs.map(r => (r.getInt(3), r.getLong(1))).toSeq.sorted }
+
+  /** The native probe agrees with the Window form on the multi-row frame
+    * `qrows` (a distributed scan, so codegen runs) and, query by query,
+    * with both the Window and the TakeOrdered forms on one-row frames (a
+    * local relation, evaluated interpreted). Returns the native probes.
+    */
+  private def probeParity(cents: DataFrame, qrows: Seq[Row],
+      n: Int): Map[Long, Seq[(Int, Long)]] = {
+    val multi = spark.createDataFrame(spark.sparkContext.parallelize(qrows, 2), probeQSchema)
+    val got = nativeProbe(cents, multi, n)
+    assert(got.keySet === qrows.map(_.getLong(0)).toSet)
+    assert(windowProbe(cents, multi, n) === got, s"multi-row Window, nprobe $n")
+    qrows.foreach { r =>
+      val one = spark.createDataFrame(java.util.List.of(r), probeQSchema)
+      val id = r.getLong(0)
+      assert(nativeProbe(cents, one, n) === Map(id -> got(id)), s"one-row native, query $id")
+      assert(windowProbe(cents, one, n) === Map(id -> got(id)), s"one-row Window, query $id")
+      val taken = InMemoryAnn.nearestClusters(cents, one.select("qvec"), n).collect()
+        .map(_.getLong(0)).toSeq.zipWithIndex.map { case (c, i) => (i + 1, c) }
+      assert(taken === got(id), s"one-row TakeOrdered, query $id, nprobe $n")
+    }
+    got
+  }
+
+  test("probe: native == TakeOrdered and Window references, in order and rank") {
+    val centSchema = StructType(Seq(
+      StructField("cluster_id", LongType, nullable = false),
+      StructField("cvec", ArrayType(FloatType, containsNull = true), nullable = true)))
+    // 5 and 7 coincide (an exact d² tie everywhere); 3, 9 and 2 sit at
+    // unit distance from the origin like 5 and 7
+    val cents = spark.createDataFrame(java.util.List.of(
+      Row(5L, Seq(1f, 0f, 0f, 0f)), Row(3L, Seq(-1f, 0f, 0f, 0f)),
+      Row(9L, Seq(0f, 1f, 0f, 0f)), Row(1L, Seq(0f, 0f, 2f, 0f)),
+      Row(7L, Seq(1f, 0f, 0f, 0f)), Row(2L, Seq(0f, 0f, 0f, -1f))), centSchema)
+    val nlist = 6
+    val qrows = Seq(
+      Row(0L, Seq(0f, 0f, 0f, 0f)), // five centroids tie at d² 1
+      Row(1L, Seq(0.5f, 0f, 0f, 0f)),
+      Row(2L, Seq(0f, 0f, Float.NaN, 0f)), // every d² NaN
+      Row(3L, null), // every d² NULL
+      Row(4L, Seq(0f, 0f, 0f)), // short: every d² NULL
+      Row(5L, Seq(0.3f, -0.7f, 1.1f, 0.2f)))
+    val byId = Seq(1L, 2L, 3L, 5L, 7L, 9L)
+    val full = Map(0L -> Seq(2L, 3L, 5L, 7L, 9L, 1L), 1L -> Seq(5L, 7L, 2L, 9L, 3L, 1L),
+      2L -> byId, 3L -> byId, 4L -> byId)
+    Seq(1, 2, nlist, nlist + 1, Int.MaxValue).foreach { n =>
+      val got = probeParity(cents, qrows, n)
+      full.foreach { case (q, ids) =>
+        assert(got(q).map(_._2) === ids.take(math.min(n, nlist)), s"query $q, nprobe $n")
+      }
+      assert(got(5L).length === math.min(n, nlist))
+    }
+    // assignment is the same rule at n = 1
+    val multi = spark.createDataFrame(spark.sparkContext.parallelize(qrows, 2), probeQSchema)
+    multi.select(IvfIndex.nearest(col("qvec"), cents).getField("cluster_id"),
+        element_at(IvfIndex.probe(col("qvec"), cents, 1), 1))
+      .collect().foreach(r => assert(r.getLong(0) === r.getLong(1), s"assignment: $r"))
+    // the corpus centroids against corpus vectors
+    val corpusCents = IvfIndex.centroids(spark, Sf)
+    val corpusNlist = corpusCents.count().toInt
+    val corpusQs = Tables.embeddings(spark, Sf).orderBy("vec_id").limit(4)
+      .select(col("vec_id").as("query_id"), col("embedding").as("qvec")).collect().toSeq
+    assert(corpusQs.length === 4)
+    Seq(1, 2, corpusNlist, corpusNlist + 1, Int.MaxValue).foreach { n =>
+      val got = probeParity(corpusCents, corpusQs, n)
+      assert(got.values.forall(_.length == math.min(n, corpusNlist)))
+    }
+  }
+
   test("meanVectors == posexplode twin on the corpus, bitwise") {
     val assigned = IvfIndex.assignedEmbeddings(spark, Sf)
       .select(col("cluster_id"), col("embedding"))

@@ -1,5 +1,6 @@
 package graft
 
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.IndexMaintenance
@@ -9,13 +10,25 @@ import graft.operators.IndexMaintenance
   * it). Pins: build runs once per fingerprint; a crashed partial (base
   * present, no `_complete` marker) is cleared and rebuilt rather than
   * served; a build that throws leaves no staging dir; different
-  * fingerprints get different installs.
+  * fingerprints get different installs. Every install under a spec
+  * prefix is deleted after the suite.
   */
-class CachedLayoutSpec extends AnyFunSuite {
+class CachedLayoutSpec extends AnyFunSuite with BeforeAndAfterAll {
   import SparkSuite._
 
-  private def freshPrefix() =
-    s"spec${java.util.UUID.randomUUID().toString.take(8)}"
+  private val prefixes = scala.collection.mutable.ArrayBuffer.empty[String]
+
+  private def freshPrefix() = {
+    val p = s"spec${java.util.UUID.randomUUID().toString.take(8)}"
+    prefixes += p
+    p
+  }
+
+  override def afterAll(): Unit =
+    try new java.io.File(sys.props("java.io.tmpdir")).listFiles()
+      .filter(f => prefixes.exists(p => f.getName.startsWith(s"graft_${p}_")))
+      .foreach(org.apache.commons.io.FileUtils.deleteQuietly)
+    finally super.afterAll()
 
   test("build runs once; the installed path is reused") {
     val prefix = freshPrefix()

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.{KnnSearch, PqIndex}
 
@@ -9,10 +10,22 @@ import graft.operators.{KnnSearch, PqIndex}
   * candidate cut at least the corpus size and every cluster probed, each
   * must return exactly the brute-force top k in (score desc, vec_id asc)
   * order — including across exact-score ties, which this corpus makes
-  * with duplicated embeddings.
+  * with duplicated embeddings. The corpus, the indexes written for it
+  * and the PQ and residual layouts installed for it are deleted after
+  * the suite.
   */
-class RescoreTieSpec extends AnyFunSuite {
+class RescoreTieSpec extends AnyFunSuite with BeforeAndAfterAll {
   import SparkSuite._
+
+  private val made = scala.collection.mutable.ArrayBuffer.empty[String]
+  private var corpusBuilt = false
+
+  override def afterAll(): Unit =
+    try {
+      if (corpusBuilt)
+        made ++= Seq(PqIndex.pqIndexFor(spark, corpus._1), PqIndex.residualIndexFor(spark, corpus._1))
+      made.foreach(p => org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p)))
+    } finally super.afterAll()
 
   private val Dim = 64
   private val All = 1000 // ≥ the 300-row corpus and its 18 clusters
@@ -37,6 +50,8 @@ class RescoreTieSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft-rescore-ties").toString
     rows.map { case (id, v) => (id, v.toSeq) }.toDF("vec_id", "embedding")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+    made += dir
+    corpusBuilt = true
     (dir, rows)
   }
 
@@ -58,7 +73,11 @@ class RescoreTieSpec extends AnyFunSuite {
   private def queryDf(dir: String): DataFrame =
     Tables.embeddings(spark, dir).filter(col("vec_id") === 0).select(col("embedding").as("qvec"))
 
-  private def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
+  private def tmp(p: String) = {
+    val d = java.nio.file.Files.createTempDirectory(p).toString
+    made += d
+    d
+  }
 
   // (search, its run over the corpus dir, its exact-score column)
   private val searches: Seq[(String, String => DataFrame, String)] = Seq(

@@ -110,6 +110,29 @@ class SearchManySpec extends AnyFunSuite {
     assert(rowsOf(new BatchedEncoder(batchSize = 3)) === want)
   }
 
+  /** Physical scans of `dir`'s vectors layout in `df`'s executed plan:
+    * the file scans, with each cached relation's plan counted once
+    * however many times the plan reads it.
+    */
+  private def layoutScans(df: org.apache.spark.sql.DataFrame, dir: String): Int = {
+    import org.apache.spark.sql.execution._
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    val caches = scala.collection.mutable.Set.empty[AnyRef]
+    def scans(p: SparkPlan): Int = p match {
+      case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
+      case s: QueryStageExec => scans(s.plan)
+      case _: ReusedExchangeExec => 0
+      case m: InMemoryTableScanExec =>
+        if (caches.add(m.relation.cacheBuilder)) scans(m.relation.cachedPlan) else 0
+      case f: FileSourceScanExec =>
+        if (f.relation.location.rootPaths.exists(_.toString.contains(s"$dir/vectors"))) 1 else 0
+      case other => other.children.map(scans).sum
+    }
+    scans(df.queryExecution.executedPlan)
+  }
+
   test("hybrid batch scans each layout once for the whole query set") {
     // start from a clean shared-scan registry: leftover enrollments
     // from earlier tests otherwise evict this plan's postings cache
@@ -117,16 +140,11 @@ class SearchManySpec extends AnyFunSuite {
     graft.plans.ScanShare.drain()
     val df = SearchApi.searchManyHybridIndexed(spark, Sf, indexPath,
       lexIndexPath, queriesDf, nprobe = 2)
-    val plan = df.queryExecution.executedPlan.toString
-      .split("== Initial Plan ==")(0)
     // the centroid metadata table lives under the same index dir —
-    // count only the vectors layout's scans
-    val vecScans = plan.split("\n").count(l =>
-      l.contains("Scan parquet") && l.contains("graft-many-idx") &&
-        l.contains("vectors"))
-    val lexScans = plan.split("\n").count(l =>
-      l.contains("Scan parquet") && l.contains("graft-many-lex") &&
-        l.contains("vectors"))
+    // count only the vectors layout's scans; a cached relation the plan
+    // reads twice (the shared postings scan) is one scan
+    val vecScans = layoutScans(df, indexPath)
+    val lexScans = layoutScans(df, lexIndexPath)
     assert(vecScans === 1, s"expected 1 IVF vectors scan, got $vecScans")
     assert(lexScans <= 1, s"expected <=1 postings scan, got $lexScans")
   }
@@ -274,45 +292,30 @@ class SearchManySpec extends AnyFunSuite {
 
   test("building a warm batch facade runs the encode cut and one metadata query") {
     // Construction-time Spark jobs of each batch facade, pinned at the
-    // counts the r16 shape produces on this corpus (numQueries is
+    // counts the probe-projection shape produces on this corpus (numQueries is
     // passed, so no count job; the layouts, the single-file documents
     // table included, are warm, so no listing or schema job):
-    //  - vector: 1 eager encode cut + 5 jobs of ONE metadata query (the
-    //    probed-cluster collect — AQE runs its broadcast and shuffle
-    //    stages as jobs of their own);
-    //  - hybrid: 1 encode cut + 7 jobs of ONE metadata query (the
-    //    cluster ids fused with the lexical term buckets, r16).
-    // A second metadata collect, or an unfused hybrid, adds jobs.
-    val sc = spark.sparkContext
+    //  - vector: 1 eager encode cut + 1 centroid metadata collect (the
+    //    probe's nearest-centroid rule runs against it) + 2 jobs of ONE
+    //    metadata query (the probed-cluster collect — AQE runs its
+    //    shuffle stage as a job of its own);
+    //  - hybrid: 1 encode cut + 1 centroid collect + 4 jobs of ONE
+    //    metadata query (the cluster ids fused with the lexical term
+    //    buckets, r16).
+    // A second metadata query, or an unfused hybrid, adds jobs.
     val n = queryTexts.length.toLong
     def vector() = SearchApi.searchManyIndexed(spark, Sf, indexPath, queriesDf,
       nprobe = 2, numQueries = n)
     def hybrid() = SearchApi.searchManyHybridIndexed(spark, Sf, indexPath,
       lexIndexPath, queriesDf, nprobe = 2, numQueries = n)
-    // every job of `group` has reached the status store once a later
-    // job's end has: its listener handles events in posting order
-    def jobsOf(group: String): Int = {
-      val marker = s"$group-marker"
-      sc.setJobGroup(marker, "listener barrier")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val tracker = sc.statusTracker
-      val deadline = System.nanoTime() + 30L * 1000000000L
-      while (!tracker.getJobIdsForGroup(marker).exists(id =>
-          tracker.getJobInfo(id).exists(
-            _.status == org.apache.spark.JobExecutionStatus.SUCCEEDED))) {
-        assert(System.nanoTime() < deadline, "listener barrier timed out")
-        Thread.sleep(20)
-      }
-      tracker.getJobIdsForGroup(group).length
-    }
-    def constructionJobs(build: () => org.apache.spark.sql.DataFrame): Int = {
-      build() // warm: layouts resolved
-      val group = s"construct-${java.util.UUID.randomUUID()}"
-      sc.setJobGroup(group, "batch facade construction")
-      try build() finally sc.clearJobGroup()
-      jobsOf(group)
-    }
-    assert(constructionJobs(() => vector()) === 6)
-    assert(constructionJobs(() => hybrid()) === 8)
+    assert(JobCounts.construction(() => vector()) === 4)
+    assert(JobCounts.construction(() => hybrid()) === 6)
+  }
+
+  test("a warm IVF search and PQ recall report stay within their job budgets") {
+    // one warm collect each (vs_ivf_ann, vs_pq_recall), at most the jobs
+    // the relational probe forms launched on this corpus
+    assert(JobCounts.warmCollect(() => IvfIndex.search(spark, Sf)) <= 5)
+    assert(JobCounts.warmCollect(() => graft.operators.PqIndex.pqRecallReport(spark, Sf)) <= 19)
   }
 }
