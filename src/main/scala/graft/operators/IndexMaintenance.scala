@@ -5,16 +5,19 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Small-file compaction + epoch layout for the persisted indexes —
-  * the operational complement of streaming append (IndexStream): every
-  * micro-batch leaves a part-file per touched partition, so a
-  * long-running append stream accumulates thousands of tiny files per
-  * cluster/bucket directory, and at 100 TB the scan's task-planning and
-  * footer-reading overhead grows with file count, not data.
+  * the operational complement of streaming append (IndexStream). A
+  * build and every epoch micro-batch already write the compacted
+  * shape through [[Layout.write]] (⌈rows/rowsPerFile⌉ files per
+  * partition value), but each epoch batch is a `batch=<id>` dir of its
+  * own and the parquet sink into a base dir leaves one file per
+  * (micro-batch task × touched value), so a long-running append stream
+  * still accumulates thousands of tiny files per cluster/bucket, and
+  * at 100 TB the scan's task-planning and footer-reading overhead
+  * grows with file count, not data.
   *
-  * `compactIndex` rewrites the vector layout — the base `vectors` dir
-  * plus any resume epochs (`vectors_e<k>`) — with each partition
-  * value's rows packed into ⌈rows/rowsPerFile⌉ files (repartition by
-  * the partition column + the writer's maxRecordsPerFile roll), then
+  * `compactIndex` folds them: it rewrites the vector layout — the base
+  * `vectors` dir, its sink fragments, plus any resume epochs
+  * (`vectors_e<k>`) — through the same [[Layout.write]], then
   * swaps the new directory in: the old dir is renamed ASIDE first
   * (`vectors_old`), the new one renamed into place, and only then are
   * the old dir and the folded epoch dirs deleted — a crash at any
@@ -416,23 +419,51 @@ object IndexMaintenance {
     * relation per (session, layout path) served for the JVM's
     * lifetime; a changed layout replaces its entry.
     */
-  def layoutDf(spark: SparkSession, path: String): DataFrame = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val listing =
-      try Some(filesUnder(fs, p)) catch { case _: java.io.FileNotFoundException => None }
-    listing.fold(spark.read.parquet(path))(layoutOf(spark, path, _))
-  }
+  def layoutDf(spark: SparkSession, path: String): DataFrame =
+    listingOf(spark, path).fold(spark.read.parquet(path))(layoutOf(spark, path, _))
 
   /** [[layoutDf]] of a path whose listing is already in hand. */
   private def layoutOf(spark: SparkSession, path: String,
-      listing: Seq[FileStatus]): DataFrame = {
+      listing: Seq[FileStatus]): DataFrame =
+    memoized(layouts, spark, path, listing)(spark.read.parquet(path))
+
+  /** Values collected off installed layouts per (session, path), each
+    * with the [[filesSig]] it was collected under.
+    */
+  private val collected =
+    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), (String, AnyRef)]()
+
+  /** `collect` of [[layoutDf]]`(spark, path)`, run once per session while
+    * the layout's files are unchanged: the same driver-side
+    * [[filesSig]] walk validates the held value, so a changed layout is
+    * collected afresh. For index metadata a serving call needs on the
+    * driver (the IVF centroids every probe ranks); a path has one
+    * collected form. A missing path collects a plain read, unmemoized.
+    */
+  def layoutCollect[T <: AnyRef](spark: SparkSession, path: String)
+      (collect: DataFrame => T): T =
+    listingOf(spark, path).fold(collect(spark.read.parquet(path))) { l =>
+      memoized(collected, spark, path, l)(collect(layoutOf(spark, path, l))).asInstanceOf[T]
+    }
+
+  /** Every file under `path` ([[filesUnder]]), or None when it is missing. */
+  private def listingOf(spark: SparkSession, path: String): Option[Seq[FileStatus]] = {
+    val p = new Path(path)
+    try Some(filesUnder(p.getFileSystem(spark.sparkContext.hadoopConfiguration), p))
+    catch { case _: java.io.FileNotFoundException => None }
+  }
+
+  /** `memo`'s entry for (`spark`, `path`) when it was made under
+    * `listing`'s signature; otherwise `make`, held under it.
+    */
+  private def memoized[T](
+      memo: java.util.concurrent.ConcurrentHashMap[(SparkSession, String), (String, T)],
+      spark: SparkSession, path: String, listing: Seq[FileStatus])(make: => T): T = {
     val sig = sigOf(listing)
-    val key = (spark, path)
-    Option(layouts.get(key)).collect { case (`sig`, df) => df }.getOrElse {
-      val df = spark.read.parquet(path)
-      layouts.put(key, (sig, df))
-      df
+    Option(memo.get((spark, path))).collect { case (`sig`, v) => v }.getOrElse {
+      val v = make
+      memo.put((spark, path), (sig, v))
+      v
     }
   }
 
@@ -530,23 +561,8 @@ object IndexMaintenance {
     Fold(fs, indexPath, marker, servingEpochs(fs, marker, all), nextEpoch(marker, all))
   }
 
-  /** Rewrite `rows` into `dir` with one shuffle task per `partCol`
-    * value (hash-sharing tasks is fine: partitionBy still writes
-    * per-value files) and the writer rolling to a new part-file every
-    * `rowsPerFile` records — so each value ends up with
-    * ⌈rows/rowsPerFile⌉ files regardless of input file count. The
-    * staged rewrite of the index folds and of
-    * [[graft.sources.Ingest.compactCorpus]].
-    */
-  private[graft] def writeStaged(rows: DataFrame, partCol: String,
-      rowsPerFile: Long, dir: String): Unit =
-    rows.repartition(col(partCol))
-      .write.mode("overwrite")
-      .option("maxRecordsPerFile", rowsPerFile)
-      .partitionBy(partCol).parquet(dir)
-
   /** The fold step every vector-layout rewrite shares (compaction and
-    * rebalance): stage `rows` by `partCol` ([[writeStaged]]), write the
+    * rebalance): stage `rows` by `partCol` ([[Layout.write]]), write the
     * new marker INSIDE the staged dir, swap it in ([[atomicSwap]]),
     * delete the folded epoch dirs and drop the session's cached listing
     * of the layout. `keep` names the partition values whose base dirs
@@ -567,7 +583,7 @@ object IndexMaintenance {
       partCol: String, rowsPerFile: Long, keep: Map[Long, (Long, Long)] = Map.empty)
       : (Map[Long, (Long, Long)], Long) = {
     val staged = new Path(s"${f.vecDir}_compacting")
-    writeStaged(rows, partCol, rowsPerFile, staged.toString)
+    Layout.write(rows, partCol, staged.toString, rowsPerFile)
     val written = parquetFilesUnder(f.fs, staged)
     val stagedCensus = census(spark, written)
     val manifest = plus(stagedCensus.sizes, keep)

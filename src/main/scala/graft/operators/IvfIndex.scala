@@ -229,8 +229,8 @@ object IvfIndex {
     * aggregation pass (VecAgg.vecSumE9 — the k-means update step
     * without posexplode's dim× row fan-out): per-dim integerized sums
     * and counts fold row-local into long[dim] buffers, merge
-    * elementwise, and divide once per cluster. Bitwise the exploded
-    * twin [[meanVectorsExploded]] — order-independent long sums,
+    * elementwise, and divide once per cluster. Bitwise the posexplode
+    * formulation the oracle mirrors — order-independent long sums,
     * identical division — pinned by AnnParitySpec.
     */
   private[graft] def meanVectors(assigned: DataFrame): DataFrame =
@@ -239,19 +239,6 @@ object IvfIndex {
       .select(col("cluster_id"),
         zip_with(col("sc._1"), col("sc._2"),
           (s, n) => s / (lit(1e9) * n)).as("cvec"))
-
-  /** The posexplode formulation — the numeric spec the oracle mirrors
-    * (per-(cluster, pos) integerized sums, reassembled by sorted pos).
-    */
-  private[graft] def meanVectorsExploded(assigned: DataFrame): DataFrame =
-    assigned
-      .select(col("cluster_id"), posexplode(col("embedding")).as(Seq("pos", "v")))
-      .groupBy(col("cluster_id"), col("pos"))
-      .agg(sum(cents(col("v").cast("double"), 1e9)).as("s"), count(lit(1)).as("n"))
-      .withColumn("m", col("s") / (lit(1e9) * col("n")))
-      .groupBy(col("cluster_id"))
-      .agg(transform(array_sort(collect_list(struct(col("pos"), col("m")))),
-        x => x.getField("m")).as("cvec"))
 
   /** One integerized Lloyd step: per-(cluster, dim) means computed from
     * per-row integerized sums (order-independent — the oracle's serial
@@ -340,14 +327,23 @@ object IvfIndex {
       staging => writeIndex(spark, dir, staging))
   }
 
-  /** The probe rule: `array<bigint>` of the min(nprobe, nlist) ids of
-    * `cents` (cluster_id, cvec) nearest `qvec`, nearest first — [[nearest]]'s
-    * loop at n = nprobe, a projection of the query row.
+  /** [[centroidMeta]] of the installed `indexPath/centroids`, collected
+    * once while its files are unchanged
+    * ([[IndexMaintenance.layoutCollect]]): a warm probing call runs no
+    * centroid job.
     */
-  def probe(qvec: Column, cents: DataFrame, nprobe: Int): Column = {
-    val (ids, vecs) = centroidMeta(cents)
-    graft.functions.AnnExprs.probe(qvec, ids, vecs, nprobe)
-  }
+  def installedCentroids(spark: SparkSession, indexPath: String)
+      : (Array[Long], Array[Array[Double]]) =
+    IndexMaintenance.layoutCollect(spark, s"$indexPath/centroids")(centroidMeta)
+
+  /** The probe rule: `array<bigint>` of the min(nprobe, nlist) ids of
+    * the collected centroids `cents` ([[centroidMeta]]) nearest `qvec`,
+    * nearest first — [[nearest]]'s loop at n = nprobe, a projection of
+    * the query row.
+    */
+  def probe(qvec: Column, cents: (Array[Long], Array[Array[Double]]),
+      nprobe: Int): Column =
+    graft.functions.AnnExprs.probe(qvec, cents._1, cents._2, nprobe)
 
   /** Search the persisted index: rank the (tiny, collected) centroid
     * table against the query, then scan ONLY the nprobe nearest
@@ -382,7 +378,7 @@ object IvfIndex {
   private[graft] def probedPartitions(spark: SparkSession, indexPath: String,
       query: DataFrame, nprobe: Int): DataFrame =
     probedRows(spark, indexPath, query.select(probe(col("qvec"),
-        IndexMaintenance.layoutDf(spark, s"$indexPath/centroids"), nprobe))
+        installedCentroids(spark, indexPath), nprobe))
       .collect().flatMap(_.getSeq[Long](0)).toIndexedSeq)
 
   /** A layout's served rows (base + any epochs) in the `probed`

@@ -9,8 +9,10 @@ import org.apache.spark.sql.functions._
   * The batch builders persist their metadata first and then
   * [[writeVectors]]; [[graft.streaming.IndexStream.append]] projects
   * each micro-batch with the same [[rows]], so streamed rows are
-  * byte-identical to batch-built ones by construction.
-  * [[IndexMaintenance]] folds every family by its [[partCol]] alone.
+  * byte-identical to batch-built ones by construction. Builds and
+  * epoch batches write through [[Layout.write]], already in the shape
+  * a compaction leaves; [[IndexMaintenance]] folds every family by its
+  * [[partCol]] alone, through the same writer.
   */
 final class Layout private (val partCol: String,
     project: (SparkSession, String, DataFrame) => DataFrame) {
@@ -21,12 +23,11 @@ final class Layout private (val partCol: String,
   def rows(indexPath: String, input: DataFrame): DataFrame =
     project(input.sparkSession, indexPath, input)
 
-  /** Overwrite `dir` with `rows`, partitioned by [[partCol]] — the one
-    * writer of a base layout, a staged lexical rebuild and a streamed
-    * epoch batch.
+  /** Overwrite `dir` with `rows` partitioned by [[partCol]]
+    * ([[Layout.write]]): a base layout, a staged lexical rebuild and a
+    * streamed epoch batch.
     */
-  def write(rows: DataFrame, dir: String): Unit =
-    rows.write.mode("overwrite").partitionBy(partCol).parquet(dir)
+  def write(rows: DataFrame, dir: String): Unit = Layout.write(rows, partCol, dir)
 
   /** Write the layout rows of `input` to `indexPath/vectors`. */
   def writeVectors(indexPath: String, input: DataFrame): Unit =
@@ -34,6 +35,24 @@ final class Layout private (val partCol: String,
 }
 
 object Layout {
+
+  /** The one writer of a partitioned layout: overwrite `dir` with
+    * `rows` shuffled to one task per `partCol` value (values sharing a
+    * hash task still get files of their own) and the writer rolling to
+    * a new part-file every `rowsPerFile` records, so each value holds
+    * ⌈rows/rowsPerFile⌉ files whatever the input's task count. Without
+    * the shuffle every write task leaves one file per value it holds —
+    * tasks × values files, each paying a writer, a checksum file and
+    * `chmod` forks on a local file system. Builds, epoch batches, the
+    * [[IndexMaintenance]] folds and [[graft.sources.Ingest.compactCorpus]]
+    * all write through it.
+    */
+  def write(rows: DataFrame, partCol: String, dir: String,
+      rowsPerFile: Long = 1L << 20): Unit =
+    rows.repartition(col(partCol))
+      .write.mode("overwrite")
+      .option("maxRecordsPerFile", rowsPerFile)
+      .partitionBy(partCol).parquet(dir)
 
   private def meta(spark: SparkSession, indexPath: String, table: String): DataFrame =
     spark.read.parquet(s"$indexPath/$table")

@@ -394,7 +394,7 @@ object PqIndex {
     val vectors = IndexMaintenance.vectorsDf(spark, idx)
       .withColumn("cluster_id", col("cluster_id").cast("long"))
     val probe = qs.select(col("query_id"), posexplode(IvfIndex.probe(col("qvec"),
-        IndexMaintenance.layoutDf(spark, s"$idx/centroids"), maxNprobe))
+        IvfIndex.installedCentroids(spark, idx), maxNprobe))
         .as(Seq("pos", "cluster_id")))
       .select(col("query_id"), col("cluster_id"), (col("pos") + 1).as("crn"))
     val luts = adcTables(

@@ -142,12 +142,13 @@ object SearchApi {
     * either encoder/scorer seam (SearchManySpec), and the plan scans
     * the vectors layout exactly once (plan-pinned).
     *
-    * Every read of the installed files — centroids, vectors (base and
-    * epochs) and documents — resolves through
-    * [[IndexMaintenance.layoutDf]]: a batch on an unchanged layout
-    * lists it with a driver-side walk and launches no listing or
-    * footer job, and any append, compaction or rebalance in between is
-    * seen by the next call (LayoutMemoSpec).
+    * Every read of the installed files — vectors (base and epochs) and
+    * documents — resolves through [[IndexMaintenance.layoutDf]], and the
+    * centroids are collected through [[IvfIndex.installedCentroids]]: a
+    * batch on an unchanged layout lists it with a driver-side walk and
+    * launches no listing, footer or centroid job, and any append,
+    * compaction or rebalance in between is seen by the next call
+    * (LayoutMemoSpec).
     */
   def searchManyIndexed(spark: SparkSession, dir: String, indexPath: String,
       queries: DataFrame, nprobe: Int = 3, retrieveK: Int = 20,
@@ -204,7 +205,7 @@ object SearchApi {
       qs: DataFrame, nq: Long, nprobe: Int, maxBroadcastRows: Long,
       moreIds: Option[DataFrame]): (DataFrame, Array[Long]) = {
     val probe = qs.select(col("query_id"), col("qvec"), explode(IvfIndex.probe(col("qvec"),
-      IndexMaintenance.layoutDf(spark, s"$indexPath/centroids"), nprobe)).as("cluster_id"))
+      IvfIndex.installedCentroids(spark, indexPath), nprobe)).as("cluster_id"))
     // union of probed clusters: index metadata (≤ nlist ids) — this is
     // what prunes the vectors scan to the probed partition dirs only
     val clusterIds = probe.select(col("cluster_id")).distinct()
@@ -421,9 +422,10 @@ object SearchApi {
     * properties, computed once off the same pruned scan), then the
     * same per-query RRF fusion. Per query this is row-identical to the
     * [[searchHybridIndexed]] loop (SearchManySpec); the plan scans
-    * each layout once for the whole set. Both layouts, the centroids
-    * and the lexical `stats` row resolve through
-    * [[IndexMaintenance.layoutDf]], as in [[searchManyIndexed]].
+    * each layout once for the whole set. Both layouts and the lexical
+    * `stats` row resolve through [[IndexMaintenance.layoutDf]] and the
+    * centroids through [[IvfIndex.installedCentroids]], as in
+    * [[searchManyIndexed]].
     *
     * r13 (r12 verdict #2): the lexical arm is fully distributed — the
     * (query_id, term) frame never leaves the cluster (no isin literals

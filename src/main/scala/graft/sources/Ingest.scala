@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.operators.{Chunker, IndexMaintenance}
+import graft.operators.{Chunker, IndexMaintenance, Layout}
 
 /** Ingest surface (SURVEY.md §1 step 1-2, the Spark re-expression of
   * the reference's crawl→parse→markdown ingest): read raw document
@@ -146,8 +146,8 @@ object Ingest {
     * per (batch × partition), and at 100 TB the resulting
     * file-per-few-rows layout dominates scan cost with open/footer
     * overhead. Rewrite each lang partition into ceil(rows/rowsPerFile)
-    * files through the staged rewrite the index folds use
-    * ([[IndexMaintenance.writeStaged]]), then swap it in with
+    * files through the one partitioned-layout writer
+    * ([[Layout.write]]), then swap it in with
     * [[IndexMaintenance.atomicSwap]], so readers never see a
     * half-compacted corpus and a crash at any step leaves every row on
     * disk. Returns the file count after compaction.
@@ -155,7 +155,7 @@ object Ingest {
   def compactCorpus(spark: SparkSession, corpusPath: String,
       rowsPerFile: Long = 1L << 20): Long = {
     val tmp = corpusPath + "_compacting"
-    IndexMaintenance.writeStaged(spark.read.parquet(corpusPath), "lang", rowsPerFile, tmp)
+    Layout.write(spark.read.parquet(corpusPath), "lang", tmp, rowsPerFile)
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(tmp), spark.sparkContext.hadoopConfiguration)
     IndexMaintenance.atomicSwap(fs,

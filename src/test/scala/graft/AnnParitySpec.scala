@@ -221,7 +221,7 @@ class AnnParitySpec extends AnyFunSuite {
     * `IvfIndex.probe` and the `InMemoryAnn` Window form over `qs`.
     */
   private def nativeProbe(cents: DataFrame, qs: DataFrame, n: Int): Map[Long, Seq[(Int, Long)]] =
-    qs.select(col("query_id"), IvfIndex.probe(col("qvec"), cents, n)).collect()
+    qs.select(col("query_id"), IvfIndex.probe(col("qvec"), IvfIndex.centroidMeta(cents), n)).collect()
       .map(r => r.getLong(0) -> r.getSeq[Long](1).zipWithIndex.map { case (c, i) => (i + 1, c) })
       .toMap
 
@@ -284,7 +284,7 @@ class AnnParitySpec extends AnyFunSuite {
     // assignment is the same rule at n = 1
     val multi = spark.createDataFrame(spark.sparkContext.parallelize(qrows, 2), probeQSchema)
     multi.select(IvfIndex.nearest(col("qvec"), cents).getField("cluster_id"),
-        element_at(IvfIndex.probe(col("qvec"), cents, 1), 1))
+        element_at(IvfIndex.probe(col("qvec"), IvfIndex.centroidMeta(cents), 1), 1))
       .collect().foreach(r => assert(r.getLong(0) === r.getLong(1), s"assignment: $r"))
     // the corpus centroids against corpus vectors
     val corpusCents = IvfIndex.centroids(spark, Sf)
@@ -303,7 +303,7 @@ class AnnParitySpec extends AnyFunSuite {
       .select(col("cluster_id"), col("embedding"))
     val a = IvfIndex.meanVectors(assigned).collect()
       .map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
-    val b = IvfIndex.meanVectorsExploded(assigned).collect()
+    val b = InMemoryAnn.meanVectorsExploded(assigned).collect()
       .map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
     assert(a.nonEmpty && a.keySet === b.keySet)
     a.foreach { case (cl, va) =>
@@ -331,7 +331,7 @@ class AnnParitySpec extends AnyFunSuite {
         StructField("embedding", ArrayType(FloatType, containsNull = true), nullable = true))))
     val a = IvfIndex.meanVectors(df).collect()
       .map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
-    val b = IvfIndex.meanVectorsExploded(df).collect()
+    val b = InMemoryAnn.meanVectorsExploded(df).collect()
       .map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
     assert(a.keySet === b.keySet)
     a.foreach { case (cl, va) => assert(va === b(cl), s"cluster $cl") }

@@ -16,6 +16,20 @@ import graft.operators.{IvfIndex, KnnSearch, LshAnn}
   */
 object InMemoryAnn {
 
+  /** The posexplode formulation of `IvfIndex.meanVectors` — the numeric
+    * spec the oracle mirrors (per-(cluster, pos) integerized sums,
+    * reassembled by sorted pos).
+    */
+  def meanVectorsExploded(assigned: DataFrame): DataFrame =
+    assigned
+      .select(col("cluster_id"), posexplode(col("embedding")).as(Seq("pos", "v")))
+      .groupBy(col("cluster_id"), col("pos"))
+      .agg(sum(cents(col("v").cast("double"), 1e9)).as("s"), count(lit(1)).as("n"))
+      .withColumn("m", col("s") / (lit(1e9) * col("n")))
+      .groupBy(col("cluster_id"))
+      .agg(transform(array_sort(collect_list(struct(col("pos"), col("m")))),
+        x => x.getField("m")).as("cvec"))
+
   /** The probe rule, single-query form: the `nprobe` centroids of
     * `cents` (cluster_id, cvec) nearest the one-row (qvec) `query`,
     * ordered by (d², cluster_id) — a TakeOrdered over the centroid ×

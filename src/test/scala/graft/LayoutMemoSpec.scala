@@ -10,8 +10,9 @@ import org.apache.spark.sql.functions._
 import graft.operators.{IndexMaintenance, IvfIndex, SearchApi}
 import graft.streaming.IndexStream
 
-/** The per-session layout memo ([[IndexMaintenance.layoutDf]]) and the
-  * fork-free listing walk it validates with. Pins: a memoized serving
+/** The per-session layout memo ([[IndexMaintenance.layoutDf]], and
+  * [[IndexMaintenance.layoutCollect]] for the collected centroids) and
+  * the fork-free listing walk both validate with. Pins: a memoized serving
   * path stays exact across every way a layout changes under it
   * (stream-appended epoch, compaction, rebalance); an unchanged layout
   * reuses one resolved file index and a changed listing resolves a new
@@ -93,6 +94,24 @@ class LayoutMemoSpec extends AnyFunSuite {
 
     IndexMaintenance.rebalanceIndex(spark, idx)
     assert(serve() === fullWant, "after rebalance")
+  }
+
+  test("collected centroids are held while unchanged and re-collected when rewritten") {
+    import spark.implicits._
+    val idx = tmp("graft-memo-cents")
+    def install(ids: Seq[Long]): Unit =
+      ids.map(i => (i, Seq(i.toDouble, 0.0))).toDF("cluster_id", "cvec")
+        .write.mode("overwrite").parquet(s"$idx/centroids")
+    install(Seq(0L, 1L))
+    val first = IvfIndex.installedCentroids(spark, idx)
+    assert(first._1.sorted.toSeq === Seq(0L, 1L))
+    val jobs = JobCounts.of(assert(IvfIndex.installedCentroids(spark, idx) eq first))
+    assert(jobs === 0, "a warm collect runs no Spark job")
+    install(Seq(0L, 1L, 2L))
+    val rewritten = IvfIndex.installedCentroids(spark, idx)
+    assert(rewritten._1.sorted.toSeq === Seq(0L, 1L, 2L))
+    assert(rewritten._2.map(_.toSeq).sortBy(_.head).toSeq ===
+      Seq(Seq(0.0, 0.0), Seq(1.0, 0.0), Seq(2.0, 0.0)))
   }
 
   test("a streaming sink commit changes the signature the memo validates") {

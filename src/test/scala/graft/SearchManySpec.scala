@@ -282,10 +282,10 @@ class SearchManySpec extends AnyFunSuite {
       nprobe = 2)
     val plan = df.queryExecution.executedPlan.toString
       .split("== Initial Plan ==")(0)
-    // the vectors layout appears in exactly one scan node; pruning to
-    // the probed partitions is visible as PartitionFilters
-    val vecScans = plan.split("\n").count(l =>
-      l.contains("Scan parquet") && l.contains("vectors"))
+    // the vectors layout appears in exactly one scan node (counted off
+    // the scans' root paths: the plan text truncates a long location);
+    // pruning to the probed partitions is visible as PartitionFilters
+    val vecScans = layoutScans(df, indexPath)
     assert(vecScans === 1, s"expected 1 vectors scan, got $vecScans in:\n$plan")
     assert(plan.contains("PartitionFilters"), s"no partition pruning in:\n$plan")
   }
@@ -294,28 +294,29 @@ class SearchManySpec extends AnyFunSuite {
     // Construction-time Spark jobs of each batch facade, pinned at the
     // counts the probe-projection shape produces on this corpus (numQueries is
     // passed, so no count job; the layouts, the single-file documents
-    // table included, are warm, so no listing or schema job):
-    //  - vector: 1 eager encode cut + 1 centroid metadata collect (the
-    //    probe's nearest-centroid rule runs against it) + 2 jobs of ONE
-    //    metadata query (the probed-cluster collect — AQE runs its
-    //    shuffle stage as a job of its own);
-    //  - hybrid: 1 encode cut + 1 centroid collect + 4 jobs of ONE
-    //    metadata query (the cluster ids fused with the lexical term
-    //    buckets, r16).
-    // A second metadata query, or an unfused hybrid, adds jobs.
+    // table included, are warm, so no listing or schema job, and the
+    // collected centroids are held, so no centroid job):
+    //  - vector: 1 eager encode cut + 2 jobs of ONE metadata query (the
+    //    probed-cluster collect — AQE runs its shuffle stage as a job of
+    //    its own);
+    //  - hybrid: 1 encode cut + 4 jobs of ONE metadata query (the
+    //    cluster ids fused with the lexical term buckets, r16).
+    // A second metadata query, an unfused hybrid or a centroid
+    // re-collect adds jobs.
     val n = queryTexts.length.toLong
     def vector() = SearchApi.searchManyIndexed(spark, Sf, indexPath, queriesDf,
       nprobe = 2, numQueries = n)
     def hybrid() = SearchApi.searchManyHybridIndexed(spark, Sf, indexPath,
       lexIndexPath, queriesDf, nprobe = 2, numQueries = n)
-    assert(JobCounts.construction(() => vector()) === 4)
-    assert(JobCounts.construction(() => hybrid()) === 6)
+    assert(JobCounts.construction(() => vector()) === 3)
+    assert(JobCounts.construction(() => hybrid()) === 5)
   }
 
   test("a warm IVF search and PQ recall report stay within their job budgets") {
-    // one warm collect each (vs_ivf_ann, vs_pq_recall), at most the jobs
-    // the relational probe forms launched on this corpus
-    assert(JobCounts.warmCollect(() => IvfIndex.search(spark, Sf)) <= 5)
-    assert(JobCounts.warmCollect(() => graft.operators.PqIndex.pqRecallReport(spark, Sf)) <= 19)
+    // one warm collect each (vs_ivf_ann, vs_ivf_batch, vs_pq_recall):
+    // each probes against the held centroid collect, so no centroid job
+    assert(JobCounts.warmCollect(() => IvfIndex.search(spark, Sf)) <= 4)
+    assert(JobCounts.warmCollect(() => IvfIndex.searchBatch(spark, Sf)) === 8)
+    assert(JobCounts.warmCollect(() => graft.operators.PqIndex.pqRecallReport(spark, Sf)) <= 18)
   }
 }
